@@ -60,25 +60,14 @@ object GraftPipelines {
       .agg(min(col(id)).as("keeper"), count(lit(1)).as("n_copies"))
 
   /** Word n-gram shingles (id, s); docs shorter than n yield none.
-    *
-    * `repartitionFirst` hash-repartitions docs on `id` BEFORE the
-    * ~n·words explode — it spreads per-shingle work across all cores
-    * even when the source is a single parquet row group, at the price of
-    * shuffling the full corpus text. It paid under the round-2 per-seed
-    * digest family (4 MD5s/shingle); with the KM single-digest scheme
-    * ([[minhashSignature]]) per-shingle work is light enough that the
-    * unrepartitioned form wins at sf0.1 AND ships only per-doc signature
-    * rows at scale (the explode preserves row locality, so map-side
-    * partial aggregation reduces each doc to its minima in place) — so
-    * the default is now false. See docs/PLANS.md "Pre-explode
-    * repartition" for the measurements.
+    * No repartition before the explode: it preserves row locality, so
+    * map-side partial aggregation reduces each doc to its minhash minima
+    * in place (docs/PLANS.md "Pre-explode repartition").
     */
   def shingle(docs: DataFrame, n: Int, id: String = "doc_id",
-      text: String = "text", repartitionFirst: Boolean = false): DataFrame = {
+      text: String = "text"): DataFrame = {
     val gram = (0 until n).map(j => s"w[i+$j]").mkString("concat_ws(' ', ", ", ", ")")
-    val src = docs.select(col(id), col(text))
-    (if (repartitionFirst) src.repartition(col(id)) else src)
-      .select(col(id), split(col(text), " ").as("w"))
+    docs.select(col(id), split(col(text), " ").as("w"))
       .filter(size(col("w")) >= n)
       // explode_outer: plain explode's implicit non-empty/non-null
       // filter gets pushed below the projection and re-evaluates the
@@ -1141,7 +1130,7 @@ object GraftPipelines {
     */
   def repetitionStats(docs: DataFrame, n: Int = 2, id: String = "doc_id",
       text: String = "text"): DataFrame = {
-    val counts = shingle(docs, n, id, text, repartitionFirst = false)
+    val counts = shingle(docs, n, id, text)
       .groupBy(col(id), col("s")).agg(count(lit(1)).as("cnt"))
     val totals = counts.groupBy(col(id)).agg(sum(col("cnt")).as("n_grams"))
     val w = Window.partitionBy(col(id))
@@ -1284,7 +1273,7 @@ object GraftPipelines {
     */
   def fingerprints(docs: DataFrame, id: String = "doc_id",
       text: String = "text"): DataFrame = {
-    val sh = shingle(docs, 2, id, text, repartitionFirst = false)
+    val sh = shingle(docs, 2, id, text)
       .select(col(id), VectorExpressions.md5Km(col("s"), 4).as("hs"))
     val mins = (0 until 4).map(i => min(col("hs")(i)).as(s"m$i"))
     sh.groupBy(col(id)).agg(mins.head, mins.tail: _*)
@@ -1744,7 +1733,7 @@ object GraftPipelines {
     */
   def corpusGramIndex(corpus: DataFrame, n: Int = 5,
       id: String = "doc_id", text: String = "text"): DataFrame =
-    shingle(corpus, n, id, text, repartitionFirst = false)
+    shingle(corpus, n, id, text)
       .select(col(id),
         VectorExpressions.md5Half60(col("s"), upperHalf = false).as("g"))
       .distinct()
@@ -1759,7 +1748,7 @@ object GraftPipelines {
       evalSet: DataFrame, n: Int = 5,
       id: String = "doc_id", text: String = "text"): DataFrame =
     flagGramOverlap(corpusIndex, corpus.select(col(id)),
-      shingle(evalSet, n, id, text, repartitionFirst = false)
+      shingle(evalSet, n, id, text)
         .select(VectorExpressions.md5Half60(col("s"), upperHalf = false)
           .as("g")),
       id)
@@ -2490,9 +2479,10 @@ object GraftPipelines {
     ppjoinPairsFromIndex(toks, pref, num, den, id)
   }
 
-  /** The PPJoin build phase as a standalone artifact pair: the distinct
-    * shingle table `(id, s)` and the df-ordered prefix index
-    * `(id, s, rn, sz)` for threshold num/den. These are the tables a
+  /** The PPJoin build phase as a standalone artifact pair: the per-doc
+    * shingle set table `(id, sz, sarr)` and the df-ordered prefix index
+    * `(id, h, rn, sz)` for threshold num/den, keyed on the token hash
+    * `h` (soundness note at [[ppjoinRanked]]). These are the tables a
     * deployment PERSISTS (the index is threshold-specific — the prefix
     * length depends on θ); [[ppjoinPairsFromIndex]] serves the join
     * from them without re-running the explode/distinct/window chain —
@@ -2534,18 +2524,12 @@ object GraftPipelines {
       .select(col(id), size(col("sarr")).cast("long").as("sz"), col("sarr"))
   }
 
-  /** The distinct shingle table `(id, s, sz)` — [[ppjoinTokenSets]]
-    * exploded (sz = the doc's distinct-shingle count rides every row,
-    * so the rank pass needs no per-doc count window).
-    */
-  def ppjoinTokens(docs: DataFrame, shingleWidth: Int = 3,
-      id: String = "doc_id", text: String = "text"): DataFrame =
-    ppjoinTokensOf(ppjoinTokenSets(docs, shingleWidth, id, text), id)
-
-  /** [[ppjoinTokens]] from an already-built (or read-back) token-set
-    * table — the explode is the only step, so a checkpointed/persisted
-    * set table feeds both the rank build and the verify without
-    * recomputing the shingle pass.
+  /** The distinct shingle table `(id, s, sz)` from an already-built (or
+    * read-back) [[ppjoinTokenSets]] table — the explode is the only
+    * step, so a checkpointed/persisted set table feeds both the rank
+    * build and the verify without recomputing the shingle pass (sz, the
+    * doc's distinct-shingle count, rides every row, so the rank pass
+    * needs no per-doc count window).
     */
   def ppjoinTokensOf(sets: DataFrame, id: String = "doc_id"): DataFrame =
     // explode_outer, deliberately: plain explode plants an implicit
@@ -2558,9 +2542,10 @@ object GraftPipelines {
     sets.select(col(id), col("sz"), explode_outer(col("sarr")).as("s"))
       .select(col(id), col("s"), col("sz"))
 
-  /** The df-ordered prefix index `(id, s, rn, sz)` for threshold
-    * num/den, derived from a [[ppjoinTokens]] table (fresh or re-read
-    * from storage). Checkpoint-free for the same reason.
+  /** The df-ordered prefix index `(id, h, rn, sz)` for threshold
+    * num/den: the [[ppjoinRanked]] rows inside each doc's prefix, keyed
+    * on the token hash `h` (soundness note at [[ppjoinRanked]]). Derived
+    * from a [[ppjoinTokensOf]] table (fresh or re-read from storage).
     */
   def ppjoinPrefix(toks: DataFrame, num: Int = 1, den: Int = 2,
       id: String = "doc_id"): DataFrame = {
@@ -2662,7 +2647,7 @@ object GraftPipelines {
     // pair-id-keyed joins) moves the same bytes once each and computes
     // |∩| per-row with array_intersect (hash-set, O(na+nb); sarr is
     // array_distinct so set semantics are exact). Measured at
-    // sf1 (DevPpjoinAb, BASELINE.md round 11): verify stage 12.5→7.2 s
+    // sf1 (BASELINE.md round 11): verify stage 12.5→7.2 s
     // symmetric, 13.8→3.0 s containment; identical output pairs. The
     // set table arrives pre-arrayed ([[ppjoinTokenSets]]) — the old
     // per-query collect_list re-aggregation of token rows is gone.
@@ -2685,11 +2670,9 @@ object GraftPipelines {
           .as("inter"))
 
   /** The symmetric candidate stage alone — (a_id, b_id, na, nb) pairs
-    * surviving the size band + aggregate positional prune. Exposed so
-    * probes (DevPpjoinAb) count exactly the pair set the library feeds
-    * to verify.
+    * surviving the size band + aggregate positional prune.
     */
-  def ppjoinCandidates(pref: DataFrame, num: Int, den: Int,
+  private def ppjoinCandidates(pref: DataFrame, num: Int, den: Int,
       id: String = "doc_id"): DataFrame =
     pref.as("a").join(pref.as("b"),
         col("a.h") === col("b.h") && col(s"a.$id") < col(s"b.$id") &&
@@ -2763,9 +2746,9 @@ object GraftPipelines {
 
   /** The asymmetric candidate stage alone — pairs surviving the size
     * bound + aggregate positional prune (see
-    * [[containmentPairsFromIndex]]). Exposed for probes (DevPpjoinAb).
+    * [[containmentPairsFromIndex]]).
     */
-  def containmentCandidates(pref: DataFrame, ranked: DataFrame,
+  private def containmentCandidates(pref: DataFrame, ranked: DataFrame,
       num: Int, den: Int, id: String = "doc_id"): DataFrame =
     pref.as("a").join(ranked.as("b"),
         col("a.h") === col("b.h") && col(s"a.$id") =!= col(s"b.$id") &&
@@ -2783,7 +2766,7 @@ object GraftPipelines {
     * containment threshold: only the rows whose token appears in at
     * least one doc's τ-prefix. Pruning the rest is SOUND — the
     * candidate join matches a contained doc's prefix tokens against
-    * container rows on `s`, so a row whose token occurs in NO prefix
+    * container rows on `h`, so a row whose token occurs in NO prefix
     * can never collide, never contributes to `p_common`, and never
     * sets `i_last`/`j_last` (those aggregate colliding rows only);
     * `na`/`nb` ride per-row in `sz`, untouched by the prune. Because
@@ -2869,7 +2852,7 @@ object GraftPipelines {
     * O(k·n·dim) and the per-round codegen expression stays flat in r
     * (the naive form recomputes distances to all r-1 prior centers:
     * O(k²·n·dim) and a linearly growing expression — measured flat
-    * vs growing by [[graft.DevKc]]). `least` over exact BIGINTs is
+    * vs growing, BASELINE.md `DevKc`). `least` over exact BIGINTs is
     * associative, so the running form selects identical centers with
     * identical tie-breaks to the recompute-all form (oracle hashes
     * unchanged). Output: (rank, <id>, d2) — d2 is the covering radius

@@ -16,6 +16,8 @@ class EventOpsSpec extends SparkSpec {
     assert(ms.sameElements(ms.sorted), "rows must be time-ordered")
     // decoded props column present and non-null
     assert(rows.forall(r => !r.isNullAt(r.fieldIndex("k"))))
+    // the driver-contract flagship is this query on the same corpus
+    assert(SparkEntry.entry(spark).collect().toSeq == rows.toSeq)
   }
 
   test("ev_catalog: one row per event type, counts sum to table size") {
