@@ -42,7 +42,7 @@ object DevScale {
         custom: (DataFrame, Int) => DataFrame = (d, _) => d,
         files: Int = 8): Unit = {
       if (!only.forall(_.contains(table))) return
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = Tables.table(spark, src, table)
       val cols = base.columns
       val parts = (0 until reps).map { i =>
         custom(base, i).select(cols.map { c =>

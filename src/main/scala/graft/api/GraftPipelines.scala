@@ -2351,11 +2351,13 @@ object GraftPipelines {
         // aggregated cnt competes in the orderBy below (nulls sort
         // first on pcnt ties), silently corrupting the round's best
         // merge on corpora where that mass wins. Dropping them before
-        // the explode restores the inner-explode semantics; `arr` is a
-        // plain split column, so the pushed-down size filter re-splits
-        // a short string, not a transform chain — no Generate-filter
-        // pathology.
-        .filter(size(col("arr")) >= 2)
+        // the explode restores the inner-explode semantics. The test
+        // is on `seg`, not `size(arr) >= 2`: Catalyst pushes a filter
+        // on `arr` below the projection as a second split of every
+        // segment per round, while `size(split(s, " "))` is one plus
+        // the number of spaces (NULL for NULL input), so a space test
+        // is the same predicate without the split.
+        .filter(instr(col("seg"), " ") > 0)
         .select(explode_outer(expr(
           "zip_with(slice(arr, 1, size(arr)-1), slice(arr, 2, size(arr)-1)," +
           " (x, y) -> concat(x, ' ', y))")).as("pair"), col("cnt"))

@@ -84,8 +84,8 @@ object DedupOps {
         graft.api.GraftPipelines.dupClusters(pairs)
           .write.parquet(s"$tmp/clusters.parquet")
     }
-    (s.read.parquet(s"$idx/pairs.parquet"),
-      s.read.parquet(s"$idx/clusters.parquet"))
+    (Tables.read(s, s"$idx/pairs.parquet"),
+      Tables.read(s, s"$idx/clusters.parquet"))
   }
 
   /** Retraction-aware maintenance of the near-dup cluster map — the
@@ -289,7 +289,7 @@ object DedupOps {
     }
     val delsPath = s"$statePath/dels"
     if (!fs.exists(p(delsPath))) return // nothing tombstoned
-    val tombs = s.read.parquet(delsPath)
+    val tombs = Tables.read(s, delsPath)
       .select(col("del_id")).distinct().localCheckpoint()
     if (tombs.isEmpty) return
     logs.foreach { log =>
@@ -298,7 +298,7 @@ object DedupOps {
         // unhinted anti-join: the vacuum is offline, and the tombstone
         // set is unbounded over the state's lifetime — AQE broadcasts
         // it when it is actually small
-        val kept = s.read.parquet(live)
+        val kept = Tables.read(s, live)
           .join(tombs, col("doc_id") === col("del_id"), "left_anti")
         kept.repartition(col("pb"))
           .write.mode("overwrite").partitionBy("pb")
@@ -360,8 +360,8 @@ object DedupOps {
       graft.api.GraftPipelines.dupClusters(base)
         .write.parquet(s"$tmp/clusters.parquet")
     }
-    (s.read.parquet(s"$idx/pairs.parquet"),
-      s.read.parquet(s"$idx/clusters.parquet"))
+    (Tables.read(s, s"$idx/pairs.parquet"),
+      Tables.read(s, s"$idx/clusters.parquet"))
   }
 
   /** Write-once PPJoin index (token + prefix tables), shared by
@@ -389,7 +389,7 @@ object DedupOps {
         .write.parquet(s"$tmp/toksets.parquet")
       graft.api.GraftPipelines
         .ppjoinPrefix(graft.api.GraftPipelines
-          .ppjoinTokensOf(s.read.parquet(s"$tmp/toksets.parquet")),
+          .ppjoinTokensOf(Tables.read(s, s"$tmp/toksets.parquet")),
           num = 1, den = 2)
         .write.parquet(s"$tmp/pref.parquet")
     }
@@ -397,8 +397,8 @@ object DedupOps {
     // set-array verify joins) — materialize each read-back once per
     // query; without this the sf1 serve path re-decodes parquet per
     // join side and loses to the refit's checkpointed tables
-    (s.read.parquet(s"$idx/toksets.parquet").localCheckpoint(),
-      s.read.parquet(s"$idx/pref.parquet").localCheckpoint())
+    (Tables.read(s, s"$idx/toksets.parquet").localCheckpoint(),
+      Tables.read(s, s"$idx/pref.parquet").localCheckpoint())
   }
 
   /** Write-once (token, container-slice) tables for the CONTAINMENT
@@ -429,15 +429,15 @@ object DedupOps {
         .containmentContainerSlice(
           graft.api.GraftPipelines.ppjoinRanked(
             graft.api.GraftPipelines
-              .ppjoinTokensOf(s.read.parquet(s"$tmp/toksets.parquet"))),
+              .ppjoinTokensOf(Tables.read(s, s"$tmp/toksets.parquet"))),
           num = 4, den = 5)
         .write.parquet(s"$tmp/cont.parquet")
     }
     // the set table feeds the verify joins twice — materialize once
     // (see ppjoinIndexServed); the slice is consumed once per side,
     // read as-is
-    (s.read.parquet(s"$idx/toksets.parquet").localCheckpoint(),
-      s.read.parquet(s"$idx/cont.parquet"))
+    (Tables.read(s, s"$idx/toksets.parquet").localCheckpoint(),
+      Tables.read(s, s"$idx/cont.parquet"))
   }
 
   /** Write-once exact θ≥1/2 PPJoin pair set — the dedup family's
@@ -457,7 +457,7 @@ object DedupOps {
           num = 1, den = 2)
         .write.parquet(s"$tmp/pairs.parquet")
     }
-    s.read.parquet(s"$idx/pairs.parquet")
+    Tables.read(s, s"$idx/pairs.parquet")
   }
 
   /** Cluster presentation (label map + sizes + keeper flag) shared by
@@ -490,7 +490,7 @@ object DedupOps {
     val idx = buildIndexOnce(dir, "simhash", s"bits=$SIM_BITS") { tmp =>
       simhash(s, dir).write.parquet(s"$tmp/sig.parquet")
     }
-    s.read.parquet(s"$idx/sig.parquet")
+    Tables.read(s, s"$idx/sig.parquet")
   }
 
   /** 4×8-bit blocked + 1-bit multi-probe simhash pair scan (scheme
@@ -1168,7 +1168,7 @@ object DedupOps {
       graft.api.GraftPipelines.nearDuplicatesFromCandidates(
           Tables.documents(s, dir),
           graft.api.GraftPipelines.bandCandidates(
-            s.read.parquet(s"$idx/bands.parquet")), 0.7)
+            Tables.read(s, s"$idx/bands.parquet")), 0.7)
         .orderBy($"d1", $"d2")
     }),
 
@@ -1233,7 +1233,7 @@ object DedupOps {
           graft.api.GraftPipelines.bandIndex(Tables.documents(s, dir))
             .write.parquet(s"$tmp/bands.parquet")
         }
-        s.read.parquet(s"$idx/bands.parquet")
+        Tables.read(s, s"$idx/bands.parquet")
       }
       val newPairs = graft.api.GraftPipelines.nearDuplicatesFromCandidates(
         Tables.documents(s, dir),
@@ -1265,7 +1265,7 @@ object DedupOps {
           graft.api.GraftPipelines.bandIndex(Tables.documents(s, dir))
             .write.parquet(s"$tmp/bands.parquet")
         }
-        s.read.parquet(s"$idx/bands.parquet")
+        Tables.read(s, s"$idx/bands.parquet")
       }
       val newPairs = graft.api.GraftPipelines.nearDuplicatesFromCandidates(
         Tables.documents(s, dir),

@@ -312,21 +312,18 @@ object EventOps {
     // identical aggregate from the flat table either way.
     "ev_partition_pruned" -> ((s, dir) => {
       import s.implicits._
-      // Cache key includes the source's mtime so a regenerated corpus
-      // (same path, new data) never serves a stale fixture.
-      val srcStamp = new java.io.File(dir, "events.parquet").lastModified
-      val outDir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        "graft_events_by_day_" +
-          Integer.toHexString((dir, srcStamp).hashCode))
-      val out = outDir.getAbsolutePath
-      if (!new java.io.File(outDir, "_SUCCESS").isFile)
+      // Keyed on the corpus path and the source's mtime so a
+      // regenerated corpus (same path, new data) never serves a stale
+      // fixture.
+      val out = graft.sources.GraftIO.fixtureDir(dir, "events.parquet",
+        "events_by_day", "")
+      if (!new java.io.File(out, "_SUCCESS").isFile)
         graft.sources.GraftIO.writeParquet(
           events(s, dir)
             .select($"event_id", $"ts_ms", $"event_type", $"user_id",
               $"value", date_format($"ts", "yyyyMMdd").cast("int").as("day")),
           out, partitionCols = Seq("day"))
-      s.read.parquet(out)
+      Tables.read(s, out)
         .filter($"day" === 20240107)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), sum($"user_id").as("sum_uid"),

@@ -232,26 +232,25 @@ object MaintenanceOps {
     // coalesce's task-merging stays rack-local.
     "rel_compact" -> ((s, dir) => {
       import s.implicits._
-      val srcStamp = new java.io.File(dir, "events.parquet").lastModified
-      val key = Integer.toHexString((dir, srcStamp).hashCode)
-      val tmp = sys.props("java.io.tmpdir")
-      val frag = new java.io.File(tmp, s"graft_events_frag_$key")
+      def fixture(kind: String) = new java.io.File(
+        graft.sources.GraftIO.fixtureDir(dir, "events.parquet", kind, ""))
+      val frag = fixture("events_frag")
       if (!new java.io.File(frag, "_SUCCESS").isFile)
         Tables.events(s, dir)
           .select($"event_id", $"event_type", $"user_id")
           .repartition(64)
           .write.mode("overwrite").parquet(frag.getAbsolutePath)
-      val compacted = new java.io.File(tmp, s"graft_events_compact_$key")
+      val compacted = fixture("events_compact")
       if (!new java.io.File(compacted, "_SUCCESS").isFile) {
         val bytes = frag.listFiles
           .filter(_.getName.endsWith(".parquet")).map(_.length).sum
         val nOut = math.max(1,
           math.ceil(bytes / (32.0 * 1024 * 1024)).toInt)
-        s.read.parquet(frag.getAbsolutePath)
+        Tables.read(s, frag.getAbsolutePath)
           .coalesce(nOut)
           .write.mode("overwrite").parquet(compacted.getAbsolutePath)
       }
-      s.read.parquet(compacted.getAbsolutePath)
+      Tables.read(s, compacted.getAbsolutePath)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), sum($"user_id").as("sum_uid"),
           min($"event_id").as("min_id"), max($"event_id").as("max_id"))

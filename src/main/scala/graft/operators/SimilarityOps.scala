@@ -99,7 +99,7 @@ object SimilarityOps {
     val idx = buildIndexOnce(dir, "mutualknn", s"k=3,bits=$LSH_BITS") { tmp =>
       mutualEdges(s, dir).write.parquet(s"$tmp/mutual.parquet")
     }
-    s.read.parquet(s"$idx/mutual.parquet")
+    Tables.read(s, s"$idx/mutual.parquet")
   }
 
   /** Bucket-occupancy histogram + candidate mass at `bits` — shared by
@@ -236,12 +236,12 @@ object SimilarityOps {
       fitCentroids.write.parquet(s"$tmp/centroids.parquet")
       graft.api.GraftPipelines
         .assignToCentroids(Tables.embeddings(s, dir),
-          s.read.parquet(s"$tmp/centroids.parquet"))
+          Tables.read(s, s"$tmp/centroids.parquet"))
         .select(col("vec_id"), col("cluster"), col("ccos"))
         .write.parquet(s"$tmp/assign.parquet")
     }
-    (s.read.parquet(s"$idx/centroids.parquet"),
-      s.read.parquet(s"$idx/assign.parquet"))
+    (Tables.read(s, s"$idx/centroids.parquet"),
+      Tables.read(s, s"$idx/assign.parquet"))
   }
 
   /** Write-once IVF index fixture (coarse centroids + hive-partitioned
@@ -258,8 +258,8 @@ object SimilarityOps {
         partitionCols = Seq("centroid"))
     }
     // partition column comes back wide (int) — restore the stored type
-    (s.read.parquet(s"$ix/centroids"),
-      s.read.parquet(s"$ix/assignments")
+    (Tables.read(s, s"$ix/centroids"),
+      Tables.read(s, s"$ix/assignments")
         .select(col("vec_id"), col("centroid").cast("long").as("centroid")))
   }
 
@@ -275,7 +275,7 @@ object SimilarityOps {
       graft.sources.GraftIO.writeParquet(books, s"$tmp/codebooks")
       graft.sources.GraftIO.writeParquet(codes, s"$tmp/codes")
     }
-    (s.read.parquet(s"$ix/codebooks"), s.read.parquet(s"$ix/codes"))
+    (Tables.read(s, s"$ix/codebooks"), Tables.read(s, s"$ix/codes"))
   }
 
   /** [[kmeansFitServed]] for the corpus-scaled k
@@ -822,7 +822,7 @@ object SimilarityOps {
       val delta = emb.filter($"vec_id" % 17 === 0)
       val touched = delta.select($"bucket").distinct().localCheckpoint()
       symmetrizeKnn(s, graft.api.GraftPipelines.knnIncrementalEdges(
-        emb, touched, s.read.parquet(s"$idx/edges.parquet"), 3, LSH_BITS))
+        emb, touched, Tables.read(s, s"$idx/edges.parquet"), 3, LSH_BITS))
     }),
 
     // Incremental maintenance under the WIDENED scheme — the regime the

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -165,6 +166,29 @@ object GraftIO {
     val sha = java.security.MessageDigest.getInstance("SHA-256")
       .digest(keySrc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     sha.take(8).map(b => f"$b%02x").mkString
+  }
+
+  /** (path, length, modification time) of every leaf file, sorted. */
+  type Stamp = Vector[(String, Long, Long)]
+
+  /** Change stamp of the file or directory tree at `path`. One
+    * `getFileStatus` for a plain file; one `listStatus` per directory
+    * level otherwise — not `listFiles`, whose `LocatedFileStatus` loads
+    * each file's owner and permissions, which a local FS without native
+    * IO does with one `ls` subprocess per file. Empty when `path` does
+    * not exist. Spark writers name every part file afresh, so a rewrite
+    * at the same path always changes the stamp. The validity check of
+    * the read-once memos (`graft.Tables.read`, the streaming
+    * scheme-marker memo).
+    */
+  def stamp(fs: FileSystem, path: Path): Stamp = {
+    def leaves(s: FileStatus): Iterator[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).iterator.flatMap(leaves)
+      else Iterator.single(s)
+    try leaves(fs.getFileStatus(path))
+      .map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
+      .toVector.sorted
+    catch { case _: java.io.FileNotFoundException => Vector.empty }
   }
 
   def fixtureDir(corpusDir: String, stampFile: String, kind: String,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.GraftIO
+
 /** Structured Streaming layer (SURVEY.md §2.9).
   *
   * The reference delivers query results incrementally — a worker thread
@@ -1773,12 +1775,14 @@ object EventStreaming {
       * pure trigger floor (2 jobs + a footer read — measured in the
       * DevTrigProf r15 breakdown). A DIFFERENT run or fp never hits the
       * memo (key mismatch → full validation → the refusal paths fire
-      * exactly as before), and the marker's continued EXISTENCE is
-      * re-checked per trigger (one FS stat, no job) so externally
-      * cleared state falls back to the full publish-if-absent path.
+      * exactly as before). Each hit re-takes the marker's
+      * [[graft.sources.GraftIO.stamp]] (one FS listing, no job) and
+      * compares it with the stamp taken when the entry was validated:
+      * a cleared marker, or one wiped and re-minted under another
+      * scheme at the same path, falls back to full validation.
       */
-    private val validated =
-      new java.util.concurrent.ConcurrentHashMap[String, Option[String]]()
+    private val validated = new java.util.concurrent.ConcurrentHashMap[
+      String, (Option[String], GraftIO.Stamp)]()
 
     def ensure(spark: SparkSession, fs: FileSystem, markerPath: String,
         fp: String, runId: String, loop: String,
@@ -1788,7 +1792,8 @@ object EventStreaming {
       val sPath = new Path(markerPath)
       val memoKey = s"$markerPath|$fp|$runId"
       val memoHit = validated.get(memoKey)
-      if (memoHit != null && fs.exists(sPath)) return memoHit.orNull
+      if (memoHit != null && memoHit._2 == GraftIO.stamp(fs, sPath))
+        return memoHit._1.orNull
       if (!fs.exists(sPath)) {
         if (stateExists && !adoptExisting)
           throw new IllegalStateException(
@@ -1811,6 +1816,9 @@ object EventStreaming {
         val nested = new Path(sPath, tmp.getName)
         if (fs.exists(nested)) fs.delete(nested, true)
       }
+      // stamp BEFORE the read: a re-mint racing it leaves a stale
+      // stamp, which the next call re-validates
+      val stamp = GraftIO.stamp(fs, sPath)
       val scheme = spark.read.parquet(sPath.toString).head()
       val names = scheme.schema.fieldNames
       val pinnedFp =
@@ -1824,7 +1832,7 @@ object EventStreaming {
           "the state or restore the original parameters")
       val pinnedRun =
         if (names.contains("run")) scheme.getAs[String]("run") else null
-      validated.put(memoKey, Option(pinnedRun))
+      validated.put(memoKey, (Option(pinnedRun), stamp))
       pinnedRun
     }
 

@@ -337,4 +337,147 @@ class GraftIOSpec extends SparkSpec {
     assert(df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
       == plain, "bucketed layout changed the join result")
   }
+
+  /** Jobs the calling thread launches while `body` runs, counted by a
+    * SparkListener. Listener delivery is asynchronous, so a sentinel job
+    * run after `body` marks the point by which every earlier job start
+    * has been delivered. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.probe")))
+          .filter(_.startsWith(tag)).foreach(seen.put)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.probe", tag)
+      try body finally sc.setLocalProperty("graft.probe", s"$tag-end")
+      try spark.range(1).count() finally sc.setLocalProperty("graft.probe", null)
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(t => { assert(t != null, "sentinel job never reached the listener"); t })
+        .takeWhile(_ == tag).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Tables.read: a repeat read of an unchanged table launches no job " +
+      "and has spark.read.parquet's schema") {
+    val dir = tempSfDir("t" -> lineitem.limit(50))
+    val first = Tables.table(spark, dir, "t")
+    assert(first.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { again = Tables.table(spark, dir, "t") } == 0,
+      "a repeat read must be served from the memo, without inference")
+    assert(again.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+    assert(again.count() == 50)
+    // control: the counter does see inference jobs
+    assert(jobsLaunchedBy { spark.read.parquet(s"$dir/t.parquet") } >= 1)
+  }
+
+  test("Tables.read: a table overwritten at the same path is seen on the " +
+      "next call, rows and columns") {
+    val dir = tempSfDir("t" -> Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    assert(Tables.table(spark, dir, "t").count() == 2)
+    Seq((1L, 10.0, true), (2L, 20.0, false), (3L, 30.0, true))
+      .toDF("k", "w", "flag")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val back = Tables.table(spark, dir, "t")
+    assert(back.columns.toSeq == Seq("k", "w", "flag"))
+    assert(back.orderBy($"k").as[(Long, Double, Boolean)].collect().toSeq ==
+      Seq((1L, 10.0, true), (2L, 20.0, false), (3L, 30.0, true)))
+  }
+
+  test("Tables.read: a self-join of two memo-served reads resolves and " +
+      "gives spark.read.parquet's rows") {
+    def selfJoin(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame) =
+      a.join(b, a("event_id") === b("event_id"))
+        .select(a("event_id"), a("event_type"), b("user_id"))
+        .orderBy(a("event_id")).collect().toSeq
+    Tables.events(spark, sf) // warm the memo: both reads below are hits
+    val memo = selfJoin(Tables.events(spark, sf), Tables.events(spark, sf))
+    val plain = selfJoin(spark.read.parquet(s"$sf/events.parquet"),
+      spark.read.parquet(s"$sf/events.parquet"))
+    assert(memo.nonEmpty && memo == plain)
+    assert(memo.size == spark.read.parquet(s"$sf/events.parquet").count())
+  }
+
+  test("Tables.read: the inference confs are in the key — flipping " +
+      "nanosAsLong re-infers a TIMESTAMP(NANOS) column") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    val schema = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .required(INT64)
+      .as(LogicalTypeAnnotation.timestampType(true, TimeUnit.NANOS))
+      .named("ts")
+      .named("events")
+    val dir = Files.createTempDirectory("graft_nanos_key").toString
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withConf(conf).withType(schema).build()
+    try {
+      val g = new SimpleGroupFactory(schema).newGroup()
+      g.add("event_id", 1L); g.add("ts", 1704067200123456789L)
+      writer.write(g)
+    } finally writer.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    def tsType() = Tables.events(spark, dir).schema("ts").dataType
+    try {
+      spark.conf.set(key, "true")
+      assert(tsType() == org.apache.spark.sql.types.LongType)
+      spark.conf.set(key, "false")
+      // a stale hit would still answer LongType
+      val flipped = scala.util.Try(tsType())
+      assert(!flipped.toOption.contains(org.apache.spark.sql.types.LongType),
+        s"nanosAsLong=false must re-infer ts, got $flipped")
+      spark.conf.set(key, "true")
+      assert(tsType() == org.apache.spark.sql.types.LongType)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("no read bypasses the Tables memo: no read.parquet( under " +
+      "operators/, no corpus-table path read outside Tables.scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.size > 10, s"no sources found under $root")
+    val tables = Seq("events", "region", "nation", "customer", "supplier",
+      "part", "orders", "lineitem", "documents", "embeddings")
+    // a parquet read (`read.parquet(`, or `read.format("parquet")` with
+    // any options, then `.load(`) of a `<dir>/<table>.parquet` path,
+    // the table named literally or interpolated
+    val tableRead = ("""\bread(?:\s*\.\s*(?:format\("parquet"\)|schema\([^)]*\)|""" +
+      """option\([^)]*\)))*\s*\.\s*(?:parquet|load)\(\s*s?"[^"]*/(?:""" +
+      tables.mkString("|") + """|\$\{?\w+\}?)\.parquet"""").r
+    val offenders = sources.flatMap { f =>
+      val src = java.nio.file.Files.readString(f)
+      val rel = root.relativize(f).toString
+      val direct =
+        if (rel.startsWith("graft/operators/") && src.contains("read.parquet("))
+          Seq(s"$rel: read.parquet(")
+        else Nil
+      val table =
+        if (rel == "graft/Tables.scala") Nil
+        else tableRead.findAllIn(src).map(m => s"$rel: $m").toSeq
+      direct ++ table
+    }
+    assert(offenders.isEmpty,
+      "reads must go through graft.Tables.read:\n" + offenders.mkString("\n"))
+    // the pattern catches both read forms
+    assert(tableRead.findFirstIn(
+      """spark.read.parquet(s"$sfDir/$name.parquet")""").nonEmpty)
+    assert(tableRead.findFirstIn(
+      """s.read.format("parquet").load(s"$dir/orders.parquet")""").nonEmpty)
+  }
 }

@@ -240,13 +240,12 @@ class MaintenanceOpsSpec extends SparkSpec {
       "compaction must be lossless")
     // layout invariants: the fixture fragments into 64 files, the
     // compacted copy lands at ceil(bytes / 32 MiB) — at sf0.001 that's 1.
-    val srcStamp = new java.io.File(sf, "events.parquet").lastModified
-    val key = Integer.toHexString((sf, srcStamp).hashCode)
-    val tmp = sys.props("java.io.tmpdir")
     def parquetFiles(d: java.io.File) =
       d.listFiles.filter(_.getName.endsWith(".parquet"))
-    val frag = new java.io.File(tmp, s"graft_events_frag_$key")
-    val comp = new java.io.File(tmp, s"graft_events_compact_$key")
+    def fixture(kind: String) = new java.io.File(
+      graft.sources.GraftIO.fixtureDir(sf, "events.parquet", kind, ""))
+    val frag = fixture("events_frag")
+    val comp = fixture("events_compact")
     assert(parquetFiles(frag).length == 64)
     val bytes = parquetFiles(frag).map(_.length).sum
     val want = math.max(1, math.ceil(bytes / (32.0 * 1024 * 1024)).toInt)

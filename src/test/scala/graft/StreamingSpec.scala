@@ -1477,6 +1477,34 @@ class StreamingSpec extends SparkSpec {
     expectStreamFailure(q2, "BOTH add and del")
   }
 
+  test("StateScheme memo: a marker wiped and re-minted under another " +
+      "scheme at the same path, while the memo is live, refuses on the " +
+      "next trigger") {
+    implicit val sqlCtx = spark.sqlContext
+    val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val stateDir = java.nio.file.Files
+      .createTempDirectory("graft_remint").toString + "/state"
+    val mem = MemoryStream[(Long, String)]
+    val q = EventStreaming.extendLoop(
+      mem.toDF().toDF("doc_id", "text"), stateDir)()
+    try {
+      mem.addData((1L, t))
+      q.processAllAvailable() // validates the marker: the memo is live
+      // same path, same run, a different fingerprint: before the stamp
+      // check, the memo saw only that a marker still existed and the
+      // next trigger ran under the foreign scheme
+      val marker = s"$stateDir/scheme"
+      val run = spark.read.parquet(marker).head().getAs[String]("run")
+      val fs = new org.apache.hadoop.fs.Path(marker)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(marker), true)
+      Seq(("j=0.1,n=9,seeds=1,bands=1,store=pb1", run)).toDF("fp", "run")
+        .write.parquet(marker)
+      mem.addData((2L, t))
+      expectStreamFailure(q, "different scheme")
+    } finally q.stop()
+  }
+
   test("StateScheme markerless-state refusal: state files with NO scheme " +
       "marker (pre-marker era, or a lost marker) refuse at ensure time " +
       "instead of minting ownership for the current run — and the " +

@@ -591,6 +591,23 @@ class TextMultimodalSpec extends SparkSpec {
     assert(fert.map { case (l, (_, t)) => l -> t } == byLang)
   }
 
+  test("llm_bpe_vocab / llm_bpe_apply: an empty corpus and an " +
+      "all-single-symbol corpus learn no merge and tokenize nothing") {
+    def corpus(texts: String*) = tempSfDir("documents" ->
+      texts.zipWithIndex.map { case (t, i) =>
+        (i.toLong, t, "en", "s0", Option(t).fold(0L)(_.length.toLong))
+      }.toDF("doc_id", "text", "lang", "source", "n_chars"))
+    for (dir <- Seq(corpus(), corpus("a b a", "c", "", "b  c", null))) {
+      assert(q("llm_bpe_vocab", dir).collect().isEmpty)
+      assert(q("llm_bpe_apply", dir).collect().isEmpty)
+    }
+    // the pair-round filter tests for a space instead of splitting:
+    // size(split(s, ' ')) is one plus the number of spaces, NULL on NULL
+    val segs = Seq("", " ", "a", "a b", "a  b", "ab c d", null).toDF("seg")
+    assert(segs.filter("size(split(seg, ' ')) >= 2").collect().toSet ==
+      segs.filter("instr(seg, ' ') > 0").collect().toSet)
+  }
+
   test("llm_ccnet_buckets: per-lang terciles are balanced, score ranges " +
       "are ordered head >= middle >= tail, and doc mass is conserved") {
     val rows = q("llm_ccnet_buckets").collect()
