@@ -34,21 +34,20 @@ object GraftPipelines {
   }
 
   /** Project `df` to exactly `cols` and materialize it — UNLESS it is
-    * already a materialized checkpoint (its logical plan is the
-    * LogicalRDD a localCheckpoint leaves), in which case the projection
-    * alone is returned: re-checkpointing an already-checkpointed frame
-    * copies every block and schedules a whole job for nothing. The
-    * chain algebra (extendChain/upsertChain) receives pre-checkpointed
-    * frames from the streaming loops on every trigger — the double
-    * checkpoints were a measured slice of the per-trigger job floor
-    * (DevTrigProf r15).
+    * already a materialized checkpoint
+    * ([[Bridge.isMaterializedCheckpoint]]), in which case the
+    * projection alone is returned: re-checkpointing an
+    * already-checkpointed frame copies every block and schedules a
+    * whole job for nothing. The chain algebra (extendChain/upsertChain)
+    * receives pre-checkpointed frames from the streaming loop on every
+    * trigger — the double checkpoints were a measured slice of the
+    * per-trigger job floor (DevTrigProf r15).
     */
   private[graft] def ckptOnce(df: DataFrame, cols: String*): DataFrame = {
     val sel =
       if (cols.isEmpty || df.columns.toSeq == cols) df
       else df.select(cols.map(col): _*)
-    if (df.queryExecution.logical.getClass.getSimpleName == "LogicalRDD") sel
-    else sel.localCheckpoint()
+    if (Bridge.isMaterializedCheckpoint(df)) sel else sel.localCheckpoint()
   }
 
   // ---------------- dedup ----------------

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.GraftIO
 
 /** Deduplication family for large-scale training-data pipelines
   * (SURVEY.md §2.11): exact hash dedup, MinHash+LSH banding, SimHash,
@@ -34,24 +35,6 @@ object DedupOps {
   private def shingles(s: SparkSession, dir: String): DataFrame =
     graft.api.GraftPipelines.shingle(Tables.documents(s, dir), 3)
 
-  /** Write-once index fixture location: the shared helper keyed on
-    * corpus mtime AND the build parameters (an index is only valid for
-    * the threshold/seeds it was built with — see
-    * [[graft.sources.GraftIO.fixtureDir]]).
-    */
-  private def indexFixtureDir(dir: String, kind: String,
-      params: String): String =
-    graft.sources.GraftIO.fixtureDir(dir, "documents.parquet", kind, params)
-
-  /** buildOnce at the params-keyed fixture path, with the SAME params
-    * string as the in-index marker — one argument, so path key and
-    * marker can never drift apart.
-    */
-  private def buildIndexOnce(dir: String, kind: String, params: String)(
-      build: String => Unit): String =
-    graft.sources.GraftIO.buildOnce(
-      indexFixtureDir(dir, kind, params), params)(build)
-
   /** Build/serve split of the near-dup CLUSTER chain: the verified
     * pair list and its connected-component label map are persisted
     * ONCE per corpus (`GraftIO.buildOnce`, mtime + parameter keyed —
@@ -75,14 +58,14 @@ object DedupOps {
     */
   private def dupChainServed(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val idx = buildIndexOnce(dir, "dupchain", "n=3,seeds=8,bands=4,theta=0.7") {
-      tmp =>
-        val pairs = graft.api.GraftPipelines
-          .nearDuplicates(Tables.documents(s, dir), 0.7)
-          .localCheckpoint()
-        pairs.write.parquet(s"$tmp/pairs.parquet")
-        graft.api.GraftPipelines.dupClusters(pairs)
-          .write.parquet(s"$tmp/clusters.parquet")
+    val idx = GraftIO.buildFixture(dir, "documents.parquet",
+        "dupchain", "n=3,seeds=8,bands=4,theta=0.7") { tmp =>
+      val pairs = graft.api.GraftPipelines
+        .nearDuplicates(Tables.documents(s, dir), 0.7)
+        .localCheckpoint()
+      pairs.write.parquet(s"$tmp/pairs.parquet")
+      graft.api.GraftPipelines.dupClusters(pairs)
+        .write.parquet(s"$tmp/clusters.parquet")
     }
     (Tables.read(s, s"$idx/pairs.parquet"),
       Tables.read(s, s"$idx/clusters.parquet"))
@@ -119,7 +102,8 @@ object DedupOps {
     * post-deletion chain state, what a maintenance loop persists so
     * the NEXT delete batch retracts from the already-retracted chain
     * (the streaming consumer is
-    * [[graft.streaming.EventStreaming.takedownLoop]]).
+    * [[graft.streaming.EventStreaming.upsertLoop]], on its delete-only
+    * batches).
     */
   private[graft] def retractChain(s: SparkSession, pairs: DataFrame,
       labels0: DataFrame, del: DataFrame): (DataFrame, DataFrame) = {
@@ -176,8 +160,8 @@ object DedupOps {
     val P = graft.api.GraftPipelines
     // consumed twice each (affected-edge cut + pass-through
     // complement) — materialized once, but NOT re-checkpointed when
-    // the caller already did (ckptOnce: the loops pass checkpointed
-    // frames every trigger)
+    // the caller already did (ckptOnce: the streaming loop passes
+    // checkpointed frames every trigger)
     val basePairs = P.labeled(s, "extendChain: base pairs ckpt") {
       P.ckptOnce(basePairs0, "d1", "d2")
     }
@@ -240,21 +224,21 @@ object DedupOps {
       extendChain(s, kept, midLabels, np))
   }
 
-  /** OFFLINE vacuum for the streaming chain loops' tombstone model
-    * ([[graft.streaming.EventStreaming.upsertLoop]] /
-    * `takedownLoop`-fed states): rewrite the `bands/` and `docs/`
-    * append logs with the `dels/` tombstones APPLIED, so a taken-down
-    * document's text (and its band rows, which derive from that text)
-    * physically leave disk — the right-to-be-forgotten completion of
-    * the read-side tombstone filter. The serving view is unchanged by
-    * construction: every reader already anti-joins `dels/`, and the
-    * vacuum removes exactly the rows that filter was hiding. `dels/`
-    * itself is kept (tombstones are permanent by the loop contract —
-    * they carry only ids, no content) and folded to a few files.
+  /** OFFLINE vacuum for the streaming chain loop's tombstone model
+    * ([[graft.streaming.EventStreaming.upsertLoop]] states): rewrite
+    * the `bands/` and `docs/` append logs with the `dels/` tombstones
+    * APPLIED, so a taken-down document's text (and its band rows,
+    * which derive from that text) physically leave disk — the
+    * right-to-be-forgotten completion of the read-side tombstone
+    * filter. The serving view is unchanged by construction: every
+    * reader already anti-joins `dels/`, and the vacuum removes exactly
+    * the rows that filter was hiding. `dels/` itself is kept
+    * (tombstones are permanent by the loop contract — they carry only
+    * ids, no content) and folded to a few files.
     *
     * Run with the loop STOPPED (it is an offline operator, like every
-    * log-store compaction); the loops refuse to start over a
-    * half-vacuumed state (a `*.vold` backup present) and name this
+    * log-store compaction); the loop refuses to start over a
+    * half-vacuumed state (a `*.vold` backup present) and names this
     * method as the recovery.
     *
     * Crash-safe swap per log, in the publish-then-swap discipline the
@@ -351,8 +335,9 @@ object DedupOps {
   private def dupChainBaseServed(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val split = ingestSplitId(s, dir)
-    val idx = buildIndexOnce(dir, "dupchain_base",
-      s"n=3,seeds=8,bands=4,theta=0.7,split=$split") { tmp =>
+    val idx = GraftIO.buildFixture(dir, "documents.parquet",
+        "dupchain_base", s"n=3,seeds=8,bands=4,theta=0.7,split=$split") {
+      tmp =>
       val base = dupChainServed(s, dir)._1
         .filter(col("d1") < split && col("d2") < split)
         .select(col("d1"), col("d2")).localCheckpoint()
@@ -382,8 +367,8 @@ object DedupOps {
     // table's token key is the 8-byte xxhash64 instead of the shingle
     // string (GraftPipelines.ppjoinRanked) — schema change, so a new
     // params key; the old fixture is simply superseded.
-    val idx = buildIndexOnce(dir, "ppjoin", "num=1,den=2,w=3,fmt=sets-h64") {
-      tmp =>
+    val idx = GraftIO.buildFixture(dir, "documents.parquet",
+        "ppjoin", "num=1,den=2,w=3,fmt=sets-h64") { tmp =>
       graft.api.GraftPipelines
         .ppjoinTokenSets(Tables.documents(s, dir))
         .write.parquet(s"$tmp/toksets.parquet")
@@ -420,8 +405,8 @@ object DedupOps {
     */
   private def containmentIndexServed(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val idx = buildIndexOnce(dir, "containment_sliced",
-        "num=4,den=5,w=3,fmt=sets-h64") { tmp =>
+    val idx = GraftIO.buildFixture(dir, "documents.parquet",
+        "containment_sliced", "num=4,den=5,w=3,fmt=sets-h64") { tmp =>
       graft.api.GraftPipelines
         .ppjoinTokenSets(Tables.documents(s, dir))
         .write.parquet(s"$tmp/toksets.parquet")
@@ -451,7 +436,8 @@ object DedupOps {
     * same oracles, the dupClustersServed discipline.
     */
   private def ppjoinTruthServed(s: SparkSession, dir: String): DataFrame = {
-    val idx = buildIndexOnce(dir, "ppjoin_truth", "num=1,den=2,w=3") { tmp =>
+    val idx = GraftIO.buildFixture(dir, "documents.parquet",
+        "ppjoin_truth", "num=1,den=2,w=3") { tmp =>
       val (toks, pref) = ppjoinIndexServed(s, dir)
       graft.api.GraftPipelines.ppjoinPairsFromIndex(toks, pref,
           num = 1, den = 2)
@@ -487,7 +473,8 @@ object DedupOps {
     * read back as a doc-count-sized parquet by the `_served` twin.
     */
   private def simhashIndexServed(s: SparkSession, dir: String): DataFrame = {
-    val idx = buildIndexOnce(dir, "simhash", s"bits=$SIM_BITS") { tmp =>
+    val idx = GraftIO.buildFixture(dir, "documents.parquet",
+        "simhash", s"bits=$SIM_BITS") { tmp =>
       simhash(s, dir).write.parquet(s"$tmp/sig.parquet")
     }
     Tables.read(s, s"$idx/sig.parquet")
@@ -1161,7 +1148,8 @@ object DedupOps {
     // to llm_neardup_verified.
     "llm_neardup_served" -> ((s, dir) => {
       import s.implicits._
-      val idx = buildIndexOnce(dir, "band", "n=3,seeds=8,bands=4") { tmp =>
+      val idx = GraftIO.buildFixture(dir, "documents.parquet",
+        "band", "n=3,seeds=8,bands=4") { tmp =>
         graft.api.GraftPipelines.bandIndex(Tables.documents(s, dir))
           .write.parquet(s"$tmp/bands.parquet")
       }
@@ -1229,7 +1217,8 @@ object DedupOps {
       val split = ingestSplitId(s, dir)
       val (basePairs, baseLabels) = dupChainBaseServed(s, dir)
       val bands = {
-        val idx = buildIndexOnce(dir, "band", "n=3,seeds=8,bands=4") { tmp =>
+        val idx = GraftIO.buildFixture(dir, "documents.parquet",
+            "band", "n=3,seeds=8,bands=4") { tmp =>
           graft.api.GraftPipelines.bandIndex(Tables.documents(s, dir))
             .write.parquet(s"$tmp/bands.parquet")
         }
@@ -1261,7 +1250,8 @@ object DedupOps {
         .filter($"doc_id" < split && $"doc_id" % 10 === 7)
         .select($"doc_id".as("del_id"))
       val bands = {
-        val idx = buildIndexOnce(dir, "band", "n=3,seeds=8,bands=4") { tmp =>
+        val idx = GraftIO.buildFixture(dir, "documents.parquet",
+            "band", "n=3,seeds=8,bands=4") { tmp =>
           graft.api.GraftPipelines.bandIndex(Tables.documents(s, dir))
             .write.parquet(s"$tmp/bands.parquet")
         }

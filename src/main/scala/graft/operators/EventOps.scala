@@ -305,24 +305,22 @@ object EventOps {
     // (partition pruning; Z-order boxes and Bloom filters are the other
     // two): a day-partitioned 100 TB log serves a one-day query at
     // 1/30th the IO with zero plan changes. The partitioned copy is a
-    // fixture written ONCE per (sfDir, jvm-tmpdir) — guarded by the
-    // writer's _SUCCESS marker — so the timed query measures the pruned
-    // READ, not a corpus rewrite (in production the layout is an offline
-    // compaction job, not part of the query). The oracle recomputes the
-    // identical aggregate from the flat table either way.
+    // fixture published ONCE per corpus (GraftIO.buildFixture: keyed on
+    // the corpus path and mtime, so a regenerated corpus never serves a
+    // stale copy) — so the timed query measures the pruned READ, not a
+    // corpus rewrite (in production the layout is an offline compaction
+    // job, not part of the query). The oracle recomputes the identical
+    // aggregate from the flat table either way.
     "ev_partition_pruned" -> ((s, dir) => {
       import s.implicits._
-      // Keyed on the corpus path and the source's mtime so a
-      // regenerated corpus (same path, new data) never serves a stale
-      // fixture.
-      val out = graft.sources.GraftIO.fixtureDir(dir, "events.parquet",
-        "events_by_day", "")
-      if (!new java.io.File(out, "_SUCCESS").isFile)
+      val out = graft.sources.GraftIO.buildFixture(dir, "events.parquet",
+          "events_by_day", "partitionBy=day") { tmp =>
         graft.sources.GraftIO.writeParquet(
           events(s, dir)
             .select($"event_id", $"ts_ms", $"event_type", $"user_id",
               $"value", date_format($"ts", "yyyyMMdd").cast("int").as("day")),
-          out, partitionCols = Seq("day"))
+          tmp, partitionCols = Seq("day"))
+      }
       Tables.read(s, out)
         .filter($"day" === 20240107)
         .groupBy($"event_type")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Fns
+import graft.sources.GraftIO
 
 /** Incremental-maintenance + storage-layout operators — the family a
   * 100 TB pipeline leans on to avoid recomputing from scratch:
@@ -80,6 +81,38 @@ object MaintenanceOps {
         $"o_orderpriority".as("priority"),
         $"o_orderdate".as("valid_from"), $"valid_to",
         when($"valid_to".isNull, 1).otherwise(0).as("is_current"))
+  }
+
+  /** The `rel_compact` fixtures, each published once per corpus
+    * ([[graft.sources.GraftIO.buildFixture]]): the 64-fragment layout
+    * streaming ingest leaves, and its compaction. The compaction lists
+    * the fragments, sizes the output at ceil(bytes / 32 MiB) and
+    * rewrites via coalesce — a shuffle-FREE concatenation (repartition
+    * would pay a full shuffle for nothing: bin-packing needs no key).
+    * The file listing is driver-side METADATA (namenode-scale, like
+    * SchemaRegistry's sanctioned catalog collect), never data. Returns
+    * (fragments dir, compacted dir).
+    */
+  private[graft] def compactFixtures(s: SparkSession,
+      dir: String): (String, String) = {
+    import s.implicits._
+    val frag = GraftIO.buildFixture(dir, "events.parquet", "events_frag",
+        "files=64") { tmp =>
+      Tables.events(s, dir)
+        .select($"event_id", $"event_type", $"user_id")
+        .repartition(64)
+        .write.mode("overwrite").parquet(tmp)
+    }
+    // the fragment params are part of this key: a re-fragmented input
+    // must not be served a compaction of the old one
+    val compacted = GraftIO.buildFixture(dir, "events.parquet",
+        "events_compact", "files=64,target=32MiB") { tmp =>
+      val bytes = new java.io.File(frag).listFiles
+        .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      val nOut = math.max(1, math.ceil(bytes / (32.0 * 1024 * 1024)).toInt)
+      Tables.read(s, frag).coalesce(nOut).write.mode("overwrite").parquet(tmp)
+    }
+    (frag, compacted)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -217,40 +250,16 @@ object MaintenanceOps {
 
     // Small-file compaction: the OTHER half of the layout-maintenance
     // story (rel_zorder orders data within files; this bin-packs the
-    // files themselves). Streaming ingest leaves a 64-fragment layout
-    // (fixture, written once per (sfDir, mtime) like ev_partition_
-    // pruned); the compaction job lists the fragments, sizes the output
-    // at ceil(bytes / 32 MiB) and rewrites via coalesce — a shuffle-
-    // FREE concatenation (repartition would pay a full shuffle for
-    // nothing: bin-packing needs no key). The file listing is driver-
-    // side METADATA (namenode-scale, like SchemaRegistry's sanctioned
-    // catalog collect), never data. The timed query reads the compacted
-    // layout back through the same aggregate the oracle runs on the
-    // flat table — hash equality IS the losslessness proof; the file-
-    // count invariants live in MaintenanceOpsSpec. At 100 TB this runs
-    // per partition-directory (compact within a day, never across), so
-    // coalesce's task-merging stays rack-local.
+    // files themselves). See [[compactFixtures]] for the two layouts.
+    // The timed query reads the compacted layout back through the same
+    // aggregate the oracle runs on the flat table — hash equality IS
+    // the losslessness proof; the file-count invariants live in
+    // MaintenanceOpsSpec. At 100 TB this runs per partition-directory
+    // (compact within a day, never across), so coalesce's task-merging
+    // stays rack-local.
     "rel_compact" -> ((s, dir) => {
       import s.implicits._
-      def fixture(kind: String) = new java.io.File(
-        graft.sources.GraftIO.fixtureDir(dir, "events.parquet", kind, ""))
-      val frag = fixture("events_frag")
-      if (!new java.io.File(frag, "_SUCCESS").isFile)
-        Tables.events(s, dir)
-          .select($"event_id", $"event_type", $"user_id")
-          .repartition(64)
-          .write.mode("overwrite").parquet(frag.getAbsolutePath)
-      val compacted = fixture("events_compact")
-      if (!new java.io.File(compacted, "_SUCCESS").isFile) {
-        val bytes = frag.listFiles
-          .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-        val nOut = math.max(1,
-          math.ceil(bytes / (32.0 * 1024 * 1024)).toInt)
-        Tables.read(s, frag.getAbsolutePath)
-          .coalesce(nOut)
-          .write.mode("overwrite").parquet(compacted.getAbsolutePath)
-      }
-      Tables.read(s, compacted.getAbsolutePath)
+      Tables.read(s, compactFixtures(s, dir)._2)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), sum($"user_id").as("sum_uid"),
           min($"event_id").as("min_id"), max($"event_id").as("max_id"))

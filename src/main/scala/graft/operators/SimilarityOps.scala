@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.GraftIO
 import graft.functions.Fns._
 
 /** Similarity search over embedding columns (SURVEY.md §2.11):
@@ -96,7 +97,8 @@ object SimilarityOps {
     * refactor, not a semantic one.
     */
   private def mutualEdgesServed(s: SparkSession, dir: String): DataFrame = {
-    val idx = buildIndexOnce(dir, "mutualknn", s"k=3,bits=$LSH_BITS") { tmp =>
+    val idx = GraftIO.buildFixture(dir, "embeddings.parquet",
+        "mutualknn", s"k=3,bits=$LSH_BITS") { tmp =>
       mutualEdges(s, dir).write.parquet(s"$tmp/mutual.parquet")
     }
     Tables.read(s, s"$idx/mutual.parquet")
@@ -183,26 +185,9 @@ object SimilarityOps {
   private def cosine(a: Column, b: Column): Column =
     graft.api.GraftPipelines.cosine(a, b)
 
-  /** Write-once ANN-index fixture location: the shared helper keyed on
-    * corpus mtime AND the build parameters (see
-    * [[graft.sources.GraftIO.fixtureDir]]); published atomically by
-    * [[graft.sources.GraftIO.buildOnce]].
-    */
-  private def indexFixtureDir(dir: String, kind: String,
-      params: String): String =
-    graft.sources.GraftIO.fixtureDir(dir, "embeddings.parquet", kind, params)
-
-  /** buildOnce at the params-keyed fixture path with the SAME params
-    * string as the in-index marker — path key and marker never drift.
-    */
-  private def buildIndexOnce(dir: String, kind: String, params: String)(
-      build: String => Unit): String =
-    graft.sources.GraftIO.buildOnce(
-      indexFixtureDir(dir, kind, params), params)(build)
-
   /** Build/serve split of the fixed-k k-means fit: centroids (k rows)
     * and the final assignment (vec_id, cluster, ccos — n rows) written
-    * ONCE per corpus+params ([[buildIndexOnce]], same write-once
+    * ONCE per corpus+params ([[GraftIO.buildFixture]], same write-once
     * discipline as the ANN/PPJoin/mutual-kNN indexes), then every
     * centroid- or assignment-reusing consumer reads the fit back
     * instead of re-running the Lloyd iterations. Before this split the
@@ -232,7 +217,8 @@ object SimilarityOps {
     */
   private def kmeansFixture(s: SparkSession, dir: String, kind: String,
       params: String)(fitCentroids: => DataFrame): (DataFrame, DataFrame) = {
-    val idx = buildIndexOnce(dir, kind, params) { tmp =>
+    val idx = GraftIO.buildFixture(dir, "embeddings.parquet",
+        kind, params) { tmp =>
       fitCentroids.write.parquet(s"$tmp/centroids.parquet")
       graft.api.GraftPipelines
         .assignToCentroids(Tables.embeddings(s, dir),
@@ -250,7 +236,8 @@ object SimilarityOps {
     */
   private def ivfIndexServed(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val ix = buildIndexOnce(dir, "ivf", s"nc=$NC") { tmp =>
+    val ix = GraftIO.buildFixture(dir, "embeddings.parquet",
+        "ivf", s"nc=$NC") { tmp =>
       val (cent, assign) = graft.api.GraftPipelines
         .ivfIndex(Tables.embeddings(s, dir), NC)
       graft.sources.GraftIO.writeParquet(cent, s"$tmp/centroids")
@@ -268,8 +255,8 @@ object SimilarityOps {
     */
   private def pqIndexServed(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val ix = buildIndexOnce(dir, "pq",
-        s"m=$PQ_M,k=$PQ_K,it=$PQ_ITERS,d=$DIM") { tmp =>
+    val ix = GraftIO.buildFixture(dir, "embeddings.parquet",
+        "pq", s"m=$PQ_M,k=$PQ_K,it=$PQ_ITERS,d=$DIM") { tmp =>
       val (books, codes) = graft.api.GraftPipelines
         .pqIndex(Tables.embeddings(s, dir), PQ_M, PQ_K, PQ_ITERS, DIM)
       graft.sources.GraftIO.writeParquet(books, s"$tmp/codebooks")
@@ -813,8 +800,8 @@ object SimilarityOps {
       val emb = Tables.embeddings(s, dir).withColumn("bucket",
         graft.api.GraftPipelines.signLshBucket($"embedding", LSH_BITS, 0))
         .localCheckpoint()
-      val idx = buildIndexOnce(dir, "knnbase",
-          s"k=3,bits=$LSH_BITS,mod=17") { tmp =>
+      val idx = GraftIO.buildFixture(dir, "embeddings.parquet",
+          "knnbase", s"k=3,bits=$LSH_BITS,mod=17") { tmp =>
           graft.api.GraftPipelines.knnEdges(
               emb.filter($"vec_id" % 17 =!= 0).drop("bucket"), 3, LSH_BITS)
             .write.parquet(s"$tmp/edges.parquet")

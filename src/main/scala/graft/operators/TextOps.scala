@@ -568,9 +568,8 @@ object TextOps {
     // corpus-scan twin whose oracle this shares verbatim).
     "llm_bm25_served" -> ((s, dir) => {
       import s.implicits._
-      val idx = graft.sources.GraftIO.buildOnce(
-        graft.sources.GraftIO.fixtureDir(dir, "documents.parquet",
-          "bm25idx", "tok=ws-unigram"), "tok=ws-unigram") { tmp =>
+      val idx = graft.sources.GraftIO.buildFixture(dir, "documents.parquet",
+          "bm25idx", "tok=ws-unigram") { tmp =>
         graft.api.GraftPipelines.bm25IndexOnce(Tables.documents(s, dir), tmp)
       }
       graft.api.GraftPipelines.bm25LogServed(s, idx, BM25_TERMS)

@@ -139,14 +139,6 @@ object GraftIO {
     glob.fold(r)(g => r.option("pathGlobFilter", g)).load(path)
   }
 
-  /** Shared write-once index-fixture location (the serve-split entries'
-    * offline artifact). The key hashes the corpus path, the stamp
-    * file's mtime (a regenerated corpus never serves a stale index) AND
-    * the build parameters — an index is only valid for the exact
-    * threshold/seed/width it was built with (e.g. a PPJoin prefix is
-    * θ-specific), so changing a constant in a later round must key a
-    * FRESH directory instead of silently serving the old one.
-    */
   /** 64-bit hex identity of a (corpus, mtime, params) triple.
     * Cryptographic key, NOT Tuple.hashCode: a 32-bit hash over
     * (corpus, mtime, params) collides silently and the failure mode
@@ -191,11 +183,31 @@ object GraftIO {
     catch { case _: java.io.FileNotFoundException => Vector.empty }
   }
 
+  /** Shared write-once index-fixture location (the serve-split entries'
+    * offline artifact). The key hashes the corpus path, the stamp
+    * file's mtime (a regenerated corpus never serves a stale index) AND
+    * the build parameters — an index is only valid for the exact
+    * threshold/seed/width it was built with (e.g. a PPJoin prefix is
+    * θ-specific), so changing a constant in a later round must key a
+    * FRESH directory instead of silently serving the old one.
+    */
   def fixtureDir(corpusDir: String, stampFile: String, kind: String,
       params: String): String =
     new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_${kind}_index_${corpusKey(corpusDir, stampFile, params)}")
       .getAbsolutePath
+
+  private val tmpCounter = new java.util.concurrent.atomic.AtomicLong
+
+  /** The one way an operator publishes a fixture: [[buildOnce]] at the
+    * [[fixtureDir]] keyed by (corpusDir, stampFile, kind, params), with
+    * that SAME `params` as the in-fixture marker — one argument, so the
+    * path key and the marker can never drift apart. Returns the
+    * published directory.
+    */
+  def buildFixture(corpusDir: String, stampFile: String, kind: String,
+      params: String)(build: String => Unit): String =
+    buildOnce(fixtureDir(corpusDir, stampFile, kind, params), params)(build)
 
   /** Build-once with ATOMIC publication: `build` writes into a private
     * temp directory; a single POSIX rename publishes it. Closes the
@@ -206,17 +218,12 @@ object GraftIO {
     * into. Here each builds privately; the rename winner publishes,
     * the loser discards its copy. Existence of `finalDir` IS the
     * built marker — no separate flag file to leave half-set.
-    */
-  private val tmpCounter = new java.util.concurrent.atomic.AtomicLong
-
-  def buildOnce(finalDir: String)(build: String => Unit): String =
-    buildOnce(finalDir, params = "")(build)
-
-  /** As [[buildOnce]], with a PARAMS MARKER: `params` (the same string
-    * the caller keyed [[fixtureDir]] with) is written to
-    * `_graft_params` inside the private temp dir BEFORE the publishing
-    * rename — so a published index atomically carries its own identity
-    * — and every later hit `require`s the marker matches. The SHA key
+    *
+    * The PARAMS MARKER: `params` (the same string the caller keyed
+    * [[fixtureDir]] with) is written to `_graft_params` inside the
+    * private temp dir BEFORE the publishing rename — so a published
+    * index atomically carries its own identity — and every later hit
+    * `require`s the marker matches. The SHA key
     * in the path already separates params; the marker is the
     * defense-in-depth for everything the key cannot see: a dir built
     * by an older scheme, a hand-copied fixture, a torn directory left

@@ -572,7 +572,7 @@ object EventStreaming {
 
   /** Label every job an expression tree's ACTIONS schedule while `f`
     * runs (thread-local, so concurrent queries don't cross-label) —
-    * the chain loops run 60-100 jobs per trigger, and without labels
+    * the chain loop runs 60-100 jobs per trigger, and without labels
     * the Spark UI / listener attribution reads only the foreachBatch
     * callsite. Pure observability: no plan change.
     */
@@ -586,17 +586,17 @@ object EventStreaming {
     * from just that batch, silently forgetting the corpus. Refuse and
     * name the recovery (re-running the vacuum completes the sweep).
     */
-  private def refuseMidVacuum(loop: String,
-      fs: org.apache.hadoop.fs.FileSystem, statePath: String): Unit =
+  private def refuseMidVacuum(fs: org.apache.hadoop.fs.FileSystem,
+      statePath: String): Unit =
     Seq("bands", "docs", "dels").foreach { log =>
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$log.vold")))
         throw new IllegalStateException(
-          s"$loop: $statePath/$log.vold exists — a vacuum crashed " +
+          s"upsertLoop: $statePath/$log.vold exists — a vacuum crashed " +
             "mid-swap; re-run DedupOps.vacuumChainState(statePath) to " +
             "recover before resuming the loop")
     }
 
-  /** Hash-bucket partition id for the chain loops' store logs:
+  /** Hash-bucket partition id for the chain loop's store logs:
     * `pb = pmod(xxhash64(key), buckets)`, written as a hive partition
     * column so every per-trigger read can prune to exactly the buckets
     * the batch touches (`PartitionFilters` on the scan — the directory
@@ -669,8 +669,8 @@ object EventStreaming {
     else all.filter(col("pb").isin(pbs: _*))
   }
 
-  /** Per-trigger candidate generation for the chain loops
-    * ([[extendLoop]]/[[upsertLoop]]): batch bands PROBE the bucketed
+  /** Per-trigger candidate generation for the chain loop
+    * ([[upsertLoop]]): batch bands PROBE the bucketed
     * band store and the result is normalized to `d1 < d2` candidate
     * pairs. The per-trigger cost is O(batch + touched buckets), never
     * O(store):
@@ -1028,209 +1028,57 @@ object EventStreaming {
     }
   }
 
-  /** Streaming ingest maintenance of the near-dup cluster map — the
-    * ADDITION twin of [[takedownLoop]], and the cluster-level upgrade
-    * of [[ingestDedupLoop]]'s per-doc flags: document batches arrive
-    * as a stream and the full chain (band index, doc store, verified
-    * pairs, cluster labels) is maintained per trigger with the batch
-    * extension algebra ([[graft.operators.DedupOps]]'s `extendChain`,
-    * oracle-checked as `llm_dup_clusters_incremental`): components
-    * MERGE where a new doc bridges two existing clusters, connected
-    * components re-run only over touched components' edges plus the
-    * batch's verified pairs, and untouched labels pass through.
+  /** Streaming maintenance of the near-dup cluster chain — the ONE
+    * loop for ingest and takedown, in the shape a real recurring
+    * pipeline has (docs arrive and right-to-be-forgotten requests land
+    * in the same window), and the cluster-level upgrade of
+    * [[ingestDedupLoop]]'s per-doc flags. Each micro-batch carries rows
+    * `(op, doc_id, text)` with op = 'add' (text = document) or 'del'
+    * (text ignored): an ingest stream is all `('add', id, text)` rows,
+    * a takedown stream all `('del', id, null)` rows. State bootstraps
+    * EMPTY; production seeds a chain by streaming the initial corpus in
+    * as adds, the same code path every later batch takes.
     *
-    * State under `statePath` (all bootstrapped EMPTY — production
-    * seeds by streaming the initial corpus through, which is the same
-    * code path):
+    * Per trigger only the batch's adds are shingled/hashed; candidates
+    * come from the batch bands probing the accumulated band store
+    * (every candidate has a batch endpoint — old↔old pairs are already
+    * in the chain), and verification reads only the candidate docs'
+    * texts. The chain step is the batch algebra of
+    * [[graft.operators.DedupOps]], picked by the batch's own op mix
+    * (counted while the batch checkpoint materializes — there is no
+    * option):
     *
-    *  - `scheme/` — run-identity marker ([[takedownLoop]] discipline):
-    *    a non-owning query refuses at batch 0 over maintained state.
-    *  - `bands/`, `docs/` — the batch's band rows and (id, text) rows
-    *    as HASH-BUCKETED (`pb=`) dup-tolerant append logs
-    *    ([[appendBucketedLog]]: bands bucketed by the band hash, docs
-    *    by doc id), each bucket folded by [[compactDupTolerantLog]]
-    *    once its file count passes `compactThreshold`. Bucketing is
-    *    what makes the per-trigger read O(batch + touched buckets)
-    *    instead of O(store): candidates scan only the batch's band
-    *    buckets, verification scans only the candidate ids' doc
-    *    buckets, and neither store is ever deduplicated or shuffled
-    *    whole (the round-13 flat-log `distinct()`/`dropDuplicates`
-    *    full-store shuffles are gone — dup tolerance moved to
-    *    candidate-level dedup, see [[chainCandidatePairs]]). A
-    *    replayed batch's double-append and a mid-compaction read
-    *    remain harmless for the same reason.
-    *  - `chain/g=<id>/{pairs,labels}` — crash-safe generations exactly
-    *    as in [[takedownLoop]]; extension is IDEMPOTENT (re-adding
-    *    present pairs adds nothing and CC is deterministic), so a
-    *    replay landing on its own published generation rewrites
-    *    identical content.
+    *  - adds only: `extendChain` (oracle-checked as
+    *    `llm_dup_clusters_incremental`) — components MERGE where a new
+    *    doc bridges two clusters, connected components re-run only over
+    *    the touched components' edges plus the batch's verified pairs,
+    *    and the pairs publish as prior ∪ new;
+    *  - deletes only: `retractChain` (`llm_dedup_retract`) — surviving
+    *    pairs by anti-join, components re-run only where a deleted doc
+    *    sat (a deleted bridge SPLITS its component), no text re-read;
+    *  - both: `upsertChain` (`llm_dedup_upsert`) — the deletes FIRST,
+    *    then the adds.
     *
-    * Per trigger: only the BATCH is shingled/hashed; candidates come
-    * from the batch bands joined against the accumulated band store
-    * (every candidate has a batch endpoint by construction — old↔old
-    * pairs are already in the chain); verification reads only
-    * candidate docs' texts from the store. The sink sees the label
-    * rows the batch ADDED or CHANGED (new docs entering the map and
-    * old docs whose component merged under a smaller label).
-    */
-  def extendLoop(docs: DataFrame, statePath: String,
-      checkpointDir: Option[String] = None, minJaccard: Double = 0.7,
-      shingleN: Int = 3, seeds: Int = 8, bands: Int = 4,
-      compactThreshold: Int = 64, storeBuckets: Int = 64,
-      broadcastRowCap: Long = 1L << 20)
-      (sink: (Dataset[Row], Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val runId = StateScheme.runIdentity(checkpointDir)
-    deliver(docs, checkpointDir) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      import spark.implicits._
-      val fs = StateScheme.fsFor(spark, statePath)
-      val chainRoot = s"$statePath/chain"
-      val chainPath = new org.apache.hadoop.fs.Path(chainRoot)
-      def gens(): Seq[Long] =
-        if (!fs.exists(chainPath)) Seq.empty
-        else fs.listStatus(chainPath).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
-      def stateExists: Boolean = gens().nonEmpty ||
-        Seq("bands", "docs").exists(sub =>
-          fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$sub")))
-      // store=pb<N> is part of the fingerprint: the bucket count IS
-      // the physical layout — a pruned read under a different count
-      // would silently miss candidate buckets, and pre-bucketing flat
-      // state must refuse loudly rather than be misread
-      val pinnedRun = labeled(spark, s"extend[$batchId] scheme guard") {
-        StateScheme.ensure(spark, fs, s"$statePath/scheme",
-          s"j=$minJaccard,n=$shingleN,seeds=$seeds,bands=$bands," +
-            s"store=pb$storeBuckets", runId,
-          "extendLoop",
-          "bands/pairs from two hash schemes must never mix", stateExists)
-      }
-      StateScheme.refuseForeign("extendLoop", batchId, pinnedRun, runId,
-        gens().exists(_ >= 0), s"the maintained chain at $chainRoot",
-        "rewinding the chain would drop ingested docs from the map")
-      refuseMidVacuum("extendLoop", fs, statePath)
-      if (gens().isEmpty)
-        publishGeneration(fs, chainRoot, -1L, Seq(
-          "pairs" -> Seq.empty[(Long, Long)].toDF("d1", "d2"),
-          "labels" -> Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")))
-      val allGens = gens()
-      val priorBelow = allGens.filter(_ < batchId).maxOption
-      if (allGens.contains(batchId)) {
-        // REPLAY landing on this batch's own published generation (the
-        // first attempt crashed after publish): the published content
-        // is final — the recompute is deterministic and
-        // [[publishGeneration]] never deletes a live generation, so
-        // recovery is a pure read. Re-deliver the delta from stable
-        // files when the pre-publish generation still exists (the fold
-        // below had not run), else the sink already saw it — empty
-        // redelivery, the at-least-once contract.
-        priorBelow match {
-          case Some(p) =>
-            val published =
-              spark.read.parquet(s"$chainRoot/g=$batchId/labels")
-            val pLabels = spark.read.parquet(s"$chainRoot/g=$p/labels")
-            sink(published.join(pLabels, Seq("doc_id", "cluster_id"),
-              "left_anti"), batchId)
-            allGens.filter(_ < batchId).foreach { g =>
-              fs.delete(new org.apache.hadoop.fs.Path(
-                s"$chainRoot/g=$g"), true)
-            }
-          case None =>
-            sink(Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"),
-              batchId)
-        }
-      } else {
-      val b = batch.toDF.select(col("doc_id").cast("long").as("doc_id"),
-        col("text").cast("string").as("text"))
-      if (!labeled(spark, s"extend[$batchId] guard")(b.isEmpty)) {
-        // hash-bucketed dup-tolerant append logs: bands of THIS batch
-        // (bucketed by band hash), text of THIS batch (bucketed by doc
-        // id) — a replayed batch re-appends, and candidate-level dedup
-        // below cancels the double rows
-        val batchBands = labeled(spark, s"extend[$batchId] batch bands") {
-          graft.api.GraftPipelines
-            .bandIndex(b, shingleN, seeds, bands).localCheckpoint()
-        }
-        val (bandPbs, nBandRows) =
-          labeled(spark, s"extend[$batchId] append band log") {
-            appendBucketedLog(batchBands, s"$statePath/bands",
-              col("b"), storeBuckets, compactThreshold)
-          }
-        labeled(spark, s"extend[$batchId] append doc log") {
-          appendBucketedLog(b, s"$statePath/docs", col("doc_id"),
-            storeBuckets, compactThreshold)
-        }
-        // candidates with >= 1 batch endpoint (old↔old pairs are
-        // already in the chain), normalized to d1 < d2; per-trigger
-        // cost O(batch + touched buckets) — see [[chainCandidatePairs]]
-        val cands = labeled(spark, s"extend[$batchId] candidates") {
-          chainCandidatePairs(spark, s"$statePath/bands",
-            batchBands, bandPbs, broadcastRowCap = broadcastRowCap,
-            knownBatchRows = Some(nBandRows))
-            .localCheckpoint()
-        }
-        val candDocs = labeled(spark, s"extend[$batchId] cand texts") {
-          candidateDocTexts(spark, s"$statePath/docs",
-            cands, storeBuckets, broadcastRowCap).localCheckpoint()
-        }
-        val newPairs = graft.api.GraftPipelines
-          .nearDuplicatesFromCandidates(candDocs, cands, minJaccard)
-          .select(col("d1"), col("d2"))
-        val prior = priorBelow.get // bootstrap guaranteed g=-1
-        val pPairs =
-          spark.read.parquet(s"$chainRoot/g=$prior/pairs")
-        val pLabels =
-          spark.read.parquet(s"$chainRoot/g=$prior/labels")
-        // materialize once: consumed by extendChain AND the pair union
-        val np = labeled(spark, s"extend[$batchId] verify") {
-          newPairs.localCheckpoint()
-        }
-        val next = labeled(spark, s"extend[$batchId] chain extend (CC)") {
-          graft.operators.DedupOps.extendChain(spark, pPairs, pLabels, np)
-        }
-        labeled(spark, s"extend[$batchId] publish") {
-          publishGeneration(fs, chainRoot, batchId, Seq(
-            "pairs" -> pPairs.select(col("d1"), col("d2")).union(np)
-              .distinct(),
-            "labels" -> next))
-        }
-        val published =
-          spark.read.parquet(s"$chainRoot/g=$batchId/labels")
-        // delta = rows current now that were not current before (new
-        // docs entering the map + merge relabels); the g=prior files
-        // this joins still exist — publish never deletes, and older
-        // generations fold only after the sink returns
-        labeled(spark, s"extend[$batchId] delta sink") {
-          sink(published.join(pLabels, Seq("doc_id", "cluster_id"),
-            "left_anti"), batchId)
-        }
-        gens().filter(_ < batchId).foreach { g =>
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$chainRoot/g=$g"), true)
-        }
-      } else sink(Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"),
-        batchId)
-      }
-    }
-  }
-
-  /** UNIFIED streaming chain maintenance — adds and takedowns in ONE
-    * stream, the shape a real recurring pipeline has (docs arrive and
-    * right-to-be-forgotten requests land in the same window). Each
-    * micro-batch carries rows `(op, doc_id, text)` with op = 'add'
-    * (text = document) or 'del' (text ignored); the batch applies its
-    * deletes FIRST, then its adds, via the composed batch algebra
-    * ([[graft.operators.DedupOps]]'s `upsertChain` = retractChain ∘
-    * extendChain, oracle-checked as `llm_dedup_upsert`).
+    * Untouched components' labels pass straight through in every case.
+    * A one-sided batch runs only its half: the other half over an empty
+    * set would still checkpoint the labels and run CC over zero edges.
     *
-    * State under `statePath` — the [[extendLoop]] layout plus a
-    * tombstone log:
+    * State under `statePath`:
     *
-    *  - `scheme/`, `chain/g=<id>/{pairs,labels}` — exactly as
-    *    [[extendLoop]]/[[takedownLoop]] (shared [[StateScheme]] marker
-    *    and [[publishGeneration]] crash-safety).
-    *  - `bands/`, `docs/` — hash-bucketed (`pb=`) dup-tolerant append
-    *    logs of ADDED docs ([[appendBucketedLog]] — the [[extendLoop]]
-    *    bucketing, same O(batch + touched buckets) per-trigger reads).
+    *  - `scheme/` — the [[StateScheme]] marker: hash scheme plus bucket
+    *    count (`store=pb<N>` — the count IS the physical layout, so a
+    *    pruned read under another count would silently miss candidate
+    *    buckets) and the owning run; a non-owning query refuses at
+    *    batch 0 over maintained state.
+    *  - `bands/`, `docs/` — the added docs' band rows and (id, text)
+    *    rows as HASH-BUCKETED (`pb=`) dup-tolerant append logs
+    *    ([[appendBucketedLog]]: bands by band hash, docs by doc id),
+    *    each bucket folded by [[compactDupTolerantLog]] once its file
+    *    count passes `compactThreshold`. Bucketing keeps the
+    *    per-trigger read O(batch + touched buckets), never O(store)
+    *    (see [[chainCandidatePairs]]); a replayed batch's double-append
+    *    and a mid-compaction read stay harmless because candidates are
+    *    deduplicated at pair level.
     *  - `dels/` — the tombstone log: deleted doc ids, appended per
     *    batch, folded like the other logs. Every band/doc READ
     *    anti-joins it, so a deleted doc can never generate another
@@ -1241,6 +1089,20 @@ object EventStreaming {
     *    compaction, never an in-place scrub; the vacuum is the
     *    right-to-be-forgotten completion that takes the text off
     *    disk).
+    *  - `chain/g=<id>/{pairs,labels}` — one generation per trigger (id
+    *    = batchId; an empty `g=-1` at bootstrap). A batch reads the
+    *    newest generation BELOW its id, publishes its own crash-safely
+    *    ([[publishGeneration]]: pid-private tmp dir + one rename, never
+    *    deleting a live generation), and folds older generations only
+    *    AFTER the sink returns. A replay landing on its OWN published
+    *    generation therefore skips the recompute — the published
+    *    content is final (the chain step is deterministic and
+    *    idempotent) — and re-delivers the delta from stable files
+    *    while the pre-publish generation still exists, or an empty
+    *    frame once the fold already committed (at-least-once
+    *    delivery). No path ever deletes the newest generation, so a
+    *    crash can neither drop ingested docs nor resurrect taken-down
+    *    ones.
     *
     * Contracts: doc ids are never reused after deletion (tombstones
     * are permanent), and one batch must not both add and delete the
@@ -1248,11 +1110,10 @@ object EventStreaming {
     * rescues that case: tombstones land before candidate generation,
     * so the delete would win on the corpus side while the batch-band
     * probe side could still pair the doc — an inconsistent chain,
-    * which is why the loop refuses instead of picking a winner.)
-    * The sink sees the
-    * label-map DELTA as `(doc_id, cluster_id, op)` rows — op 'add'
-    * for rows entering the map (new docs, merge relabels, split
-    * relabels) and 'del' for rows leaving it; readers consume the
+    * which is why the loop refuses instead of picking a winner.) The
+    * sink sees the label-map DELTA as `(doc_id, cluster_id, op)` rows —
+    * op 'add' for rows entering the map (new docs, merge relabels,
+    * split relabels) and 'del' for rows leaving it; readers consume the
     * newest `chain/g=` generation directly.
     */
   def upsertLoop(ops: DataFrame, statePath: String,
@@ -1275,8 +1136,8 @@ object EventStreaming {
       def stateExists: Boolean = gens().nonEmpty ||
         Seq("bands", "docs", "dels").exists(sub =>
           fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$sub")))
-      // store=pb<N> in the fingerprint: the extendLoop rationale — the
-      // bucket count is the physical layout and must never drift
+      // store=pb<N> in the fingerprint: the bucket count is the
+      // physical layout and must never drift (see the scaladoc)
       val pinnedRun = labeled(spark, s"upsert[$batchId] scheme guard") {
         StateScheme.ensure(spark, fs, s"$statePath/scheme",
           s"j=$minJaccard,n=$shingleN,seeds=$seeds,bands=$bands," +
@@ -1288,7 +1149,7 @@ object EventStreaming {
         gens().exists(_ >= 0), s"the maintained chain at $chainRoot",
         "rewinding the chain would drop ingested docs and resurrect " +
           "taken-down ones")
-      refuseMidVacuum("upsertLoop", fs, statePath)
+      refuseMidVacuum(fs, statePath)
       if (gens().isEmpty)
         publishGeneration(fs, chainRoot, -1L, Seq(
           "pairs" -> Seq.empty[(Long, Long)].toDF("d1", "d2"),
@@ -1305,9 +1166,10 @@ object EventStreaming {
       val allGens = gens()
       val priorBelow = allGens.filter(_ < batchId).maxOption
       if (allGens.contains(batchId)) {
-        // REPLAY onto own published generation — the extend/takedown
-        // recovery contract: published content is final, delta from
-        // stable files when the pre-publish generation survives
+        // REPLAY onto own published generation (the first attempt
+        // crashed after publish): the content is final and recovery is
+        // a pure read — the delta from stable files while the
+        // pre-publish generation survives, else the sink already saw it
         priorBelow match {
           case Some(p) =>
             val published =
@@ -1321,12 +1183,6 @@ object EventStreaming {
           case None => sink(emptyDelta(), batchId)
         }
       } else {
-      val b = labeled(spark, s"upsert[$batchId] guard") {
-        batch.toDF.select(
-          lower(col("op")).cast("string").as("op"),
-          col("doc_id").cast("long").as("doc_id"),
-          col("text").cast("string").as("text")).localCheckpoint()
-      }
       // an unrecognized op must fail the batch, not silently drop the
       // row — a typo'd 'delete' swallowed here would be a takedown
       // that never happened. The explicit isNull arm matters: under
@@ -1334,30 +1190,32 @@ object EventStreaming {
       // it a null-op row would pass neither this check nor the
       // adds/dels filters below — the exact silent drop this guard
       // exists to prevent.
-      // BOTH guards (bad op, same-batch add+del) plus the empty/adds/
-      // dels presence tests come off ONE two-level aggregate over the
-      // checkpointed batch — the round-14 shape ran them as four
-      // separate collect jobs per trigger, pure floor; the detailed
-      // limit-5 collects that name the offending values run only on
-      // the (rare) violation path, so the messages are unchanged.
       val isBad = col("op").isNull || !col("op").isin("add", "del")
-      val gstats = labeled(spark, s"upsert[$batchId] batch guards") {
-        b.groupBy(col("doc_id"))
-          .agg(max(when(col("op") === "add", 1).otherwise(0)).as("ha"),
-            max(when(col("op") === "del", 1).otherwise(0)).as("hd"),
-            sum(when(isBad, 1L).otherwise(0L)).as("bad"))
-          .agg(coalesce(sum(col("bad")), lit(0L)).as("n_bad"),
-            coalesce(sum(col("ha") * col("hd")).cast("long"), lit(0L))
-              .as("n_add_del"),
-            coalesce(sum(col("ha")).cast("long"), lit(0L)).as("n_adds"),
-            coalesce(sum(col("hd")).cast("long"), lit(0L)).as("n_dels"),
-            count(lit(1)).as("n_keys"))
-          .head()
+      // the batch checkpoint counts its rows, bad ops, adds and deletes
+      // as it materializes (Dataset.observe — no job of its own); the
+      // detailed limit-5 collects that name offending values run only
+      // on the (rare) violation path
+      val counts = org.apache.spark.sql.Observation()
+      val b = labeled(spark, s"upsert[$batchId] guard") {
+        batch.toDF.select(
+          lower(col("op")).cast("string").as("op"),
+          col("doc_id").cast("long").as("doc_id"),
+          col("text").cast("string").as("text"))
+          .observe(counts, count(lit(1)).as("rows"),
+            count(when(isBad, 1)).as("bad"),
+            count(when(col("op") === "add", 1)).as("adds"),
+            count(when(col("op") === "del", 1)).as("dels"))
+          .localCheckpoint()
       }
+      def counted(name: String) = counts.get(name).asInstanceOf[Long]
+      val batchEmpty = counted("rows") == 0L
+      val addsEmpty = counted("adds") == 0L
+      val delsEmpty = counted("dels") == 0L
       val adds = b.filter(col("op") === "add").drop("op")
-      val dels = b.filter(col("op") === "del")
-        .select(col("doc_id").as("del_id")).distinct()
-      if (gstats.getLong(0) > 0L) {
+      // dup-tolerant everywhere it goes (tombstone log, anti/semi-joins)
+      val dels =
+        b.filter(col("op") === "del").select(col("doc_id").as("del_id"))
+      if (counted("bad") > 0L) {
         val badOps = b.filter(isBad).limit(5).collect()
         require(badOps.isEmpty,
           s"upsertLoop batch $batchId: unrecognized op value(s) " +
@@ -1369,10 +1227,12 @@ object EventStreaming {
       // land before candidate generation (the delete would win on the
       // corpus side) while the unfiltered batch-band probe side could
       // still pair the doc — a tombstoned doc stuck in the label map
-      if (gstats.getLong(1) > 0L) {
-        val addDel = adds.select(col("doc_id"))
-          .join(dels, col("doc_id") === col("del_id"), "left_semi")
-          .limit(5).collect()
+      if (!addsEmpty && !delsEmpty) {
+        val addDel = labeled(spark, s"upsert[$batchId] add+del guard") {
+          adds.select(col("doc_id"))
+            .join(dels, col("doc_id") === col("del_id"), "left_semi")
+            .limit(5).collect()
+        }
         require(addDel.isEmpty,
           s"upsertLoop batch $batchId: doc id(s) " +
             s"${addDel.map(_.getLong(0)).mkString(", ")} appear as BOTH " +
@@ -1380,9 +1240,6 @@ object EventStreaming {
             "the ops across batches: del then add re-uses a tombstoned " +
             "id, which is also forbidden)")
       }
-      val batchEmpty = gstats.getLong(4) == 0L
-      val addsEmpty = gstats.getLong(2) == 0L
-      val delsEmpty = gstats.getLong(3) == 0L
       if (!batchEmpty) {
         // tombstones first: appended before any read, so this batch's
         // own candidate generation already excludes them
@@ -1393,21 +1250,20 @@ object EventStreaming {
               compactThreshold)
           }
         }
-        // the tombstone set: O(dels log), small relative to the corpus
-        // and measured separately (bench_streaming.json records how the
-        // anti-join scales with dels/ size)
-        val tombs = labeled(spark, s"upsert[$batchId] tombstone set") {
-          try spark.read.parquet(s"$statePath/dels")
-            .select(col("del_id")).distinct().localCheckpoint()
-          catch {
-            case _: org.apache.spark.sql.AnalysisException =>
-              Seq.empty[Long].toDF("del_id")
-          }
-        }
         val newPairs =
           if (addsEmpty)
             Seq.empty[(Long, Long)].toDF("d1", "d2")
           else {
+            // the tombstone set: O(dels log), small relative to the
+            // corpus and measured separately (bench_streaming.json
+            // records how the anti-join scales with dels/ size)
+            val delsLog = new org.apache.hadoop.fs.Path(s"$statePath/dels")
+            val tombs =
+              if (!fs.exists(delsLog)) None
+              else labeled(spark, s"upsert[$batchId] tombstone set") {
+                Some(spark.read.parquet(delsLog.toString)
+                  .select(col("del_id")).distinct().localCheckpoint())
+              }
             val batchBands = labeled(spark,
                 s"upsert[$batchId] batch bands") {
               graft.api.GraftPipelines
@@ -1430,7 +1286,7 @@ object EventStreaming {
             // tombstone-clean when the doc texts are fetched
             val cands = labeled(spark, s"upsert[$batchId] candidates") {
               chainCandidatePairs(spark, s"$statePath/bands",
-                batchBands, bandPbs, Some(tombs), broadcastRowCap,
+                batchBands, bandPbs, tombs, broadcastRowCap,
                 knownBatchRows = Some(nBandRows))
                 .localCheckpoint()
             }
@@ -1445,10 +1301,17 @@ object EventStreaming {
         val prior = priorBelow.get // bootstrap guaranteed g=-1
         val pPairs = spark.read.parquet(s"$chainRoot/g=$prior/pairs")
         val pLabels = spark.read.parquet(s"$chainRoot/g=$prior/labels")
+        // the chain step follows the batch's op mix (see the scaladoc):
+        // a one-sided batch runs only its half of upsertChain
         val (nextPairs, nextLabels) =
-          labeled(spark, s"upsert[$batchId] chain upsert (CC)") {
-            graft.operators.DedupOps
-              .upsertChain(spark, pPairs, pLabels, dels, newPairs)
+          labeled(spark, s"upsert[$batchId] chain step (CC)") {
+            val D = graft.operators.DedupOps
+            if (addsEmpty) D.retractChain(spark, pPairs, pLabels, dels)
+            else if (delsEmpty) {
+              val np = newPairs.localCheckpoint() // extend AND the union
+              (pPairs.select(col("d1"), col("d2")).union(np).distinct(),
+                D.extendChain(spark, pPairs, pLabels, np))
+            } else D.upsertChain(spark, pPairs, pLabels, dels, newPairs)
           }
         labeled(spark, s"upsert[$batchId] publish") {
           publishGeneration(fs, chainRoot, batchId,
@@ -1465,136 +1328,6 @@ object EventStreaming {
         }
       } else sink(emptyDelta(), batchId)
       }
-    }
-  }
-
-  /** Streaming takedown maintenance of the near-dup cluster chain —
-    * the streaming consumer of the batch retraction algebra
-    * ([[graft.operators.DedupOps]]'s `retractChain`, oracle-checked as
-    * `llm_dedup_retract`): delete batches (doc ids to forget) arrive
-    * as a stream, and the persisted chain (surviving verified pairs +
-    * cluster label map) is re-published per trigger without ever
-    * re-shingling corpus text. Per-trigger work is O(pairs) for the
-    * retraction anti-joins plus connected components over ONLY
-    * deletion-affected clusters — a takedown naming millions of docs
-    * still touches a vanishing fraction of a 100 TB corpus's clusters,
-    * and untouched components' labels pass straight through.
-    *
-    * State under `statePath`:
-    *
-    *  - `scheme/` — (seed fingerprint, run identity) marker, the
-    *    shared [[StateScheme]] discipline: the seed chain is
-    *    fingerprinted by an order-independent aggregate (count + xor
-    *    of per-row hashes — the chain tables are pair-count-sized, too
-    *    big to collect like the k-row centroid table), so restarting
-    *    against a DIFFERENT seed refuses loudly; and any query that
-    *    does not own the state (fresh or absent checkpoint) refuses at
-    *    batch 0 over already-maintained state instead of silently
-    *    rewinding it to the seed.
-    *  - `chain/g=<id>/{pairs,labels}` — one generation per trigger
-    *    (id = batchId; the caller's seed publishes as `g=-1` at
-    *    bootstrap). A batch reads the newest published generation
-    *    BELOW its id, applies its deletes, publishes its own
-    *    generation crash-safely ([[publishGeneration]]: pid-private
-    *    tmp dir + one rename, never deleting a live generation), and
-    *    folds older generations only AFTER the sink returns. A replay
-    *    landing on its OWN published generation therefore skips the
-    *    recompute — the published content is final (retraction is
-    *    deterministic and idempotent) — and re-delivers the
-    *    invalidated-label delta from stable files while the
-    *    pre-publish generation still exists, or an empty frame once
-    *    the fold already committed (at-least-once delivery). No code
-    *    path ever deletes the newest generation, so taken-down docs
-    *    can never resurrect through a crash window.
-    *
-    * The sink sees the label rows the batch INVALIDATED (docs dropped
-    * from the map or moved to a split component's new label); readers
-    * consume the newest `chain/g=` generation directly.
-    */
-  def takedownLoop(deletes: DataFrame, seedPairs: DataFrame,
-      seedLabels: DataFrame, statePath: String,
-      checkpointDir: Option[String] = None)
-      (sink: (Dataset[Row], Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val runId = StateScheme.runIdentity(checkpointDir)
-    def tableFp(df: DataFrame): String = {
-      val cols = df.columns.toSeq
-      val r = df.select(xxhash64(cols.map(col): _*).as("h"))
-        .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("x")).head()
-      s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-    }
-    val fp = tableFp(seedPairs.select(col("d1"), col("d2"))) + "|" +
-      tableFp(seedLabels.select(col("doc_id"), col("cluster_id")))
-    deliver(deletes, checkpointDir) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      import spark.implicits._
-      val fs = StateScheme.fsFor(spark, statePath)
-      val chainRoot = s"$statePath/chain"
-      val chainPath = new org.apache.hadoop.fs.Path(chainRoot)
-      def gens(): Seq[Long] =
-        if (!fs.exists(chainPath)) Seq.empty
-        else fs.listStatus(chainPath).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
-      val pinnedRun = StateScheme.ensure(spark, fs, s"$statePath/scheme",
-        fp, runId, "takedownLoop",
-        "the fingerprint pins the seed chain — applying takedowns " +
-          "across two different dedup chains would be a silent wrong " +
-          "answer", gens().nonEmpty)
-      StateScheme.refuseForeign("takedownLoop", batchId, pinnedRun, runId,
-        gens().exists(_ >= 0), s"the maintained chain at $chainRoot",
-        "rewinding the chain to an older generation would resurrect " +
-          "taken-down docs")
-      if (gens().isEmpty)
-        publishGeneration(fs, chainRoot, -1L, Seq(
-          "pairs" -> seedPairs.select(col("d1"), col("d2")),
-          "labels" -> seedLabels.select(col("doc_id"), col("cluster_id"))))
-      val allGens = gens()
-      val priorBelow = allGens.filter(_ < batchId).maxOption
-      val del = batch.toDF
-        .select(col(batch.columns.head).cast("long").as("del_id"))
-        .distinct()
-      if (allGens.contains(batchId)) {
-        // REPLAY landing on this batch's own published generation: the
-        // published content is final (see the scaladoc) — re-deliver
-        // the invalidated delta from stable files when the pre-publish
-        // generation survives, else the sink already saw it.
-        priorBelow match {
-          case Some(p) =>
-            val published =
-              spark.read.parquet(s"$chainRoot/g=$batchId/labels")
-            val pLabels = spark.read.parquet(s"$chainRoot/g=$p/labels")
-            sink(pLabels.join(published, Seq("doc_id", "cluster_id"),
-              "left_anti"), batchId)
-            allGens.filter(_ < batchId).foreach { g =>
-              fs.delete(new org.apache.hadoop.fs.Path(
-                s"$chainRoot/g=$g"), true)
-            }
-          case None =>
-            sink(Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"),
-              batchId)
-        }
-      } else if (!del.isEmpty) {
-        val prior = priorBelow.get // bootstrap guaranteed g=-1
-        val pPairs = spark.read.parquet(s"$chainRoot/g=$prior/pairs")
-        val pLabels =
-          spark.read.parquet(s"$chainRoot/g=$prior/labels")
-        val (kept, next) = graft.operators.DedupOps
-          .retractChain(spark, pPairs, pLabels, del)
-        publishGeneration(fs, chainRoot, batchId,
-          Seq("pairs" -> kept, "labels" -> next))
-        // invalidated = prior labels no longer current; computed while
-        // the prior generation's files still exist (publish never
-        // deletes), against the PUBLISHED read-back (stable files,
-        // not the lazy plan)
-        val published =
-          spark.read.parquet(s"$chainRoot/g=$batchId/labels")
-        sink(pLabels.join(published, Seq("doc_id", "cluster_id"),
-          "left_anti"), batchId)
-        gens().filter(_ < batchId).foreach { g =>
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$chainRoot/g=$g"), true)
-        }
-      } else sink(Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"),
-        batchId)
     }
   }
 
@@ -1700,7 +1433,7 @@ object EventStreaming {
 
   /** The ONE scheme-marker discipline every stateful maintenance loop
     * shares (knn graph, cluster-assign, ingest dedup, inverted index,
-    * curation, chain extend/takedown, snapshot upsert). A marker is a
+    * curation, near-dup chain, snapshot upsert). A marker is a
     * 1-row parquet table `(fp, run)` published next to the loop's
     * state:
     *
@@ -1856,16 +1589,17 @@ object EventStreaming {
             "use a fresh statePath")
   }
 
-  /** Crash-safe generation publish for the chain loops (extend /
-    * takedown): write every part under a pid-private `tmpg-` dir, then
-    * ONE rename to `g=<id>`. Never deletes an existing destination —
-    * the recompute that produced `parts` is deterministic from the
-    * prior generation plus the same batch, so a replay landing on its
-    * own published generation finds identical content already there
-    * and SKIPS (the delete-then-rename it replaces could crash between
-    * the two and wipe the only generation: extendLoop would lose every
-    * old↔old pair accumulated so far, takedownLoop would re-seed and
-    * resurrect taken-down docs — a right-to-be-forgotten violation).
+  /** Crash-safe generation publish for the chain loop
+    * ([[upsertLoop]]): write every part under a pid-private `tmpg-`
+    * dir, then ONE rename to `g=<id>`. Never deletes an existing
+    * destination — the recompute that produced `parts` is
+    * deterministic from the prior generation plus the same batch, so a
+    * replay landing on its own published generation finds identical
+    * content already there and SKIPS (the delete-then-rename it
+    * replaces could crash between the two and wipe the only
+    * generation: every old↔old pair accumulated so far would be lost,
+    * and taken-down docs would resurrect on the re-seed — a
+    * right-to-be-forgotten violation).
     * A failed rename throws (unlike the scheme marker there is no
     * benign concurrent-publisher case — the ownership gate admits one
     * writer), and stale `tmpg-` dirs from crashed attempts are swept

@@ -44,10 +44,22 @@ object Bridge {
     */
   def unpersistCheckpointBlocks(ds: Dataset[_],
       blocking: Boolean = false): Int =
+    checkpointRdd(ds).fold(0) { rdd => rdd.unpersist(blocking); 1 }
+
+  /** Whether `ds` IS a materialized checkpoint: its top-level plan is a
+    * [[LogicalRDD]] whose RDD holds stored blocks. A `LogicalRDD` alone
+    * is not enough — `createDataFrame(rdd, schema)` and the batch
+    * `foreachBatch` hands its function are `LogicalRDD`s too, over an
+    * unstored RDD that every consumer recomputes.
+    */
+  def isMaterializedCheckpoint(ds: Dataset[_]): Boolean =
+    checkpointRdd(ds).nonEmpty
+
+  private def checkpointRdd(ds: Dataset[_]) =
     ds.queryExecution.analyzed match {
       case lr: LogicalRDD if lr.rdd.getStorageLevel != StorageLevel.NONE =>
-        lr.rdd.unpersist(blocking); 1
-      case _ => 0
+        Some(lr.rdd)
+      case _ => None
     }
 }
 

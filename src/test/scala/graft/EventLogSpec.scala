@@ -36,11 +36,13 @@ class EventLogSpec extends SparkSpec {
       assert(n == 5)
       // start a slow query in another thread, then supersede it
       @volatile var failed: Option[Throwable] = None
-      // ~10^12-row 4-way cross product: cannot finish before the cancel
-      val e1 = log.events.select(col("event_id").as("a"))
-      val slow = e1.crossJoin(e1.select(col("a").as("b")))
-        .crossJoin(e1.select(col("a").as("c")))
-        .crossJoin(e1.select(col("a").as("d")))
+      // every event against an unbounded range: cannot finish before the
+      // cancel, and its tasks see the kill flag every range batch. (A
+      // cross product of the cached events alone loops ~10^9 times per
+      // input row between kill checks, so its cancelled tasks held every
+      // executor slot long after the cancel and stalled the next test.)
+      val slow = log.events.select(col("event_id"))
+        .crossJoin(spark.range(0L, Long.MaxValue, 1L, 4).toDF("n"))
         .agg(count(lit(1)))
       val t = new Thread(() => {
         try log.runInteractive(slow)(_.collect())
@@ -52,6 +54,12 @@ class EventLogSpec extends SparkSpec {
       t.join(60000)
       assert(!t.isAlive, "superseded query should terminate")
       assert(failed.isDefined, "cancelled query should raise")
+      // and its tasks stopped: a fresh job still gets executor slots
+      val probe =
+        new Thread(() => spark.sparkContext.parallelize(1 to 4, 4).count())
+      probe.start()
+      probe.join(60000)
+      assert(!probe.isAlive, "cancelled tasks must release their executor slots")
     } finally log.close()
   }
 

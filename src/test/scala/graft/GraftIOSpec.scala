@@ -474,6 +474,15 @@ class GraftIOSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       "reads must go through graft.Tables.read:\n" + offenders.mkString("\n"))
+    // and fixtures publish only through GraftIO.buildFixture: a
+    // `_SUCCESS` check-then-overwrite under operators/ is the race two
+    // JVMs lose by deleting each other's half-written build
+    val successChecks = sources.filter { f =>
+      root.relativize(f).toString.startsWith("graft/operators/") &&
+        java.nio.file.Files.readString(f).contains("_SUCCESS")
+    }
+    assert(successChecks.isEmpty, "fixtures must publish through " +
+      s"GraftIO.buildFixture, not a _SUCCESS check: $successChecks")
     // the pattern catches both read forms
     assert(tableRead.findFirstIn(
       """spark.read.parquet(s"$sfDir/$name.parquet")""").nonEmpty)

@@ -242,10 +242,11 @@ class MaintenanceOpsSpec extends SparkSpec {
     // compacted copy lands at ceil(bytes / 32 MiB) — at sf0.001 that's 1.
     def parquetFiles(d: java.io.File) =
       d.listFiles.filter(_.getName.endsWith(".parquet"))
-    def fixture(kind: String) = new java.io.File(
-      graft.sources.GraftIO.fixtureDir(sf, "events.parquet", kind, ""))
-    val frag = fixture("events_frag")
-    val comp = fixture("events_compact")
+    // the entry's own fixtures (already published: served, not rebuilt)
+    val (fragDir, compDir) =
+      graft.operators.MaintenanceOps.compactFixtures(spark, sf)
+    val frag = new java.io.File(fragDir)
+    val comp = new java.io.File(compDir)
     assert(parquetFiles(frag).length == 64)
     val bytes = parquetFiles(frag).map(_.length).sum
     val want = math.max(1, math.ceil(bytes / (32.0 * 1024 * 1024)).toInt)

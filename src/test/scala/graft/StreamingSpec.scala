@@ -942,15 +942,32 @@ class StreamingSpec extends SparkSpec {
     assert(n == 100L, s"the refused run must not have clobbered b=0, got $n")
   }
 
-  test("extendLoop: streamed doc batches maintain the cluster map to " +
-      "exactly the batch pipeline's output, a later doc merges two " +
+  /** `upsertLoop` input rows: each doc as an add, each id as a delete. */
+  private def adds(docs: (Long, String)*): Seq[(String, Long, String)] =
+    docs.map { case (id, t) => ("add", id, t) }
+  private def dels(ids: Long*): Seq[(String, Long, String)] =
+    ids.map(id => ("del", id, null: String))
+
+  /** A signed-delta sink row set, split into its (doc_id, cluster_id)
+    * 'add' rows and 'del' rows. */
+  private def bySign(rows: Set[(Long, Long, String)])
+      : (Set[(Long, Long)], Set[(Long, Long)]) = {
+    val (a, d) = rows.partition(_._3 == "add")
+    (a.map(r => (r._1, r._2)), d.map(r => (r._1, r._2)))
+  }
+
+  private val tA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+  private val tB =
+    "alpha beta gamma delta epsilon zeta eta theta paris london rome"
+  private val tAB = "alpha beta gamma delta epsilon zeta eta theta iota paris"
+  private val tC =
+    "completely different words appear in this sentence about engines"
+
+  test("upsertLoop add-only: streamed doc batches maintain the cluster " +
+      "map to exactly the batch pipeline's output, a later doc merges two " +
       "earlier clusters, and the sink sees the added/changed labels") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val tA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val tB = "alpha beta gamma delta epsilon zeta eta theta paris london rome"
-    val tAB = "alpha beta gamma delta epsilon zeta eta theta iota paris"
-    val tC = "completely different words appear in this sentence about engines"
     // batch 0: clusters {1,2} (tA twice), {4,5} (tB twice), {10,11}
     // (tC twice); tA~tB word-set jaccard = 8/13 < 0.7 so the two stay
     // separate. batch 1: doc 9 = tAB near-dups BOTH (0.82 / 0.75) and
@@ -960,16 +977,18 @@ class StreamingSpec extends SparkSpec {
     val b1 = Seq((9L, tAB))
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_extend").toString + "/state"
-    val mem = MemoryStream[(Long, String)]
-    val deltas = scala.collection.mutable.Map[Long, Set[(Long, Long)]]()
-    val query = EventStreaming.extendLoop(
-      mem.toDF().toDF("doc_id", "text"), stateDir,
+    val mem = MemoryStream[(String, Long, String)]
+    val deltas =
+      scala.collection.mutable.Map[Long, Set[(Long, Long, String)]]()
+    val query = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"), stateDir,
       compactThreshold = 1) { (df, b) =>
-      deltas(b) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      deltas(b) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     }
     try {
-      mem.addData(b0: _*); query.processAllAvailable()
-      mem.addData(b1: _*); query.processAllAvailable()
+      mem.addData(adds(b0: _*): _*); query.processAllAvailable()
+      mem.addData(adds(b1: _*): _*); query.processAllAvailable()
     } finally query.stop()
     val gDirs = new java.io.File(s"$stateDir/chain")
       .listFiles().map(_.getName).filter(_.startsWith("g=")).toSeq
@@ -1003,56 +1022,61 @@ class StreamingSpec extends SparkSpec {
     assert(Set(1L, 2L, 4L, 5L, 9L).map(end) == Set(1L))
     assert(Set(10L, 11L).map(end) == Set(10L))
     // sink deltas: batch 0 added both small clusters and {10,11};
-    // batch 1 added 9 and relabeled 4,5 onto the merged component
-    assert(deltas(0) == Set((1L, 1L), (2L, 1L), (4L, 4L), (5L, 4L),
-      (10L, 10L), (11L, 10L)))
-    assert(deltas(1) == Set((9L, 1L), (4L, 1L), (5L, 1L)))
+    // batch 1 added 9 and relabeled 4,5 onto the merged component, so
+    // their old labels leave the map
+    assert(bySign(deltas(0)) == (Set((1L, 1L), (2L, 1L), (4L, 4L),
+      (5L, 4L), (10L, 10L), (11L, 10L)), Set.empty))
+    assert(bySign(deltas(1)) == (Set((9L, 1L), (4L, 1L), (5L, 1L)),
+      Set((4L, 4L), (5L, 4L))))
     // a fresh (non-owning) query over the maintained state refuses
-    val mem2 = MemoryStream[(Long, String)]
-    val q2 = EventStreaming.extendLoop(
-      mem2.toDF().toDF("doc_id", "text"), stateDir)()
-    try {
-      mem2.addData((20L, tC))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q2.processAllAvailable()
-      }
-      assert(e.getMessage.contains("different run") ||
-        Option(e.getCause).exists(_.getMessage.contains("different run")))
-    } finally q2.stop()
+    val mem2 = MemoryStream[(String, Long, String)]
+    val q2 = EventStreaming.upsertLoop(
+      mem2.toDF().toDF("op", "doc_id", "text"), stateDir)()
+    mem2.addData(adds((20L, tC)): _*)
+    expectStreamFailure(q2, "different run")
     assert(spark.read.parquet(s"$stateDir/chain/g=1/labels")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap == end)
   }
 
-  test("takedownLoop: two streamed delete batches maintain the chain " +
-      "to exactly the from-scratch recompute on the remaining pairs, " +
-      "old generations fold away, and the sink sees the invalidated " +
-      "labels") {
+  test("upsertLoop delete-only: two streamed delete batches maintain the " +
+      "chain to exactly the from-scratch recompute on the remaining " +
+      "pairs, old generations fold away, and the sink sees the " +
+      "invalidated labels") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    // two components: a path 1-2-3-4-5 (3 bridges {1,2} and {4,5})
-    // and a pair {10,11}; batch 1 deletes the bridge, batch 2 deletes
-    // a doc of the second component
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-      .toDF("d1", "d2")
-    val labels = graft.api.GraftPipelines.dupClusters(pairs)
+    // seeded by streaming the corpus in as adds: 3 = tAB bridges
+    // {1,2} = tA and {4,5} = tB into one component, plus a pair
+    // {10,11}; batch 1 deletes the bridge, batch 2 deletes a doc of the
+    // second component
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_takedown").toString + "/state"
-    val mem = MemoryStream[Long]
-    val invalidated = scala.collection.mutable.Map[Long, Set[(Long, Long)]]()
-    val query = EventStreaming.takedownLoop(
-      mem.toDF().toDF("del_id"), pairs, labels, stateDir) { (df, b) =>
-      invalidated(b) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mem = MemoryStream[(String, Long, String)]
+    val deltas =
+      scala.collection.mutable.Map[Long, Set[(Long, Long, String)]]()
+    val query = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"), stateDir) { (df, b) =>
+      deltas(b) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     }
-    try {
-      mem.addData(3L); query.processAllAvailable()
-      mem.addData(10L); query.processAllAvailable()
+    val pairs = try {
+      mem.addData(adds((1L, tA), (2L, tA), (3L, tAB), (4L, tB), (5L, tB),
+        (10L, tC), (11L, tC)): _*)
+      query.processAllAvailable()
+      val seeded = spark.read.parquet(s"$stateDir/chain/g=0/pairs")
+        .localCheckpoint()
+      mem.addData(dels(3L): _*); query.processAllAvailable()
+      mem.addData(dels(10L): _*); query.processAllAvailable()
+      seeded
     } finally query.stop()
+    // the seed is the path the deletes cut
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L), (4L, 5L),
+        (10L, 11L)))
     // only the newest generation survives
     val gDirs = new java.io.File(s"$stateDir/chain")
       .listFiles().map(_.getName).filter(_.startsWith("g=")).toSeq
-    assert(gDirs == Seq("g=1"))
-    val end = spark.read.parquet(s"$stateDir/chain/g=1/labels")
+    assert(gDirs == Seq("g=2"))
+    val end = spark.read.parquet(s"$stateDir/chain/g=2/labels")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // bridge delete split {1..5} into {1,2} and {4,5}; deleting 10
     // left 11 edge-less, dropping the second component entirely
@@ -1062,30 +1086,26 @@ class StreamingSpec extends SparkSpec {
         pairs.filter(!$"d1".isin(3L, 10L) && !$"d2".isin(3L, 10L)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(end == recomputed)
-    // sink deltas: batch 0 invalidated the old component-1 labels of
-    // 3,4,5 (3 dropped, 4 and 5 relabeled); batch 1 invalidated 10,11
-    assert(invalidated(0) == Set((3L, 1L), (4L, 1L), (5L, 1L)))
-    assert(invalidated(1) == Set((10L, 10L), (11L, 10L)))
+    // sink deltas, 'del' rows = the invalidated labels: batch 1
+    // invalidated the old component-1 labels of 3,4,5 (3 dropped, 4
+    // and 5 relabeled onto 4); batch 2 invalidated 10,11
+    assert(bySign(deltas(1)) == (Set((4L, 4L), (5L, 4L)),
+      Set((3L, 1L), (4L, 1L), (5L, 1L))))
+    assert(bySign(deltas(2)) == (Set.empty, Set((10L, 10L), (11L, 10L))))
     // surviving pairs in state match the retraction
-    val endPairs = spark.read.parquet(s"$stateDir/chain/g=1/pairs")
+    val endPairs = spark.read.parquet(s"$stateDir/chain/g=2/pairs")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(endPairs == Set((1L, 2L), (4L, 5L)))
     // a FRESH query (new implicit run identity) over the maintained
-    // state must refuse at batch 0 — rewinding to the seed would
+    // state must refuse at batch 0 — rewinding the chain would
     // resurrect the taken-down docs
-    val mem2 = MemoryStream[Long]
-    val q2 = EventStreaming.takedownLoop(
-      mem2.toDF().toDF("del_id"), pairs, labels, stateDir)()
-    try {
-      mem2.addData(5L)
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q2.processAllAvailable()
-      }
-      assert(e.getMessage.contains("different run") ||
-        Option(e.getCause).exists(_.getMessage.contains("different run")))
-    } finally q2.stop()
+    val mem2 = MemoryStream[(String, Long, String)]
+    val q2 = EventStreaming.upsertLoop(
+      mem2.toDF().toDF("op", "doc_id", "text"), stateDir)()
+    mem2.addData(dels(5L): _*)
+    expectStreamFailure(q2, "different run")
     // the refused restart must not have touched the chain
-    assert(spark.read.parquet(s"$stateDir/chain/g=1/labels")
+    assert(spark.read.parquet(s"$stateDir/chain/g=2/labels")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap == end)
   }
 
@@ -1373,10 +1393,6 @@ class StreamingSpec extends SparkSpec {
       "signed label delta") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val tA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val tB = "alpha beta gamma delta epsilon zeta eta theta paris london rome"
-    val tAB = "alpha beta gamma delta epsilon zeta eta theta iota paris"
-    val tC = "completely different words appear in this sentence about engines"
     // batch 0 (adds only): path 1-2-3 (1~2 and 2~3 verify, 1~3 does
     // not — 2 is the bridge) plus pair {10,11}
     val b0 = Seq(("add", 1L, tA), ("add", 2L, tAB), ("add", 3L, tB),
@@ -1484,11 +1500,11 @@ class StreamingSpec extends SparkSpec {
     val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_remint").toString + "/state"
-    val mem = MemoryStream[(Long, String)]
-    val q = EventStreaming.extendLoop(
-      mem.toDF().toDF("doc_id", "text"), stateDir)()
+    val mem = MemoryStream[(String, Long, String)]
+    val q = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"), stateDir)()
     try {
-      mem.addData((1L, t))
+      mem.addData(adds((1L, t)): _*)
       q.processAllAvailable() // validates the marker: the memo is live
       // same path, same run, a different fingerprint: before the stamp
       // check, the memo saw only that a marker still existed and the
@@ -1500,7 +1516,7 @@ class StreamingSpec extends SparkSpec {
       fs.delete(new org.apache.hadoop.fs.Path(marker), true)
       Seq(("j=0.1,n=9,seeds=1,bands=1,store=pb1", run)).toDF("fp", "run")
         .write.parquet(marker)
-      mem.addData((2L, t))
+      mem.addData(adds((2L, t)): _*)
       expectStreamFailure(q, "different scheme")
     } finally q.stop()
   }
@@ -1514,10 +1530,11 @@ class StreamingSpec extends SparkSpec {
     val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_markerless").toString + "/state"
-    val mem = MemoryStream[(Long, String)]
-    val q = EventStreaming.extendLoop(
-      mem.toDF().toDF("doc_id", "text"), stateDir)()
-    try { mem.addData((1L, t)); q.processAllAvailable() } finally q.stop()
+    val mem = MemoryStream[(String, Long, String)]
+    val q = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"), stateDir)()
+    try { mem.addData(adds((1L, t)): _*); q.processAllAvailable() }
+    finally q.stop()
     // simulate pre-marker-era state: the chain exists, the marker is gone
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1526,10 +1543,10 @@ class StreamingSpec extends SparkSpec {
     // run and the batch-0 foreign refusal could never fire — the chain
     // would be silently adopted (and rewound) by a run that never
     // built it
-    val mem2 = MemoryStream[(Long, String)]
-    val q2 = EventStreaming.extendLoop(
-      mem2.toDF().toDF("doc_id", "text"), stateDir)()
-    mem2.addData((2L, t))
+    val mem2 = MemoryStream[(String, Long, String)]
+    val q2 = EventStreaming.upsertLoop(
+      mem2.toDF().toDF("op", "doc_id", "text"), stateDir)()
+    mem2.addData(adds((2L, t)): _*)
     expectStreamFailure(q2, "no scheme marker")
     // the chain was not touched
     assert(spark.read.parquet(s"$stateDir/chain/g=0/labels").count() >= 0)
@@ -1573,10 +1590,11 @@ class StreamingSpec extends SparkSpec {
       (i, s"ship harbor tide crane dock gull pier rope w$i t${i % 7}"))
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_pruned").toString + "/state"
-    val mem = MemoryStream[(Long, String)]
-    val q = EventStreaming.extendLoop(
-      mem.toDF().toDF("doc_id", "text"), stateDir)()
-    try { mem.addData(docs: _*); q.processAllAvailable() } finally q.stop()
+    val mem = MemoryStream[(String, Long, String)]
+    val q = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"), stateDir)()
+    try { mem.addData(adds(docs: _*): _*); q.processAllAvailable() }
+    finally q.stop()
     // a 2-doc probe batch: doc 100 duplicates doc 1 exactly
     val batch = Seq((100L, docs.head._2)).toDF("doc_id", "text")
     val batchBands = graft.api.GraftPipelines.bandIndex(batch)
@@ -1745,54 +1763,69 @@ class StreamingSpec extends SparkSpec {
       s"post-recovery chain must hold the replayed add, got $end")
   }
 
-  test("takedownLoop replay: a sink crash AFTER publish replays the " +
-      "batch onto its own published generation — the restart recovers " +
-      "cleanly (no crash loop), redelivers the true invalidated delta " +
-      "from stable files, and the chain never rewinds (the " +
+  /** Make `rows` appear in `watched` as ONE parquet file (written
+    * elsewhere, then moved in), so a file-source stream sees it whole in
+    * one trigger. */
+  private def appearOps(watched: java.nio.file.Path, name: String,
+      rows: Seq[(String, Long, String)]): Unit = {
+    import java.nio.file.{Files, Path}
+    val tmp = Files.createTempDirectory("graft_appear_tmp")
+    rows.toDF("op", "doc_id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = Files.list(tmp).toArray.map(_.asInstanceOf[Path])
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(part, watched.resolve(name))
+  }
+
+  private lazy val opsSchema =
+    Seq(("x", 0L, "y")).toDF("op", "doc_id", "text").schema
+
+  test("upsertLoop delete-only replay: a sink crash AFTER publish replays " +
+      "the batch onto its own published generation — the restart " +
+      "recovers cleanly (no crash loop), redelivers the true invalidated " +
+      "delta from stable files, and the chain never rewinds (the " +
       "delete-then-rename republish it replaces could wipe the only " +
       "generation and resurrect taken-down docs)") {
-    import java.nio.file.{Files, Path}
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-      .toDF("d1", "d2")
-    val labels = api.GraftPipelines.dupClusters(pairs)
+    import java.nio.file.Files
     val watched = Files.createTempDirectory("graft_takedown_replay_in")
     val chk = Files.createTempDirectory("graft_takedown_replay_chk").toString
     val stateDir = Files.createTempDirectory("graft_takedown_replay")
       .toString + "/state"
-    def appear(name: String, ids: Seq[Long]): Unit = {
-      val tmp = Files.createTempDirectory("graft_takedown_replay_tmp")
-      ids.toDF("del_id").coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.asInstanceOf[Path])
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      Files.move(part, watched.resolve(name))
-    }
-    val schema = Seq(0L).toDF("del_id").schema
-    @volatile var crashBatch1 = false
-    val sunk = scala.collection.mutable.ArrayBuffer[(Long, Set[(Long, Long)])]()
-    def start() = EventStreaming.takedownLoop(
-        EventStreaming.fileSource(spark, watched.toString, schema),
-        pairs, labels, stateDir, Some(chk)) { (df, b) =>
-      if (b == 1 && crashBatch1) {
-        crashBatch1 = false
+    @volatile var crashBatch2 = false
+    val sunk = scala.collection.mutable
+      .ArrayBuffer[(Long, (Set[(Long, Long)], Set[(Long, Long)]))]()
+    def start() = EventStreaming.upsertLoop(
+        EventStreaming.fileSource(spark, watched.toString, opsSchema),
+        stateDir, Some(chk)) { (df, b) =>
+      if (b == 2 && crashBatch2) {
+        crashBatch2 = false
         sys.error("injected sink crash after publish")
       }
-      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      sunk.synchronized { sunk += b -> rows }
+      val rows = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+      sunk.synchronized { sunk += b -> bySign(rows) }
     }
-    appear("f0.parquet", Seq(3L))
+    // batch 0 seeds the chain 1,2 - 3 - 4,5 plus {10,11}; batch 1
+    // deletes the bridge
+    appearOps(watched, "f0.parquet", adds((1L, tA), (2L, tA), (3L, tAB),
+      (4L, tB), (5L, tB), (10L, tC), (11L, tC)))
     val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    assert(spark.read.parquet(s"$stateDir/chain/g=0/labels").collect()
+    try {
+      q1.processAllAvailable()
+      appearOps(watched, "f1.parquet", dels(3L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    assert(spark.read.parquet(s"$stateDir/chain/g=1/labels").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap ==
       Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L, 10L -> 10L, 11L -> 10L))
-    assert(sunk.synchronized(sunk.toList) ==
-      List(0L -> Set((3L, 1L), (4L, 1L), (5L, 1L))))
-    // batch 1 (delete 10): the generation publishes, then the sink dies
-    // BEFORE delivering — the ADVICE crash window (publish committed,
-    // sink/checkpoint did not)
-    appear("f1.parquet", Seq(10L))
-    crashBatch1 = true
+    assert(sunk.synchronized(sunk.toList).map(_._1) == List(0L, 1L))
+    assert(sunk.synchronized(sunk(1)) == 1L -> ((Set((4L, 4L), (5L, 4L)),
+      Set((3L, 1L), (4L, 1L), (5L, 1L)))))
+    // batch 2 (delete 10): the generation publishes, then the sink dies
+    // BEFORE delivering — the crash window where the publish committed
+    // and the sink/checkpoint did not
+    appearOps(watched, "f2.parquet", dels(10L))
+    crashBatch2 = true
     val q2 = start()
     try {
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -1802,56 +1835,48 @@ class StreamingSpec extends SparkSpec {
     // both generations live: publish never deletes, the fold never ran
     val gDirs = new java.io.File(s"$stateDir/chain")
       .listFiles().map(_.getName).filter(_.startsWith("g=")).sorted.toSeq
-    assert(gDirs == Seq("g=0", "g=1"),
+    assert(gDirs == Seq("g=1", "g=2"),
       s"crash between publish and sink must leave both generations: $gDirs")
-    // restart: the replay lands on its own published g=1, recovers the
-    // TRUE invalidated delta from the stable g=0/g=1 files, and folds
+    // restart: the replay lands on its own published g=2, recovers the
+    // TRUE invalidated delta from the stable g=1/g=2 files, and folds
     val q3 = start()
     try q3.processAllAvailable() finally q3.stop()
-    assert(sunk.synchronized(sunk.toList).tail ==
-      List(1L -> Set((10L, 10L), (11L, 10L))),
+    assert(sunk.synchronized(sunk.toList).drop(2) ==
+      List(2L -> ((Set.empty, Set((10L, 10L), (11L, 10L))))),
       s"the replay must redeliver the invalidated delta: ${sunk.toList}")
-    assert(spark.read.parquet(s"$stateDir/chain/g=1/labels").collect()
+    assert(spark.read.parquet(s"$stateDir/chain/g=2/labels").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap ==
       Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L),
       "the recovered chain equals the committed retraction")
     assert(new java.io.File(s"$stateDir/chain")
       .listFiles().map(_.getName).filter(_.startsWith("g=")).toSeq ==
-      Seq("g=1"), "the recovered run folds the pre-publish generation")
+      Seq("g=2"), "the recovered run folds the pre-publish generation")
   }
 
-  test("extendLoop replay: a sink crash after publish replays the ingest " +
-      "batch onto its own published generation — clean recovery, true " +
-      "delta redelivered, and the resumed run keeps extending") {
-    import java.nio.file.{Files, Path}
-    val tA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val tC = "completely different words appear in this sentence about engines"
+  test("upsertLoop add-only replay: a sink crash after publish replays " +
+      "the ingest batch onto its own published generation — clean " +
+      "recovery, true delta redelivered, and the resumed run keeps " +
+      "extending") {
+    import java.nio.file.Files
     val watched = Files.createTempDirectory("graft_extend_replay_in")
     val chk = Files.createTempDirectory("graft_extend_replay_chk").toString
     val stateDir = Files.createTempDirectory("graft_extend_replay")
       .toString + "/state"
-    def appear(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = Files.createTempDirectory("graft_extend_replay_tmp")
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.asInstanceOf[Path])
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      Files.move(part, watched.resolve(name))
-    }
-    val schema = Seq((0L, "x")).toDF("doc_id", "text").schema
     @volatile var crashBatch1 = false
-    val sunk = scala.collection.mutable.ArrayBuffer[(Long, Set[(Long, Long)])]()
-    def start() = EventStreaming.extendLoop(
-        EventStreaming.fileSource(spark, watched.toString, schema),
+    val sunk =
+      scala.collection.mutable.ArrayBuffer[(Long, Set[(Long, Long, String)])]()
+    def start() = EventStreaming.upsertLoop(
+        EventStreaming.fileSource(spark, watched.toString, opsSchema),
         stateDir, Some(chk)) { (df, b) =>
       if (b == 1 && crashBatch1) {
         crashBatch1 = false
         sys.error("injected sink crash after publish")
       }
-      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val rows = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
       sunk.synchronized { sunk += b -> rows }
     }
-    appear("f0.parquet", Seq((1L, tA), (2L, tA), (10L, tC)))
+    appearOps(watched, "f0.parquet", adds((1L, tA), (2L, tA), (10L, tC)))
     val q1 = start()
     try q1.processAllAvailable() finally q1.stop()
     // doc 10 is pair-less in batch 0, so it is not yet in the map
@@ -1859,7 +1884,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toMap ==
       Map(1L -> 1L, 2L -> 1L))
     // batch 1 (doc 11 dups tC): publish lands, sink dies before delivery
-    appear("f1.parquet", Seq((11L, tC)))
+    appearOps(watched, "f1.parquet", adds((11L, tC)))
     crashBatch1 = true
     val q2 = start()
     try {
@@ -1874,18 +1899,73 @@ class StreamingSpec extends SparkSpec {
     val q3 = start()
     try q3.processAllAvailable() finally q3.stop()
     assert(sunk.synchronized(sunk.toList) == List(
-      0L -> Set((1L, 1L), (2L, 1L)),
-      1L -> Set((10L, 10L), (11L, 10L))),
+      0L -> Set((1L, 1L, "add"), (2L, 1L, "add")),
+      1L -> Set((10L, 10L, "add"), (11L, 10L, "add"))),
       s"the replay must redeliver batch 1's true delta: ${sunk.toList}")
     val end = spark.read.parquet(s"$stateDir/chain/g=1/labels").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(end == Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L))
     // and the recovered run keeps extending normally
-    appear("f2.parquet", Seq((12L, tA)))
+    appearOps(watched, "f2.parquet", adds((12L, tA)))
     val q4 = start()
     try q4.processAllAvailable() finally q4.stop()
     assert(spark.read.parquet(s"$stateDir/chain/g=2/labels").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap ==
       Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 1L))
+  }
+
+  test("upsertLoop picks the chain step from the batch's op mix: an " +
+      "add-only trigger runs no retraction, a delete-only trigger no " +
+      "extension, and a mixed trigger runs both") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    // descriptions of the jobs started since the previous call:
+    // listener delivery is asynchronous, so a sentinel job marks the
+    // point by which every earlier job start has been delivered
+    def drain(): Seq[String] = {
+      val tag = s"sentinel-${java.util.UUID.randomUUID()}"
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(0), 1).count() // exactly one job
+      finally sc.setJobDescription(null)
+      Iterator.continually(
+          seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(d => { assert(d != null, "sentinel never delivered"); d })
+        .takeWhile(_ != tag).toSeq
+    }
+    val mem = MemoryStream[(String, Long, String)]
+    val q = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"),
+      java.nio.file.Files.createTempDirectory("graft_chain_step")
+        .toString + "/state")()
+    def trigger(rows: Seq[(String, Long, String)]): Seq[String] = {
+      drain()
+      mem.addData(rows: _*); q.processAllAvailable()
+      drain()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val addOnly = trigger(adds((1L, tA), (2L, tA), (3L, tB), (4L, tB)))
+      val mixed = trigger(dels(2L) ++ adds((5L, tA)))
+      val delOnly = trigger(dels(4L))
+      def ran(jobs: Seq[String], step: String) =
+        jobs.exists(_.startsWith(s"$step:"))
+      assert(ran(addOnly, "extendChain") && !ran(addOnly, "retractChain") &&
+        !ran(addOnly, "upsertChain"), s"add-only ran: $addOnly")
+      assert(ran(delOnly, "retractChain") && !ran(delOnly, "extendChain") &&
+        !ran(delOnly, "upsertChain"), s"delete-only ran: $delOnly")
+      assert(ran(mixed, "retractChain") && ran(mixed, "extendChain") &&
+        ran(mixed, "upsertChain"), s"mixed ran: $mixed")
+    } finally {
+      q.stop()
+      sc.removeSparkListener(listener)
+    }
   }
 }
