@@ -250,10 +250,8 @@ object DedupOps {
     *     the backup is dropped; `<log>.vold` WITHOUT the live log
     *     means it crashed between the two renames, so the backup is
     *     rolled back — content is never lost in any window;
-    *  2. write the tombstone-filtered log to `<log>.tmpv`, preserving
-    *     the `pb=` bucketing (the partition column round-trips through
-    *     the read, so the rewrite lands in the identical layout the
-    *     loops' pruned reads expect);
+    *  2. write the tombstone-filtered log to `<log>.tmpv` as a flat
+    *     log, the layout the loop appends to and reads;
     *  3. rename live → `.vold`, rename `.tmpv` → live, delete `.vold`.
     */
   def vacuumChainState(s: SparkSession, statePath: String): Unit = {
@@ -284,9 +282,7 @@ object DedupOps {
         // it when it is actually small
         val kept = Tables.read(s, live)
           .join(tombs, col("doc_id") === col("del_id"), "left_anti")
-        kept.repartition(col("pb"))
-          .write.mode("overwrite").partitionBy("pb")
-          .parquet(s"$live.tmpv")
+        kept.write.mode("overwrite").parquet(s"$live.tmpv")
         require(fs.rename(p(live), p(s"$live.vold")),
           s"vacuumChainState: backup rename of $live failed")
         require(fs.rename(p(s"$live.tmpv"), p(live)),

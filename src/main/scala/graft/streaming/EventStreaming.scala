@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
+import graft.api.GraftPipelines.labeled
 import graft.sources.GraftIO
 
 /** Structured Streaming layer (SURVEY.md §2.9).
@@ -266,19 +267,15 @@ object EventStreaming {
     deliver(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       val fs = StateScheme.fsFor(spark, indexPath)
-      def indexExists: Boolean = {
-        val p = new org.apache.hadoop.fs.Path(indexPath)
-        fs.exists(p) && fs.listStatus(p).toSeq
-          .exists(_.getPath.getName.startsWith("part-"))
-      }
       val pinnedRun = StateScheme.ensure(spark, fs, s"$indexPath/_scheme",
         s"n=$shingleN,seeds=$seeds,bands=$bands", runId, "ingestDedupLoop",
         "band hashes from two hash schemes must never share one index " +
           "(new↔old candidates would silently never collide)",
-        indexExists, adoptExisting)
+        hasPartFiles(fs, indexPath), adoptExisting)
       if (!adoptExisting)
         StateScheme.refuseForeign("ingestDedupLoop", batchId, pinnedRun,
-          runId, indexExists, s"the band index at $indexPath",
+          runId, hasPartFiles(fs, indexPath),
+          s"the band index at $indexPath",
           "pass adoptExisting = true to deliberately continue ingest " +
             "into this index")
       val index =
@@ -297,10 +294,9 @@ object EventStreaming {
         flagged.filter(col("is_new") === 1)
           .select(col("batch_id").as(id)),
         Seq(id), "left_semi")
-      graft.api.GraftPipelines
-        .bandIndex(survivors, shingleN, seeds, bands, id, text)
-        .write.mode("append").parquet(indexPath)
-      compactDupTolerantLog(spark, indexPath, compactThreshold)
+      appendLog(graft.api.GraftPipelines
+        .bandIndex(survivors, shingleN, seeds, bands, id, text),
+        indexPath, compactThreshold)
     }
   }
 
@@ -385,7 +381,7 @@ object EventStreaming {
     val runId = StateScheme.runIdentity(checkpointDir)
     val paramFp = {
       val sw = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(stopwords.mkString(" ").getBytes("UTF-8"))
+        .digest(stopwords.mkString("\u0000").getBytes("UTF-8"))
         .take(8).map("%02x".format(_)).mkString
       s"ng=$nGram,score=$minScore,words=$minWords,j=$minJaccard," +
         s"n=$shingleN,seeds=$seeds,bands=$bands,sw=$sw"
@@ -502,20 +498,16 @@ object EventStreaming {
     deliver(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       val fs = StateScheme.fsFor(spark, postingsPath)
-      def logExists: Boolean = {
-        val p = new org.apache.hadoop.fs.Path(postingsPath)
-        fs.exists(p) && fs.listStatus(p).toSeq
-          .exists(_.getPath.getName.startsWith("part-"))
-      }
       val pinnedRun = StateScheme.ensure(spark, fs,
         s"$postingsPath/_scheme", "tok=ws-unigram", runId,
         "indexIngestLoop",
         "postings from two tokenization schemes must never share one " +
           "log (term lookups would be silently partial)",
-        logExists, adoptExisting)
+        hasPartFiles(fs, postingsPath), adoptExisting)
       if (!adoptExisting)
         StateScheme.refuseForeign("indexIngestLoop", batchId, pinnedRun,
-          runId, logExists, s"the postings log at $postingsPath",
+          runId, hasPartFiles(fs, postingsPath),
+          s"the postings log at $postingsPath",
           "pass adoptExisting = true to deliberately continue ingest " +
             "into this log")
       val postings = graft.api.GraftPipelines
@@ -536,10 +528,12 @@ object EventStreaming {
     * unbounded stream, the same growth class the knn loop's
     * consolidated generations close).
     *
-    * Correct at EVERY instant because both logs this serves are
-    * duplicate-tolerant by contract (the band index dedups candidate
-    * pairs before counting; the postings read side leads with
-    * `distinct`): mid-compaction a reader sees old + folded rows
+    * Correct at EVERY instant because every log this serves is
+    * duplicate-tolerant by contract (the ingest band index dedups
+    * candidate pairs before counting; the postings read side leads
+    * with `distinct`; the chain loop's band log feeds a pair-level
+    * `distinct`, its doc log a per-id dedup and its tombstone log a
+    * `distinct` id set): mid-compaction a reader sees old + folded rows
     * (duplicates — harmless), after the deletes it sees only the folded
     * segment, and a crash between append and delete leaves duplicates
     * the NEXT compaction removes. Appending before deleting means the
@@ -570,14 +564,26 @@ object EventStreaming {
     files.foreach(fs.delete(_, false))
   }
 
-  /** Label every job an expression tree's ACTIONS schedule while `f`
-    * runs (thread-local, so concurrent queries don't cross-label) —
-    * the chain loop runs 60-100 jobs per trigger, and without labels
-    * the Spark UI / listener attribution reads only the foreachBatch
-    * callsite. Pure observability: no plan change.
+  /** Append `df` to the flat dup-tolerant log at `path`, then fold the
+    * log once it passes `compactThreshold` files
+    * ([[compactDupTolerantLog]]).
     */
-  private def labeled[T](spark: SparkSession, desc: String)(f: => T): T =
-    graft.api.GraftPipelines.labeled(spark, desc)(f)
+  private def appendLog(df: DataFrame, path: String,
+      compactThreshold: Int): Unit = {
+    df.write.mode("append").parquet(path)
+    compactDupTolerantLog(df.sparkSession, path, compactThreshold)
+  }
+
+  /** Whether the append log at `path` exists and holds a `part-` file:
+    * the state-exists predicate of the flat-log loops' scheme and
+    * ownership checks.
+    */
+  private def hasPartFiles(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    fs.exists(p) && fs.listStatus(p).toSeq
+      .exists(_.getPath.getName.startsWith("part-"))
+  }
 
   /** A `<log>.vold` backup under the chain state means
     * [[graft.operators.DedupOps.vacuumChainState]] crashed between its
@@ -596,96 +602,27 @@ object EventStreaming {
             "recover before resuming the loop")
     }
 
-  /** Hash-bucket partition id for the chain loop's store logs:
-    * `pb = pmod(xxhash64(key), buckets)`, written as a hive partition
-    * column so every per-trigger read can prune to exactly the buckets
-    * the batch touches (`PartitionFilters` on the scan — the directory
-    * analog of the bucketed band index GraftIOSpec pins, usable on a
-    * bare path without a session catalog). Int-typed on purpose:
-    * partition discovery infers int for these values, and the pruning
-    * filter must compare the identical type — a cast wrapped around
-    * the partition attribute would block pruning.
+  /** Row-count cap for the chain loop's counted broadcasts: a batch
+    * side at or under it broadcasts, a larger one (a seed-scale
+    * bootstrap batch, a dup-heavy candidate set) shuffles.
     */
-  private def storeBucket(key: Column, buckets: Int): Column =
-    pmod(xxhash64(key), lit(buckets)).cast("int")
-
-  /** The bucket ids `df` touches under `storeBucket(key, buckets)` —
-    * a driver-side collect BOUNDED by `buckets` (at most that many
-    * distinct values exist), never by data size.
-    */
-  private[graft] def touchedBuckets(df: DataFrame, key: Column,
-      buckets: Int): Seq[Int] =
-    df.select(storeBucket(key, buckets).as("pb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-
-  /** Append `df` to the hash-bucketed (`pb=`) log at `path`, then fold
-    * any TOUCHED bucket directory whose file count passed
-    * `compactThreshold` ([[compactDupTolerantLog]] per leaf dir).
-    * Untouched buckets never grow, so compaction checks only the
-    * touched ones — per-trigger listing is O(touched buckets), not
-    * O(buckets). The pre-write repartition is batch-proportional and
-    * bounds the file count at one per bucket; its partition count is
-    * EXPLICIT (max(defaultParallelism, buckets)) because an
-    * expression-only repartition is AQE-coalescible and a micro-batch
-    * shuffle coalesces to ONE task that then writes every bucket's
-    * file sequentially — measured 0.86 s of a 7.5 s extend trigger per
-    * log (DevTrigProf r15); pinning the count keeps the per-bucket
-    * writers parallel at every batch size while the file count stays
-    * one per bucket (each pb hashes to exactly one partition).
-    * Returns the touched bucket ids for the caller's pruned read plus
-    * the appended row count (read off the same collect — callers like
-    * [[chainCandidatePairs]] need it for the counted-broadcast rule,
-    * and a separate count() job per trigger is pure floor).
-    */
-  private def appendBucketedLog(df: DataFrame, path: String, key: Column,
-      buckets: Int, compactThreshold: Int): (Seq[Int], Long) = {
-    val spark = df.sparkSession
-    df.withColumn("pb", storeBucket(key, buckets))
-      .repartition(
-        math.max(spark.sparkContext.defaultParallelism, buckets),
-        col("pb"))
-      .write.mode("append").partitionBy("pb").parquet(path)
-    // one job for touched buckets AND the row count (≤ `buckets` rows)
-    val perBucket = df.select(storeBucket(key, buckets).as("pb"))
-      .groupBy(col("pb")).count().collect()
-    val touched = perBucket.map(_.getInt(0)).toSeq
-    touched.foreach { pb =>
-      compactDupTolerantLog(spark, s"$path/pb=$pb", compactThreshold)
-    }
-    (touched, perBucket.map(_.getLong(1)).sum)
-  }
-
-  /** Bucket-pruned read of a `pb=` log: only the named buckets' files
-    * are scanned — the filter lands in the scan's `PartitionFilters`,
-    * so unnamed buckets are pruned at planning, before any I/O.
-    * (Partition DISCOVERY still lists the directory tree per trigger;
-    * at a genuine 100 TB deployment a table catalog with a partition
-    * manifest replaces discovery — the query shape is unchanged.)
-    */
-  private[graft] def readBucketedLog(spark: SparkSession, path: String,
-      pbs: Seq[Int]): DataFrame = {
-    val all = spark.read.parquet(path)
-    if (pbs.isEmpty) all.filter(lit(false))
-    else all.filter(col("pb").isin(pbs: _*))
-  }
+  private val BroadcastRowCap = 1L << 20
 
   /** Per-trigger candidate generation for the chain loop
-    * ([[upsertLoop]]): batch bands PROBE the bucketed
-    * band store and the result is normalized to `d1 < d2` candidate
-    * pairs. The per-trigger cost is O(batch + touched buckets), never
-    * O(store):
+    * ([[upsertLoop]]): batch bands PROBE the flat band log and the
+    * result is normalized to `d1 < d2` candidate pairs. The store is
+    * read whole (hash-bucket pruning would skip little: a 50-doc
+    * batch's 200 band rows land in about 61 of 64 buckets), but it
+    * never shuffles:
     *
-    *  - the store read is pruned to `bandPbs` (the batch's own band
-    *    buckets — a bucket the batch has no band in cannot hold a
-    *    candidate partner);
     *  - the store side is NEVER deduplicated before the join — the old
-    *    flat-log `distinct()` was a full-store shuffle every trigger
-    *    (the round-13 scale ceiling); a duplicate band row can only
-    *    produce a duplicate candidate pair, and the pair-level
-    *    `distinct()` below removes those at candidate cost;
-    *  - when the batch is small (a COUNTED decision against
-    *    `broadcastRowCap` — batch-band row count, an O(batch) job on
-    *    an already-checkpointed frame) the probe side broadcasts, so
+    *    `distinct()` was a full-store shuffle every trigger (the
+    *    round-13 scale ceiling); a duplicate band row can only produce
+    *    a duplicate candidate pair, and the pair-level `distinct()`
+    *    below removes those at candidate cost;
+    *  - when the batch is small (a COUNTED decision: `batchRows`, the
+    *    batch-band row count the caller observed while checkpointing,
+    *    against [[BroadcastRowCap]]) the probe side broadcasts, so
     *    the store side streams through the join with NO shuffle at
     *    all; a seed-scale batch (bootstrap streams the initial corpus
     *    through this same code path) falls back to a two-sided
@@ -698,24 +635,18 @@ object EventStreaming {
     *    broadcast rule.
     */
   private[graft] def chainCandidatePairs(spark: SparkSession,
-      bandsPath: String, batchBands: DataFrame, bandPbs: Seq[Int],
-      tombs: Option[DataFrame] = None,
-      broadcastRowCap: Long = 1L << 20,
-      knownBatchRows: Option[Long] = None): DataFrame = {
-    // the loop callers already counted the batch rows on the append's
-    // bucket collect — a fresh count() job here is pure trigger floor
-    val nBatch = knownBatchRows.getOrElse(batchBands.count())
-    val store0 = readBucketedLog(spark, bandsPath, bandPbs)
-      .select(col("doc_id"), col("b"))
+      bandsPath: String, batchBands: DataFrame, batchRows: Long,
+      tombs: Option[DataFrame] = None): DataFrame = {
+    val store0 = spark.read.parquet(bandsPath).select(col("doc_id"), col("b"))
     val store = tombs.fold(store0) { t =>
-      if (t.count() <= broadcastRowCap)
+      if (t.count() <= BroadcastRowCap)
         store0.join(broadcast(t), col("doc_id") === col("del_id"),
           "left_anti")
       else store0.join(t, col("doc_id") === col("del_id"), "left_anti")
     }
     val bb = batchBands.select(col("doc_id").as("bid"), col("b"))
     val joined =
-      if (nBatch <= broadcastRowCap) store.join(broadcast(bb), "b")
+      if (batchRows <= BroadcastRowCap) store.join(broadcast(bb), "b")
       else bb.hint("shuffle_hash").join(store.hint("shuffle_hash"), "b")
     joined.filter(col("bid") =!= col("doc_id"))
       .select(least(col("bid"), col("doc_id")).as("d1"),
@@ -723,33 +654,31 @@ object EventStreaming {
       .distinct()
   }
 
-  /** Candidate docs' texts for verification: a bucket-pruned scan of
-    * the doc log semi-joined to the candidate ids BEFORE the
+  /** Candidate docs' texts for verification: a scan of the WHOLE flat
+    * doc log, semi-joined to the candidate ids BEFORE the
     * one-text-per-doc dedup, so `dropDuplicates` runs on
     * candidate-count rows — the round-13 version deduplicated the
     * ENTIRE doc store per trigger (a full-corpus shuffle per
-    * micro-batch at 100 TB). The semi join broadcasts the candidate
-    * ids under the same counted `broadcastRowCap` rule as
-    * [[chainCandidatePairs]] (a dup-heavy corpus can put a large
-    * fraction of all docs in candidate pairs — unbounded, so the
-    * broadcast is a measured decision, not a compile-time hint).
+    * micro-batch). The semi join broadcasts the candidate ids under the
+    * same counted [[BroadcastRowCap]] rule as [[chainCandidatePairs]]
+    * (a dup-heavy corpus can put a large fraction of all docs in
+    * candidate pairs — unbounded, so the broadcast is a measured
+    * decision, not a compile-time hint).
+    *
+    * The trade: the scan is unpruned. The doc log holds about 120 B
+    * per doc (the sf0.1 `documents.parquet`: 594,568 B for 5,000
+    * docs), so a trigger reads ~0.13 MB at a 1,000-doc store and ~60 MB
+    * at a 500k-doc one. The hash-bucketed layout this replaces pruned
+    * to the candidates' buckets, but a trigger's candidates touch most
+    * buckets, and the bucketed appends cost more than the scan saved.
     */
   private[graft] def candidateDocTexts(spark: SparkSession,
-      docsPath: String, cands: DataFrame, storeBuckets: Int,
-      broadcastRowCap: Long = 1L << 20): DataFrame = {
+      docsPath: String, cands: DataFrame): DataFrame = {
     val candIds = cands.select(col("d1").as("doc_id"))
       .union(cands.select(col("d2"))).distinct().localCheckpoint()
-    // count + touched buckets off ONE aggregate job (collect_set is
-    // bounded by `storeBuckets` values); the two separate jobs the
-    // round-14 shape ran were pure trigger floor
-    val stats = candIds.agg(count(lit(1)).as("n"),
-      collect_set(storeBucket(col("doc_id"), storeBuckets)).as("pbs"))
-      .head()
-    val n = stats.getLong(0)
-    val pbs = stats.getSeq[Int](1)
-    val store = readBucketedLog(spark, docsPath, pbs)
+    val store = spark.read.parquet(docsPath)
       .select(col("doc_id"), col("text"))
-    (if (n <= broadcastRowCap)
+    (if (candIds.count() <= BroadcastRowCap)
       store.join(broadcast(candIds), Seq("doc_id"), "left_semi")
     else store.join(candIds, Seq("doc_id"), "left_semi"))
       .dropDuplicates("doc_id")
@@ -1065,22 +994,21 @@ object EventStreaming {
     *
     * State under `statePath`:
     *
-    *  - `scheme/` — the [[StateScheme]] marker: hash scheme plus bucket
-    *    count (`store=pb<N>` — the count IS the physical layout, so a
-    *    pruned read under another count would silently miss candidate
-    *    buckets) and the owning run; a non-owning query refuses at
-    *    batch 0 over maintained state.
+    *  - `scheme/` — the [[StateScheme]] marker: hash scheme plus the
+    *    log layout (`store=flat`, so state written under the retired
+    *    hash-bucketed layout refuses here instead of failing later on a
+    *    mixed directory read) and the owning run; a non-owning query
+    *    refuses at batch 0 over maintained state.
     *  - `bands/`, `docs/` — the added docs' band rows and (id, text)
-    *    rows as HASH-BUCKETED (`pb=`) dup-tolerant append logs
-    *    ([[appendBucketedLog]]: bands by band hash, docs by doc id),
-    *    each bucket folded by [[compactDupTolerantLog]] once its file
-    *    count passes `compactThreshold`. Bucketing keeps the
-    *    per-trigger read O(batch + touched buckets), never O(store)
-    *    (see [[chainCandidatePairs]]); a replayed batch's double-append
-    *    and a mid-compaction read stay harmless because candidates are
-    *    deduplicated at pair level.
+    *    rows as flat dup-tolerant append logs, each folded by
+    *    [[compactDupTolerantLog]] once its file count passes
+    *    `compactThreshold`. A trigger reads both logs whole but never
+    *    shuffles them (see [[chainCandidatePairs]] and
+    *    [[candidateDocTexts]]); a replayed batch's double-append and a
+    *    mid-compaction read stay harmless because candidates are
+    *    deduplicated at pair level and texts per doc id.
     *  - `dels/` — the tombstone log: deleted doc ids, appended per
-    *    batch, folded like the other logs. Every band/doc READ
+    *    batch, folded the same way. Every band/doc READ
     *    anti-joins it, so a deleted doc can never generate another
     *    candidate pair; the rows physically persist until
     *    [[graft.operators.DedupOps.vacuumChainState]] rewrites the
@@ -1119,8 +1047,7 @@ object EventStreaming {
   def upsertLoop(ops: DataFrame, statePath: String,
       checkpointDir: Option[String] = None, minJaccard: Double = 0.7,
       shingleN: Int = 3, seeds: Int = 8, bands: Int = 4,
-      compactThreshold: Int = 64, storeBuckets: Int = 64,
-      broadcastRowCap: Long = 1L << 20)
+      compactThreshold: Int = 64)
       (sink: (Dataset[Row], Long) => Unit = (_, _) => ()): StreamingQuery = {
     val runId = StateScheme.runIdentity(checkpointDir)
     deliver(ops, checkpointDir) { (batch, batchId) =>
@@ -1136,12 +1063,12 @@ object EventStreaming {
       def stateExists: Boolean = gens().nonEmpty ||
         Seq("bands", "docs", "dels").exists(sub =>
           fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$sub")))
-      // store=pb<N> in the fingerprint: the bucket count is the
-      // physical layout and must never drift (see the scaladoc)
+      // store=flat: state written under the retired bucketed layout
+      // (store=pb<N>) refuses here, before any append
       val pinnedRun = labeled(spark, s"upsert[$batchId] scheme guard") {
         StateScheme.ensure(spark, fs, s"$statePath/scheme",
           s"j=$minJaccard,n=$shingleN,seeds=$seeds,bands=$bands," +
-            s"store=pb$storeBuckets", runId,
+            "store=flat", runId,
           "upsertLoop",
           "bands/pairs from two hash schemes must never mix", stateExists)
       }
@@ -1245,9 +1172,7 @@ object EventStreaming {
         // own candidate generation already excludes them
         if (!delsEmpty) {
           labeled(spark, s"upsert[$batchId] append tombstones") {
-            dels.write.mode("append").parquet(s"$statePath/dels")
-            compactDupTolerantLog(spark, s"$statePath/dels",
-              compactThreshold)
+            appendLog(dels, s"$statePath/dels", compactThreshold)
           }
         }
         val newPairs =
@@ -1264,35 +1189,35 @@ object EventStreaming {
                 Some(spark.read.parquet(delsLog.toString)
                   .select(col("del_id")).distinct().localCheckpoint())
               }
+            // the band-row count for the counted broadcast, observed
+            // while the checkpoint materializes (no job of its own)
+            val bandRows = org.apache.spark.sql.Observation()
             val batchBands = labeled(spark,
                 s"upsert[$batchId] batch bands") {
               graft.api.GraftPipelines
-                .bandIndex(adds, shingleN, seeds, bands).localCheckpoint()
+                .bandIndex(adds, shingleN, seeds, bands)
+                .observe(bandRows, count(lit(1)).as("n"))
+                .localCheckpoint()
             }
-            val (bandPbs, nBandRows) = labeled(spark,
-                s"upsert[$batchId] append band log") {
-              appendBucketedLog(batchBands,
-                s"$statePath/bands", col("b"), storeBuckets,
-                compactThreshold)
+            labeled(spark, s"upsert[$batchId] append band log") {
+              appendLog(batchBands, s"$statePath/bands", compactThreshold)
             }
             labeled(spark, s"upsert[$batchId] append doc log") {
-              appendBucketedLog(adds, s"$statePath/docs", col("doc_id"),
-                storeBuckets, compactThreshold)
+              appendLog(adds, s"$statePath/docs", compactThreshold)
             }
-            // candidates: bucket-pruned probe, tombstone-anti-joined so
-            // a deleted doc never generates another candidate — and
-            // therefore the candidate ids (batch adds on one side,
-            // tombstone-filtered store on the other) are already
-            // tombstone-clean when the doc texts are fetched
+            // candidates: tombstone-anti-joined probe, so a deleted doc
+            // never generates another candidate — and therefore the
+            // candidate ids (batch adds on one side, tombstone-filtered
+            // store on the other) are already tombstone-clean when the
+            // doc texts are fetched
             val cands = labeled(spark, s"upsert[$batchId] candidates") {
-              chainCandidatePairs(spark, s"$statePath/bands",
-                batchBands, bandPbs, tombs, broadcastRowCap,
-                knownBatchRows = Some(nBandRows))
+              chainCandidatePairs(spark, s"$statePath/bands", batchBands,
+                bandRows.get("n").asInstanceOf[Long], tombs)
                 .localCheckpoint()
             }
             val candDocs = labeled(spark, s"upsert[$batchId] cand texts") {
-              candidateDocTexts(spark, s"$statePath/docs",
-                cands, storeBuckets, broadcastRowCap).localCheckpoint()
+              candidateDocTexts(spark, s"$statePath/docs", cands)
+                .localCheckpoint()
             }
             graft.api.GraftPipelines
               .nearDuplicatesFromCandidates(candDocs, cands, minJaccard)

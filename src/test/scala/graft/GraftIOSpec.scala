@@ -489,4 +489,17 @@ class GraftIOSpec extends SparkSpec {
     assert(tableRead.findFirstIn(
       """s.read.format("parquet").load(s"$dir/orders.parquet")""").nonEmpty)
   }
+
+  test("no source file holds a NUL byte: grep and ripgrep would report " +
+      "the whole file as binary and code search would skip it") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+    assert(files.size > 20, s"no sources found under $root")
+    val offenders = files.filter(f =>
+      java.nio.file.Files.readAllBytes(f).contains(0.toByte))
+    assert(offenders.isEmpty, "write \"\\u0000\" instead of a raw NUL " +
+      s"byte: ${offenders.mkString(", ")}")
+  }
 }

@@ -993,19 +993,16 @@ class StreamingSpec extends SparkSpec {
     val gDirs = new java.io.File(s"$stateDir/chain")
       .listFiles().map(_.getName).filter(_.startsWith("g=")).toSeq
     assert(gDirs == Seq("g=1"))
-    // the band log is hash-bucketed (pb= dirs) and each TOUCHED bucket
-    // folded once past compactThreshold=1: no bucket may accumulate
-    // one-file-per-batch growth (a compaction writes up to
-    // defaultParallelism/8 files, so the per-bucket bound is
-    // threshold + that segment, not 1)
-    val pbDirs = new java.io.File(s"$stateDir/bands")
-      .listFiles().filter(f => f.isDirectory && f.getName.startsWith("pb="))
-    assert(pbDirs.nonEmpty, "band log must be pb= bucketed")
+    // the band and doc logs are flat and each folded once past
+    // compactThreshold=1: neither may accumulate one-file-per-batch
+    // growth (a compaction writes up to defaultParallelism/8 files, so
+    // the bound is threshold + that segment, not 1)
     val segCap = 1 + math.max(1, spark.sparkContext.defaultParallelism / 8)
-    pbDirs.foreach { d =>
-      val n = d.listFiles().map(_.getName).count(_.startsWith("part-"))
-      assert(n <= segCap,
-        s"bucket ${d.getName} should have folded, found $n part files")
+    Seq("bands", "docs").foreach { log =>
+      val n = new java.io.File(s"$stateDir/$log").listFiles()
+        .map(_.getName).count(_.startsWith("part-"))
+      assert(n >= 1 && n <= segCap,
+        s"$log log should have folded, found $n part files")
     }
     val end = spark.read.parquet(s"$stateDir/chain/g=1/labels")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -1521,6 +1518,38 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("upsertLoop over state in the retired pb= bucketed layout: the " +
+      "first trigger refuses at the scheme check and writes nothing " +
+      "under bands/, docs/ or chain/") {
+    implicit val sqlCtx = spark.sqlContext
+    import scala.jdk.CollectionConverters._
+    val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val stateDir = java.nio.file.Files
+      .createTempDirectory("graft_pb_state").toString + "/state"
+    // what a run under the bucketed layout left behind: its marker and
+    // one band bucket
+    Seq(("j=0.7,n=3,seeds=8,bands=4,store=pb64", "bucketed-run"))
+      .toDF("fp", "run").write.parquet(s"$stateDir/scheme")
+    graft.api.GraftPipelines.bandIndex(Seq((1L, t)).toDF("doc_id", "text"))
+      .write.parquet(s"$stateDir/bands/pb=3")
+    def logFiles(): Set[String] = Seq("bands", "docs", "chain").flatMap {
+      sub =>
+        val d = java.nio.file.Paths.get(stateDir, sub)
+        if (!java.nio.file.Files.exists(d)) Nil
+        else java.nio.file.Files.walk(d).iterator().asScala
+          .map(_.toString).toSeq
+    }.toSet
+    val before = logFiles()
+    assert(before.exists(_.contains("/bands/pb=3/part-")))
+    val mem = MemoryStream[(String, Long, String)]
+    val q = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"), stateDir)()
+    mem.addData(adds((2L, t)): _*)
+    expectStreamFailure(q, "different scheme")
+    assert(logFiles() == before,
+      s"the refused trigger must write nothing: ${logFiles() -- before}")
+  }
+
   test("StateScheme markerless-state refusal: state files with NO scheme " +
       "marker (pre-marker era, or a lost marker) refuse at ensure time " +
       "instead of minting ownership for the current run — and the " +
@@ -1577,10 +1606,9 @@ class StreamingSpec extends SparkSpec {
       == 2L)
   }
 
-  test("chain per-trigger reads are O(batch), not O(store): the band " +
-      "scan is bucket-pruned (PartitionFilters on pb), the probe and " +
-      "doc fetch broadcast the batch side so the store never shuffles, " +
-      "and the only hash exchange in each plan is candidate-sized") {
+  test("chain per-trigger plans never shuffle the store: the probe and " +
+      "doc fetch broadcast the batch side, and the only hash exchange in " +
+      "each plan is candidate-sized") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     // doc 1 uses its own vocabulary; 2..40 share a disjoint one, so
@@ -1599,15 +1627,9 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq((100L, docs.head._2)).toDF("doc_id", "text")
     val batchBands = graft.api.GraftPipelines.bandIndex(batch)
       .localCheckpoint()
-    val pbs = EventStreaming.touchedBuckets(batchBands, col("b"), 64)
-    assert(pbs.nonEmpty && pbs.size <= 4,
-      s"1 doc x 4 bands touches at most 4 buckets, got ${pbs.size}")
     val cands = EventStreaming.chainCandidatePairs(
-      spark, s"$stateDir/bands", batchBands, pbs)
+      spark, s"$stateDir/bands", batchBands, batchBands.count())
     val cplan = cands.queryExecution.executedPlan.toString()
-    assert("""PartitionFilters: \[[^\]]*pb[^\]]*""".r
-        .findFirstIn(cplan).isDefined,
-      s"band scan must prune to the batch's buckets:\n${cplan.take(1500)}")
     assert(cplan.contains("BroadcastHashJoin"),
       s"small batch must broadcast-probe the store:\n${cplan.take(1500)}")
     // exactly one hash exchange: the candidate-pair distinct — the
@@ -1619,11 +1641,8 @@ class StreamingSpec extends SparkSpec {
     assert(cRows.contains((1L, 100L)),
       s"the exact-dup candidate must surface, got $cRows")
     val candDocs = EventStreaming.candidateDocTexts(
-      spark, s"$stateDir/docs", cands.localCheckpoint(), 64)
+      spark, s"$stateDir/docs", cands.localCheckpoint())
     val dplan = candDocs.queryExecution.executedPlan.toString()
-    assert("""PartitionFilters: \[[^\]]*pb[^\]]*""".r
-        .findFirstIn(dplan).isDefined,
-      s"doc scan must prune to candidate buckets:\n${dplan.take(1500)}")
     assert(dplan.contains("BroadcastHashJoin") &&
         dplan.contains("LeftSemi"),
       s"candidate ids must broadcast-semi-prune the doc log:\n${dplan.take(1500)}")
