@@ -1,9 +1,11 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+  ShortType, StructField, StructType}
 
 import graft.functions.VectorExpressions
 
@@ -49,6 +51,22 @@ object GraftPipelines {
       else df.select(cols.map(col): _*)
     if (Bridge.isMaterializedCheckpoint(df)) sel else sel.localCheckpoint()
   }
+
+  /** [[ckptOnce]] plus the frame's row count: observed while the
+    * checkpoint materializes (`Dataset.observe`, no job of its own),
+    * or one `count()` when `df` is already a checkpoint and nothing is
+    * copied.
+    */
+  private[graft] def ckptCounted(df: DataFrame,
+      cols: String*): (DataFrame, Long) =
+    if (Bridge.isMaterializedCheckpoint(df)) {
+      val sel = ckptOnce(df, cols: _*)
+      (sel, sel.count())
+    } else {
+      val rows = org.apache.spark.sql.Observation()
+      val ckpt = ckptOnce(df.observe(rows, count(lit(1)).as("n")), cols: _*)
+      (ckpt, rows.get("n").asInstanceOf[Long])
+    }
 
   // ---------------- dedup ----------------
 
@@ -2036,24 +2054,41 @@ object GraftPipelines {
     * Both phases are one groupBy + one self-join on the SAME node key
     * (the shuffle exchange is reused between them) over an edge table
     * that only ever shrinks-or-stays near the input pair count — no
-    * label table, no data-scaled driver traffic (only scalar counts).
+    * label table, and the only driver traffic is scalar counts.
     * The fixed point is the star forest (child → component-min root),
     * read off directly as the label map. Lineage is truncated per
     * round (`localCheckpoint`; on a cluster with dynamic executors swap
     * in reliable `checkpoint()` via `setCheckpointDir`); convergence is
     * an exact set-equality check (cached cardinality compare + one
     * anti-join) — with O(log n) rounds the check never dominates.
+    *
+    * Small graphs skip the rounds. The input checkpoint counts its rows
+    * as it materializes; at most [[DriverCcMaxRows]] integral-id pair
+    * rows are collected in ONE job and labeled by union-find on the
+    * driver (each set rooted at its minimum id), returned as a local
+    * relation with the star path's rows and schema. Every round costs
+    * several scheduled jobs however few edges it carries, and the
+    * incremental chain steps (`DedupOps.extendChain`/`retractChain`)
+    * hand this function tens of edges per trigger — so the capped
+    * collect (at most ~1 MB of driver traffic) replaces the ~18 jobs
+    * of a converged star run there. Above the cap nothing changes.
     */
   def dupClusters(pairs: DataFrame, d1: String = "d1", d2: String = "d2",
       id: String = "doc_id"): DataFrame =
     dupClustersWithRounds(pairs, d1, d2, id)._1
 
-  /** [[dupClusters]] plus the converged round count — exposed so specs
-    * can pin the O(log n) bound on adversarial path graphs.
+  /** Pair rows at or below which [[dupClusters]] labels on the driver:
+    * 64k rows of two longs is about 1 MB collected.
+    */
+  private val DriverCcMaxRows = 1L << 16
+
+  /** [[dupClusters]] plus the converged round count (0 on the driver
+    * path) — exposed so specs can pin the O(log n) bound on adversarial
+    * path graphs (`cap = 0` forces the star rounds).
     */
   private[graft] def dupClustersWithRounds(pairs: DataFrame,
       d1: String = "d1", d2: String = "d2",
-      id: String = "doc_id"): (DataFrame, Int) = {
+      id: String = "doc_id", cap: Long = DriverCcMaxRows): (DataFrame, Int) = {
     // large-star: (v, min(Γ(u) ∪ {u})) for every v ∈ Γ(u), v > u.
     // Output edges always point big → small and carry no self loops
     // (v > u ≥ m). The groupBy and the join shuffle the symmetrized
@@ -2087,9 +2122,15 @@ object GraftPipelines {
     // standard nearDuplicates caller that is the whole LSH candidate +
     // verify chain, paid twice.
     val spark = pairs.sparkSession
-    val p = labeled(spark, "cc: input checkpoint") {
-      ckptOnce(pairs, d1, d2)
+    val (p, rows) = labeled(spark, "cc: input checkpoint") {
+      ckptCounted(pairs, d1, d2)
     }
+    val integralIds = Seq(d1, d2).forall(c => p.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    if (rows <= cap && integralIds)
+      return (driverClusters(p, d1, d2, id), 0)
     // Self-pairs (d1 == d2) carry no connectivity but DO assert the doc
     // exists — the contract labels every doc appearing in any pair, so
     // they re-enter at label read-off below (the star ops would
@@ -2141,6 +2182,47 @@ object GraftPipelines {
       .groupBy(col("node")).agg(min(col("label")).as("label"))
     (labels.select(col("node").as(id), col("label").as("cluster_id")),
       rounds)
+  }
+
+  /** The small-graph path of [[dupClustersWithRounds]]: collect the
+    * checkpointed pairs `p` in one job and label them by union-find,
+    * linking each larger root under the smaller so every set is rooted
+    * at its minimum id. Rows with a null endpoint are dropped and
+    * self-pairs label themselves, as on the star path; ids come back in
+    * the type the star path's unions widen `d1` and `d2` to.
+    */
+  private def driverClusters(p: DataFrame, d1: String, d2: String,
+      id: String): DataFrame = {
+    val spark = p.sparkSession
+    val edges = labeled(spark, "cc: driver union-find") {
+      p.filter(col(d1).isNotNull && col(d2).isNotNull)
+        .select(col(d1).cast("long"), col(d2).cast("long")).collect()
+    }
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = parent.getOrElseUpdate(x, x)
+      while (parent(root) != root) root = parent(root)
+      var y = x // path compression
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    edges.foreach { r =>
+      val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    // both star-path columns come out of min aggregates: nullable
+    val longs = StructType(Seq(StructField(id, LongType),
+      StructField("cluster_id", LongType)))
+    val idType =
+      p.select(col(d1)).union(p.select(col(d2))).schema.head.dataType
+    val labels = parent.keys.toSeq.map(x => Row(x, find(x)))
+    // one partition, like the AQE-coalesced aggregate the star path
+    // ends in: a local scan splits into defaultParallelism slices, and
+    // every slice is one more part file where the labels are written
+    spark.createDataFrame(java.util.Arrays.asList(labels: _*), longs)
+      .select(col(id).cast(idType).as(id),
+        col("cluster_id").cast(idType).as("cluster_id"))
+      .coalesce(1)
   }
 
   /** End-to-end near-dup detection: LSH candidates verified by word-set

@@ -331,7 +331,8 @@ object EventStreaming {
     * [[decontaminationGate]]'s gram check, the quality filter,
     * [[ingestDedupLoop]]'s growing band index, plus a digest log and a
     * doc store. State under `statePath` (all dup-tolerant append logs,
-    * the ingestDedupLoop discipline):
+    * the ingestDedupLoop discipline, each folded once it passes
+    * `compactThreshold` files):
     *
     *  - `digests/` — md5(text) of every EXACT survivor so far; the
     *    arriving batch anti-joins it (exact dedup across triggers).
@@ -376,7 +377,7 @@ object EventStreaming {
       nGram: Int = 5, minScore: Double = 0.45, minWords: Int = 5,
       minJaccard: Double = 0.7, shingleN: Int = 3, seeds: Int = 8,
       bands: Int = 4, id: String = "doc_id", text: String = "text",
-      adoptExisting: Boolean = false)
+      compactThreshold: Int = 64, adoptExisting: Boolean = false)
       (sink: (Dataset[Row], Long) => Unit): StreamingQuery = {
     val runId = StateScheme.runIdentity(checkpointDir)
     val paramFp = {
@@ -403,11 +404,12 @@ object EventStreaming {
           "pass adoptExisting = true to deliberately continue ingest " +
             "into this state")
       val P = graft.api.GraftPipelines
-      def readLog(sub: String, bootstrap: => DataFrame): DataFrame =
-        try spark.read.parquet(s"$statePath/$sub")
-        catch {
-          case _: org.apache.spark.sql.AnalysisException => bootstrap.limit(0)
-        }
+      def readLog(sub: String, bootstrap: => DataFrame): DataFrame = {
+        val log = s"$statePath/$sub"
+        if (schemeFs.exists(new org.apache.hadoop.fs.Path(log)))
+          spark.read.parquet(log)
+        else bootstrap.limit(0)
+      }
       val batch = batch0.toDF.localCheckpoint()
       // 1. decontamination gate (per-doc, vs the persisted eval grams)
       val evalGrams = spark.read.parquet(evalGramsPath)
@@ -463,11 +465,11 @@ object EventStreaming {
       sink(survivors, batchId)
       // 5. grow the state by ALL exact survivors (near-dup-dropped ones
       // included — see the chain note above)
-      exact.select(col("__digest").as("digest"))
-        .write.mode("append").parquet(s"$statePath/digests")
-      exact.select(col(id), col(text))
-        .write.mode("append").parquet(s"$statePath/docs")
-      batchBands.write.mode("append").parquet(s"$statePath/bands")
+      appendLog(exact.select(col("__digest").as("digest")),
+        s"$statePath/digests", compactThreshold)
+      appendLog(exact.select(col(id), col(text)), s"$statePath/docs",
+        compactThreshold)
+      appendLog(batchBands, s"$statePath/bands", compactThreshold)
     }
   }
 
@@ -533,13 +535,14 @@ object EventStreaming {
     * candidate pairs before counting; the postings read side leads
     * with `distinct`; the chain loop's band log feeds a pair-level
     * `distinct`, its doc log a per-id dedup and its tombstone log a
-    * `distinct` id set): mid-compaction a reader sees old + folded rows
-    * (duplicates — harmless), after the deletes it sees only the folded
-    * segment, and a crash between append and delete leaves duplicates
-    * the NEXT compaction removes. Appending before deleting means the
-    * log never passes through an empty or partial state, so no reader
-    * (including the loop's own next trigger) can bootstrap against a
-    * half-compacted index. `distinct` is semantics-preserving for the
+    * `distinct` id set; the curation logs are read through
+    * `dropDuplicates` on their keys): mid-compaction a reader sees old
+    * + folded rows (duplicates — harmless), after the deletes it sees
+    * only the folded segment, and a crash between append and delete
+    * leaves duplicates the NEXT compaction removes. Appending before
+    * deleting means the log never passes through an empty or partial
+    * state, so no reader (including the loop's own next trigger) can
+    * bootstrap against a half-compacted index. `distinct` is semantics-preserving for the
     * same reason: the only duplicate rows are replay artifacts the
     * readers already cancel.
     *

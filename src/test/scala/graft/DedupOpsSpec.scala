@@ -227,14 +227,39 @@ class DedupOpsSpec extends SparkSpec {
   test("dupClusters: adversarial 512-node path converges in O(log n) rounds") {
     // the worst case for round-3's min-label propagation (diameter 511
     // would have cost ~511 scheduled rounds); large-star/small-star must
-    // close it in ~log2(512) = 9 rounds (+1 fixed-point detection pass)
+    // close it in ~log2(512) = 9 rounds (+1 fixed-point detection pass).
+    // 511 edges are under the driver-path cap, so cap = 0 forces the
+    // star rounds this bound is about
     val n = 512
     val pairs = (0L until n - 1L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val (out, rounds) = api.GraftPipelines.dupClustersWithRounds(pairs)
+    val (out, rounds) =
+      api.GraftPipelines.dupClustersWithRounds(pairs, cap = 0)
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(labels.length == n)
     assert(labels.forall(_._2 == 0L), "every node must reach the path min")
+    assert(rounds >= 1, "cap = 0 must run the star rounds")
     assert(rounds <= 11, s"path-512 took $rounds rounds — not O(log n)")
+  }
+
+  test("dupClusters: a small graph is labeled by one driver union-find " +
+      "job and schedules no star round, seed or equality job") {
+    val pairs = Seq((2L, 3L), (1L, 2L), (10L, 11L), (20L, 20L))
+      .toDF("d1", "d2").repartition(3)
+    val (jobs, out) =
+      jobDescriptions(api.GraftPipelines.dupClusters(pairs).collect())
+    val cc = jobs.filter(_.startsWith("cc:"))
+    assert(cc.count(_ == "cc: driver union-find") == 1, s"cc jobs: $cc")
+    assert(!cc.exists(d => d.startsWith("cc: round") ||
+      d.startsWith("cc: seed") || d.endsWith("equality")), s"cc jobs: $cc")
+    assert(out.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L))
+    // the driver path labels integral ids only; string ids keep the
+    // star rounds, under the cap too
+    val (named, rounds) = api.GraftPipelines.dupClustersWithRounds(
+      Seq(("b", "c"), ("a", "b")).toDF("d1", "d2"))
+    assert(rounds >= 1)
+    assert(named.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a"))
   }
 
   test("curate policies: pairwise under-deletes on a chain, clusters keep one") {

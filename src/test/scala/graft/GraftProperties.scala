@@ -82,38 +82,65 @@ object GraftProperties extends Properties("graft") {
     if a.exists(_ != 0f) && b.exists(_ != 0f)
   } yield (a, b)
 
-  // Random undirected graphs: the distributed min-label propagation must
-  // agree with a driver-side union-find on every component.
-  private val edgeGen: Gen[List[(Long, Long)]] = for {
+  // Random pair lists: both dupClusters paths (driver union-find under
+  // the cap, star rounds above it) must agree with a reference
+  // union-find on every component. Each list carries self-pairs, a
+  // duplicate and a reversed edge, and a row with a null endpoint,
+  // which no path may label.
+  private val edgeGen: Gen[List[(Option[Long], Option[Long])]] = for {
     n <- Gen.chooseNum(2, 20)
     m <- Gen.chooseNum(1, 25)
-    edges <- Gen.listOfN(m, for {
-      a <- Gen.chooseNum(0L, n.toLong - 1)
-      b <- Gen.chooseNum(0L, n.toLong - 1)
-      if a != b
-    } yield (math.min(a, b), math.max(a, b)))
-  } yield edges
+    node = Gen.chooseNum(0L, n.toLong - 1)
+    edges <- Gen.listOfN(m, Gen.zip(node, node))
+    self <- node
+    loose <- node
+    nullFirst <- Gen.oneOf(true, false)
+  } yield {
+    val (a, b) = edges.head
+    val withNull = if (nullFirst) (None, Some(loose)) else (Some(loose), None)
+    (edges ++ Seq((a, b), (b, a), (self, self)))
+      .map { case (x, y) => (Option(x), Option(y)) } :+ withNull
+  }
+
+  /** dupClusters at the default cap, at cap 0, and at caps of exactly
+    * and one below the row count (driver path at exactly the cap, star
+    * rounds one row above it) all equal the reference union-find, with
+    * one output schema. */
+  private def ccAgrees(rows: List[(Option[Long], Option[Long])]): Boolean = {
+    import spark.implicits._
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    rows.foreach {
+      case (Some(a), Some(b)) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      case _ =>
+    }
+    val expected = parent.keys.map(x => x -> find(x)).toMap
+    val pairs = rows.toDF("d1", "d2")
+    val n = rows.size.toLong
+    // (cap, whether that cap takes the driver path)
+    val caps = Seq(None -> true, Some(0L) -> (n == 0L),
+      Some(n) -> true, Some(n - 1) -> false)
+    val runs = caps.map { case (cap, driver) =>
+      val (out, rounds) = cap.fold(
+        graft.api.GraftPipelines.dupClustersWithRounds(pairs))(c =>
+        graft.api.GraftPipelines.dupClustersWithRounds(pairs, cap = c))
+      val got = out.collect().map(r => r.getLong(0) -> r.getLong(1))
+      (got.length == got.toMap.size && got.toMap == expected &&
+        (rounds == 0) == driver, out.schema)
+    }
+    runs.forall(_._1) && runs.map(_._2).distinct.size == 1
+  }
+
+  // empty input, checked once rather than once per generated case
+  private lazy val emptyAgrees = ccAgrees(Nil)
 
   property("dupClusters matches a union-find reference on random graphs") =
-    Prop.forAll(edgeGen) { edges =>
-      edges.isEmpty || {
-        import spark.implicits._
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val expected = parent.keys.map(x => x -> find(x)).toMap
-        val got = graft.api.GraftPipelines
-          .dupClusters(edges.toDF("d1", "d2")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        got == expected
-      }
-    }
+    Prop.forAll(edgeGen)(rows => emptyAgrees && ccAgrees(rows))
 
   private val chunkGen: Gen[(Int, Int, Int)] = for {
     width <- Gen.chooseNum(1, 12)

@@ -511,6 +511,60 @@ class StreamingSpec extends SparkSpec {
       s"stream=${out.values.flatten.toSeq.sortBy(_._1)} batch=$twin")
   }
 
+  test("curationIngest log compaction: 12 triggers at compactThreshold = 1 " +
+      "keep each state log folded, and the survivors stream is unchanged") {
+    implicit val sqlCtx = spark.sqlContext
+    // ten distinct 5-letter words per text (quality score 0.7): trigger
+    // i adds a fresh text and a near-dup (one word swapped) or an exact
+    // dup of the previous trigger's fresh text, so every trigger reads
+    // the folded digest, band and doc logs
+    def fresh(i: Int): String = (0 until 10)
+      .map(j => s"${('a' + i).toChar}${('a' + j).toChar}qxz").mkString(" ")
+    val batches = (0 until 12).map { i =>
+      val echo =
+        if (i == 0) fresh(20)
+        else if (i % 2 == 0) fresh(i - 1)
+        else fresh(i - 1).replace("aqxz", "zzzzz")
+      Seq((2L * i + 1, fresh(i)), (2L * i + 2, echo))
+    }
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_curation_cmp").toString
+    val evalDir = s"$base/evalgrams"
+    api.GraftPipelines.corpusGramIndex(
+        Seq((100L, "secret eval answer token sequence")).toDF("doc_id", "text"))
+      .select("g").write.parquet(evalDir)
+    def run(stateDir: String, threshold: Int): Seq[Seq[Long]] = {
+      val mem = MemoryStream[(Long, String)]
+      val emitted = scala.collection.mutable.Map[Long, Seq[Long]]()
+      val q = EventStreaming.curationIngest(mem.toDF().toDF("doc_id", "text"),
+          evalDir, stateDir, compactThreshold = threshold) { (batch, bid) =>
+        val ids = batch.collect().map(_.getAs[Long]("doc_id")).toSeq.sorted
+        emitted.synchronized { emitted(bid) = ids }
+      }
+      try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      emitted.synchronized((0L until 12L).map(emitted))
+    }
+    def partFiles(dir: String): Int = new java.io.File(dir).listFiles()
+      .count(_.getName.startsWith("part-"))
+    val folded = run(s"$base/folded", 1)
+    val plain = run(s"$base/plain", 64)
+    assert(folded == plain, s"folded=$folded plain=$plain")
+    // every echo is dropped: exact dups by the digest log, near-dups by
+    // the band and doc logs
+    assert(folded == Seq(1L, 2L) +: (1 until 12).map(i => Seq(2L * i + 1)),
+      s"survivors: $folded")
+    // a fold writes up to defaultParallelism/8 files, so the bound is
+    // threshold + that segment
+    val segCap = 1 + math.max(1, spark.sparkContext.defaultParallelism / 8)
+    Seq("digests", "docs", "bands").foreach { log =>
+      val n = partFiles(s"$base/folded/$log")
+      assert(n >= 1 && n <= segCap, s"$log log should have folded, found $n")
+      assert(partFiles(s"$base/plain/$log") == 12,
+        s"$log log below the threshold holds one file per trigger")
+    }
+  }
+
   test("indexIngestLoop: serving view equals batch index, replay-idempotent") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
@@ -1937,39 +1991,13 @@ class StreamingSpec extends SparkSpec {
       "add-only trigger runs no retraction, a delete-only trigger no " +
       "extension, and a mixed trigger runs both") {
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    // descriptions of the jobs started since the previous call:
-    // listener delivery is asynchronous, so a sentinel job marks the
-    // point by which every earlier job start has been delivered
-    def drain(): Seq[String] = {
-      val tag = s"sentinel-${java.util.UUID.randomUUID()}"
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(0), 1).count() // exactly one job
-      finally sc.setJobDescription(null)
-      Iterator.continually(
-          seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .map(d => { assert(d != null, "sentinel never delivered"); d })
-        .takeWhile(_ != tag).toSeq
-    }
     val mem = MemoryStream[(String, Long, String)]
     val q = EventStreaming.upsertLoop(
       mem.toDF().toDF("op", "doc_id", "text"),
       java.nio.file.Files.createTempDirectory("graft_chain_step")
         .toString + "/state")()
-    def trigger(rows: Seq[(String, Long, String)]): Seq[String] = {
-      drain()
-      mem.addData(rows: _*); q.processAllAvailable()
-      drain()
-    }
-    sc.addSparkListener(listener)
+    def trigger(rows: Seq[(String, Long, String)]): Seq[String] =
+      jobDescriptions { mem.addData(rows: _*); q.processAllAvailable() }._1
     try {
       val addOnly = trigger(adds((1L, tA), (2L, tA), (3L, tB), (4L, tB)))
       val mixed = trigger(dels(2L) ++ adds((5L, tA)))
@@ -1982,9 +2010,6 @@ class StreamingSpec extends SparkSpec {
         !ran(delOnly, "upsertChain"), s"delete-only ran: $delOnly")
       assert(ran(mixed, "retractChain") && ran(mixed, "extendChain") &&
         ran(mixed, "upsertChain"), s"mixed ran: $mixed")
-    } finally {
-      q.stop()
-      sc.removeSparkListener(listener)
-    }
+    } finally q.stop()
   }
 }
