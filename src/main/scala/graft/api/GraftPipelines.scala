@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -36,20 +37,21 @@ object GraftPipelines {
   }
 
   /** Project `df` to exactly `cols` and materialize it — UNLESS it is
-    * already a materialized checkpoint
-    * ([[Bridge.isMaterializedCheckpoint]]), in which case the
-    * projection alone is returned: re-checkpointing an
-    * already-checkpointed frame copies every block and schedules a
-    * whole job for nothing. The chain algebra (extendChain/upsertChain)
-    * receives pre-checkpointed frames from the streaming loop on every
-    * trigger — the double checkpoints were a measured slice of the
-    * per-trigger job floor (DevTrigProf r15).
+    * already materialized, in which case the projection alone is
+    * returned: a checkpoint ([[Bridge.isMaterializedCheckpoint]]) would
+    * copy every block and schedule a whole job for nothing, and a
+    * local relation (rows held in the plan) would also hide its
+    * emptiness from the optimizer's empty-relation rule — the chain
+    * step ([[graft.operators.DedupOps.chainStep]]) relies on that rule
+    * to drop the joins of a one-sided batch's empty side.
     */
   private[graft] def ckptOnce(df: DataFrame, cols: String*): DataFrame = {
     val sel =
       if (cols.isEmpty || df.columns.toSeq == cols) df
       else df.select(cols.map(col): _*)
-    if (Bridge.isMaterializedCheckpoint(df)) sel else sel.localCheckpoint()
+    if (Bridge.isMaterializedCheckpoint(df) ||
+        sel.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) sel
+    else sel.localCheckpoint()
   }
 
   /** [[ckptOnce]] plus the frame's row count: observed while the
@@ -2068,10 +2070,10 @@ object GraftPipelines {
     * driver (each set rooted at its minimum id), returned as a local
     * relation with the star path's rows and schema. Every round costs
     * several scheduled jobs however few edges it carries, and the
-    * incremental chain steps (`DedupOps.extendChain`/`retractChain`)
-    * hand this function tens of edges per trigger — so the capped
-    * collect (at most ~1 MB of driver traffic) replaces the ~18 jobs
-    * of a converged star run there. Above the cap nothing changes.
+    * incremental chain step (`DedupOps.chainStep`) hands this function
+    * tens of edges per trigger — so the capped collect (at most ~1 MB
+    * of driver traffic) replaces the ~18 jobs of a converged star run
+    * there. Above the cap nothing changes.
     */
   def dupClusters(pairs: DataFrame, d1: String = "d1", d2: String = "d2",
       id: String = "doc_id"): DataFrame =

@@ -53,8 +53,8 @@ object DedupOps {
 
   /** The full persisted dedup chain (verified pair list, cluster label
     * map) from the same write-once fixture [[dupClustersServed]] reads
-    * — both tables are pair-count-sized, and the retraction path
-    * ([[retractClusters]]) needs the pairs alongside the labels.
+    * — both tables are pair-count-sized, and the maintenance step
+    * ([[chainStep]]) needs the pairs alongside the labels.
     */
   private def dupChainServed(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
@@ -71,46 +71,48 @@ object DedupOps {
       Tables.read(s, s"$idx/clusters.parquet"))
   }
 
-  /** Retraction-aware maintenance of the near-dup cluster map — the
-    * deletion half of the dedup chain's serve split (right-to-be-
-    * forgotten over the DUPLICATE INDEX, the complement of
-    * `rel_incremental_delete`'s aggregate retraction): given the
-    * persisted verified pairs and label map and a delete list, produce
-    * the label map a full recompute over the remaining corpus would.
+  /** One maintenance step of the near-dup cluster chain: given the
+    * persisted verified pairs and label map, a delete list (`del_id`)
+    * and the VERIFIED new pairs an ingest batch introduced, produce the
+    * (pairs, labels) a full rebuild over (corpus \ deletes) ∪ batch
+    * would — without touching corpus text. Either side may be empty:
+    * a takedown passes no new pairs, an ingest no deletes (an empty
+    * local frame, so the optimizer drops that side's joins).
     *
-    * The incremental algebra, never touching corpus text:
-    *  - pair retraction is monotone: deleting docs only REMOVES pairs
-    *    (two anti-joins over the pair-count-sized table — O(pairs));
-    *  - components that contain no deleted doc are untouched: their
-    *    members, edges, and component-min label are all intact, so the
-    *    persisted labels pass straight through (the O(everything-else)
-    *    saving — at 100 TB the delete batch touches a vanishing
+    * The incremental algebra, one pass for both halves:
+    *  - deleting docs only REMOVES pairs (two anti-joins over the
+    *    pair-count-sized table — O(pairs)), ingesting only ADDS them,
+    *    so the new pair set is kept ∪ new; no pair is re-verified;
+    *  - a component with no deleted doc and no new-pair endpoint is
+    *    IDENTICAL in the rebuilt graph — members, edges and
+    *    component-min label all intact — so its persisted labels pass
+    *    straight through (at 100 TB a batch touches a vanishing
     *    fraction of clusters);
-    *  - components that DO contain a deleted doc can SPLIT (a deleted
-    *    bridge doc disconnects its neighbors), so connected components
-    *    re-run over just the retracted edges of those components —
-    *    work bounded by the affected clusters' pair count, not the
-    *    corpus. Docs left edge-less drop out, matching the recompute
-    *    contract (only docs appearing in a surviving verified pair are
-    *    clustered).
+    *  - every other component can SPLIT (a deleted bridge doc
+    *    disconnects its neighbors) or MERGE (a batch doc bridges two
+    *    clusters), so connected components re-run once over those
+    *    components' surviving edges PLUS all new pairs — work bounded
+    *    by the touched clusters' pair count plus the batch's pairs.
+    *    Docs left edge-less drop out, matching the rebuild contract
+    *    (only docs in a surviving verified pair are clustered).
+    *
+    * `newPairs` must be verified against the POST-delete corpus: no
+    * new pair may touch a deleted doc (the caller cuts candidates
+    * against the delete set; at the stream layer the tombstone
+    * anti-join does it).
     */
-  private[graft] def retractClusters(s: SparkSession, pairs: DataFrame,
-      labels0: DataFrame, del: DataFrame): DataFrame =
-    retractChain(s, pairs, labels0, del)._2
-
-  /** [[retractClusters]] plus the surviving pair list — the full
-    * post-deletion chain state, what a maintenance loop persists so
-    * the NEXT delete batch retracts from the already-retracted chain
-    * (the streaming consumer is
-    * [[graft.streaming.EventStreaming.upsertLoop]], on its delete-only
-    * batches).
-    */
-  private[graft] def retractChain(s: SparkSession, pairs: DataFrame,
-      labels0: DataFrame, del: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def chainStep(s: SparkSession, pairs: DataFrame,
+      labels0: DataFrame, del: DataFrame,
+      newPairs0: DataFrame): (DataFrame, DataFrame) = {
+    val P = graft.api.GraftPipelines
     // labels feed three consumers (affected semi-join, untouched
-    // anti-join, edge relabel join) — materialize once, pair-count-sized
-    val labels = graft.api.GraftPipelines.labeled(s,
-      "retractChain: labels ckpt")(graft.api.GraftPipelines.ckptOnce(labels0))
+    // anti-join, edge relabel join) and the new pairs three (touched
+    // docs, CC input, published pairs) — each materialized once, and
+    // not again when the caller already did (ckptOnce)
+    val labels = P.labeled(s, "chainStep: labels ckpt")(P.ckptOnce(labels0))
+    val newPairs = P.labeled(s, "chainStep: new pairs ckpt") {
+      P.ckptOnce(newPairs0, "d1", "d2")
+    }
     val d = del.select(col("del_id"))
     // the delete list is data-scaled (a provenance takedown can name
     // millions of docs) — no broadcast hint on any join against it;
@@ -118,9 +120,16 @@ object DedupOps {
     val kept = pairs.select(col("d1"), col("d2"))
       .join(d, col("d1") === col("del_id"), "left_anti")
       .join(d, col("d2") === col("del_id"), "left_anti")
-    val affected = labels
-      .join(d, col("doc_id") === col("del_id"), "left_semi")
-      .select(col("cluster_id")).distinct()
+    // batch-only endpoints have no prior label and touch no cluster
+    // here — their pairs still reach CC below
+    val touched = d.select(col("del_id").as("doc_id"))
+      .union(newPairs.select(col("d1").as("doc_id")))
+      .union(newPairs.select(col("d2").as("doc_id")))
+    // feeds the CC input and the pass-through complement
+    val affected = P.labeled(s, "chainStep: affected ckpt") {
+      labels.join(touched, Seq("doc_id"), "left_semi")
+        .select(col("cluster_id")).distinct().localCheckpoint()
+    }
     val untouched = labels.join(affected, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"))
     // both endpoints of a surviving pair shared one old component, so
@@ -130,98 +139,8 @@ object DedupOps {
         Seq("d1"))
       .join(affected, Seq("cluster_id"), "left_semi")
       .select(col("d1"), col("d2"))
-    (kept,
-      untouched.union(graft.api.GraftPipelines.dupClusters(affectedEdges)))
-  }
-
-  /** The ADDITION half of incremental chain maintenance — the dual of
-    * [[retractChain]]: given the persisted base chain (pairs + labels)
-    * and the VERIFIED new pairs an ingest batch introduced (every new
-    * pair has at least one batch endpoint — corpus↔corpus pairs
-    * cannot appear, they were already in the base), produce the label
-    * map a full rebuild over base ∪ batch would.
-    *
-    * The incremental algebra, the mirror image of retraction:
-    *  - pair addition is monotone: ingesting docs only ADDS pairs, so
-    *    the new pair set is base ∪ new — no base pair is re-verified;
-    *  - base components touched by NO new pair are untouched: new
-    *    pairs are the only added edges, so such a component is
-    *    IDENTICAL in the full graph — members, edges, and
-    *    component-min label all intact; the persisted labels pass
-    *    straight through;
-    *  - components that a new pair DOES touch can MERGE (one batch doc
-    *    bridging two base clusters collapses them into one), so
-    *    connected components re-run over those components' base edges
-    *    PLUS all new pairs — work bounded by the touched clusters'
-    *    pair count plus the batch's pairs, not the corpus.
-    */
-  private[graft] def extendChain(s: SparkSession, basePairs0: DataFrame,
-      baseLabels0: DataFrame, newPairs0: DataFrame): DataFrame = {
-    val P = graft.api.GraftPipelines
-    // consumed twice each (affected-edge cut + pass-through
-    // complement) — materialized once, but NOT re-checkpointed when
-    // the caller already did (ckptOnce: the streaming loop passes
-    // checkpointed frames every trigger)
-    val basePairs = P.labeled(s, "extendChain: base pairs ckpt") {
-      P.ckptOnce(basePairs0, "d1", "d2")
-    }
-    val baseLabels = P.labeled(s, "extendChain: base labels ckpt") {
-      P.ckptOnce(baseLabels0)
-    }
-    val newPairs = P.labeled(s, "extendChain: new pairs ckpt") {
-      P.ckptOnce(newPairs0, "d1", "d2")
-    }
-    // components any new pair touches: either endpoint's OLD label
-    // (batch-only endpoints have no base label and contribute nothing
-    // here — their pairs still relabel below)
-    val touchedDocs = newPairs.select(col("d1").as("doc_id"))
-      .union(newPairs.select(col("d2").as("doc_id"))).distinct()
-    val affected = baseLabels
-      .join(touchedDocs, Seq("doc_id"), "left_semi")
-      .select(col("cluster_id")).distinct()
-    val untouched = baseLabels.join(affected, Seq("cluster_id"), "left_anti")
-      .select(col("doc_id"), col("cluster_id"))
-    val affectedBaseEdges = basePairs
-      .join(baseLabels.select(col("doc_id").as("d1"), col("cluster_id")),
-        Seq("d1"))
-      .join(affected, Seq("cluster_id"), "left_semi")
-      .select(col("d1"), col("d2"))
-    untouched.union(graft.api.GraftPipelines
-      .dupClusters(affectedBaseEdges.union(newPairs)))
-  }
-
-  /** BOTH halves of incremental chain maintenance in one step — the
-    * composition a real recurring pipeline runs per cycle (docs arrive
-    * AND takedowns land in the same window): apply the delete set with
-    * [[retractChain]] (O(pairs) anti-joins, CC only inside
-    * deletion-affected components), then extend the retracted chain
-    * with the ingest batch's verified new pairs via [[extendChain]]
-    * (CC only over add-touched components). Produces the (pairs,
-    * labels) a full rebuild over (base \ deletes) ∪ batch would.
-    *
-    * The composition is exact because the two algebras commute through
-    * the intermediate state: retraction's output IS a valid persisted
-    * chain (its oracle proves that), and extension only requires its
-    * base to be a valid chain over the live corpus. `newPairs` must be
-    * verified against the POST-delete corpus — no pair may touch a
-    * deleted doc (the caller cuts candidates against the delete set;
-    * at the stream layer the tombstone anti-join does it).
-    */
-  private[graft] def upsertChain(s: SparkSession, basePairs: DataFrame,
-      baseLabels: DataFrame, del: DataFrame,
-      newPairs: DataFrame): (DataFrame, DataFrame) = {
-    val (keptPairs, midLabels) = retractChain(s, basePairs, baseLabels, del)
-    val kept = graft.api.GraftPipelines
-      .labeled(s, "upsertChain: kept pairs ckpt") {
-        // feeds extend AND the union
-        graft.api.GraftPipelines.ckptOnce(keptPairs)
-      }
-    val np = graft.api.GraftPipelines
-      .labeled(s, "upsertChain: new pairs ckpt") {
-        graft.api.GraftPipelines.ckptOnce(newPairs, "d1", "d2")
-      }
-    (kept.union(np).distinct(),
-      extendChain(s, kept, midLabels, np))
+    (kept.union(newPairs).distinct(),
+      untouched.union(P.dupClusters(affectedEdges.union(newPairs))))
   }
 
   /** OFFLINE vacuum for the streaming chain loop's tombstone model
@@ -1181,18 +1100,20 @@ object DedupOps {
     // Retraction maintenance of the dup-cluster map: delete every doc
     // with doc_id % 10 == 7 (a provenance-takedown stand-in) and emit
     // the label map a full rebuild over the remaining corpus would —
-    // computed INCREMENTALLY from the persisted chain ([[retractClusters]]:
-    // O(pairs) edge retraction, untouched components pass through,
-    // CC re-runs only inside deletion-affected components). The oracle
-    // recomputes the whole chain over the filtered corpus, so the
-    // hash check proves the incremental algebra — including component
-    // SPLITS where a deleted doc was the only bridge.
+    // computed INCREMENTALLY from the persisted chain ([[chainStep]]
+    // with no new pairs: O(pairs) edge retraction, untouched components
+    // pass through, CC re-runs only inside deletion-affected
+    // components). The oracle recomputes the whole chain over the
+    // filtered corpus, so the hash check proves the incremental
+    // algebra — including component SPLITS where a deleted doc was the
+    // only bridge.
     "llm_dedup_retract" -> ((s, dir) => {
       import s.implicits._
       val (pairs, labels) = dupChainServed(s, dir)
       val del = Tables.documents(s, dir)
         .filter($"doc_id" % 10 === 7).select($"doc_id".as("del_id"))
-      dupClustersEntry(s, retractClusters(s, pairs, labels, del))
+      dupClustersEntry(s, chainStep(s, pairs, labels, del,
+        Seq.empty[(Long, Long)].toDF("d1", "d2"))._2)
     }),
 
     // Ingest maintenance of the dup-cluster map — the ADDITION dual of
@@ -1203,11 +1124,12 @@ object DedupOps {
     // the batch's verified new pairs (every one has a batch endpoint —
     // candidates come from the persisted band index, d2 >= split cuts
     // corpus↔corpus pairs for free since d1 < d2), components MERGE
-    // where a batch doc bridges two base clusters ([[extendChain]]:
-    // CC re-runs only over touched components' edges plus the new
-    // pairs; untouched labels pass through). Output = the full-corpus
-    // cluster map, so the oracle is llm_dup_clusters' full-rebuild SQL
-    // VERBATIM — the hash proves the merge algebra end-to-end.
+    // where a batch doc bridges two base clusters ([[chainStep]] with
+    // no deletes: CC re-runs only over touched components' edges plus
+    // the new pairs; untouched labels pass through). Output = the
+    // full-corpus cluster map, so the oracle is llm_dup_clusters'
+    // full-rebuild SQL VERBATIM — the hash proves the merge algebra
+    // end-to-end.
     "llm_dup_clusters_incremental" -> ((s, dir) => {
       import s.implicits._
       val split = ingestSplitId(s, dir)
@@ -1224,14 +1146,15 @@ object DedupOps {
         Tables.documents(s, dir),
         graft.api.GraftPipelines.bandCandidatesFromBatch(bands, split),
         0.7)
-      dupClustersEntry(s, extendChain(s, basePairs, baseLabels, newPairs))
+      dupClustersEntry(s, chainStep(s, basePairs, baseLabels,
+        Seq.empty[Long].toDF("del_id"), newPairs)._2)
     }),
 
     // Combined UPSERT maintenance — one cycle of the real recurring
     // pipeline: a takedown (base docs with doc_id % 10 == 7) AND an
     // ingest batch (the last 5% of doc ids) land in the same window,
-    // and the persisted chain is maintained by retract-then-extend
-    // ([[upsertChain]]) without re-shingling the corpus. Candidates
+    // and the persisted chain is maintained in one step ([[chainStep]]
+    // with both sides) without re-shingling the corpus. Candidates
     // for the batch's pairs are cut against the delete set (a pair
     // touching a deleted doc must not verify). Output = the cluster
     // map a full rebuild over (base \ deletes) ∪ batch produces — the
@@ -1258,7 +1181,7 @@ object DedupOps {
         graft.api.GraftPipelines.bandCandidatesFromBatch(bands, split)
           .filter(!($"d1" < split && $"d1" % 10 === 7)), 0.7)
       dupClustersEntry(s,
-        upsertChain(s, basePairs, baseLabels, del, newPairs)._2)
+        chainStep(s, basePairs, baseLabels, del, newPairs)._2)
     }),
 
     // Leakage-safe train/val/test split: the assignment unit is the

@@ -267,24 +267,21 @@ object EventStreaming {
     deliver(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       val fs = StateScheme.fsFor(spark, indexPath)
+      val indexed = hasPartFiles(fs, indexPath)
       val pinnedRun = StateScheme.ensure(spark, fs, s"$indexPath/_scheme",
         s"n=$shingleN,seeds=$seeds,bands=$bands", runId, "ingestDedupLoop",
         "band hashes from two hash schemes must never share one index " +
           "(new↔old candidates would silently never collide)",
-        hasPartFiles(fs, indexPath), adoptExisting)
+        indexed, adoptExisting)
       if (!adoptExisting)
         StateScheme.refuseForeign("ingestDedupLoop", batchId, pinnedRun,
-          runId, hasPartFiles(fs, indexPath),
-          s"the band index at $indexPath",
+          runId, indexed, s"the band index at $indexPath",
           "pass adoptExisting = true to deliberately continue ingest " +
             "into this index")
       val index =
-        try spark.read.parquet(indexPath)
-        catch {
-          case _: org.apache.spark.sql.AnalysisException => // bootstrap
-            graft.api.GraftPipelines.bandIndex(
-              batch.toDF.limit(0), shingleN, seeds, bands, id, text)
-        }
+        if (indexed) spark.read.parquet(indexPath)
+        else graft.api.GraftPipelines.bandIndex( // bootstrap
+          batch.toDF.limit(0), shingleN, seeds, bands, id, text)
       val flagged = graft.api.GraftPipelines
         .incrementalDedupWithIndex(index, batch.toDF,
           shingleN, seeds, bands, id, text)
@@ -975,25 +972,17 @@ object EventStreaming {
     * come from the batch bands probing the accumulated band store
     * (every candidate has a batch endpoint — old↔old pairs are already
     * in the chain), and verification reads only the candidate docs'
-    * texts. The chain step is the batch algebra of
-    * [[graft.operators.DedupOps]], picked by the batch's own op mix
-    * (counted while the batch checkpoint materializes — there is no
-    * option):
-    *
-    *  - adds only: `extendChain` (oracle-checked as
-    *    `llm_dup_clusters_incremental`) — components MERGE where a new
-    *    doc bridges two clusters, connected components re-run only over
-    *    the touched components' edges plus the batch's verified pairs,
-    *    and the pairs publish as prior ∪ new;
-    *  - deletes only: `retractChain` (`llm_dedup_retract`) — surviving
-    *    pairs by anti-join, components re-run only where a deleted doc
-    *    sat (a deleted bridge SPLITS its component), no text re-read;
-    *  - both: `upsertChain` (`llm_dedup_upsert`) — the deletes FIRST,
-    *    then the adds.
-    *
-    * Untouched components' labels pass straight through in every case.
-    * A one-sided batch runs only its half: the other half over an empty
-    * set would still checkpoint the labels and run CC over zero edges.
+    * texts. The chain step is the batch algebra
+    * [[graft.operators.DedupOps.chainStep]] (oracle-checked as
+    * `llm_dedup_upsert`, `llm_dedup_retract` and
+    * `llm_dup_clusters_incremental`), one pass per trigger whatever the
+    * op mix: surviving pairs by anti-join, untouched components' labels
+    * straight through, and connected components re-run once over the
+    * components a deleted doc or a new pair touches (a deleted bridge
+    * SPLITS its component, a new doc bridging two clusters MERGES
+    * them) plus the batch's verified pairs; the pairs publish as
+    * kept ∪ new. A one-sided batch passes its empty side as an empty
+    * local frame, so that side's joins drop out at planning.
     *
     * State under `statePath`:
     *
@@ -1093,6 +1082,10 @@ object EventStreaming {
             prior.join(published, Seq("doc_id", "cluster_id"), "left_anti")
               .select(col("doc_id"), col("cluster_id"),
                 lit("del").as("op")))
+      // folds the generations below this batch's, once the sink saw it
+      def foldOlderGens(): Unit = gens().filter(_ < batchId).foreach { g =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$chainRoot/g=$g"), true)
+      }
       val allGens = gens()
       val priorBelow = allGens.filter(_ < batchId).maxOption
       if (allGens.contains(batchId)) {
@@ -1106,10 +1099,7 @@ object EventStreaming {
               spark.read.parquet(s"$chainRoot/g=$batchId/labels")
             val pLabels = spark.read.parquet(s"$chainRoot/g=$p/labels")
             sink(labelDelta(published, pLabels), batchId)
-            allGens.filter(_ < batchId).foreach { g =>
-              fs.delete(new org.apache.hadoop.fs.Path(
-                s"$chainRoot/g=$g"), true)
-            }
+            foldOlderGens()
           case None => sink(emptyDelta(), batchId)
         }
       } else {
@@ -1142,9 +1132,13 @@ object EventStreaming {
       val addsEmpty = counted("adds") == 0L
       val delsEmpty = counted("dels") == 0L
       val adds = b.filter(col("op") === "add").drop("op")
-      // dup-tolerant everywhere it goes (tombstone log, anti/semi-joins)
+      // dup-tolerant everywhere it goes (tombstone log, anti/semi-joins);
+      // an add-only batch's is an empty local frame, like a delete-only
+      // batch's new pairs below, so the chain step's joins on it drop
+      // out at planning
       val dels =
-        b.filter(col("op") === "del").select(col("doc_id").as("del_id"))
+        if (delsEmpty) Seq.empty[Long].toDF("del_id")
+        else b.filter(col("op") === "del").select(col("doc_id").as("del_id"))
       if (counted("bad") > 0L) {
         val badOps = b.filter(isBad).limit(5).collect()
         require(badOps.isEmpty,
@@ -1229,17 +1223,10 @@ object EventStreaming {
         val prior = priorBelow.get // bootstrap guaranteed g=-1
         val pPairs = spark.read.parquet(s"$chainRoot/g=$prior/pairs")
         val pLabels = spark.read.parquet(s"$chainRoot/g=$prior/labels")
-        // the chain step follows the batch's op mix (see the scaladoc):
-        // a one-sided batch runs only its half of upsertChain
         val (nextPairs, nextLabels) =
           labeled(spark, s"upsert[$batchId] chain step (CC)") {
-            val D = graft.operators.DedupOps
-            if (addsEmpty) D.retractChain(spark, pPairs, pLabels, dels)
-            else if (delsEmpty) {
-              val np = newPairs.localCheckpoint() // extend AND the union
-              (pPairs.select(col("d1"), col("d2")).union(np).distinct(),
-                D.extendChain(spark, pPairs, pLabels, np))
-            } else D.upsertChain(spark, pPairs, pLabels, dels, newPairs)
+            graft.operators.DedupOps
+              .chainStep(spark, pPairs, pLabels, dels, newPairs)
           }
         labeled(spark, s"upsert[$batchId] publish") {
           publishGeneration(fs, chainRoot, batchId,
@@ -1250,10 +1237,7 @@ object EventStreaming {
         labeled(spark, s"upsert[$batchId] delta sink") {
           sink(labelDelta(published, pLabels), batchId)
         }
-        gens().filter(_ < batchId).foreach { g =>
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$chainRoot/g=$g"), true)
-        }
+        foldOlderGens()
       } else sink(emptyDelta(), batchId)
       }
     }

@@ -619,7 +619,7 @@ class DedupOpsSpec extends SparkSpec {
       s"expected a broadcast tag join in the final plan:\n${plan.take(1200)}")
   }
 
-  test("retractClusters: deleting a bridge doc splits its component, " +
+  test("chainStep: deleting a bridge doc splits its component, " +
       "untouched components keep their persisted labels, and the " +
       "maintained map equals a full recompute") {
     // path 1-2-3-4-5 (3 is the only bridge between {1,2} and {4,5})
@@ -628,7 +628,9 @@ class DedupOpsSpec extends SparkSpec {
       .toDF("d1", "d2")
     val labels = graft.api.GraftPipelines.dupClusters(pairs)
     val del = Seq(3L).toDF("del_id")
-    val out = graft.operators.DedupOps.retractClusters(spark, pairs, labels, del)
+    val noNewPairs = Seq.empty[(Long, Long)].toDF("d1", "d2")
+    val out = graft.operators.DedupOps
+      .chainStep(spark, pairs, labels, del, noNewPairs)._2
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // the deleted bridge is gone; its component split at the min of
     // each surviving half; the untouched pair kept its old label
@@ -641,7 +643,7 @@ class DedupOpsSpec extends SparkSpec {
     assert(out == recomputed)
   }
 
-  test("extendChain: a batch doc bridging two base components merges " +
+  test("chainStep: a batch doc bridging two base components merges " +
       "them, batch-only pairs form new components, untouched " +
       "components keep their labels, and the result equals a " +
       "from-scratch recompute") {
@@ -650,8 +652,9 @@ class DedupOpsSpec extends SparkSpec {
     // 9 bridges {1,2} and {4,5}; 20-21 is a batch-only pair; {10,11}
     // is untouched
     val newPairs = Seq((2L, 9L), (4L, 9L), (20L, 21L)).toDF("d1", "d2")
+    val noDels = Seq.empty[Long].toDF("del_id")
     val out = graft.operators.DedupOps
-      .extendChain(spark, basePairs, baseLabels, newPairs)
+      .chainStep(spark, basePairs, baseLabels, noDels, newPairs)._2
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 5L -> 1L, 9L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
@@ -661,12 +664,14 @@ class DedupOpsSpec extends SparkSpec {
     assert(out == recomputed)
   }
 
-  test("retractClusters: deleting a leaf doc neither splits nor " +
+  test("chainStep: deleting a leaf doc neither splits nor " +
       "relabels the rest of its component") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("d1", "d2")
     val labels = graft.api.GraftPipelines.dupClusters(pairs)
     val del = Seq(3L).toDF("del_id")
-    val out = graft.operators.DedupOps.retractClusters(spark, pairs, labels, del)
+    val noNewPairs = Seq.empty[(Long, Long)].toDF("d1", "d2")
+    val out = graft.operators.DedupOps
+      .chainStep(spark, pairs, labels, del, noNewPairs)._2
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L))
   }

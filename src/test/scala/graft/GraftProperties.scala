@@ -108,18 +108,9 @@ object GraftProperties extends Properties("graft") {
     * one output schema. */
   private def ccAgrees(rows: List[(Option[Long], Option[Long])]): Boolean = {
     import spark.implicits._
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    rows.foreach {
-      case (Some(a), Some(b)) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      case _ =>
-    }
-    val expected = parent.keys.map(x => x -> find(x)).toMap
+    val expected = referenceLabels(rows.collect {
+      case (Some(a), Some(b)) => (a, b)
+    })
     val pairs = rows.toDF("d1", "d2")
     val n = rows.size.toLong
     // (cap, whether that cap takes the driver path)
@@ -136,11 +127,66 @@ object GraftProperties extends Properties("graft") {
     runs.forall(_._1) && runs.map(_._2).distinct.size == 1
   }
 
+  /** Reference union-find: every node of `edges` → its component's
+    * minimum id. */
+  private def referenceLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
   // empty input, checked once rather than once per generated case
   private lazy val emptyAgrees = ccAgrees(Nil)
 
   property("dupClusters matches a union-find reference on random graphs") =
     Prop.forAll(edgeGen)(rows => emptyAgrees && ccAgrees(rows))
+
+  // One chain step's inputs: a base graph over edgeGen's nodes (0..19),
+  // a random subset of its nodes to delete, and new pairs that each
+  // have a fresh endpoint (20..25) and touch no deleted node.
+  private val chainGen = for {
+    base <- edgeGen.map(_.collect { case (Some(a), Some(b)) => (a, b) })
+    nodes = base.flatMap { case (a, b) => Seq(a, b) }.distinct
+    del <- Gen.someOf(nodes).map(_.toSet)
+    live = nodes.filterNot(del)
+    fresh = Gen.chooseNum(20L, 25L)
+    k <- Gen.chooseNum(0, 6)
+    added <- Gen.listOfN(k, Gen.zip(fresh,
+        if (live.isEmpty) fresh else Gen.oneOf(fresh, Gen.oneOf(live)))
+      .flatMap { case (a, b) => Gen.oneOf((a, b), (b, a)) })
+  } yield (base, del, added)
+
+  /** chainStep over a prior chain of `base` equals a rebuild over
+    * (base minus every edge touching `del`) plus `added`: the labels
+    * match the reference union-find and the pairs that edge set. */
+  private def chainStepAgrees(base: List[(Long, Long)], del: Set[Long],
+      added: List[(Long, Long)]): Boolean = {
+    import spark.implicits._
+    val (pairs, labels) = graft.operators.DedupOps.chainStep(spark,
+      base.toDF("d1", "d2"), referenceLabels(base).toSeq
+        .toDF("doc_id", "cluster_id"),
+      del.toSeq.toDF("del_id"), added.toDF("d1", "d2"))
+    val edges = base.filterNot { case (a, b) => del(a) || del(b) } ++ added
+    val gotLabels = labels.as[(Long, Long)].collect()
+    val gotPairs = pairs.as[(Long, Long)].collect()
+    gotLabels.length == gotLabels.toMap.size &&
+      gotLabels.toMap == referenceLabels(edges) &&
+      gotPairs.length == gotPairs.toSet.size && gotPairs.toSet == edges.toSet
+  }
+
+  property("chainStep equals a rebuild over the surviving and new pairs") =
+    Prop.forAllNoShrink(chainGen) { case (base, del, added) =>
+      chainStepAgrees(base, del, added) &&
+        chainStepAgrees(base, Set.empty, added) &&
+        chainStepAgrees(base, del, Nil)
+    }
 
   private val chunkGen: Gen[(Int, Int, Int)] = for {
     width <- Gen.chooseNum(1, 12)

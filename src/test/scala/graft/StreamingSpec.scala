@@ -1987,29 +1987,26 @@ class StreamingSpec extends SparkSpec {
       Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 1L))
   }
 
-  test("upsertLoop picks the chain step from the batch's op mix: an " +
-      "add-only trigger runs no retraction, a delete-only trigger no " +
-      "extension, and a mixed trigger runs both") {
+  test("upsertLoop runs one chain step per trigger: an add-only, a " +
+      "mixed and a delete-only trigger each label connected components " +
+      "in exactly one driver union-find job") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Long, String)]
     val q = EventStreaming.upsertLoop(
       mem.toDF().toDF("op", "doc_id", "text"),
       java.nio.file.Files.createTempDirectory("graft_chain_step")
         .toString + "/state")()
-    def trigger(rows: Seq[(String, Long, String)]): Seq[String] =
-      jobDescriptions { mem.addData(rows: _*); q.processAllAvailable() }._1
+    def ccJobs(rows: Seq[(String, Long, String)]): Seq[String] =
+      jobDescriptions { mem.addData(rows: _*); q.processAllAvailable() }
+        ._1.filter(_.startsWith("cc:"))
+    def unionFinds(jobs: Seq[String]) = jobs.count(_ == "cc: driver union-find")
     try {
-      val addOnly = trigger(adds((1L, tA), (2L, tA), (3L, tB), (4L, tB)))
-      val mixed = trigger(dels(2L) ++ adds((5L, tA)))
-      val delOnly = trigger(dels(4L))
-      def ran(jobs: Seq[String], step: String) =
-        jobs.exists(_.startsWith(s"$step:"))
-      assert(ran(addOnly, "extendChain") && !ran(addOnly, "retractChain") &&
-        !ran(addOnly, "upsertChain"), s"add-only ran: $addOnly")
-      assert(ran(delOnly, "retractChain") && !ran(delOnly, "extendChain") &&
-        !ran(delOnly, "upsertChain"), s"delete-only ran: $delOnly")
-      assert(ran(mixed, "retractChain") && ran(mixed, "extendChain") &&
-        ran(mixed, "upsertChain"), s"mixed ran: $mixed")
+      val addOnly = ccJobs(adds((1L, tA), (2L, tA), (3L, tB), (4L, tB)))
+      val mixed = ccJobs(dels(2L) ++ adds((5L, tA)))
+      val delOnly = ccJobs(dels(4L))
+      assert(unionFinds(addOnly) == 1, s"add-only ran: $addOnly")
+      assert(unionFinds(mixed) == 1, s"mixed ran: $mixed")
+      assert(unionFinds(delOnly) == 1, s"delete-only ran: $delOnly")
     } finally q.stop()
   }
 }
