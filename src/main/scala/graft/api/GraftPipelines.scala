@@ -54,6 +54,12 @@ object GraftPipelines {
     else sel.localCheckpoint()
   }
 
+  /** Row-count cap for counted broadcasts: a side whose observed row
+    * count is at or under it broadcasts, a larger one (a seed-scale
+    * bootstrap batch, a dup-heavy candidate set) shuffles.
+    */
+  private[graft] val BroadcastRowCap = 1L << 20
+
   /** [[ckptOnce]] plus the frame's row count: observed while the
     * checkpoint materializes (`Dataset.observe`, no job of its own),
     * or one `count()` when `df` is already a checkpoint and nothing is
@@ -2254,21 +2260,25 @@ object GraftPipelines {
     * explode-join-count form, touching only docs that appear in a
     * candidate pair. Output identical to [[nearDuplicates]] when the
     * candidate set is the same — the serve path is a storage refactor.
+    * This is the one place docs are restricted to candidate ids, so
+    * the streaming loops pass their whole doc log: a doc id that
+    * occurs twice there only repeats its pair rows, which their
+    * `distinct` readers cancel.
     */
   def nearDuplicatesFromCandidates(docs: DataFrame,
       candidatePairs: DataFrame, minJaccard: Double,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    // localCheckpoint (eager), not persist+count: checkpointed blocks
-    // are ContextCleaner-reclaimable once the plan drops, so repeated
-    // calls from a long-running application (a streaming curation loop,
-    // a bench pass) never accumulate pinned CacheManager entries.
-    val cands = candidatePairs.localCheckpoint()
-    // Docs referenced by any candidate pair. No broadcast hint: this set's
-    // cardinality scales with the corpus (a dup-heavy crawl puts a large
-    // fraction of all docs in some candidate pair), so a compile-time
-    // broadcast of it is a driver-OOM cliff at 100× — the same error class
-    // as broadcasting an SF-scaling dimension. An unhinted left-semi join
-    // lets AQE broadcast only when the runtime size is actually small.
+    // a checkpoint (eager), not persist+count: checkpointed blocks are
+    // ContextCleaner-reclaimable once the plan drops, so a long-running
+    // application (a streaming loop, a bench pass) never accumulates
+    // pinned CacheManager entries. The pair count n is observed as it
+    // materializes.
+    val (cands, n) = ckptCounted(candidatePairs)
+    // Docs referenced by any candidate pair: at most 2·n ids, but a
+    // dup-heavy crawl puts a large fraction of all docs in some pair,
+    // so they broadcast only on that COUNTED bound (a compile-time
+    // broadcast is a driver-OOM cliff at 100×); past the cap the
+    // unhinted join lets AQE decide at runtime.
     val inPlay = cands.select(col("d1").as(id))
       .union(cands.select(col("d2"))).distinct()
     // Verify via per-pair array intersection (the round-11
@@ -2277,7 +2287,9 @@ object GraftPipelines {
     // groupBy; two pair-id-keyed joins against the word-ARRAY table
     // move the same bytes once each and compute |∩| per row —
     // array_intersect is exact on the array_distinct'd word sets.
-    val sets = docs.join(inPlay, Seq(id), "left_semi")
+    val sets = (if (2 * n <= BroadcastRowCap)
+        docs.join(broadcast(inPlay), Seq(id), "left_semi")
+      else docs.join(inPlay, Seq(id), "left_semi"))
       .select(col(id), array_distinct(split(col(text), " ")).as("wset"))
     val out = cands
       .join(sets.select(col(id).as("d1"), col("wset").as("wa")), "d1")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
-import graft.api.GraftPipelines.labeled
+import graft.api.GraftPipelines.{BroadcastRowCap, labeled}
 import graft.sources.GraftIO
 
 /** Structured Streaming layer (SURVEY.md §2.9).
@@ -354,11 +354,13 @@ object EventStreaming {
     * correctness hole.
     *
     * Replay caveat (shared with [[ingestDedupLoop]]): the logs are
-    * append-only and dup-tolerant on read (`dropDuplicates` on the id /
-    * digest key), so a foreachBatch retry re-appends rows harmlessly;
-    * however a retried batch whose digests already landed emits no
-    * survivors on the retry — the sink must treat emissions as
-    * at-least-once per batch id, not per doc.
+    * append-only and every read of them tolerates duplicate rows
+    * without deduplicating the log (the digest log feeds a left-anti
+    * join, the band log a pair-level `distinct`, the doc log the
+    * verify's candidate semi join), so a foreachBatch retry re-appends
+    * rows harmlessly; however a retried batch whose digests already
+    * landed emits no survivors on the retry — the sink must treat
+    * emissions as at-least-once per batch id, not per doc.
     *
     * Scheme discipline ([[StateScheme]]): the marker pins EVERY
     * parameter that shapes the state logs — the gates decide which
@@ -387,7 +389,7 @@ object EventStreaming {
     deliver(docs, checkpointDir) { (batch0, batchId) =>
       val spark = batch0.sparkSession
       val schemeFs = StateScheme.fsFor(spark, statePath)
-      def logsExist: Boolean = Seq("digests", "docs", "bands").exists { sub =>
+      lazy val logsExist = Seq("digests", "docs", "bands").exists { sub =>
         schemeFs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$sub"))
       }
       val pinnedRun = StateScheme.ensure(spark, schemeFs,
@@ -429,7 +431,6 @@ object EventStreaming {
         .filter(col("__rn") === 1).drop("__rn")
       val digestLog = readLog("digests",
         inBatch.select(col("__digest").as("digest")))
-        .dropDuplicates("digest")
       val exact = inBatch.join(
           digestLog.withColumnRenamed("digest", "__digest"),
           Seq("__digest"), "left_anti")
@@ -439,9 +440,8 @@ object EventStreaming {
       val batchBands = P
         .bandIndex(exact, shingleN, seeds, bands, id, text)
         .localCheckpoint()
-      val priorBands = readLog("bands", batchBands).dropDuplicates(id, "b")
+      val priorBands = readLog("bands", batchBands)
       val priorDocs = readLog("docs", exact.select(col(id), col(text)))
-        .dropDuplicates(id)
       val inCands = P.bandCandidates(batchBands, id)
       // cross pairs: d2 is ALWAYS the batch member (the prior doc was
       // already emitted) — equals the min-id rule under ordered ingest
@@ -497,15 +497,16 @@ object EventStreaming {
     deliver(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       val fs = StateScheme.fsFor(spark, postingsPath)
+      lazy val logExists = hasPartFiles(fs, postingsPath)
       val pinnedRun = StateScheme.ensure(spark, fs,
         s"$postingsPath/_scheme", "tok=ws-unigram", runId,
         "indexIngestLoop",
         "postings from two tokenization schemes must never share one " +
           "log (term lookups would be silently partial)",
-        hasPartFiles(fs, postingsPath), adoptExisting)
+        logExists, adoptExisting)
       if (!adoptExisting)
         StateScheme.refuseForeign("indexIngestLoop", batchId, pinnedRun,
-          runId, hasPartFiles(fs, postingsPath),
+          runId, logExists,
           s"the postings log at $postingsPath",
           "pass adoptExisting = true to deliberately continue ingest " +
             "into this log")
@@ -530,18 +531,18 @@ object EventStreaming {
     * Correct at EVERY instant because every log this serves is
     * duplicate-tolerant by contract (the ingest band index dedups
     * candidate pairs before counting; the postings read side leads
-    * with `distinct`; the chain loop's band log feeds a pair-level
-    * `distinct`, its doc log a per-id dedup and its tombstone log a
-    * `distinct` id set; the curation logs are read through
-    * `dropDuplicates` on their keys): mid-compaction a reader sees old
-    * + folded rows (duplicates — harmless), after the deletes it sees
-    * only the folded segment, and a crash between append and delete
-    * leaves duplicates the NEXT compaction removes. Appending before
-    * deleting means the log never passes through an empty or partial
-    * state, so no reader (including the loop's own next trigger) can
-    * bootstrap against a half-compacted index. `distinct` is semantics-preserving for the
-    * same reason: the only duplicate rows are replay artifacts the
-    * readers already cancel.
+    * with `distinct`; a band log feeds a pair-level `distinct`, a doc
+    * log the verify's candidate semi join, whose repeated pair rows
+    * meet a `distinct` downstream, the curation digest log a left-anti
+    * join and the tombstone log a `distinct` id set): mid-compaction a
+    * reader sees old + folded rows (duplicates — harmless), after the
+    * deletes it sees only the folded segment, and a crash between
+    * append and delete leaves duplicates the NEXT compaction removes.
+    * Appending before deleting means the log never passes through an
+    * empty or partial state, so no reader (including the loop's own
+    * next trigger) can bootstrap against a half-compacted index.
+    * `distinct` is semantics-preserving for the same reason: the only
+    * duplicate rows are replay artifacts the readers already cancel.
     *
     * An EXTERNAL reader that listed the log just before a fold can hit
     * a transient missing-file on the deleted segments — the standard
@@ -602,12 +603,6 @@ object EventStreaming {
             "recover before resuming the loop")
     }
 
-  /** Row-count cap for the chain loop's counted broadcasts: a batch
-    * side at or under it broadcasts, a larger one (a seed-scale
-    * bootstrap batch, a dup-heavy candidate set) shuffles.
-    */
-  private val BroadcastRowCap = 1L << 20
-
   /** Per-trigger candidate generation for the chain loop
     * ([[upsertLoop]]): batch bands PROBE the flat band log and the
     * result is normalized to `d1 < d2` candidate pairs. The store is
@@ -630,16 +625,21 @@ object EventStreaming {
     *    compile-time broadcast of an unbounded side is the driver-OOM
     *    cliff [[graft.api.GraftPipelines.nearDuplicatesFromCandidates]]
     *    documents;
-    *  - `tombs` (upsert's tombstone ids, anti-joined so a deleted doc
-    *    never generates another candidate) follows the same counted
+    *  - `tombs` (upsert's tombstone ids with the row count observed
+    *    as they were checkpointed, anti-joined so a deleted doc never
+    *    generates another candidate) follows the same counted
     *    broadcast rule.
+    *
+    * The pairs go straight to the verify
+    * ([[graft.api.GraftPipelines.nearDuplicatesFromCandidates]]),
+    * which checkpoints them and restricts the doc log to their ids.
     */
   private[graft] def chainCandidatePairs(spark: SparkSession,
       bandsPath: String, batchBands: DataFrame, batchRows: Long,
-      tombs: Option[DataFrame] = None): DataFrame = {
+      tombs: Option[(DataFrame, Long)] = None): DataFrame = {
     val store0 = spark.read.parquet(bandsPath).select(col("doc_id"), col("b"))
-    val store = tombs.fold(store0) { t =>
-      if (t.count() <= BroadcastRowCap)
+    val store = tombs.fold(store0) { case (t, tombRows) =>
+      if (tombRows <= BroadcastRowCap)
         store0.join(broadcast(t), col("doc_id") === col("del_id"),
           "left_anti")
       else store0.join(t, col("doc_id") === col("del_id"), "left_anti")
@@ -652,36 +652,6 @@ object EventStreaming {
       .select(least(col("bid"), col("doc_id")).as("d1"),
         greatest(col("bid"), col("doc_id")).as("d2"))
       .distinct()
-  }
-
-  /** Candidate docs' texts for verification: a scan of the WHOLE flat
-    * doc log, semi-joined to the candidate ids BEFORE the
-    * one-text-per-doc dedup, so `dropDuplicates` runs on
-    * candidate-count rows — the round-13 version deduplicated the
-    * ENTIRE doc store per trigger (a full-corpus shuffle per
-    * micro-batch). The semi join broadcasts the candidate ids under the
-    * same counted [[BroadcastRowCap]] rule as [[chainCandidatePairs]]
-    * (a dup-heavy corpus can put a large fraction of all docs in
-    * candidate pairs — unbounded, so the broadcast is a measured
-    * decision, not a compile-time hint).
-    *
-    * The trade: the scan is unpruned. The doc log holds about 120 B
-    * per doc (the sf0.1 `documents.parquet`: 594,568 B for 5,000
-    * docs), so a trigger reads ~0.13 MB at a 1,000-doc store and ~60 MB
-    * at a 500k-doc one. The hash-bucketed layout this replaces pruned
-    * to the candidates' buckets, but a trigger's candidates touch most
-    * buckets, and the bucketed appends cost more than the scan saved.
-    */
-  private[graft] def candidateDocTexts(spark: SparkSession,
-      docsPath: String, cands: DataFrame): DataFrame = {
-    val candIds = cands.select(col("d1").as("doc_id"))
-      .union(cands.select(col("d2"))).distinct().localCheckpoint()
-    val store = spark.read.parquet(docsPath)
-      .select(col("doc_id"), col("text"))
-    (if (candIds.count() <= BroadcastRowCap)
-      store.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-    else store.join(candIds, Seq("doc_id"), "left_semi"))
-      .dropDuplicates("doc_id")
   }
 
   /** Streaming k-NN graph maintenance — the streaming twin of the batch
@@ -764,13 +734,15 @@ object EventStreaming {
             .map(n => n.stripPrefix(prefix).toLong -> s"$path/$n")
         else Seq.empty
       }
+      lazy val vectorsExist =
+        subdirs(vPath, "b=").nonEmpty || subdirs(vPath, "c=").nonEmpty
       val pinnedRun = StateScheme.ensure(spark, fs, s"$statePath/scheme",
         s"k=$k,lshBits=$lshBits", runId, "knnMaintenanceLoop",
         "edges built under one (k, lshBits) bucketing are meaningless " +
           "under another — continuing would corrupt the graph",
-        subdirs(vPath, "b=").nonEmpty || subdirs(vPath, "c=").nonEmpty)
+        vectorsExist)
       StateScheme.refuseForeign("knnMaintenanceLoop", batchId, pinnedRun,
-        runId, subdirs(vPath, "b=").nonEmpty || subdirs(vPath, "c=").nonEmpty,
+        runId, vectorsExist,
         s"the vector/edge state at $statePath",
         "its b=0 overwrite would silently replace the owner's first " +
           "batch while stale b=N dirs persist — a mixed-run graph")
@@ -937,15 +909,16 @@ object EventStreaming {
     deliver(vectors, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       val fs = StateScheme.fsFor(spark, statePath)
+      lazy val assignExists =
+        fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/assign"))
       val pinnedRun = StateScheme.ensure(spark, fs, s"$statePath/scheme",
         fp, runId, "clusterAssignLoop",
         "the fingerprint pins the centroid table (cluster ids + exact " +
           "float bits) — mixing two clusterings in one assignment log " +
           "would be a silent wrong answer",
-        fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/assign")))
+        assignExists)
       StateScheme.refuseForeign("clusterAssignLoop", batchId, pinnedRun,
-        runId,
-        fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/assign")),
+        runId, assignExists,
         s"the assignment log at $statePath/assign",
         "its b=0 write would silently overwrite the prior run's first " +
           "batch while stranding its later ones")
@@ -971,8 +944,8 @@ object EventStreaming {
     * Per trigger only the batch's adds are shingled/hashed; candidates
     * come from the batch bands probing the accumulated band store
     * (every candidate has a batch endpoint — old↔old pairs are already
-    * in the chain), and verification reads only the candidate docs'
-    * texts. The chain step is the batch algebra
+    * in the chain), and the verify reads the texts of the candidate
+    * docs only. The chain step is the batch algebra
     * [[graft.operators.DedupOps.chainStep]] (oracle-checked as
     * `llm_dedup_upsert`, `llm_dedup_retract` and
     * `llm_dup_clusters_incremental`), one pass per trigger whatever the
@@ -995,14 +968,17 @@ object EventStreaming {
     *    rows as flat dup-tolerant append logs, each folded by
     *    [[compactDupTolerantLog]] once its file count passes
     *    `compactThreshold`. A trigger reads both logs whole but never
-    *    shuffles them (see [[chainCandidatePairs]] and
-    *    [[candidateDocTexts]]); a replayed batch's double-append and a
-    *    mid-compaction read stay harmless because candidates are
-    *    deduplicated at pair level and texts per doc id.
+    *    shuffles them: the band log streams through the broadcast probe
+    *    ([[chainCandidatePairs]]) and the doc log through the verify's
+    *    broadcast candidate-id semi join. A replayed batch's
+    *    double-append and a mid-compaction read stay harmless: a
+    *    duplicate row only repeats candidate or verified pair rows,
+    *    and the candidates are deduplicated at pair level and the
+    *    chain step publishes `distinct` pairs.
     *  - `dels/` — the tombstone log: deleted doc ids, appended per
-    *    batch, folded the same way. Every band/doc READ
-    *    anti-joins it, so a deleted doc can never generate another
-    *    candidate pair; the rows physically persist until
+    *    batch, folded the same way. The band READ anti-joins it, so a
+    *    deleted doc can never generate another candidate pair (nor
+    *    have its text verified); the rows physically persist until
     *    [[graft.operators.DedupOps.vacuumChainState]] rewrites the
     *    logs offline (the tombstone model every log-structured store
     *    uses — deletion is a read-side filter plus eventual
@@ -1070,9 +1046,16 @@ object EventStreaming {
           "taken-down ones")
       refuseMidVacuum(fs, statePath)
       if (gens().isEmpty)
-        publishGeneration(fs, chainRoot, -1L, Seq(
-          "pairs" -> Seq.empty[(Long, Long)].toDF("d1", "d2"),
-          "labels" -> Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")))
+        labeled(spark, s"upsert[$batchId] bootstrap chain") {
+          publishGeneration(fs, chainRoot, -1L, Seq(
+            "pairs" -> Seq.empty[(Long, Long)].toDF("d1", "d2"),
+            "labels" -> Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")))
+        }
+      // parquet schema inference schedules a job per read, so every
+      // generation read runs inside a labeled phase: the prior one's in
+      // the chain step, the delta's (any branch) under the sink's label
+      def deliverDelta(delta: => DataFrame): Unit =
+        labeled(spark, s"upsert[$batchId] delta sink")(sink(delta, batchId))
       def emptyDelta() = Seq.empty[(Long, Long, String)]
         .toDF("doc_id", "cluster_id", "op")
       def labelDelta(published: DataFrame, prior: DataFrame): DataFrame =
@@ -1095,12 +1078,11 @@ object EventStreaming {
         // pre-publish generation survives, else the sink already saw it
         priorBelow match {
           case Some(p) =>
-            val published =
-              spark.read.parquet(s"$chainRoot/g=$batchId/labels")
-            val pLabels = spark.read.parquet(s"$chainRoot/g=$p/labels")
-            sink(labelDelta(published, pLabels), batchId)
+            deliverDelta(labelDelta(
+              spark.read.parquet(s"$chainRoot/g=$batchId/labels"),
+              spark.read.parquet(s"$chainRoot/g=$p/labels")))
             foldOlderGens()
-          case None => sink(emptyDelta(), batchId)
+          case None => deliverDelta(emptyDelta())
         }
       } else {
       // an unrecognized op must fail the batch, not silently drop the
@@ -1178,16 +1160,17 @@ object EventStreaming {
           else {
             // the tombstone set: O(dels log), small relative to the
             // corpus and measured separately (bench_streaming.json
-            // records how the anti-join scales with dels/ size)
+            // records how the anti-join scales with dels/ size); its
+            // row count, like the band rows below, is observed while
+            // the checkpoint materializes (no job of its own)
             val delsLog = new org.apache.hadoop.fs.Path(s"$statePath/dels")
             val tombs =
               if (!fs.exists(delsLog)) None
               else labeled(spark, s"upsert[$batchId] tombstone set") {
-                Some(spark.read.parquet(delsLog.toString)
-                  .select(col("del_id")).distinct().localCheckpoint())
+                Some(graft.api.GraftPipelines.ckptCounted(
+                  spark.read.parquet(delsLog.toString)
+                    .select(col("del_id")).distinct()))
               }
-            // the band-row count for the counted broadcast, observed
-            // while the checkpoint materializes (no job of its own)
             val bandRows = org.apache.spark.sql.Observation()
             val batchBands = labeled(spark,
                 s"upsert[$batchId] batch bands") {
@@ -1202,43 +1185,35 @@ object EventStreaming {
             labeled(spark, s"upsert[$batchId] append doc log") {
               appendLog(adds, s"$statePath/docs", compactThreshold)
             }
-            // candidates: tombstone-anti-joined probe, so a deleted doc
-            // never generates another candidate — and therefore the
-            // candidate ids (batch adds on one side, tombstone-filtered
-            // store on the other) are already tombstone-clean when the
-            // doc texts are fetched
-            val cands = labeled(spark, s"upsert[$batchId] candidates") {
-              chainCandidatePairs(spark, s"$statePath/bands", batchBands,
-                bandRows.get("n").asInstanceOf[Long], tombs)
-                .localCheckpoint()
+            // candidates from the tombstone-anti-joined probe, so a
+            // deleted doc never generates another candidate; the verify
+            // restricts the whole doc log to their (tombstone-clean) ids
+            labeled(spark, s"upsert[$batchId] verify") {
+              graft.api.GraftPipelines.nearDuplicatesFromCandidates(
+                spark.read.parquet(s"$statePath/docs"),
+                chainCandidatePairs(spark, s"$statePath/bands", batchBands,
+                  bandRows.get("n").asInstanceOf[Long], tombs),
+                minJaccard)
+                .select(col("d1"), col("d2"))
             }
-            val candDocs = labeled(spark, s"upsert[$batchId] cand texts") {
-              candidateDocTexts(spark, s"$statePath/docs", cands)
-                .localCheckpoint()
-            }
-            graft.api.GraftPipelines
-              .nearDuplicatesFromCandidates(candDocs, cands, minJaccard)
-              .select(col("d1"), col("d2"))
           }
         val prior = priorBelow.get // bootstrap guaranteed g=-1
-        val pPairs = spark.read.parquet(s"$chainRoot/g=$prior/pairs")
-        val pLabels = spark.read.parquet(s"$chainRoot/g=$prior/labels")
-        val (nextPairs, nextLabels) =
+        val (pLabels, nextPairs, nextLabels) =
           labeled(spark, s"upsert[$batchId] chain step (CC)") {
-            graft.operators.DedupOps
-              .chainStep(spark, pPairs, pLabels, dels, newPairs)
+            val pLabels = spark.read.parquet(s"$chainRoot/g=$prior/labels")
+            val (pairs, labels) = graft.operators.DedupOps.chainStep(spark,
+              spark.read.parquet(s"$chainRoot/g=$prior/pairs"), pLabels,
+              dels, newPairs)
+            (pLabels, pairs, labels)
           }
         labeled(spark, s"upsert[$batchId] publish") {
           publishGeneration(fs, chainRoot, batchId,
             Seq("pairs" -> nextPairs, "labels" -> nextLabels))
         }
-        val published =
-          spark.read.parquet(s"$chainRoot/g=$batchId/labels")
-        labeled(spark, s"upsert[$batchId] delta sink") {
-          sink(labelDelta(published, pLabels), batchId)
-        }
+        deliverDelta(labelDelta(
+          spark.read.parquet(s"$chainRoot/g=$batchId/labels"), pLabels))
         foldOlderGens()
-      } else sink(emptyDelta(), batchId)
+      } else deliverDelta(emptyDelta())
       }
     }
   }

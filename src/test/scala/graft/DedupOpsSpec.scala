@@ -127,6 +127,23 @@ class DedupOpsSpec extends SparkSpec {
     assertServedEqualsDirect("llm_neardup_served", "llm_neardup_verified")
   }
 
+  test("nearDuplicatesFromCandidates: a doc frame holding every row twice " +
+      "verifies the same distinct pair set as the frame with each row once") {
+    val once = Seq(1L -> base, 2L -> base, 3L -> nearDup, 4L -> distinct,
+      5L -> distinct.replace("spark", "flink")).toDF("doc_id", "text")
+    val cands = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (1L, 5L)).toDF("d1", "d2")
+    def verified(docs: DataFrame): Seq[(Long, Long, Double)] =
+      api.GraftPipelines.nearDuplicatesFromCandidates(docs, cands, 0.7)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
+        .toSeq
+    val single = verified(once)
+    assert(single.map(p => (p._1, p._2)).sorted ==
+        Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L)),
+      s"verified pairs: $single")
+    assert(verified(once.union(once)).distinct.sorted == single.sorted)
+  }
+
   test("llm_ppjoin_served: the persisted-index serve path equals the " +
       "direct join row-for-row") {
     assertServedEqualsDirect("llm_ppjoin_served", "llm_ppjoin")

@@ -2,8 +2,16 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.streaming.EventStreaming
 
@@ -533,7 +541,19 @@ class StreamingSpec extends SparkSpec {
     api.GraftPipelines.corpusGramIndex(
         Seq((100L, "secret eval answer token sequence")).toDF("doc_id", "text"))
       .select("g").write.parquet(evalDir)
-    def run(stateDir: String, threshold: Int): Seq[Seq[Long]] = {
+    // after each trigger, copy each part file not yet copied, so every
+    // state log holds every row twice: no read may depend on unique rows
+    def copyParts(stateDir: String): Unit =
+      Seq("digests", "docs", "bands").foreach { log =>
+        val dir = java.nio.file.Paths.get(stateDir, log)
+        val names = dir.toFile.list().toSet
+        names.filter(n => n.startsWith("part-") && !n.startsWith("part-copy-"))
+          .filterNot(n => names(s"part-copy-$n"))
+          .foreach(n => java.nio.file.Files.copy(dir.resolve(n),
+            dir.resolve(s"part-copy-$n")))
+      }
+    def run(stateDir: String, threshold: Int,
+        copyLogs: Boolean = false): Seq[Seq[Long]] = {
       val mem = MemoryStream[(Long, String)]
       val emitted = scala.collection.mutable.Map[Long, Seq[Long]]()
       val q = EventStreaming.curationIngest(mem.toDF().toDF("doc_id", "text"),
@@ -541,15 +561,22 @@ class StreamingSpec extends SparkSpec {
         val ids = batch.collect().map(_.getAs[Long]("doc_id")).toSeq.sorted
         emitted.synchronized { emitted(bid) = ids }
       }
-      try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-      finally q.stop()
+      try batches.foreach { b =>
+        mem.addData(b)
+        q.processAllAvailable()
+        if (copyLogs) copyParts(stateDir)
+      } finally q.stop()
       emitted.synchronized((0L until 12L).map(emitted))
     }
     def partFiles(dir: String): Int = new java.io.File(dir).listFiles()
       .count(_.getName.startsWith("part-"))
     val folded = run(s"$base/folded", 1)
     val plain = run(s"$base/plain", 64)
+    val doubled = run(s"$base/doubled", 64, copyLogs = true)
     assert(folded == plain, s"folded=$folded plain=$plain")
+    assert(doubled == plain, s"doubled=$doubled plain=$plain")
+    assert(partFiles(s"$base/doubled/docs") ==
+      2 * partFiles(s"$base/plain/docs"), "each doc file has its copy")
     // every echo is dropped: exact dups by the digest log, near-dups by
     // the band and doc logs
     assert(folded == Seq(1L, 2L) +: (1 until 12).map(i => Seq(2L * i + 1)),
@@ -1677,37 +1704,70 @@ class StreamingSpec extends SparkSpec {
       mem.toDF().toDF("op", "doc_id", "text"), stateDir)()
     try { mem.addData(adds(docs: _*): _*); q.processAllAvailable() }
     finally q.stop()
-    // a 2-doc probe batch: doc 100 duplicates doc 1 exactly
-    val batch = Seq((100L, docs.head._2)).toDF("doc_id", "text")
-    val batchBands = graft.api.GraftPipelines.bandIndex(batch)
-      .localCheckpoint()
-    val cands = EventStreaming.chainCandidatePairs(
-      spark, s"$stateDir/bands", batchBands, batchBands.count())
-    val cplan = cands.queryExecution.executedPlan.toString()
-    assert(cplan.contains("BroadcastHashJoin"),
-      s"small batch must broadcast-probe the store:\n${cplan.take(1500)}")
-    // exactly one hash exchange: the candidate-pair distinct — the
-    // round-13 version shuffled the ENTIRE band store here per trigger
-    assert(cplan.sliding("Exchange hashpartitioning".length)
-        .count(_ == "Exchange hashpartitioning") == 1,
-      s"store side must reach the probe join unshuffled:\n${cplan.take(2000)}")
-    val cRows = cands.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cRows.contains((1L, 100L)),
-      s"the exact-dup candidate must surface, got $cRows")
-    val candDocs = EventStreaming.candidateDocTexts(
-      spark, s"$stateDir/docs", cands.localCheckpoint())
-    val dplan = candDocs.queryExecution.executedPlan.toString()
-    assert(dplan.contains("BroadcastHashJoin") &&
-        dplan.contains("LeftSemi"),
-      s"candidate ids must broadcast-semi-prune the doc log:\n${dplan.take(1500)}")
-    assert(dplan.sliding("Exchange hashpartitioning".length)
-        .count(_ == "Exchange hashpartitioning") == 1,
-      s"dedup must run on candidate rows, post-prune:\n${dplan.take(2000)}")
-    // the fetch returns only candidate endpoints present in the store
-    val fetched = candDocs.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(fetched.contains(1L) && !fetched.contains(23L),
-      s"only candidate docs' texts leave the store, got $fetched")
+    // size estimates alone would broadcast any side this small, so
+    // auto-broadcast is off: each broadcast left is the code's own
+    // counted decision
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val autoBroadcast = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    try {
+      // a 1-doc probe batch: doc 100 duplicates doc 1 exactly
+      val batch = Seq((100L, docs.head._2)).toDF("doc_id", "text")
+      val batchBands = graft.api.GraftPipelines.bandIndex(batch)
+        .localCheckpoint()
+      val cands = EventStreaming.chainCandidatePairs(
+        spark, s"$stateDir/bands", batchBands, batchBands.count())
+      val cplan = cands.queryExecution.executedPlan.toString()
+      assert(cplan.contains("BroadcastHashJoin"),
+        s"small batch must broadcast-probe the store:\n${cplan.take(1500)}")
+      // exactly one hash exchange: the candidate-pair distinct — the
+      // round-13 version shuffled the ENTIRE band store here per trigger
+      assert(cplan.sliding("Exchange hashpartitioning".length)
+          .count(_ == "Exchange hashpartitioning") == 1,
+        "store side must reach the probe join unshuffled:\n" +
+          cplan.take(2000))
+      val cRows = cands.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(cRows.contains((1L, 100L)),
+        s"the exact-dup candidate must surface, got $cRows")
+      // the verify restricts the whole doc log (doc 100 appended first,
+      // as the loop does) to the candidate ids; its plans are captured
+      // as the checkpoints inside it report to the listener
+      batch.write.mode("append").parquet(s"$stateDir/docs")
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      // jobDescriptions' closing sentinel drains the listener bus
+      val (_, verified) = try jobDescriptions {
+          api.GraftPipelines.nearDuplicatesFromCandidates(
+              spark.read.parquet(s"$stateDir/docs"), cands, 0.7)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        } finally spark.listenerManager.unregister(listener)
+      assert(verified == Set((1L, 100L)), s"verified pairs: $verified")
+      // the doc-log scan reaches a broadcast LeftSemi with no Exchange
+      // between them: the store is never shuffled to fetch texts
+      def docScanUnshuffled(p: SparkPlan): Boolean = p match {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.getName == "docs")
+        case _: Exchange => false
+        case other => other.children.exists(docScanUnshuffled)
+      }
+      val semis = plans.toArray(Array.empty[SparkPlan]).toSeq
+        .flatMap(p => PlanWalk.collect(p) {
+          case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+        })
+      assert(semis.exists(j =>
+          j.buildSide == BuildRight && docScanUnshuffled(j.left)),
+        s"candidate ids must broadcast-semi-prune the unshuffled doc log:\n" +
+          plans.toArray.mkString("\n").take(3000))
+    } finally autoBroadcast
+      .fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
   }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   test("knnMaintenanceLoop occupancy guard: a dense delta over existing " +
       "8-bit state refuses (the measured rebuild-per-trigger " +
@@ -2007,6 +2067,29 @@ class StreamingSpec extends SparkSpec {
       assert(unionFinds(addOnly) == 1, s"add-only ran: $addOnly")
       assert(unionFinds(mixed) == 1, s"mixed ran: $mixed")
       assert(unionFinds(delOnly) == 1, s"delete-only ran: $delOnly")
+    } finally q.stop()
+  }
+
+  test("upsertLoop labels every job of a mixed trigger with its phase") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, Long, String)]
+    val q = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"),
+      java.nio.file.Files.createTempDirectory("graft_chain_labels")
+        .toString + "/state")()
+    try {
+      mem.addData(adds((1L, tA), (2L, tA), (3L, tB), (4L, tC)): _*)
+      q.processAllAvailable()
+      val (jobs, _) = jobDescriptions {
+        mem.addData(dels(2L, 4L) ++ adds((5L, tA), (6L, tAB)): _*)
+        q.processAllAvailable()
+      }
+      // an unlabeled job carries no description, or the stream's own
+      // per-batch one (it names the run id), never a phase
+      val unlabeled = jobs.filter(d =>
+        d.trim.isEmpty || d.contains(s"runId = ${q.runId}"))
+      assert(jobs.nonEmpty && unlabeled.isEmpty,
+        s"${unlabeled.size} of ${jobs.size} jobs carry no phase label: $jobs")
     } finally q.stop()
   }
 }
