@@ -1,7 +1,6 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -36,45 +35,37 @@ object GraftPipelines {
     try f finally sc.setJobDescription(prev)
   }
 
-  /** Project `df` to exactly `cols` and materialize it — UNLESS it is
-    * already materialized, in which case the projection alone is
-    * returned: a checkpoint ([[Bridge.isMaterializedCheckpoint]]) would
-    * copy every block and schedule a whole job for nothing, and a
-    * local relation (rows held in the plan) would also hide its
-    * emptiness from the optimizer's empty-relation rule — the chain
-    * step ([[graft.operators.DedupOps.chainStep]]) relies on that rule
-    * to drop the joins of a one-sided batch's empty side.
-    */
-  private[graft] def ckptOnce(df: DataFrame, cols: String*): DataFrame = {
-    val sel =
-      if (cols.isEmpty || df.columns.toSeq == cols) df
-      else df.select(cols.map(col): _*)
-    if (Bridge.isMaterializedCheckpoint(df) ||
-        sel.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) sel
-    else sel.localCheckpoint()
-  }
-
   /** Row-count cap for counted broadcasts: a side whose observed row
     * count is at or under it broadcasts, a larger one (a seed-scale
     * bootstrap batch, a dup-heavy candidate set) shuffles.
     */
   private[graft] val BroadcastRowCap = 1L << 20
 
-  /** [[ckptOnce]] plus the frame's row count: observed while the
-    * checkpoint materializes (`Dataset.observe`, no job of its own),
-    * or one `count()` when `df` is already a checkpoint and nothing is
-    * copied.
+  /** `df` hinted to broadcast when its counted `rows` are at or under
+    * [[BroadcastRowCap]]; a larger side is left to the planner.
+    */
+  private[graft] def broadcastCounted(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= BroadcastRowCap) broadcast(df) else df
+
+  /** `df` projected to `cols` (all of them when empty) and
+    * materialized, with its row count observed while the checkpoint
+    * materializes (`Dataset.observe`, no job of its own). A frame that
+    * already IS a checkpoint ([[Bridge.isMaterializedCheckpoint]]) is
+    * only projected and counted: copying every block again would
+    * schedule a whole job for nothing.
     */
   private[graft] def ckptCounted(df: DataFrame,
-      cols: String*): (DataFrame, Long) =
-    if (Bridge.isMaterializedCheckpoint(df)) {
-      val sel = ckptOnce(df, cols: _*)
-      (sel, sel.count())
-    } else {
+      cols: String*): (DataFrame, Long) = {
+    val sel =
+      if (cols.isEmpty || df.columns.toSeq == cols) df
+      else df.select(cols.map(col): _*)
+    if (Bridge.isMaterializedCheckpoint(df)) (sel, sel.count())
+    else {
       val rows = org.apache.spark.sql.Observation()
-      val ckpt = ckptOnce(df.observe(rows, count(lit(1)).as("n")), cols: _*)
+      val ckpt = sel.observe(rows, count(lit(1)).as("n")).localCheckpoint()
       (ckpt, rows.get("n").asInstanceOf[Long])
     }
+  }
 
   // ---------------- dedup ----------------
 
@@ -2267,7 +2258,15 @@ object GraftPipelines {
     */
   def nearDuplicatesFromCandidates(docs: DataFrame,
       candidatePairs: DataFrame, minJaccard: Double,
-      id: String = "doc_id", text: String = "text"): DataFrame = {
+      id: String = "doc_id", text: String = "text"): DataFrame =
+    verifiedPairs(docs, candidatePairs, minJaccard, id, text)._1
+
+  /** [[nearDuplicatesFromCandidates]] plus its row count, observed as
+    * the result materializes.
+    */
+  private[graft] def verifiedPairs(docs: DataFrame,
+      candidatePairs: DataFrame, minJaccard: Double,
+      id: String = "doc_id", text: String = "text"): (DataFrame, Long) = {
     // a checkpoint (eager), not persist+count: checkpointed blocks are
     // ContextCleaner-reclaimable once the plan drops, so a long-running
     // application (a streaming loop, a bench pass) never accumulates
@@ -2278,18 +2277,17 @@ object GraftPipelines {
     // dup-heavy crawl puts a large fraction of all docs in some pair,
     // so they broadcast only on that COUNTED bound (a compile-time
     // broadcast is a driver-OOM cliff at 100×); past the cap the
-    // unhinted join lets AQE decide at runtime.
+    // unhinted join lets AQE decide at runtime. No distinct: a repeated
+    // id on the semi join's build side changes nothing.
     val inPlay = cands.select(col("d1").as(id))
-      .union(cands.select(col("d2"))).distinct()
+      .union(cands.select(col("d2")))
     // Verify via per-pair array intersection (the round-11
     // ppjoinPairsFromIndex rationale): the old explode-join-count form
     // shuffled a Σ|doc|-sized word table twice and paid a pair-key
     // groupBy; two pair-id-keyed joins against the word-ARRAY table
     // move the same bytes once each and compute |∩| per row —
     // array_intersect is exact on the array_distinct'd word sets.
-    val sets = (if (2 * n <= BroadcastRowCap)
-        docs.join(broadcast(inPlay), Seq(id), "left_semi")
-      else docs.join(inPlay, Seq(id), "left_semi"))
+    val sets = docs.join(broadcastCounted(inPlay, 2 * n), Seq(id), "left_semi")
       .select(col(id), array_distinct(split(col(text), " ")).as("wset"))
     val out = cands
       .join(sets.select(col(id).as("d1"), col("wset").as("wa")), "d1")
@@ -2305,7 +2303,7 @@ object GraftPipelines {
     // Materialize the (candidate-bounded, post-filter) result eagerly —
     // callers consume pairs on several paths (cluster chain, anti-join,
     // matrices) and must not re-run the verify per path.
-    out.localCheckpoint()
+    ckptCounted(out)
   }
 
   // ===== Fuzzy entity resolution (round 8) =====

@@ -96,51 +96,56 @@ object DedupOps {
     *    Docs left edge-less drop out, matching the rebuild contract
     *    (only docs in a surviving verified pair are clustered).
     *
+    * Each side comes materialized, with the row count its caller
+    * observed: the deletes, the docs they and the new pairs touch, and
+    * the touched clusters' members broadcast at or under the cap
+    * ([[graft.api.GraftPipelines.broadcastCounted]]), so a batch-sized
+    * step never shuffles the pair set or the label map; a data-scaled
+    * side (a takedown can name millions of docs) stays unhinted.
+    *
     * `newPairs` must be verified against the POST-delete corpus: no
     * new pair may touch a deleted doc (the caller cuts candidates
     * against the delete set; at the stream layer the tombstone
-    * anti-join does it).
+    * anti-join does it). `pairs` must be duplicate-free, as every pair
+    * set this step publishes is: the kept pairs are a subset, and each
+    * new pair has a batch endpoint the prior chain cannot hold, so
+    * only the new pairs are deduplicated (a replayed doc-log append
+    * can repeat them).
     */
   private[graft] def chainStep(s: SparkSession, pairs: DataFrame,
-      labels0: DataFrame, del: DataFrame,
-      newPairs0: DataFrame): (DataFrame, DataFrame) = {
+      labels: DataFrame, del: (DataFrame, Long),
+      newPairs: (DataFrame, Long)): (DataFrame, DataFrame) = {
     val P = graft.api.GraftPipelines
-    // labels feed three consumers (affected semi-join, untouched
-    // anti-join, edge relabel join) and the new pairs three (touched
-    // docs, CC input, published pairs) — each materialized once, and
-    // not again when the caller already did (ckptOnce)
-    val labels = P.labeled(s, "chainStep: labels ckpt")(P.ckptOnce(labels0))
-    val newPairs = P.labeled(s, "chainStep: new pairs ckpt") {
-      P.ckptOnce(newPairs0, "d1", "d2")
-    }
-    val d = del.select(col("del_id"))
-    // the delete list is data-scaled (a provenance takedown can name
-    // millions of docs) — no broadcast hint on any join against it;
-    // AQE may still broadcast when the runtime size is actually small
+    val d = del._1.select(col("del_id"))
+    val np = newPairs._1.select(col("d1"), col("d2"))
+    val bd = P.broadcastCounted(d, del._2)
     val kept = pairs.select(col("d1"), col("d2"))
-      .join(d, col("d1") === col("del_id"), "left_anti")
-      .join(d, col("d2") === col("del_id"), "left_anti")
+      .join(bd, col("d1") === col("del_id"), "left_anti")
+      .join(bd, col("d2") === col("del_id"), "left_anti")
     // batch-only endpoints have no prior label and touch no cluster
     // here — their pairs still reach CC below
-    val touched = d.select(col("del_id").as("doc_id"))
-      .union(newPairs.select(col("d1").as("doc_id")))
-      .union(newPairs.select(col("d2").as("doc_id")))
-    // feeds the CC input and the pass-through complement
-    val affected = P.labeled(s, "chainStep: affected ckpt") {
-      labels.join(touched, Seq("doc_id"), "left_semi")
-        .select(col("cluster_id")).distinct().localCheckpoint()
+    val touchedRows = del._2 + 2 * newPairs._2
+    val touched = P.broadcastCounted(d.select(col("del_id").as("doc_id"))
+      .union(np.select(col("d1").as("doc_id")))
+      .union(np.select(col("d2").as("doc_id"))), touchedRows)
+    val affected = labels.join(touched, Seq("doc_id"), "left_semi")
+      .select(col("cluster_id"))
+    // the touched clusters' members feed the CC input and the
+    // pass-through complement; the label map is a file the caller
+    // read, so both re-scan it rather than copy it first
+    val (members, memberRows) = P.labeled(s, "chainStep: affected ckpt") {
+      P.ckptCounted(labels.join(P.broadcastCounted(affected, touchedRows),
+        Seq("cluster_id"), "left_semi"), "doc_id")
     }
-    val untouched = labels.join(affected, Seq("cluster_id"), "left_anti")
-      .select(col("doc_id"), col("cluster_id"))
+    val bm = P.broadcastCounted(members, memberRows)
+    val untouched = labels.select(col("doc_id"), col("cluster_id"))
+      .join(bm, Seq("doc_id"), "left_anti")
     // both endpoints of a surviving pair shared one old component, so
-    // labeling d1 alone routes the edge to the right partition of work
-    val affectedEdges = kept
-      .join(labels.select(col("doc_id").as("d1"), col("cluster_id")),
-        Seq("d1"))
-      .join(affected, Seq("cluster_id"), "left_semi")
-      .select(col("d1"), col("d2"))
-    (kept.union(newPairs).distinct(),
-      untouched.union(P.dupClusters(affectedEdges.union(newPairs))))
+    // d1 alone places the edge
+    val affectedEdges =
+      kept.join(bm.withColumnRenamed("doc_id", "d1"), Seq("d1"), "left_semi")
+    (kept.union(np.distinct()),
+      untouched.union(P.dupClusters(affectedEdges.union(np))))
   }
 
   /** OFFLINE vacuum for the streaming chain loop's tombstone model
@@ -1110,10 +1115,10 @@ object DedupOps {
     "llm_dedup_retract" -> ((s, dir) => {
       import s.implicits._
       val (pairs, labels) = dupChainServed(s, dir)
-      val del = Tables.documents(s, dir)
-        .filter($"doc_id" % 10 === 7).select($"doc_id".as("del_id"))
+      val del = graft.api.GraftPipelines.ckptCounted(Tables.documents(s, dir)
+        .filter($"doc_id" % 10 === 7).select($"doc_id".as("del_id")))
       dupClustersEntry(s, chainStep(s, pairs, labels, del,
-        Seq.empty[(Long, Long)].toDF("d1", "d2"))._2)
+        (Seq.empty[(Long, Long)].toDF("d1", "d2"), 0L))._2)
     }),
 
     // Ingest maintenance of the dup-cluster map — the ADDITION dual of
@@ -1142,12 +1147,12 @@ object DedupOps {
         }
         Tables.read(s, s"$idx/bands.parquet")
       }
-      val newPairs = graft.api.GraftPipelines.nearDuplicatesFromCandidates(
+      val newPairs = graft.api.GraftPipelines.verifiedPairs(
         Tables.documents(s, dir),
         graft.api.GraftPipelines.bandCandidatesFromBatch(bands, split),
         0.7)
       dupClustersEntry(s, chainStep(s, basePairs, baseLabels,
-        Seq.empty[Long].toDF("del_id"), newPairs)._2)
+        (Seq.empty[Long].toDF("del_id"), 0L), newPairs)._2)
     }),
 
     // Combined UPSERT maintenance — one cycle of the real recurring
@@ -1165,9 +1170,9 @@ object DedupOps {
       import s.implicits._
       val split = ingestSplitId(s, dir)
       val (basePairs, baseLabels) = dupChainBaseServed(s, dir)
-      val del = Tables.documents(s, dir)
+      val del = graft.api.GraftPipelines.ckptCounted(Tables.documents(s, dir)
         .filter($"doc_id" < split && $"doc_id" % 10 === 7)
-        .select($"doc_id".as("del_id"))
+        .select($"doc_id".as("del_id")))
       val bands = {
         val idx = GraftIO.buildFixture(dir, "documents.parquet",
             "band", "n=3,seeds=8,bands=4") { tmp =>
@@ -1176,7 +1181,7 @@ object DedupOps {
         }
         Tables.read(s, s"$idx/bands.parquet")
       }
-      val newPairs = graft.api.GraftPipelines.nearDuplicatesFromCandidates(
+      val newPairs = graft.api.GraftPipelines.verifiedPairs(
         Tables.documents(s, dir),
         graft.api.GraftPipelines.bandCandidatesFromBatch(bands, split)
           .filter(!($"d1" < split && $"d1" % 10 === 7)), 0.7)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
-import graft.api.GraftPipelines.{BroadcastRowCap, labeled}
+import graft.api.GraftPipelines.{BroadcastRowCap, broadcastCounted,
+  ckptCounted, labeled}
 import graft.sources.GraftIO
 
 /** Structured Streaming layer (SURVEY.md §2.9).
@@ -603,46 +604,43 @@ object EventStreaming {
             "recover before resuming the loop")
     }
 
+  /** The schemas [[upsertLoop]] writes its logs and generations in,
+    * keyed by directory name: every read of that state declares its
+    * schema, so none schedules a parquet schema-inference job.
+    */
+  private val chainStateSchemas = Map("bands" -> "doc_id long, b string",
+    "docs" -> "doc_id long, text string", "dels" -> "del_id long",
+    "pairs" -> "d1 long, d2 long", "labels" -> "doc_id long, cluster_id long")
+
+  private def readChainState(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(chainStateSchemas(path.split('/').last)).parquet(path)
+
   /** Per-trigger candidate generation for the chain loop
     * ([[upsertLoop]]): batch bands PROBE the flat band log and the
     * result is normalized to `d1 < d2` candidate pairs. The store is
-    * read whole (hash-bucket pruning would skip little: a 50-doc
-    * batch's 200 band rows land in about 61 of 64 buckets), but it
-    * never shuffles:
-    *
-    *  - the store side is NEVER deduplicated before the join — the old
-    *    `distinct()` was a full-store shuffle every trigger (the
-    *    round-13 scale ceiling); a duplicate band row can only produce
-    *    a duplicate candidate pair, and the pair-level `distinct()`
-    *    below removes those at candidate cost;
-    *  - when the batch is small (a COUNTED decision: `batchRows`, the
-    *    batch-band row count the caller observed while checkpointing,
-    *    against [[BroadcastRowCap]]) the probe side broadcasts, so
-    *    the store side streams through the join with NO shuffle at
-    *    all; a seed-scale batch (bootstrap streams the initial corpus
-    *    through this same code path) falls back to a two-sided
-    *    shuffle-hash join, which is the correct rebuild-shaped plan —
-    *    compile-time broadcast of an unbounded side is the driver-OOM
-    *    cliff [[graft.api.GraftPipelines.nearDuplicatesFromCandidates]]
-    *    documents;
-    *  - `tombs` (upsert's tombstone ids with the row count observed
-    *    as they were checkpointed, anti-joined so a deleted doc never
-    *    generates another candidate) follows the same counted
-    *    broadcast rule.
-    *
-    * The pairs go straight to the verify
+    * read whole (a 50-doc batch's 200 band rows land in about 61 of 64
+    * hash buckets, so pruning would skip little) but never shuffled or
+    * deduplicated: a duplicate band row only repeats a candidate pair,
+    * which the pair-level `distinct()` removes at candidate cost. The
+    * batch side broadcasts on its COUNTED row count (`batchRows`,
+    * observed as the caller checkpointed it) at or under
+    * [[BroadcastRowCap]]; a seed-scale batch (bootstrap streams the
+    * initial corpus through this path) falls back to a two-sided
+    * shuffle-hash join, the rebuild-shaped plan — a compile-time
+    * broadcast of an unbounded side is the driver-OOM cliff. `tombs`
+    * (the tombstone ids with their observed count, anti-joined so a
+    * deleted doc never generates another candidate) follows the same
+    * counted rule. The pairs go straight to the verify
     * ([[graft.api.GraftPipelines.nearDuplicatesFromCandidates]]),
     * which checkpoints them and restricts the doc log to their ids.
     */
   private[graft] def chainCandidatePairs(spark: SparkSession,
       bandsPath: String, batchBands: DataFrame, batchRows: Long,
       tombs: Option[(DataFrame, Long)] = None): DataFrame = {
-    val store0 = spark.read.parquet(bandsPath).select(col("doc_id"), col("b"))
+    val store0 = readChainState(spark, bandsPath)
     val store = tombs.fold(store0) { case (t, tombRows) =>
-      if (tombRows <= BroadcastRowCap)
-        store0.join(broadcast(t), col("doc_id") === col("del_id"),
-          "left_anti")
-      else store0.join(t, col("doc_id") === col("del_id"), "left_anti")
+      store0.join(broadcastCounted(t, tombRows),
+        col("doc_id") === col("del_id"), "left_anti")
     }
     val bb = batchBands.select(col("doc_id").as("bid"), col("b"))
     val joined =
@@ -974,7 +972,7 @@ object EventStreaming {
     *    double-append and a mid-compaction read stay harmless: a
     *    duplicate row only repeats candidate or verified pair rows,
     *    and the candidates are deduplicated at pair level and the
-    *    chain step publishes `distinct` pairs.
+    *    chain step deduplicates the new pairs.
     *  - `dels/` — the tombstone log: deleted doc ids, appended per
     *    batch, folded the same way. The band READ anti-joins it, so a
     *    deleted doc can never generate another candidate pair (nor
@@ -1051,9 +1049,6 @@ object EventStreaming {
             "pairs" -> Seq.empty[(Long, Long)].toDF("d1", "d2"),
             "labels" -> Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")))
         }
-      // parquet schema inference schedules a job per read, so every
-      // generation read runs inside a labeled phase: the prior one's in
-      // the chain step, the delta's (any branch) under the sink's label
       def deliverDelta(delta: => DataFrame): Unit =
         labeled(spark, s"upsert[$batchId] delta sink")(sink(delta, batchId))
       def emptyDelta() = Seq.empty[(Long, Long, String)]
@@ -1079,8 +1074,8 @@ object EventStreaming {
         priorBelow match {
           case Some(p) =>
             deliverDelta(labelDelta(
-              spark.read.parquet(s"$chainRoot/g=$batchId/labels"),
-              spark.read.parquet(s"$chainRoot/g=$p/labels")))
+              readChainState(spark, s"$chainRoot/g=$batchId/labels"),
+              readChainState(spark, s"$chainRoot/g=$p/labels")))
             foldOlderGens()
           case None => deliverDelta(emptyDelta())
         }
@@ -1132,16 +1127,23 @@ object EventStreaming {
       // must fail HERE rather than rely on apply order: tombstones
       // land before candidate generation (the delete would win on the
       // corpus side) while the unfiltered batch-band probe side could
-      // still pair the doc — a tombstoned doc stuck in the label map
+      // still pair the doc — a tombstoned doc stuck in the label map.
+      // A counted batch under the cap is intersected on the driver
+      // from one collect of its ids; a larger one semi-joins.
       if (!addsEmpty && !delsEmpty) {
         val addDel = labeled(spark, s"upsert[$batchId] add+del guard") {
-          adds.select(col("doc_id"))
+          if (counted("rows") <= BroadcastRowCap) {
+            val (a, d) = b.filter(col("doc_id").isNotNull)
+              .select(col("op") === "add", col("doc_id")).collect()
+              .map(r => (r.getBoolean(0), r.getLong(1))).partition(_._1)
+            a.map(_._2).intersect(d.map(_._2)).distinct.take(5)
+          } else adds.select(col("doc_id"))
             .join(dels, col("doc_id") === col("del_id"), "left_semi")
-            .limit(5).collect()
+            .limit(5).collect().map(_.getLong(0))
         }
         require(addDel.isEmpty,
           s"upsertLoop batch $batchId: doc id(s) " +
-            s"${addDel.map(_.getLong(0)).mkString(", ")} appear as BOTH " +
+            s"${addDel.mkString(", ")} appear as BOTH " +
             "add and del in one batch — the contract forbids it (split " +
             "the ops across batches: del then add re-uses a tombstoned " +
             "id, which is also forbidden)")
@@ -1156,20 +1158,17 @@ object EventStreaming {
         }
         val newPairs =
           if (addsEmpty)
-            Seq.empty[(Long, Long)].toDF("d1", "d2")
+            (Seq.empty[(Long, Long)].toDF("d1", "d2"), 0L)
           else {
-            // the tombstone set: O(dels log), small relative to the
-            // corpus and measured separately (bench_streaming.json
-            // records how the anti-join scales with dels/ size); its
-            // row count, like the band rows below, is observed while
-            // the checkpoint materializes (no job of its own)
-            val delsLog = new org.apache.hadoop.fs.Path(s"$statePath/dels")
+            // the tombstone set: the whole dels/ log in one checkpoint,
+            // its count observed as it materializes; no distinct, as its
+            // one reader (the probe's counted-broadcast anti-join)
+            // ignores a repeated id
+            val delsLog = s"$statePath/dels"
             val tombs =
-              if (!fs.exists(delsLog)) None
+              if (!fs.exists(new org.apache.hadoop.fs.Path(delsLog))) None
               else labeled(spark, s"upsert[$batchId] tombstone set") {
-                Some(graft.api.GraftPipelines.ckptCounted(
-                  spark.read.parquet(delsLog.toString)
-                    .select(col("del_id")).distinct()))
+                Some(ckptCounted(readChainState(spark, delsLog)))
               }
             val bandRows = org.apache.spark.sql.Observation()
             val batchBands = labeled(spark,
@@ -1189,29 +1188,27 @@ object EventStreaming {
             // deleted doc never generates another candidate; the verify
             // restricts the whole doc log to their (tombstone-clean) ids
             labeled(spark, s"upsert[$batchId] verify") {
-              graft.api.GraftPipelines.nearDuplicatesFromCandidates(
-                spark.read.parquet(s"$statePath/docs"),
+              graft.api.GraftPipelines.verifiedPairs(
+                readChainState(spark, s"$statePath/docs"),
                 chainCandidatePairs(spark, s"$statePath/bands", batchBands,
                   bandRows.get("n").asInstanceOf[Long], tombs),
                 minJaccard)
-                .select(col("d1"), col("d2"))
             }
           }
         val prior = priorBelow.get // bootstrap guaranteed g=-1
-        val (pLabels, nextPairs, nextLabels) =
+        val pLabels = readChainState(spark, s"$chainRoot/g=$prior/labels")
+        val (nextPairs, nextLabels) =
           labeled(spark, s"upsert[$batchId] chain step (CC)") {
-            val pLabels = spark.read.parquet(s"$chainRoot/g=$prior/labels")
-            val (pairs, labels) = graft.operators.DedupOps.chainStep(spark,
-              spark.read.parquet(s"$chainRoot/g=$prior/pairs"), pLabels,
-              dels, newPairs)
-            (pLabels, pairs, labels)
+            graft.operators.DedupOps.chainStep(spark,
+              readChainState(spark, s"$chainRoot/g=$prior/pairs"), pLabels,
+              (dels, counted("dels")), newPairs)
           }
         labeled(spark, s"upsert[$batchId] publish") {
           publishGeneration(fs, chainRoot, batchId,
             Seq("pairs" -> nextPairs, "labels" -> nextLabels))
         }
         deliverDelta(labelDelta(
-          spark.read.parquet(s"$chainRoot/g=$batchId/labels"), pLabels))
+          readChainState(spark, s"$chainRoot/g=$batchId/labels"), pLabels))
         foldOlderGens()
       } else deliverDelta(emptyDelta())
       }

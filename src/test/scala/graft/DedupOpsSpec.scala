@@ -647,7 +647,7 @@ class DedupOpsSpec extends SparkSpec {
     val del = Seq(3L).toDF("del_id")
     val noNewPairs = Seq.empty[(Long, Long)].toDF("d1", "d2")
     val out = graft.operators.DedupOps
-      .chainStep(spark, pairs, labels, del, noNewPairs)._2
+      .chainStep(spark, pairs, labels, (del, 1L), (noNewPairs, 0L))._2
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // the deleted bridge is gone; its component split at the min of
     // each surviving half; the untouched pair kept its old label
@@ -671,7 +671,8 @@ class DedupOpsSpec extends SparkSpec {
     val newPairs = Seq((2L, 9L), (4L, 9L), (20L, 21L)).toDF("d1", "d2")
     val noDels = Seq.empty[Long].toDF("del_id")
     val out = graft.operators.DedupOps
-      .chainStep(spark, basePairs, baseLabels, noDels, newPairs)._2
+      .chainStep(spark, basePairs, baseLabels, (noDels, 0L),
+        (newPairs, 3L))._2
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 5L -> 1L, 9L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
@@ -688,7 +689,7 @@ class DedupOpsSpec extends SparkSpec {
     val del = Seq(3L).toDF("del_id")
     val noNewPairs = Seq.empty[(Long, Long)].toDF("d1", "d2")
     val out = graft.operators.DedupOps
-      .chainStep(spark, pairs, labels, del, noNewPairs)._2
+      .chainStep(spark, pairs, labels, (del, 1L), (noNewPairs, 0L))._2
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L))
   }

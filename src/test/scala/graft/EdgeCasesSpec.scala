@@ -217,18 +217,18 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Bridge.unpersistCheckpointBlocks(ck2, blocking = true) == 1)
     assert(!Bridge.isMaterializedCheckpoint(ck2),
       "freed blocks leave nothing materialized")
-    // ckptOnce asks the same question: an RDD-backed frame that is NOT
-    // stored (createDataFrame over an RDD; the batch foreachBatch hands
-    // a loop is one too) has a LogicalRDD plan like a checkpoint, but
-    // each consumer would recompute it — it must be materialized once
-    val evals = spark.sparkContext.longAccumulator("ckptOnce evals")
+    // ckptCounted asks the same question: an RDD-backed frame that is
+    // NOT stored (createDataFrame over an RDD; the batch foreachBatch
+    // hands a loop is one too) has a LogicalRDD plan like a checkpoint,
+    // but each consumer would recompute it — it must be materialized once
+    val evals = spark.sparkContext.longAccumulator("ckptCounted evals")
     val rows = spark.sparkContext.parallelize(1 to 4, 2)
       .map { i => evals.add(1); org.apache.spark.sql.Row(i) }
     val rddBacked = spark.createDataFrame(rows,
       new org.apache.spark.sql.types.StructType().add("x", "int"))
     assert(!Bridge.isMaterializedCheckpoint(rddBacked))
-    val once = api.GraftPipelines.ckptOnce(rddBacked)
-    assert(once.count() == 4L && once.collect().length == 4)
+    val (once, n) = api.GraftPipelines.ckptCounted(rddBacked)
+    assert(n == 4L && once.count() == 4L && once.collect().length == 4)
     assert(evals.value == 4L,
       s"two consumers must share one evaluation, saw ${evals.value / 4} " +
         s"(${evals.value} row evaluations)")

@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -1694,23 +1696,68 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // doc 1 uses its own vocabulary; 2..40 share a disjoint one, so
     // the probe (an exact copy of doc 1) can only band-match doc 1
+    def shipDoc(i: Long) =
+      (i, s"ship harbor tide crane dock gull pier rope w$i t${i % 7}")
     val docs = (1L, "alpha beta gamma delta epsilon zeta eta theta " +
-      "iota kappa") +: (2L to 40L).map(i =>
-      (i, s"ship harbor tide crane dock gull pier rope w$i t${i % 7}"))
+      "iota kappa") +: (2L to 40L).map(shipDoc)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_pruned").toString + "/state"
-    val mem = MemoryStream[(String, Long, String)]
-    val q = EventStreaming.upsertLoop(
-      mem.toDF().toDF("op", "doc_id", "text"), stateDir)()
-    try { mem.addData(adds(docs: _*): _*); q.processAllAvailable() }
-    finally q.stop()
     // size estimates alone would broadcast any side this small, so
     // auto-broadcast is off: each broadcast left is the code's own
-    // counted decision
+    // counted decision. The stream runs in a session cloned at start,
+    // so the setting and the plan listener precede the query
     val threshold = "spark.sql.autoBroadcastJoinThreshold"
     val autoBroadcast = spark.conf.getOption(threshold)
     spark.conf.set(threshold, "-1")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // jobDescriptions' closing sentinel drains the listener bus
+    def planned[T](body: => T): (Seq[SparkPlan], T) = {
+      plans.clear()
+      val (_, out) = jobDescriptions(body)
+      (plans.toArray(Array.empty[SparkPlan]).toSeq, out)
+    }
     try {
+      val mem = MemoryStream[(String, Long, String)]
+      val q = EventStreaming.upsertLoop(
+        mem.toDF().toDF("op", "doc_id", "text"), stateDir)()
+      val (mixed, _) = try {
+        mem.addData(adds(docs: _*): _*); q.processAllAvailable()
+        // a mixed trigger under the cap: a clustered doc leaves, a new
+        // one joins another cluster
+        planned {
+          mem.addData(dels(3L) ++ adds(shipDoc(41L)): _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      // no shuffle sits directly over a scan of the tombstone log or
+      // the prior label map, and no exchange at all over the prior pair
+      // set: each streams through broadcast joins (the label map's one
+      // broadcast carries only the touched clusters' ids)
+      def scans(dir: String)(p: SparkPlan): Boolean = p match {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.getName == dir)
+        case _: Exchange | _: QueryStageExec => false
+        case other => other.children.exists(scans(dir))
+      }
+      val exchanges = mixed.flatMap(p => PlanWalk.collect(p) {
+        case e: Exchange => e
+      })
+      val shuffles = exchanges.filter(_.isInstanceOf[ShuffleExchangeExec])
+      Seq("dels" -> shuffles, "labels" -> shuffles, "pairs" -> exchanges)
+        .foreach { case (dir, banned) =>
+          assert(mixed.exists(p => PlanWalk.collect(p) {
+              case s: FileSourceScanExec => s }.exists(scans(dir))),
+            s"the mixed trigger never scanned $dir/")
+          val over = banned.filter(e => scans(dir)(e.child))
+          assert(over.isEmpty, s"exchange over the $dir/ scan:\n" +
+            over.mkString("\n").take(3000))
+        }
       // a 1-doc probe batch: doc 100 duplicates doc 1 exactly
       val batch = Seq((100L, docs.head._2)).toDF("doc_id", "text")
       val batchBands = graft.api.GraftPipelines.bandIndex(batch)
@@ -1733,19 +1780,11 @@ class StreamingSpec extends SparkSpec {
       // as the loop does) to the candidate ids; its plans are captured
       // as the checkpoints inside it report to the listener
       batch.write.mode("append").parquet(s"$stateDir/docs")
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-      val listener = new QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          plans.add(qe.executedPlan)
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      val (verifyPlans, verified) = planned {
+        api.GraftPipelines.nearDuplicatesFromCandidates(
+            spark.read.parquet(s"$stateDir/docs"), cands, 0.7)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       }
-      spark.listenerManager.register(listener)
-      // jobDescriptions' closing sentinel drains the listener bus
-      val (_, verified) = try jobDescriptions {
-          api.GraftPipelines.nearDuplicatesFromCandidates(
-              spark.read.parquet(s"$stateDir/docs"), cands, 0.7)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        } finally spark.listenerManager.unregister(listener)
       assert(verified == Set((1L, 100L)), s"verified pairs: $verified")
       // the doc-log scan reaches a broadcast LeftSemi with no Exchange
       // between them: the store is never shuffled to fetch texts
@@ -1755,16 +1794,18 @@ class StreamingSpec extends SparkSpec {
         case _: Exchange => false
         case other => other.children.exists(docScanUnshuffled)
       }
-      val semis = plans.toArray(Array.empty[SparkPlan]).toSeq
-        .flatMap(p => PlanWalk.collect(p) {
+      val semis = verifyPlans.flatMap(p => PlanWalk.collect(p) {
           case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
         })
       assert(semis.exists(j =>
           j.buildSide == BuildRight && docScanUnshuffled(j.left)),
         s"candidate ids must broadcast-semi-prune the unshuffled doc log:\n" +
-          plans.toArray.mkString("\n").take(3000))
-    } finally autoBroadcast
-      .fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+          verifyPlans.mkString("\n").take(3000))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      autoBroadcast
+        .fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    }
   }
 
   private object PlanWalk extends AdaptiveSparkPlanHelper
@@ -2090,6 +2131,37 @@ class StreamingSpec extends SparkSpec {
         d.trim.isEmpty || d.contains(s"runId = ${q.runId}"))
       assert(jobs.nonEmpty && unlabeled.isEmpty,
         s"${unlabeled.size} of ${jobs.size} jobs carry no phase label: $jobs")
+    } finally q.stop()
+  }
+
+  test("upsertLoop mixed trigger job budget: no job re-infers a fixed " +
+      "state schema, the tombstone set and the add+del guard take one " +
+      "job each, and the trigger stays within 30 jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, Long, String)]
+    val q = EventStreaming.upsertLoop(
+      mem.toDF().toDF("op", "doc_id", "text"),
+      java.nio.file.Files.createTempDirectory("graft_chain_budget")
+        .toString + "/state")()
+    try {
+      mem.addData(adds((1L, tA), (2L, tA), (3L, tB), (4L, tC)): _*)
+      q.processAllAvailable()
+      val (jobs, _) = jobDescriptions {
+        mem.addData(dels(2L, 4L) ++ adds((5L, tA), (6L, tAB)): _*)
+        q.processAllAvailable()
+      }
+      val perPhase = jobs.groupBy(_.replaceFirst("""^upsert\[\d+\] """, ""))
+        .map { case (phase, js) => phase -> js.size }
+      val ledger = perPhase.toSeq.sortBy(-_._2).mkString(", ")
+      info(s"${jobs.size} jobs: $ledger")
+      def phase(p: String) = perPhase.getOrElse(p, 0)
+      assert(phase("tombstone set") <= 1, ledger)
+      assert(phase("add+del guard") <= 1, ledger)
+      // a no-op sink reads nothing: the delta sink and the chain step
+      // read state only through declared schemas, which run no job
+      assert(phase("chain step (CC)") == 0, ledger)
+      assert(phase("delta sink") == 0, ledger)
+      assert(jobs.size <= 30, s"${jobs.size} jobs: $ledger")
     } finally q.stop()
   }
 }

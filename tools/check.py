@@ -10,6 +10,9 @@ Usage: python3 tools/check.py [sfDir] [outDir] [--skip-verify] [names...]
    (small float epsilon reported separately so parity bugs are visible).
 """
 import json, math, subprocess, sys, os
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]  # the checkout this script is in
 
 SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith('-') else '/root/testdata/sf0.01'
 OUT = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith('-') else '/tmp/verify_out'
@@ -25,9 +28,9 @@ ADD_OPENS = [f"--add-opens={p}=ALL-UNNAMED" for p in (
     "java.base/sun.util.calendar").split()]
 
 def run_verify():
-    subprocess.run(["sbt", "-batch", "package"], check=True, cwd="/root/repo",
+    subprocess.run(["sbt", "-batch", "package"], check=True, cwd=ROOT,
                    stdout=subprocess.DEVNULL)
-    jar = "/root/repo/target/scala-2.13/etllensspark_2.13-0.1.0.jar"
+    jar = str(ROOT / "target/scala-2.13/etllensspark_2.13-0.1.0.jar")
     cp = "/opt/spark/jars/*:" + jar
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
     extra = [",".join(ONLY)] if ONLY else []
