@@ -50,20 +50,22 @@ object GraftPipelines {
   /** `df` projected to `cols` (all of them when empty) and
     * materialized, with its row count observed while the checkpoint
     * materializes (`Dataset.observe`, no job of its own). A frame that
-    * already IS a checkpoint ([[Bridge.isMaterializedCheckpoint]]) is
-    * only projected and counted: copying every block again would
-    * schedule a whole job for nothing.
+    * already IS a checkpoint ([[Bridge.checkpointRdd]]) is only
+    * projected, and counted off its stored RDD in one single-stage job:
+    * copying every block again would schedule a whole job for nothing,
+    * and `Dataset.count()` would take two.
     */
   private[graft] def ckptCounted(df: DataFrame,
       cols: String*): (DataFrame, Long) = {
     val sel =
       if (cols.isEmpty || df.columns.toSeq == cols) df
       else df.select(cols.map(col): _*)
-    if (Bridge.isMaterializedCheckpoint(df)) (sel, sel.count())
-    else {
-      val rows = org.apache.spark.sql.Observation()
-      val ckpt = sel.observe(rows, count(lit(1)).as("n")).localCheckpoint()
-      (ckpt, rows.get("n").asInstanceOf[Long])
+    Bridge.checkpointRdd(df) match {
+      case Some(stored) => (sel, stored.count())
+      case None =>
+        val rows = org.apache.spark.sql.Observation()
+        val ckpt = sel.observe(rows, count(lit(1)).as("n")).localCheckpoint()
+        (ckpt, rows.get("n").asInstanceOf[Long])
     }
   }
 
@@ -169,28 +171,37 @@ object GraftPipelines {
       .distinct()
   }
 
-  /** [[bandCandidates]] restricted to pairs with at least one endpoint
-    * in the ingest batch (ids >= `splitId`) — the maintained-path
-    * form: the self-join's probe side is the BATCH's bands only, so
-    * candidate generation costs O(batch-band collisions) instead of
-    * the full corpus all-pairs join the rebuild pays (filtering
-    * bandCandidates' output to d2 >= split gives the same ROWS but
-    * after paying the full join — measured at sf1, that wiped out the
-    * incremental win: maintained 3.59 s vs rebuild 3.97 s). Output is
-    * exactly `bandCandidates(bands).filter(d2 >= splitId)` when batch
-    * ids are the corpus's largest: under d1 < d2 normalization a pair
-    * has a batch endpoint iff d2 >= splitId.
+  /** The one batch×store band probe of every near-dup ingest path:
+    * materialized batch band rows (`doc_id, b`, `batchRows` counted)
+    * against a band store of that shape, as raw `(bid, doc_id)`
+    * matches, never a doc with itself; each caller shapes them.
+    * `exclude` (counted ids) cuts store rows first: tombstones, or a
+    * batch's own ids. The one plan choice is [[BroadcastRowCap]]: a
+    * side under it broadcasts, so the store streams through
+    * unshuffled (a repeated row only repeats a match); a larger batch
+    * shuffle-hashes both sides, where a store bucketed on `b` reads in
+    * place — a compile-time broadcast of an unbounded side is the
+    * driver-OOM cliff.
     */
-  def bandCandidatesFromBatch(bandTable: DataFrame, splitId: Long,
-      id: String = "doc_id"): DataFrame = {
-    val bb = bandTable.filter(col(id) >= splitId)
-      .select(col(id).as("bid"), col("b")).hint("shuffle_hash")
-    bb.join(bandTable.hint("shuffle_hash"), "b")
-      .filter(col("bid") =!= col(id))
-      .select(least(col("bid"), col(id)).as("d1"),
-        greatest(col("bid"), col(id)).as("d2"))
-      .distinct()
+  private[graft] def bandProbe(store: DataFrame, batchBands: DataFrame,
+      batchRows: Long,
+      exclude: Option[(DataFrame, Long)] = None): DataFrame = {
+    val live = exclude.fold(store) { case (ids, rows) =>
+      store.join(broadcastCounted(ids.toDF("ex_id"), rows),
+        col("doc_id") === col("ex_id"), "left_anti")
+    }
+    val bb = batchBands.select(col("doc_id").as("bid"), col("b"))
+    val joined =
+      if (batchRows <= BroadcastRowCap) live.join(broadcast(bb), "b")
+      else bb.hint("shuffle_hash").join(live.hint("shuffle_hash"), "b")
+    joined.filter(col("bid") =!= col("doc_id"))
+      .select(col("bid"), col("doc_id"))
   }
+
+  /** [[bandProbe]] matches as `d1 < d2` candidate pairs. */
+  private[graft] def probePairs(matches: DataFrame): DataFrame =
+    matches.select(least(col("bid"), col("doc_id")).as("d1"),
+      greatest(col("bid"), col("doc_id")).as("d2"))
 
   /** Incremental (corpus-vs-batch) near-dup flagging: every batch doc
     * with its count of LSH candidate matches in the existing corpus and
@@ -200,9 +211,9 @@ object GraftPipelines {
     * corpus-bands ⋈ batch-bands only, so per-ingest work is
     * O(batch + matched buckets), not O(corpus²). At production scale the
     * corpus band table is the persisted index a pipeline maintains
-    * between ingests (write it with [[graft.sources.GraftIO]] bucketed by
-    * band hash and only the batch side is computed per run); both sides
-    * are data-scaled, so the join is pinned to shuffle — never broadcast.
+    * between ingests; only the batch is hashed, counted and
+    * materialized per run, then [[bandProbe]]s the index, which a
+    * batch under the cap never shuffles.
     */
   def incrementalDedup(corpus: DataFrame, batch: DataFrame,
       shingleN: Int = 3, seeds: Int = 8, bands: Int = 4,
@@ -224,18 +235,20 @@ object GraftPipelines {
       bands, seeds / bands, id)
 
   /** [[incrementalDedup]] against a precomputed (possibly
-    * parquet-persisted) corpus band index.
+    * parquet-persisted) corpus band index. The probe excludes index
+    * rows of batch ids, so the flags hold even when the index already
+    * has the batch's bands (a streaming replay after the append).
     */
   def incrementalDedupWithIndex(corpusIndex: DataFrame, batch: DataFrame,
       shingleN: Int = 3, seeds: Int = 8, bands: Int = 4,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val cb = corpusIndex.withColumnRenamed(id, "corpus_id")
-    val bb = bandIndex(batch, shingleN, seeds, bands, id, text)
-      .withColumnRenamed(id, "batch_id")
-    val counts = bb.hint("shuffle_hash")
-      .join(cb.hint("shuffle_hash"), "b")
-      .select(col("batch_id"), col("corpus_id")).distinct()
-      .groupBy(col("batch_id")).agg(count(lit(1)).as("n_corpus_dups"))
+    val (bb, rows) = ckptCounted(
+      bandIndex(batch, shingleN, seeds, bands, id, text).toDF("doc_id", "b"))
+    val counts = bandProbe(corpusIndex.select(col(id).as("doc_id"), col("b")),
+        bb, rows, Some((bb.select(col("doc_id")), rows)))
+      .distinct()
+      .groupBy(col("bid").as("batch_id"))
+      .agg(count(lit(1)).as("n_corpus_dups"))
     batch.select(col(id).as("batch_id"))
       .join(counts, Seq("batch_id"), "left")
       .withColumn("n_corpus_dups", coalesce(col("n_corpus_dups"), lit(0L)))

@@ -269,6 +269,31 @@ object DedupOps {
       Tables.read(s, s"$idx/clusters.parquet"))
   }
 
+  /** The ingest batch's verified new pairs, for the two batch
+    * maintenance entries: the batch's rows of the persisted band index
+    * (doc ids at or above the [[ingestSplitId]] `split`), materialized
+    * and counted, probe the whole index
+    * ([[graft.api.GraftPipelines.bandProbe]]), so candidates cost
+    * O(batch-band collisions), never the rebuild's all-pairs self-join,
+    * and every pair has a batch endpoint. Index rows failing `live`
+    * (deleted docs: base docs, so a pair touching one has it on the
+    * index side) are cut before the probe. A batch↔batch pair is
+    * matched from both endpoints, hence the `distinct`.
+    */
+  private def batchPairs(s: SparkSession, dir: String, split: Long,
+      live: Column): (DataFrame, Long) = {
+    val P = graft.api.GraftPipelines
+    val idx = GraftIO.buildFixture(dir, "documents.parquet",
+        "band", "n=3,seeds=8,bands=4") { tmp =>
+      P.bandIndex(Tables.documents(s, dir))
+        .write.parquet(s"$tmp/bands.parquet")
+    }
+    val bands = Tables.read(s, s"$idx/bands.parquet")
+    val (bb, n) = P.ckptCounted(bands.filter(col("doc_id") >= split))
+    P.verifiedPairs(Tables.documents(s, dir),
+      P.probePairs(P.bandProbe(bands.filter(live), bb, n)).distinct(), 0.7)
+  }
+
   /** Write-once PPJoin index (token + prefix tables), shared by
     * llm_ppjoin_served and llm_dup_matrix. Persist-oriented build:
     * write the token table, RE-READ it to derive the prefix index — no
@@ -1127,8 +1152,8 @@ object DedupOps {
     // (the first 95% of doc ids at every sf — [[ingestSplitId]], so
     // the batch stays batch-sized as the corpus grows) extends with
     // the batch's verified new pairs (every one has a batch endpoint —
-    // candidates come from the persisted band index, d2 >= split cuts
-    // corpus↔corpus pairs for free since d1 < d2), components MERGE
+    // the batch's band rows probe the persisted band index,
+    // [[batchPairs]]), components MERGE
     // where a batch doc bridges two base clusters ([[chainStep]] with
     // no deletes: CC re-runs only over touched components' edges plus
     // the new pairs; untouched labels pass through). Output = the
@@ -1139,28 +1164,17 @@ object DedupOps {
       import s.implicits._
       val split = ingestSplitId(s, dir)
       val (basePairs, baseLabels) = dupChainBaseServed(s, dir)
-      val bands = {
-        val idx = GraftIO.buildFixture(dir, "documents.parquet",
-            "band", "n=3,seeds=8,bands=4") { tmp =>
-          graft.api.GraftPipelines.bandIndex(Tables.documents(s, dir))
-            .write.parquet(s"$tmp/bands.parquet")
-        }
-        Tables.read(s, s"$idx/bands.parquet")
-      }
-      val newPairs = graft.api.GraftPipelines.verifiedPairs(
-        Tables.documents(s, dir),
-        graft.api.GraftPipelines.bandCandidatesFromBatch(bands, split),
-        0.7)
       dupClustersEntry(s, chainStep(s, basePairs, baseLabels,
-        (Seq.empty[Long].toDF("del_id"), 0L), newPairs)._2)
+        (Seq.empty[Long].toDF("del_id"), 0L),
+        batchPairs(s, dir, split, lit(true)))._2)
     }),
 
     // Combined UPSERT maintenance — one cycle of the real recurring
     // pipeline: a takedown (base docs with doc_id % 10 == 7) AND an
     // ingest batch (the last 5% of doc ids) land in the same window,
     // and the persisted chain is maintained in one step ([[chainStep]]
-    // with both sides) without re-shingling the corpus. Candidates
-    // for the batch's pairs are cut against the delete set (a pair
+    // with both sides) without re-shingling the corpus. The probe for
+    // the batch's pairs cuts the deleted docs' band rows (a pair
     // touching a deleted doc must not verify). Output = the cluster
     // map a full rebuild over (base \ deletes) ∪ batch produces — the
     // oracle recomputes exactly that corpus from scratch, so the hash
@@ -1170,23 +1184,11 @@ object DedupOps {
       import s.implicits._
       val split = ingestSplitId(s, dir)
       val (basePairs, baseLabels) = dupChainBaseServed(s, dir)
+      val deleted = $"doc_id" < split && $"doc_id" % 10 === 7
       val del = graft.api.GraftPipelines.ckptCounted(Tables.documents(s, dir)
-        .filter($"doc_id" < split && $"doc_id" % 10 === 7)
-        .select($"doc_id".as("del_id")))
-      val bands = {
-        val idx = GraftIO.buildFixture(dir, "documents.parquet",
-            "band", "n=3,seeds=8,bands=4") { tmp =>
-          graft.api.GraftPipelines.bandIndex(Tables.documents(s, dir))
-            .write.parquet(s"$tmp/bands.parquet")
-        }
-        Tables.read(s, s"$idx/bands.parquet")
-      }
-      val newPairs = graft.api.GraftPipelines.verifiedPairs(
-        Tables.documents(s, dir),
-        graft.api.GraftPipelines.bandCandidatesFromBatch(bands, split)
-          .filter(!($"d1" < split && $"d1" % 10 === 7)), 0.7)
-      dupClustersEntry(s,
-        chainStep(s, basePairs, baseLabels, del, newPairs)._2)
+        .filter(deleted).select($"doc_id".as("del_id")))
+      dupClustersEntry(s, chainStep(s, basePairs, baseLabels, del,
+        batchPairs(s, dir, split, !deleted))._2)
     }),
 
     // Leakage-safe train/val/test split: the assignment unit is the

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
-import graft.api.GraftPipelines.{BroadcastRowCap, broadcastCounted,
-  ckptCounted, labeled}
+import graft.api.GraftPipelines.{BroadcastRowCap, bandProbe,
+  broadcastCounted, ckptCounted, labeled, probePairs}
 import graft.sources.GraftIO
 
 /** Structured Streaming layer (SURVEY.md §2.9).
@@ -230,7 +230,8 @@ object EventStreaming {
     * index: the production loop [[graft.api.GraftPipelines.incrementalDedup]]
     * describes, as running code. Per micro-batch of documents:
     *
-    *  1. read the corpus band index from `indexPath` (empty on bootstrap);
+    *  1. read the corpus band index from `indexPath` (empty on
+    *     bootstrap) with the schema the loop writes (no inference job);
     *  2. flag the batch against it
     *     ([[graft.api.GraftPipelines.incrementalDedupWithIndex]]) and
     *     materialize the flags BEFORE the index changes (localCheckpoint);
@@ -240,9 +241,10 @@ object EventStreaming {
     *     grows with unique content, not ingest volume.
     *
     * Only the batch is re-hashed per trigger; the corpus text is never
-    * re-scanned. A foreachBatch replay after a sink failure can append a
-    * batch's bands twice — harmless for flag semantics, because the
-    * candidate count dedups (batch, corpus) doc pairs before counting.
+    * re-scanned. A replay of a batch whose bands were already appended
+    * (a crash after step 4, before the commit) re-delivers the same
+    * flags: the probe excludes index rows of batch ids, and a band
+    * appended twice only repeats a match, which the count dedups.
     *
     * Scheme discipline ([[StateScheme]]): a hidden `_scheme` marker
     * inside the index pins `(shingleN, seeds, bands)` — appending band
@@ -279,10 +281,11 @@ object EventStreaming {
           runId, indexed, s"the band index at $indexPath",
           "pass adoptExisting = true to deliberately continue ingest " +
             "into this index")
+      val bootstrap = graft.api.GraftPipelines.bandIndex(
+        batch.toDF.limit(0), shingleN, seeds, bands, id, text)
       val index =
-        if (indexed) spark.read.parquet(indexPath)
-        else graft.api.GraftPipelines.bandIndex( // bootstrap
-          batch.toDF.limit(0), shingleN, seeds, bands, id, text)
+        if (indexed) spark.read.schema(bootstrap.schema).parquet(indexPath)
+        else bootstrap
       val flagged = graft.api.GraftPipelines
         .incrementalDedupWithIndex(index, batch.toDF,
           shingleN, seeds, bands, id, text)
@@ -333,12 +336,17 @@ object EventStreaming {
     * `compactThreshold` files):
     *
     *  - `digests/` — md5(text) of every EXACT survivor so far; the
-    *    arriving batch anti-joins it (exact dedup across triggers).
+    *    batch anti-joins the counted log rows that match its broadcast
+    *    digests (exact dedup across triggers).
     *  - `bands/` — the LSH band index of every exact survivor; cross
-    *    near-dup candidates are band collisions batch × index.
+    *    near-dup candidates are band collisions batch × index
+    *    ([[graft.api.GraftPipelines.bandProbe]]).
     *  - `docs/` — (id, text) of every exact survivor, for the verify
     *    stage's word-set Jaccard (candidates only — the store is read
     *    by id-keyed semi-join, never scanned for shingling).
+    *
+    * Every log is read with its written schema (no inference job) and
+    * streams whole through a join whose counted batch side broadcasts.
     *
     * BATCH-EQUIVALENCE (proven in StreamingSpec): under id-monotone
     * ingest (doc ids non-decreasing across triggers — the natural
@@ -354,14 +362,14 @@ object EventStreaming {
     * which is the same policy at a different tie-break, not a
     * correctness hole.
     *
-    * Replay caveat (shared with [[ingestDedupLoop]]): the logs are
-    * append-only and every read of them tolerates duplicate rows
-    * without deduplicating the log (the digest log feeds a left-anti
-    * join, the band log a pair-level `distinct`, the doc log the
-    * verify's candidate semi join), so a foreachBatch retry re-appends
-    * rows harmlessly; however a retried batch whose digests already
-    * landed emits no survivors on the retry — the sink must treat
-    * emissions as at-least-once per batch id, not per doc.
+    * Replay caveat: the logs are append-only and every read of them
+    * tolerates duplicate rows without deduplicating the log (the
+    * digest log feeds a semi join, the band log a pair-level
+    * `distinct`, the doc log the verify's candidate semi join), so a
+    * foreachBatch retry re-appends rows harmlessly; however a retried
+    * batch whose digests already landed emits no survivors on the
+    * retry — the sink must treat emissions as at-least-once per batch
+    * id, not per doc.
     *
     * Scheme discipline ([[StateScheme]]): the marker pins EVERY
     * parameter that shapes the state logs — the gates decide which
@@ -404,13 +412,13 @@ object EventStreaming {
           "pass adoptExisting = true to deliberately continue ingest " +
             "into this state")
       val P = graft.api.GraftPipelines
-      def readLog(sub: String, bootstrap: => DataFrame): DataFrame = {
+      def readLog(sub: String, written: DataFrame): DataFrame = {
         val log = s"$statePath/$sub"
         if (schemeFs.exists(new org.apache.hadoop.fs.Path(log)))
-          spark.read.parquet(log)
-        else bootstrap.limit(0)
+          spark.read.schema(written.schema).parquet(log)
+        else written.limit(0)
       }
-      val batch = batch0.toDF.localCheckpoint()
+      val (batch, batchRows) = ckptCounted(batch0.toDF)
       // 1. decontamination gate (per-doc, vs the persisted eval grams)
       val evalGrams = spark.read.parquet(evalGramsPath)
       val clean = batch.join(
@@ -423,33 +431,36 @@ object EventStreaming {
           .filter(col("score") >= minScore && col("n_words") >= minWords)
           .select(col(id)),
         Seq(id), "left_semi")
-      // 3. exact dedup: min-id per digest within the batch, then
-      // anti-join the cross-trigger digest log
+      // 3. exact dedup: min-id per digest within the batch, then drop
+      // the digests the log already holds: its rows matching a
+      // broadcast batch digest, counted, are anti-joined (anti-joining
+      // the log itself would broadcast or shuffle it: a LeftAnti cannot
+      // build its left side)
       val inBatch = kept.withColumn("__digest", md5(col(text)))
         .withColumn("__rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("__digest")).orderBy(col(id))))
         .filter(col("__rn") === 1).drop("__rn")
-      val digestLog = readLog("digests",
-        inBatch.select(col("__digest").as("digest")))
+      val digests = batch.select(md5(col(text)).as("digest"))
+      val (seen, seenRows) = ckptCounted(readLog("digests", digests)
+        .join(broadcastCounted(digests, batchRows), Seq("digest"),
+          "left_semi"))
       val exact = inBatch.join(
-          digestLog.withColumnRenamed("digest", "__digest"),
+          broadcastCounted(seen.toDF("__digest"), seenRows),
           Seq("__digest"), "left_anti")
         .localCheckpoint()
       // 4. near-dup: in-batch candidates (d1 < d2) + cross candidates
       // against the band index of ALL prior exact survivors
-      val batchBands = P
-        .bandIndex(exact, shingleN, seeds, bands, id, text)
-        .localCheckpoint()
+      val (batchBands, bandRows) =
+        ckptCounted(P.bandIndex(exact, shingleN, seeds, bands, id, text))
       val priorBands = readLog("bands", batchBands)
       val priorDocs = readLog("docs", exact.select(col(id), col(text)))
       val inCands = P.bandCandidates(batchBands, id)
       // cross pairs: d2 is ALWAYS the batch member (the prior doc was
       // already emitted) — equals the min-id rule under ordered ingest
-      val cross = priorBands.select(col(id).as("d1"), col("b"))
-        .join(batchBands.select(col(id).as("d2"), col("b")), "b")
-        .filter(col("d1") =!= col("d2"))
-        .select(col("d1"), col("d2")).distinct()
+      val cross = bandProbe(priorBands.toDF("doc_id", "b"),
+          batchBands.toDF("doc_id", "b"), bandRows)
+        .select(col("doc_id").as("d1"), col("bid").as("d2"))
       val cands = inCands.unionByName(cross).distinct()
       val universe = priorDocs.select(col(id), col(text))
         .unionByName(exact.select(col(id), col(text)))
@@ -530,12 +541,14 @@ object EventStreaming {
     * consolidated generations close).
     *
     * Correct at EVERY instant because every log this serves is
-    * duplicate-tolerant by contract (the ingest band index dedups
-    * candidate pairs before counting; the postings read side leads
-    * with `distinct`; a band log feeds a pair-level `distinct`, a doc
-    * log the verify's candidate semi join, whose repeated pair rows
-    * meet a `distinct` downstream, the curation digest log a left-anti
-    * join and the tombstone log a `distinct` id set): mid-compaction a
+    * duplicate-tolerant by contract (a band log feeds the band probe,
+    * where a repeated row only repeats a match: the ingest index's
+    * count dedups (batch, corpus) doc pairs, the curation loop dedups
+    * its candidate pairs, the chain step its new pairs; the postings
+    * read side leads with `distinct`; a doc log feeds the verify's
+    * candidate semi join, whose repeated pair rows meet a `distinct`
+    * downstream; the curation digest log a semi join and the
+    * tombstone log the probe's anti join): mid-compaction a
     * reader sees old + folded rows (duplicates — harmless), after the
     * deletes it sees only the folded segment, and a crash between
     * append and delete leaves duplicates the NEXT compaction removes.
@@ -614,43 +627,6 @@ object EventStreaming {
 
   private def readChainState(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(chainStateSchemas(path.split('/').last)).parquet(path)
-
-  /** Per-trigger candidate generation for the chain loop
-    * ([[upsertLoop]]): batch bands PROBE the flat band log and the
-    * result is normalized to `d1 < d2` candidate pairs. The store is
-    * read whole (a 50-doc batch's 200 band rows land in about 61 of 64
-    * hash buckets, so pruning would skip little) but never shuffled or
-    * deduplicated: a duplicate band row only repeats a candidate pair,
-    * which the pair-level `distinct()` removes at candidate cost. The
-    * batch side broadcasts on its COUNTED row count (`batchRows`,
-    * observed as the caller checkpointed it) at or under
-    * [[BroadcastRowCap]]; a seed-scale batch (bootstrap streams the
-    * initial corpus through this path) falls back to a two-sided
-    * shuffle-hash join, the rebuild-shaped plan — a compile-time
-    * broadcast of an unbounded side is the driver-OOM cliff. `tombs`
-    * (the tombstone ids with their observed count, anti-joined so a
-    * deleted doc never generates another candidate) follows the same
-    * counted rule. The pairs go straight to the verify
-    * ([[graft.api.GraftPipelines.nearDuplicatesFromCandidates]]),
-    * which checkpoints them and restricts the doc log to their ids.
-    */
-  private[graft] def chainCandidatePairs(spark: SparkSession,
-      bandsPath: String, batchBands: DataFrame, batchRows: Long,
-      tombs: Option[(DataFrame, Long)] = None): DataFrame = {
-    val store0 = readChainState(spark, bandsPath)
-    val store = tombs.fold(store0) { case (t, tombRows) =>
-      store0.join(broadcastCounted(t, tombRows),
-        col("doc_id") === col("del_id"), "left_anti")
-    }
-    val bb = batchBands.select(col("doc_id").as("bid"), col("b"))
-    val joined =
-      if (batchRows <= BroadcastRowCap) store.join(broadcast(bb), "b")
-      else bb.hint("shuffle_hash").join(store.hint("shuffle_hash"), "b")
-    joined.filter(col("bid") =!= col("doc_id"))
-      .select(least(col("bid"), col("doc_id")).as("d1"),
-        greatest(col("bid"), col("doc_id")).as("d2"))
-      .distinct()
-  }
 
   /** Streaming k-NN graph maintenance — the streaming twin of the batch
     * `llm_knn_incremental` (whose bucket-locality identity is
@@ -967,12 +943,13 @@ object EventStreaming {
     *    [[compactDupTolerantLog]] once its file count passes
     *    `compactThreshold`. A trigger reads both logs whole but never
     *    shuffles them: the band log streams through the broadcast probe
-    *    ([[chainCandidatePairs]]) and the doc log through the verify's
-    *    broadcast candidate-id semi join. A replayed batch's
-    *    double-append and a mid-compaction read stay harmless: a
-    *    duplicate row only repeats candidate or verified pair rows,
-    *    and the candidates are deduplicated at pair level and the
-    *    chain step deduplicates the new pairs.
+    *    ([[graft.api.GraftPipelines.bandProbe]]) and the doc log
+    *    through the verify's broadcast candidate-id semi join. The
+    *    candidates are not deduplicated: an in-batch pair is matched
+    *    from both endpoints, once per shared band, and a replayed
+    *    batch's double-append or a mid-compaction read only repeats
+    *    candidate rows too; each repeat only repeats a verified pair
+    *    row, and the chain step deduplicates the new pairs.
     *  - `dels/` — the tombstone log: deleted doc ids, appended per
     *    batch, folded the same way. The band READ anti-joins it, so a
     *    deleted doc can never generate another candidate pair (nor
@@ -1170,13 +1147,10 @@ object EventStreaming {
               else labeled(spark, s"upsert[$batchId] tombstone set") {
                 Some(ckptCounted(readChainState(spark, delsLog)))
               }
-            val bandRows = org.apache.spark.sql.Observation()
-            val batchBands = labeled(spark,
+            val (batchBands, bandRows) = labeled(spark,
                 s"upsert[$batchId] batch bands") {
-              graft.api.GraftPipelines
-                .bandIndex(adds, shingleN, seeds, bands)
-                .observe(bandRows, count(lit(1)).as("n"))
-                .localCheckpoint()
+              ckptCounted(graft.api.GraftPipelines
+                .bandIndex(adds, shingleN, seeds, bands))
             }
             labeled(spark, s"upsert[$batchId] append band log") {
               appendLog(batchBands, s"$statePath/bands", compactThreshold)
@@ -1184,14 +1158,16 @@ object EventStreaming {
             labeled(spark, s"upsert[$batchId] append doc log") {
               appendLog(adds, s"$statePath/docs", compactThreshold)
             }
-            // candidates from the tombstone-anti-joined probe, so a
-            // deleted doc never generates another candidate; the verify
-            // restricts the whole doc log to their (tombstone-clean) ids
+            // the batch bands probe the band log (which already holds
+            // them, so in-batch pairs surface too) with the tombstones
+            // excluded, so a deleted doc never generates another
+            // candidate; the verify restricts the whole doc log to the
+            // candidates' (tombstone-clean) ids
             labeled(spark, s"upsert[$batchId] verify") {
               graft.api.GraftPipelines.verifiedPairs(
                 readChainState(spark, s"$statePath/docs"),
-                chainCandidatePairs(spark, s"$statePath/bands", batchBands,
-                  bandRows.get("n").asInstanceOf[Long], tombs),
+                probePairs(bandProbe(readChainState(spark,
+                  s"$statePath/bands"), batchBands, bandRows, tombs)),
                 minJaccard)
             }
           }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -55,7 +56,8 @@ object Bridge {
   def isMaterializedCheckpoint(ds: Dataset[_]): Boolean =
     checkpointRdd(ds).nonEmpty
 
-  private def checkpointRdd(ds: Dataset[_]) =
+  /** The stored RDD behind `ds` when it IS a materialized checkpoint. */
+  def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
     ds.queryExecution.analyzed match {
       case lr: LogicalRDD if lr.rdd.getStorageLevel != StorageLevel.NONE =>
         Some(lr.rdd)

@@ -233,4 +233,13 @@ class EdgeCasesSpec extends SparkSpec {
       s"two consumers must share one evaluation, saw ${evals.value / 4} " +
         s"(${evals.value} row evaluations)")
   }
+
+  test("ckptCounted counts an already-materialized checkpoint in one job") {
+    // a checkpoint is not copied again, and its stored RDD counts in a
+    // single stage, where Dataset.count() adds a shuffle map job
+    val ck = spark.range(0, 1000, 1, 4).toDF("x").localCheckpoint()
+    val (jobs, (same, n)) = jobDescriptions(api.GraftPipelines.ckptCounted(ck))
+    assert(n == 1000L && (same eq ck))
+    assert(jobs.size == 1, s"${jobs.size} jobs to count a checkpoint")
+  }
 }

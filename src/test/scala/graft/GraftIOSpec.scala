@@ -83,18 +83,28 @@ class GraftIOSpec extends SparkSpec {
     GraftIO.writeBucketed(
       api.GraftPipelines.bandIndex(docs), "band_idx", "b", 4)
     try {
-      val bucketed = api.GraftPipelines
-        .incrementalDedupWithIndex(spark.table("band_idx"), batch)
-      val unbucketed = api.GraftPipelines
-        .incrementalDedupWithIndex(api.GraftPipelines.bandIndex(docs), batch)
+      val P = api.GraftPipelines
+      val bucketed = P.incrementalDedupWithIndex(spark.table("band_idx"), batch)
+      val unbucketed = P.incrementalDedupWithIndex(P.bandIndex(docs), batch)
+      def plan(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.executedPlan.toString()
       def bandExchanges(df: org.apache.spark.sql.DataFrame) =
-        "Exchange hashpartitioning\\(b#".r
-          .findAllIn(df.queryExecution.executedPlan.toString()).size
-      // recomputed index: BOTH band-join sides shuffle; bucketed index:
-      // only the batch side does — the corpus never crosses the network
-      assert(bandExchanges(unbucketed) == 2)
-      assert(bandExchanges(bucketed) == 1,
-        s"corpus side must read in place:\n${bucketed.queryExecution.executedPlan.toString().take(900)}")
+        "Exchange hashpartitioning\\(b#".r.findAllIn(plan(df)).size
+      // under the cap the counted batch bands broadcast-probe the index:
+      // neither index form shuffles on the band hash, so the corpus
+      // never crosses the network
+      Seq(unbucketed, bucketed).foreach { df =>
+        assert(bandExchanges(df) == 0 && plan(df).contains("BroadcastHashJoin"),
+          s"the batch side must broadcast:\n${plan(df).take(1500)}")
+      }
+      // above the cap the probe shuffles both sides: a recomputed index
+      // shuffles on the band hash, a bucketed one reads in place
+      val bb = P.bandIndex(batch).localCheckpoint()
+      def aboveCap(store: org.apache.spark.sql.DataFrame) =
+        P.bandProbe(store, bb, P.BroadcastRowCap + 1)
+      assert(bandExchanges(aboveCap(P.bandIndex(docs))) == 2)
+      assert(bandExchanges(aboveCap(spark.table("band_idx"))) == 1,
+        s"corpus side must read in place:\n${plan(aboveCap(spark.table("band_idx"))).take(900)}")
       // and the answers agree
       assert(bucketed.orderBy(col("batch_id")).collect().toSeq ==
         unbucketed.orderBy(col("batch_id")).collect().toSeq)

@@ -3,9 +3,10 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.catalyst.plans.LeftSemi
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
-  SparkPlan}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+import org.apache.spark.sql.execution.{ColumnarToRowExec,
+  FileSourceScanExec, FilterExec, InputAdapter, ProjectExec,
+  QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper,
   QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange,
@@ -424,6 +425,57 @@ class StreamingSpec extends SparkSpec {
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
       assert(idxIds == Set(1L, 2L, 4L))
     } finally query.stop()
+  }
+
+  test("ingestDedupLoop: a replay of a batch whose bands already reached " +
+      "the index re-delivers a clean run's flags") {
+    import java.nio.file.{Files, Path}
+    // A crashed attempt of batch 1 appended its new docs' bands to the
+    // index, then died BEFORE the checkpoint committed the batch; the
+    // restart re-runs batch 1 against an index that already holds them.
+    // Its flags must equal those of a run that never crashed: a new doc
+    // must not match its own bands, nor a batch↔batch near-dup partner's
+    val watched = Files.createTempDirectory("graft_ingest_replay_in")
+    val base = Files.createTempDirectory("graft_ingest_replay").toString
+    def appear(name: String, rows: Seq[(Long, String)]): Unit = {
+      val tmp = Files.createTempDirectory("graft_ingest_replay_tmp")
+      rows.toDF("doc_id", "text")
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = Files.list(tmp).toArray.map(_.asInstanceOf[Path])
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, watched.resolve(name))
+    }
+    val schema = Seq((0L, "x")).toDF("doc_id", "text").schema
+    val flags = scala.collection.mutable.Map[(String, Long), (Long, Int)]()
+    def run(name: String): Unit = {
+      val q = EventStreaming.ingestDedupLoop(
+          EventStreaming.fileSource(spark, watched.toString, schema),
+          s"$base/$name/idx", Some(s"$base/$name/ckpt")) { (batch, _) =>
+        batch.collect().foreach { r =>
+          flags.synchronized {
+            flags((name, r.getAs[Long]("batch_id"))) =
+              (r.getAs[Long]("n_corpus_dups"), r.getAs[Int]("is_new"))
+          }
+        }
+      }
+      try q.processAllAvailable() finally q.stop()
+    }
+    appear("f0.parquet", Seq((1L, "aa bb cc dd ee"), (2L, "ww xx yy zz qq")))
+    Seq("clean", "crashed").foreach(run)
+    // batch 1: 3 copies doc 1, 4 is new, 5 is 4's batch↔batch twin
+    val batch1 = Seq((3L, "aa bb cc dd ee"), (4L, "gg hh ii jj kk"),
+      (5L, "gg hh ii jj kk"))
+    appear("f1.parquet", batch1)
+    // the crashed attempt's append: the bands of its new docs 4 and 5
+    api.GraftPipelines.bandIndex(batch1.tail.toDF("doc_id", "text"))
+      .write.mode("append").parquet(s"$base/crashed/idx")
+    Seq("clean", "crashed").foreach(run)
+    val f = flags.synchronized(flags.toMap)
+    def of(name: String) = batch1.map(d => d._1 -> f((name, d._1))).toMap
+    assert(of("clean")(3L)._2 == 0 && of("clean")(4L) == (0L, 1) &&
+      of("clean")(5L) == (0L, 1), s"clean run: ${of("clean")}")
+    assert(of("crashed") == of("clean"),
+      s"replayed ${of("crashed")} vs clean ${of("clean")}")
   }
 
   test("decontaminationGate: arriving docs flag against the persisted eval grams") {
@@ -1758,19 +1810,70 @@ class StreamingSpec extends SparkSpec {
           assert(over.isEmpty, s"exchange over the $dir/ scan:\n" +
             over.mkString("\n").take(3000))
         }
+      // the other two near-dup ingest loops, on a trigger over existing
+      // state: no exchange sits directly over a scan of their logs
+      // (only projections, filters and a semi/anti join's streamed side
+      // between the two), so the ingest index and the curation band
+      // and digest logs stream whole through joins whose batch side
+      // broadcasts
+      def direct(dir: String)(p: SparkPlan): Boolean = p match {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.getName == dir)
+        case _: ProjectExec | _: FilterExec | _: ColumnarToRowExec |
+            _: InputAdapter | _: WholeStageCodegenExec =>
+          p.children.exists(direct(dir))
+        case j: BroadcastHashJoinExec
+            if j.joinType == LeftSemi || j.joinType == LeftAnti =>
+          direct(dir)(j.left)
+        case _ => false
+      }
+      def logsStream(ps: Seq[SparkPlan], dirs: String*): Unit =
+        dirs.foreach { dir =>
+          assert(ps.exists(p => PlanWalk.collect(p) {
+              case s: FileSourceScanExec => s }.exists(direct(dir))),
+            s"the trigger never scanned $dir/")
+          val over = ps.flatMap(p => PlanWalk.collect(p) {
+            case e: Exchange => e }).filter(e => direct(dir)(e.child))
+          assert(over.isEmpty, s"exchange over the $dir/ scan:\n" +
+            over.mkString("\n").take(3000))
+        }
+      val base = java.nio.file.Files.createTempDirectory("graft_probe_loops")
+        .toString
+      val next = Seq(shipDoc(41L), (100L, docs.head._2))
+      val mi = MemoryStream[(Long, String)]
+      val qi = EventStreaming.ingestDedupLoop(
+          mi.toDF().toDF("doc_id", "text"), s"$base/idx") { (b, _) =>
+        b.collect(); () }
+      val (ingestPlans, _) = try {
+        mi.addData(docs: _*); qi.processAllAvailable()
+        planned { mi.addData(next: _*); qi.processAllAvailable() }
+      } finally qi.stop()
+      logsStream(ingestPlans, "idx")
+      api.GraftPipelines.corpusGramIndex(
+          Seq((0L, "secret eval answer token sequence")).toDF("doc_id", "text"))
+        .select("g").write.parquet(s"$base/evalgrams")
+      val mc = MemoryStream[(Long, String)]
+      val qc = EventStreaming.curationIngest(mc.toDF().toDF("doc_id", "text"),
+          s"$base/evalgrams", s"$base/curation") { (b, _) => b.collect(); () }
+      val (curationPlans, _) = try {
+        mc.addData(docs: _*); qc.processAllAvailable()
+        planned { mc.addData(next: _*); qc.processAllAvailable() }
+      } finally qc.stop()
+      logsStream(curationPlans, "bands", "digests")
       // a 1-doc probe batch: doc 100 duplicates doc 1 exactly
       val batch = Seq((100L, docs.head._2)).toDF("doc_id", "text")
       val batchBands = graft.api.GraftPipelines.bandIndex(batch)
         .localCheckpoint()
-      val cands = EventStreaming.chainCandidatePairs(
-        spark, s"$stateDir/bands", batchBands, batchBands.count())
+      val cands = api.GraftPipelines.probePairs(api.GraftPipelines.bandProbe(
+        spark.read.schema("doc_id long, b string").parquet(s"$stateDir/bands"),
+        batchBands, batchBands.count()))
       val cplan = cands.queryExecution.executedPlan.toString()
       assert(cplan.contains("BroadcastHashJoin"),
         s"small batch must broadcast-probe the store:\n${cplan.take(1500)}")
-      // exactly one hash exchange: the candidate-pair distinct — the
-      // round-13 version shuffled the ENTIRE band store here per trigger
+      // no hash exchange at all: the candidates are not deduplicated —
+      // the round-13 version shuffled the ENTIRE band store here per trigger
       assert(cplan.sliding("Exchange hashpartitioning".length)
-          .count(_ == "Exchange hashpartitioning") == 1,
+          .count(_ == "Exchange hashpartitioning") == 0,
         "store side must reach the probe join unshuffled:\n" +
           cplan.take(2000))
       val cRows = cands.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
