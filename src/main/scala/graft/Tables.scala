@@ -41,6 +41,10 @@ import graft.sources.GraftIO
   *    stay on disk, so nothing corpus-sized is pinned, every scan reads
   *    the current files, and `spark.catalog.clearCache()` keeps its
   *    meaning.
+  *
+  * The layer above it is [[PlanMemo]]: a repeat visit of a
+  * `SparkEntry.queries` entry re-issues the whole analyzed plan and
+  * reaches this memo only when it builds.
   */
 object Tables {
   private final case class Key(spark: SparkSession, path: String,

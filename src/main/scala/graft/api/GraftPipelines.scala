@@ -241,7 +241,18 @@ object GraftPipelines {
     */
   def incrementalDedupWithIndex(corpusIndex: DataFrame, batch: DataFrame,
       shingleN: Int = 3, seeds: Int = 8, bands: Int = 4,
-      id: String = "doc_id", text: String = "text"): DataFrame = {
+      id: String = "doc_id", text: String = "text"): DataFrame =
+    incrementalDedupWithBands(corpusIndex, batch, shingleN, seeds, bands,
+      id, text)._1
+
+  /** [[incrementalDedupWithIndex]] and the batch's band rows
+    * `(doc_id, b)`, the counted checkpoint its probe ran on: a caller
+    * that grows the index by the batch's new docs appends these rows
+    * instead of shingling and min-hashing the batch a second time.
+    */
+  private[graft] def incrementalDedupWithBands(corpusIndex: DataFrame,
+      batch: DataFrame, shingleN: Int, seeds: Int, bands: Int, id: String,
+      text: String): (DataFrame, DataFrame) = {
     val (bb, rows) = ckptCounted(
       bandIndex(batch, shingleN, seeds, bands, id, text).toDF("doc_id", "b"))
     val counts = bandProbe(corpusIndex.select(col(id).as("doc_id"), col("b")),
@@ -249,11 +260,11 @@ object GraftPipelines {
       .distinct()
       .groupBy(col("bid").as("batch_id"))
       .agg(count(lit(1)).as("n_corpus_dups"))
-    batch.select(col(id).as("batch_id"))
+    (batch.select(col(id).as("batch_id"))
       .join(counts, Seq("batch_id"), "left")
       .withColumn("n_corpus_dups", coalesce(col("n_corpus_dups"), lit(0L)))
       .withColumn("is_new",
-        (col("n_corpus_dups") === 0).cast("int"))
+        (col("n_corpus_dups") === 0).cast("int")), bb)
   }
 
   // ---------------- similarity ----------------

@@ -244,7 +244,8 @@ object DedupOps {
   }
 
   /** Write-once BASE chain (pairs + labels over the existing corpus,
-    * doc_id below the [[ingestSplitId]] threshold): what a recurring
+    * doc_id below the [[ingestSplitId]] threshold `split`, which the
+    * caller computes once per build): what a recurring
     * pipeline would have persisted BEFORE the batch arrived. Pairs
     * derive by filtering the full dupchain fixture (band hashes and
     * pairwise verification are per-doc/per-pair, so the full chain's
@@ -252,9 +253,8 @@ object DedupOps {
     * labels must be recomputed (the full fixture's components may
     * span the split).
     */
-  private def dupChainBaseServed(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val split = ingestSplitId(s, dir)
+  private def dupChainBaseServed(s: SparkSession, dir: String,
+      split: Long): (DataFrame, DataFrame) = {
     val idx = GraftIO.buildFixture(dir, "documents.parquet",
         "dupchain_base", s"n=3,seeds=8,bands=4,theta=0.7,split=$split") {
       tmp =>
@@ -1163,7 +1163,7 @@ object DedupOps {
     "llm_dup_clusters_incremental" -> ((s, dir) => {
       import s.implicits._
       val split = ingestSplitId(s, dir)
-      val (basePairs, baseLabels) = dupChainBaseServed(s, dir)
+      val (basePairs, baseLabels) = dupChainBaseServed(s, dir, split)
       dupClustersEntry(s, chainStep(s, basePairs, baseLabels,
         (Seq.empty[Long].toDF("del_id"), 0L),
         batchPairs(s, dir, split, lit(true)))._2)
@@ -1183,7 +1183,7 @@ object DedupOps {
     "llm_dedup_upsert" -> ((s, dir) => {
       import s.implicits._
       val split = ingestSplitId(s, dir)
-      val (basePairs, baseLabels) = dupChainBaseServed(s, dir)
+      val (basePairs, baseLabels) = dupChainBaseServed(s, dir, split)
       val deleted = $"doc_id" < split && $"doc_id" % 10 === 7
       val del = graft.api.GraftPipelines.ckptCounted(Tables.documents(s, dir)
         .filter(deleted).select($"doc_id".as("del_id")))

@@ -237,14 +237,17 @@ object EventStreaming {
     *     materialize the flags BEFORE the index changes (localCheckpoint);
     *  3. hand the flagged batch to the caller's sink;
     *  4. append the bands of the batch's NEW docs (is_new = 1) to the
-    *     index — duplicates contribute no index entries, so the index
-    *     grows with unique content, not ingest volume.
+    *     index — the rows step 2 hashed and checkpointed, so the batch
+    *     is shingled once — duplicates contribute no index entries, so
+    *     the index grows with unique content, not ingest volume.
     *
-    * Only the batch is re-hashed per trigger; the corpus text is never
-    * re-scanned. A replay of a batch whose bands were already appended
-    * (a crash after step 4, before the commit) re-delivers the same
-    * flags: the probe excludes index rows of batch ids, and a band
-    * appended twice only repeats a match, which the count dedups.
+    * Only the batch is hashed per trigger; the corpus text is never
+    * re-scanned. Every job carries its phase label,
+    * `ingest[<batchId>] <phase>`. A replay of a batch whose bands were
+    * already appended (a crash after step 4, before the commit)
+    * re-delivers the same flags: the probe excludes index rows of batch
+    * ids, and a band appended twice only repeats a match, which the
+    * count dedups.
     *
     * Scheme discipline ([[StateScheme]]): a hidden `_scheme` marker
     * inside the index pins `(shingleN, seeds, bands)` — appending band
@@ -267,37 +270,45 @@ object EventStreaming {
       adoptExisting: Boolean = false)
       (sink: (Dataset[Row], Long) => Unit): StreamingQuery = {
     val runId = StateScheme.runIdentity(checkpointDir)
+    val P = graft.api.GraftPipelines
     deliver(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
+      def phase[T](p: String)(f: => T): T =
+        labeled(spark, s"ingest[$batchId] $p")(f)
       val fs = StateScheme.fsFor(spark, indexPath)
       val indexed = hasPartFiles(fs, indexPath)
-      val pinnedRun = StateScheme.ensure(spark, fs, s"$indexPath/_scheme",
-        s"n=$shingleN,seeds=$seeds,bands=$bands", runId, "ingestDedupLoop",
-        "band hashes from two hash schemes must never share one index " +
-          "(new↔old candidates would silently never collide)",
-        indexed, adoptExisting)
-      if (!adoptExisting)
-        StateScheme.refuseForeign("ingestDedupLoop", batchId, pinnedRun,
-          runId, indexed, s"the band index at $indexPath",
-          "pass adoptExisting = true to deliberately continue ingest " +
-            "into this index")
-      val bootstrap = graft.api.GraftPipelines.bandIndex(
+      phase("scheme guard") {
+        val pinnedRun = StateScheme.ensure(spark, fs, s"$indexPath/_scheme",
+          s"n=$shingleN,seeds=$seeds,bands=$bands", runId, "ingestDedupLoop",
+          "band hashes from two hash schemes must never share one index " +
+            "(new↔old candidates would silently never collide)",
+          indexed, adoptExisting)
+        if (!adoptExisting)
+          StateScheme.refuseForeign("ingestDedupLoop", batchId, pinnedRun,
+            runId, indexed, s"the band index at $indexPath",
+            "pass adoptExisting = true to deliberately continue ingest " +
+              "into this index")
+      }
+      val bootstrap = P.bandIndex(
         batch.toDF.limit(0), shingleN, seeds, bands, id, text)
       val index =
         if (indexed) spark.read.schema(bootstrap.schema).parquet(indexPath)
         else bootstrap
-      val flagged = graft.api.GraftPipelines
-        .incrementalDedupWithIndex(index, batch.toDF,
+      val (flags, batchBands) = phase("batch bands") {
+        P.incrementalDedupWithBands(index, batch.toDF,
           shingleN, seeds, bands, id, text)
-        .localCheckpoint()
-      sink(flagged, batchId)
-      val survivors = batch.toDF.join(
-        flagged.filter(col("is_new") === 1)
-          .select(col("batch_id").as(id)),
-        Seq(id), "left_semi")
-      appendLog(graft.api.GraftPipelines
-        .bandIndex(survivors, shingleN, seeds, bands, id, text),
-        indexPath, compactThreshold)
+      }
+      val flagged = phase("flags")(flags.localCheckpoint())
+      phase("sink")(sink(flagged, batchId))
+      // the new docs' rows of the batch bands the probe already hashed
+      phase("append index") {
+        appendLog(batchBands.join(
+            flagged.filter(col("is_new") === 1)
+              .select(col("batch_id").as("doc_id")),
+            Seq("doc_id"), "left_semi")
+          .select(col("doc_id").as(id), col("b")),
+          indexPath, compactThreshold)
+      }
     }
   }
 
@@ -347,6 +358,7 @@ object EventStreaming {
     *
     * Every log is read with its written schema (no inference job) and
     * streams whole through a join whose counted batch side broadcasts.
+    * Every job carries its phase label, `curate[<batchId>] <phase>`.
     *
     * BATCH-EQUIVALENCE (proven in StreamingSpec): under id-monotone
     * ingest (doc ids non-decreasing across triggers — the natural
@@ -395,32 +407,36 @@ object EventStreaming {
       s"ng=$nGram,score=$minScore,words=$minWords,j=$minJaccard," +
         s"n=$shingleN,seeds=$seeds,bands=$bands,sw=$sw"
     }
+    val P = graft.api.GraftPipelines
     deliver(docs, checkpointDir) { (batch0, batchId) =>
       val spark = batch0.sparkSession
+      def phase[T](p: String)(f: => T): T =
+        labeled(spark, s"curate[$batchId] $p")(f)
       val schemeFs = StateScheme.fsFor(spark, statePath)
       lazy val logsExist = Seq("digests", "docs", "bands").exists { sub =>
         schemeFs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$sub"))
       }
-      val pinnedRun = StateScheme.ensure(spark, schemeFs,
-        s"$statePath/scheme", paramFp, runId, "curationIngest",
-        "state logs written under two curation policies or hash " +
-          "schemes must never mix (missed duplicates and inconsistent " +
-          "gates are silent wrong answers)", logsExist, adoptExisting)
-      if (!adoptExisting)
-        StateScheme.refuseForeign("curationIngest", batchId, pinnedRun,
-          runId, logsExist, s"the curation state at $statePath",
-          "pass adoptExisting = true to deliberately continue ingest " +
-            "into this state")
-      val P = graft.api.GraftPipelines
+      phase("scheme guard") {
+        val pinnedRun = StateScheme.ensure(spark, schemeFs,
+          s"$statePath/scheme", paramFp, runId, "curationIngest",
+          "state logs written under two curation policies or hash " +
+            "schemes must never mix (missed duplicates and inconsistent " +
+            "gates are silent wrong answers)", logsExist, adoptExisting)
+        if (!adoptExisting)
+          StateScheme.refuseForeign("curationIngest", batchId, pinnedRun,
+            runId, logsExist, s"the curation state at $statePath",
+            "pass adoptExisting = true to deliberately continue ingest " +
+              "into this state")
+      }
       def readLog(sub: String, written: DataFrame): DataFrame = {
         val log = s"$statePath/$sub"
         if (schemeFs.exists(new org.apache.hadoop.fs.Path(log)))
           spark.read.schema(written.schema).parquet(log)
         else written.limit(0)
       }
-      val (batch, batchRows) = ckptCounted(batch0.toDF)
+      val (batch, batchRows) = phase("batch")(ckptCounted(batch0.toDF))
       // 1. decontamination gate (per-doc, vs the persisted eval grams)
-      val evalGrams = spark.read.parquet(evalGramsPath)
+      val evalGrams = phase("eval grams")(spark.read.parquet(evalGramsPath))
       val clean = batch.join(
         P.decontaminateAgainstGrams(batch, evalGrams, nGram, id, text)
           .filter(col("is_contaminated") === 1).select(col(id)),
@@ -442,17 +458,22 @@ object EventStreaming {
             .partitionBy(col("__digest")).orderBy(col(id))))
         .filter(col("__rn") === 1).drop("__rn")
       val digests = batch.select(md5(col(text)).as("digest"))
-      val (seen, seenRows) = ckptCounted(readLog("digests", digests)
-        .join(broadcastCounted(digests, batchRows), Seq("digest"),
-          "left_semi"))
-      val exact = inBatch.join(
-          broadcastCounted(seen.toDF("__digest"), seenRows),
-          Seq("__digest"), "left_anti")
-        .localCheckpoint()
+      val (seen, seenRows) = phase("digest log probe") {
+        ckptCounted(readLog("digests", digests)
+          .join(broadcastCounted(digests, batchRows), Seq("digest"),
+            "left_semi"))
+      }
+      val exact = phase("exact survivors") {
+        inBatch.join(
+            broadcastCounted(seen.toDF("__digest"), seenRows),
+            Seq("__digest"), "left_anti")
+          .localCheckpoint()
+      }
       // 4. near-dup: in-batch candidates (d1 < d2) + cross candidates
       // against the band index of ALL prior exact survivors
-      val (batchBands, bandRows) =
+      val (batchBands, bandRows) = phase("batch bands") {
         ckptCounted(P.bandIndex(exact, shingleN, seeds, bands, id, text))
+      }
       val priorBands = readLog("bands", batchBands)
       val priorDocs = readLog("docs", exact.select(col(id), col(text)))
       val inCands = P.bandCandidates(batchBands, id)
@@ -464,21 +485,29 @@ object EventStreaming {
       val cands = inCands.unionByName(cross).distinct()
       val universe = priorDocs.select(col(id), col(text))
         .unionByName(exact.select(col(id), col(text)))
-      val dropIds = P
-        .nearDuplicatesFromCandidates(universe, cands, minJaccard, id, text)
-        .select(col("d2").as(id)).distinct()
-      val survivors = exact.join(dropIds, Seq(id), "left_anti")
-        .withColumn("n_tokens", size(split(col(text), " ")))
-        .drop("__digest")
-        .localCheckpoint()
-      sink(survivors, batchId)
+      val survivors = phase("near-dup verify") {
+        val dropIds = P
+          .nearDuplicatesFromCandidates(universe, cands, minJaccard, id, text)
+          .select(col("d2").as(id)).distinct()
+        exact.join(dropIds, Seq(id), "left_anti")
+          .withColumn("n_tokens", size(split(col(text), " ")))
+          .drop("__digest")
+          .localCheckpoint()
+      }
+      phase("sink")(sink(survivors, batchId))
       // 5. grow the state by ALL exact survivors (near-dup-dropped ones
       // included — see the chain note above)
-      appendLog(exact.select(col("__digest").as("digest")),
-        s"$statePath/digests", compactThreshold)
-      appendLog(exact.select(col(id), col(text)), s"$statePath/docs",
-        compactThreshold)
-      appendLog(batchBands, s"$statePath/bands", compactThreshold)
+      phase("append digest log") {
+        appendLog(exact.select(col("__digest").as("digest")),
+          s"$statePath/digests", compactThreshold)
+      }
+      phase("append doc log") {
+        appendLog(exact.select(col(id), col(text)), s"$statePath/docs",
+          compactThreshold)
+      }
+      phase("append band log") {
+        appendLog(batchBands, s"$statePath/bands", compactThreshold)
+      }
     }
   }
 

@@ -1,8 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
+import java.util.concurrent.TimeoutException
+
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -18,6 +23,23 @@ import org.apache.spark.storage.StorageLevel
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A fresh DataFrame over `plan`. An already-analyzed plan is not
+    * re-resolved: the analyzer returns it as it is, and only the
+    * optimizer and the planner run again, on the first action. The
+    * package-private factory every `Dataset` is built through.
+    */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Waits until every listener event posted so far has been delivered,
+    * so the status store has seen every job started before this call.
+    * False when the bus does not drain within 10 s. Spark has no
+    * public call that waits for the listener bus.
+    */
+  def drainListenerBus(sc: SparkContext): Boolean =
+    try { sc.listenerBus.waitUntilEmpty(10000L); true }
+    catch { case _: TimeoutException => false }
 
   /** Free the storage blocks behind a `localCheckpoint()`ed Dataset.
     *

@@ -2237,6 +2237,53 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** The jobs of a loop's second trigger, and those of them that carry
+    * no phase label: no description, or only the stream's own per-batch
+    * one. */
+  private def unlabeledJobs(start: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.streaming.StreamingQuery)
+      : (Seq[String], Seq[String]) = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val q = start(mem.toDF().toDF("doc_id", "text"))
+    val fresh = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    try {
+      mem.addData((1L, fresh), (2L, "kilo lima mike november oscar papa " +
+        "quebec romeo sierra tango"))
+      q.processAllAvailable()
+      val (jobs, _) = jobDescriptions {
+        mem.addData((3L, fresh), (4L, fresh.replace("golf", "gulf")),
+          (5L, "uniform victor whiskey xray yankee zulu amber basil cedar " +
+            "dune"))
+        q.processAllAvailable()
+      }
+      (jobs, jobs.filter(d =>
+        d.trim.isEmpty || d.contains(s"runId = ${q.runId}")))
+    } finally q.stop()
+  }
+
+  test("ingestDedupLoop labels every job of a trigger with its phase") {
+    val idx = java.nio.file.Files.createTempDirectory("graft_ingest_labels")
+      .toString + "/idx"
+    val (jobs, unlabeled) = unlabeledJobs(docs =>
+      EventStreaming.ingestDedupLoop(docs, idx)((b, _) => b.collect()))
+    assert(jobs.nonEmpty && unlabeled.isEmpty,
+      s"${unlabeled.size} of ${jobs.size} jobs carry no phase label: $jobs")
+  }
+
+  test("curationIngest labels every job of a trigger with its phase") {
+    val base = java.nio.file.Files.createTempDirectory("graft_curate_labels")
+      .toString
+    api.GraftPipelines.corpusGramIndex(
+        Seq((100L, "secret eval answer token sequence")).toDF("doc_id", "text"))
+      .select("g").write.parquet(s"$base/evalgrams")
+    val (jobs, unlabeled) = unlabeledJobs(docs =>
+      EventStreaming.curationIngest(docs, s"$base/evalgrams",
+        s"$base/state")((b, _) => b.collect()))
+    assert(jobs.nonEmpty && unlabeled.isEmpty,
+      s"${unlabeled.size} of ${jobs.size} jobs carry no phase label: $jobs")
+  }
+
   test("upsertLoop mixed trigger job budget: no job re-infers a fixed " +
       "state schema, the tombstone set and the add+del guard take one " +
       "job each, and the trigger stays within 30 jobs") {
