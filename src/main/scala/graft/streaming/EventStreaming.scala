@@ -249,19 +249,14 @@ object EventStreaming {
     * ids, and a band appended twice only repeats a match, which the
     * count dedups.
     *
-    * Scheme discipline ([[StateScheme]]): a hidden `_scheme` marker
-    * inside the index pins `(shingleN, seeds, bands)` — appending band
-    * hashes from a DIFFERENT hash scheme to the same log would make
-    * new↔old candidate pairs silently never collide (missed
-    * duplicates, the silent-wrong-answer class), so a mismatched
-    * restart refuses loudly. The log itself is batch-id-agnostic
-    * (dup-tolerant append; flags derive from accumulated content, not
-    * trigger numbering), so a DIFFERENT query continuing ingest over
-    * the same index is semantically sound — but it must say so:
-    * `adoptExisting = true` is the deliberate continuation path, and
-    * the default refuses a foreign batch-0 start so an accidental
-    * re-stream of an already-ingested corpus (every doc flagged dup,
-    * zero new index growth) cannot happen silently.
+    * State ([[StateDir]]): a hidden `_scheme` marker inside the index
+    * pins `(shingleN, seeds, bands)` — band hashes from a DIFFERENT
+    * hash scheme in the same log would make new↔old candidate pairs
+    * silently never collide (missed duplicates). The log is
+    * batch-id-agnostic, so `adoptExisting = true` deliberately
+    * continues ingest from another query; the default refuses a
+    * foreign batch-0 start, so an accidental re-stream of an ingested
+    * corpus (every doc flagged dup) cannot happen silently.
     */
   def ingestDedupLoop(docs: DataFrame, indexPath: String,
       checkpointDir: Option[String] = None, shingleN: Int = 3,
@@ -269,31 +264,24 @@ object EventStreaming {
       text: String = "text", compactThreshold: Int = 64,
       adoptExisting: Boolean = false)
       (sink: (Dataset[Row], Long) => Unit): StreamingQuery = {
-    val runId = StateScheme.runIdentity(checkpointDir)
+    val runId = StateDir.runIdentity(checkpointDir)
     val P = graft.api.GraftPipelines
     deliver(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       def phase[T](p: String)(f: => T): T =
         labeled(spark, s"ingest[$batchId] $p")(f)
-      val fs = StateScheme.fsFor(spark, indexPath)
-      val indexed = hasPartFiles(fs, indexPath)
       phase("scheme guard") {
-        val pinnedRun = StateScheme.ensure(spark, fs, s"$indexPath/_scheme",
-          s"n=$shingleN,seeds=$seeds,bands=$bands", runId, "ingestDedupLoop",
+        StateDir.guard(spark, "ingestDedupLoop", batchId, runId,
+          s"$indexPath/_scheme", s"n=$shingleN,seeds=$seeds,bands=$bands",
+          StateDir.holds(spark, indexPath),
           "band hashes from two hash schemes must never share one index " +
             "(new↔old candidates would silently never collide)",
-          indexed, adoptExisting)
-        if (!adoptExisting)
-          StateScheme.refuseForeign("ingestDedupLoop", batchId, pinnedRun,
-            runId, indexed, s"the band index at $indexPath",
-            "pass adoptExisting = true to deliberately continue ingest " +
-              "into this index")
+          s"the band index at $indexPath",
+          "pass adoptExisting = true to deliberately continue ingest " +
+            "into this index", adoptExisting)
       }
-      val bootstrap = P.bandIndex(
-        batch.toDF.limit(0), shingleN, seeds, bands, id, text)
-      val index =
-        if (indexed) spark.read.schema(bootstrap.schema).parquet(indexPath)
-        else bootstrap
+      val index = StateDir.read(spark, indexPath, P.bandIndex(
+        batch.toDF.limit(0), shingleN, seeds, bands, id, text).schema)
       val (flags, batchBands) = phase("batch bands") {
         P.incrementalDedupWithBands(index, batch.toDF,
           shingleN, seeds, bands, id, text)
@@ -383,13 +371,12 @@ object EventStreaming {
     * retry — the sink must treat emissions as at-least-once per batch
     * id, not per doc.
     *
-    * Scheme discipline ([[StateScheme]]): the marker pins EVERY
-    * parameter that shapes the state logs — the gates decide which
-    * docs enter `digests/`/`docs/`, the hash scheme shapes `bands/` —
-    * so a mismatched restart refuses instead of mixing two curation
-    * policies in one corpus state. The logs are batch-id-agnostic
-    * appends, so `adoptExisting = true` is the deliberate
-    * continue-with-a-new-query path ([[ingestDedupLoop]] contract).
+    * State ([[StateDir]]): the marker pins EVERY parameter that
+    * shapes the logs — the gates decide which docs enter
+    * `digests/`/`docs/`, the hash scheme shapes `bands/` — so a
+    * mismatched restart refuses instead of mixing two curation
+    * policies in one corpus state; `adoptExisting` as in
+    * [[ingestDedupLoop]].
     */
   def curationIngest(docs: DataFrame, evalGramsPath: String,
       statePath: String, checkpointDir: Option[String] = None,
@@ -399,7 +386,7 @@ object EventStreaming {
       bands: Int = 4, id: String = "doc_id", text: String = "text",
       compactThreshold: Int = 64, adoptExisting: Boolean = false)
       (sink: (Dataset[Row], Long) => Unit): StreamingQuery = {
-    val runId = StateScheme.runIdentity(checkpointDir)
+    val runId = StateDir.runIdentity(checkpointDir)
     val paramFp = {
       val sw = java.security.MessageDigest.getInstance("SHA-256")
         .digest(stopwords.mkString("\u0000").getBytes("UTF-8"))
@@ -412,28 +399,20 @@ object EventStreaming {
       val spark = batch0.sparkSession
       def phase[T](p: String)(f: => T): T =
         labeled(spark, s"curate[$batchId] $p")(f)
-      val schemeFs = StateScheme.fsFor(spark, statePath)
-      lazy val logsExist = Seq("digests", "docs", "bands").exists { sub =>
-        schemeFs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$sub"))
-      }
       phase("scheme guard") {
-        val pinnedRun = StateScheme.ensure(spark, schemeFs,
-          s"$statePath/scheme", paramFp, runId, "curationIngest",
+        StateDir.guard(spark, "curationIngest", batchId, runId,
+          s"$statePath/scheme", paramFp,
+          Seq("digests", "docs", "bands")
+            .exists(sub => StateDir.holds(spark, s"$statePath/$sub")),
           "state logs written under two curation policies or hash " +
             "schemes must never mix (missed duplicates and inconsistent " +
-            "gates are silent wrong answers)", logsExist, adoptExisting)
-        if (!adoptExisting)
-          StateScheme.refuseForeign("curationIngest", batchId, pinnedRun,
-            runId, logsExist, s"the curation state at $statePath",
-            "pass adoptExisting = true to deliberately continue ingest " +
-              "into this state")
+            "gates are silent wrong answers)",
+          s"the curation state at $statePath",
+          "pass adoptExisting = true to deliberately continue ingest " +
+            "into this state", adoptExisting)
       }
-      def readLog(sub: String, written: DataFrame): DataFrame = {
-        val log = s"$statePath/$sub"
-        if (schemeFs.exists(new org.apache.hadoop.fs.Path(log)))
-          spark.read.schema(written.schema).parquet(log)
-        else written.limit(0)
-      }
+      def readLog(sub: String, written: DataFrame): DataFrame =
+        StateDir.read(spark, s"$statePath/$sub", written.schema)
       val (batch, batchRows) = phase("batch")(ckptCounted(batch0.toDF))
       // 1. decontamination gate (per-doc, vs the persisted eval grams)
       val evalGrams = phase("eval grams")(spark.read.parquet(evalGramsPath))
@@ -522,90 +501,68 @@ object EventStreaming {
     * is never re-tokenized, and the log grows with corpus content, not
     * with read traffic.
     *
-    * Scheme discipline ([[StateScheme]], the [[ingestDedupLoop]]
-    * shape): the hidden `_scheme` marker pins the tokenization scheme
-    * (postings from two tokenizers in one log would make term lookups
-    * silently partial), and a foreign batch-0 start over an existing
-    * log refuses unless `adoptExisting = true` names the continuation
-    * deliberately — the append log itself is batch-id-agnostic.
+    * State ([[StateDir]], the [[ingestDedupLoop]] shape): the hidden
+    * `_scheme` marker pins the tokenization scheme (postings from two
+    * tokenizers in one log would make term lookups silently partial);
+    * `adoptExisting` as in [[ingestDedupLoop]].
     */
   def indexIngestLoop(docs: DataFrame, postingsPath: String,
       checkpointDir: Option[String] = None, id: String = "doc_id",
       text: String = "text", compactThreshold: Int = 64,
       adoptExisting: Boolean = false)
       (sink: (Dataset[Row], Long) => Unit): StreamingQuery = {
-    val runId = StateScheme.runIdentity(checkpointDir)
+    val runId = StateDir.runIdentity(checkpointDir)
     deliver(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
-      val fs = StateScheme.fsFor(spark, postingsPath)
-      lazy val logExists = hasPartFiles(fs, postingsPath)
-      val pinnedRun = StateScheme.ensure(spark, fs,
-        s"$postingsPath/_scheme", "tok=ws-unigram", runId,
-        "indexIngestLoop",
+      StateDir.guard(spark, "indexIngestLoop", batchId, runId,
+        s"$postingsPath/_scheme", "tok=ws-unigram",
+        StateDir.holds(spark, postingsPath),
         "postings from two tokenization schemes must never share one " +
           "log (term lookups would be silently partial)",
-        logExists, adoptExisting)
-      if (!adoptExisting)
-        StateScheme.refuseForeign("indexIngestLoop", batchId, pinnedRun,
-          runId, logExists,
-          s"the postings log at $postingsPath",
-          "pass adoptExisting = true to deliberately continue ingest " +
-            "into this log")
+        s"the postings log at $postingsPath",
+        "pass adoptExisting = true to deliberately continue ingest " +
+          "into this log", adoptExisting)
       val postings = graft.api.GraftPipelines
         .postingsOf(batch.toDF, id, text)
         .localCheckpoint()
-      postings.write.mode("append").parquet(postingsPath)
+      appendLog(postings, postingsPath, compactThreshold)
       sink(postings, batchId)
-      compactDupTolerantLog(spark, postingsPath, compactThreshold)
     }
   }
 
   /** Fold a flat append-only parquet log into a few files once its
-    * data-file count exceeds `threshold`: read the CURRENT part files,
-    * append their DISTINCT rows as one compacted segment, then delete
-    * exactly the files that were read — the `rel_compact` small-file
-    * discipline applied to streaming log state (without it, per-trigger
-    * listing cost and file count grow one-file-per-batch over an
-    * unbounded stream, the same growth class the knn loop's
-    * consolidated generations close).
+    * data-file count exceeds `threshold`: read the CURRENT part files
+    * (with the log's `schema`, no inference job), append their DISTINCT
+    * rows as one compacted segment, then delete exactly the files that
+    * were read — the `rel_compact` small-file discipline applied to
+    * streaming log state, so listing cost and file count stay bounded
+    * over an unbounded stream.
     *
     * Correct at EVERY instant because every log this serves is
-    * duplicate-tolerant by contract (a band log feeds the band probe,
-    * where a repeated row only repeats a match: the ingest index's
-    * count dedups (batch, corpus) doc pairs, the curation loop dedups
-    * its candidate pairs, the chain step its new pairs; the postings
-    * read side leads with `distinct`; a doc log feeds the verify's
-    * candidate semi join, whose repeated pair rows meet a `distinct`
-    * downstream; the curation digest log a semi join and the
-    * tombstone log the probe's anti join): mid-compaction a
-    * reader sees old + folded rows (duplicates — harmless), after the
-    * deletes it sees only the folded segment, and a crash between
+    * duplicate-tolerant by contract (a repeated band row only repeats
+    * a probe match, which each loop dedups; the postings read side
+    * leads with `distinct`; the doc, digest and tombstone logs feed
+    * semi/anti joins): mid-compaction a reader sees old + folded rows,
+    * after the deletes only the folded segment, and a crash between
     * append and delete leaves duplicates the NEXT compaction removes.
     * Appending before deleting means the log never passes through an
-    * empty or partial state, so no reader (including the loop's own
-    * next trigger) can bootstrap against a half-compacted index.
-    * `distinct` is semantics-preserving for the same reason: the only
-    * duplicate rows are replay artifacts the readers already cancel.
-    *
-    * An EXTERNAL reader that listed the log just before a fold can hit
-    * a transient missing-file on the deleted segments — the standard
-    * log-structured compaction race; content is never lost, and a
-    * re-planned read (Spark re-lists at query planning, so a plain
-    * retry) succeeds. The loop's own next trigger always re-lists.
+    * empty or partial state; `distinct` preserves semantics because
+    * the only duplicate rows are replay artifacts the readers already
+    * cancel. An EXTERNAL reader that listed the log
+    * just before a fold can hit a transient missing-file on the
+    * deleted segments (the standard log-structured compaction race); a
+    * re-planned read succeeds, and the loop's own next trigger always
+    * re-lists.
     */
   private def compactDupTolerantLog(spark: SparkSession, path: String,
-      threshold: Int): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return
-    val files = fs.listStatus(hPath).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
+      schema: StructType, threshold: Int): Unit = {
+    val files = StateDir.list(spark, path, "part-")
     if (files.size <= threshold) return
-    spark.read.parquet(files.map(_.toString): _*)
+    spark.read.schema(schema).parquet(files: _*)
       .distinct()
       .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 8))
       .write.mode("append").parquet(path)
-    files.foreach(fs.delete(_, false))
+    StateDir.delete(spark, files)
   }
 
   /** Append `df` to the flat dup-tolerant log at `path`, then fold the
@@ -615,18 +572,7 @@ object EventStreaming {
   private def appendLog(df: DataFrame, path: String,
       compactThreshold: Int): Unit = {
     df.write.mode("append").parquet(path)
-    compactDupTolerantLog(df.sparkSession, path, compactThreshold)
-  }
-
-  /** Whether the append log at `path` exists and holds a `part-` file:
-    * the state-exists predicate of the flat-log loops' scheme and
-    * ownership checks.
-    */
-  private def hasPartFiles(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    fs.exists(p) && fs.listStatus(p).toSeq
-      .exists(_.getPath.getName.startsWith("part-"))
+    compactDupTolerantLog(df.sparkSession, path, df.schema, compactThreshold)
   }
 
   /** A `<log>.vold` backup under the chain state means
@@ -636,26 +582,15 @@ object EventStreaming {
     * from just that batch, silently forgetting the corpus. Refuse and
     * name the recovery (re-running the vacuum completes the sweep).
     */
-  private def refuseMidVacuum(fs: org.apache.hadoop.fs.FileSystem,
-      statePath: String): Unit =
+  private def refuseMidVacuum(spark: SparkSession, statePath: String): Unit =
     Seq("bands", "docs", "dels").foreach { log =>
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$log.vold")))
+      val vold = s"$statePath/$log.vold"
+      if (StateDir.fs(spark, vold).exists(new org.apache.hadoop.fs.Path(vold)))
         throw new IllegalStateException(
           s"upsertLoop: $statePath/$log.vold exists — a vacuum crashed " +
             "mid-swap; re-run DedupOps.vacuumChainState(statePath) to " +
             "recover before resuming the loop")
     }
-
-  /** The schemas [[upsertLoop]] writes its logs and generations in,
-    * keyed by directory name: every read of that state declares its
-    * schema, so none schedules a parquet schema-inference job.
-    */
-  private val chainStateSchemas = Map("bands" -> "doc_id long, b string",
-    "docs" -> "doc_id long, text string", "dels" -> "del_id long",
-    "pairs" -> "d1 long, d2 long", "labels" -> "doc_id long, cluster_id long")
-
-  private def readChainState(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(chainStateSchemas(path.split('/').last)).parquet(path)
 
   /** Streaming k-NN graph maintenance — the streaming twin of the batch
     * `llm_knn_incremental` (whose bucket-locality identity is
@@ -663,17 +598,12 @@ object EventStreaming {
     * I/O proportional to the DELTA, not the corpus. State under
     * `statePath`:
     *
-    *  - `scheme/` — the (params, run-identity) marker
-    *    ([[StateScheme]], crash-safe tmp→rename publication): every
-    *    batch `require`s (k, lshBits) match, because edges built under
-    *    one bucketing are meaningless under another — restarting with
-    *    a widened `lshBits` against existing state must fail loudly
-    *    and force a rebuild, never silently corrupt the graph. And a
-    *    query that does NOT own the state (fresh or absent checkpoint
-    *    — batch ids restart at 0) refuses over existing vectors: its
-    *    b=0 overwrite would silently replace the owner's first batch
-    *    while stale b=N dirs persist — a mixed-run graph no parameter
-    *    check can catch.
+    *  - `scheme/` — the [[StateDir]] marker: edges built under one
+    *    (k, lshBits) bucketing are meaningless under another, so a
+    *    widened `lshBits` over existing state refuses and forces a
+    *    rebuild; a non-owning query refuses over existing vectors (its
+    *    b=0 overwrite would replace the owner's first batch while
+    *    stale b=N dirs persist — a mixed-run graph).
     *  - `vectors/b=<batchId>/bucket=<v>/` — each batch's vectors,
     *    bucket-partitioned; append-only corpus expressed as idempotent
     *    per-batch directory overwrites (a replayed batch rewrites only
@@ -681,16 +611,13 @@ object EventStreaming {
     *  - `vectors/c=<batchId>/bucket=<v>/` — the CONSOLIDATED vector
     *    state: once `compactEvery` per-batch `b=` dirs accumulate, the
     *    batch folds the previous consolidation plus every live `b=`
-    *    dir into one bucket-partitioned generation and deletes the
-    *    inputs, so the per-trigger directory walk and the small-file
-    *    count stay O(compactEvery) over an UNBOUNDED stream lifetime
-    *    instead of growing one directory per batch forever (the
-    *    `rel_compact` coalesce discipline applied to stream state).
-    *    Crash-safe: the generation is written to a `tmpc-` temp and
-    *    published by a single rename; inputs are deleted only after
-    *    publication, and readers always take the NEWEST `c=` plus the
-    *    `b=` dirs above it, so a crash between publish and delete
-    *    only leaves redundant dirs the next compaction removes.
+    *    dir into one generation and deletes the inputs, so the
+    *    directory walk and small-file count stay O(compactEvery) over
+    *    an unbounded stream. The generation publishes through
+    *    [[StateDir.publish]], which throws before any input is deleted
+    *    if it did not publish; readers take the NEWEST `c=` plus the
+    *    `b=` dirs above it, so a crash between publish and delete only
+    *    leaves redundant dirs the next compaction removes.
     *  - `edges/bucket=<v>/` — the directed top-k edge table,
     *    partitioned by bucket; a batch rewrites ONLY its touched
     *    buckets' partitions (dynamic partition overwrite — idempotent,
@@ -721,31 +648,17 @@ object EventStreaming {
       checkpointDir: Option[String] = None, compactEvery: Int = 8,
       maxBucketFraction: Double = 0.5)
       (sink: (Dataset[Row], Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val runId = StateScheme.runIdentity(checkpointDir)
+    val runId = StateDir.runIdentity(checkpointDir)
     deliver(vectors, checkpointDir) { (batch, batchId) =>
       require(compactEvery >= 2,
         s"compactEvery must be >= 2, got $compactEvery")
       val spark = batch.sparkSession
       val vPath = s"$statePath/vectors"
-      val ePath = s"$statePath/edges"
-      val fs = StateScheme.fsFor(spark, statePath)
-      def subdirs(path: String, prefix: String): Seq[(Long, String)] = {
-        val hPath = new org.apache.hadoop.fs.Path(path)
-        if (fs.exists(hPath))
-          fs.listStatus(hPath).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith(prefix))
-            .map(n => n.stripPrefix(prefix).toLong -> s"$path/$n")
-        else Seq.empty
-      }
-      lazy val vectorsExist =
-        subdirs(vPath, "b=").nonEmpty || subdirs(vPath, "c=").nonEmpty
-      val pinnedRun = StateScheme.ensure(spark, fs, s"$statePath/scheme",
-        s"k=$k,lshBits=$lshBits", runId, "knnMaintenanceLoop",
+      StateDir.guard(spark, "knnMaintenanceLoop", batchId, runId,
+        s"$statePath/scheme", s"k=$k,lshBits=$lshBits",
+        StateDir.holds(spark, vPath),
         "edges built under one (k, lshBits) bucketing are meaningless " +
           "under another — continuing would corrupt the graph",
-        vectorsExist)
-      StateScheme.refuseForeign("knnMaintenanceLoop", batchId, pinnedRun,
-        runId, vectorsExist,
         s"the vector/edge state at $statePath",
         "its b=0 overwrite would silently replace the owner's first " +
           "batch while stale b=N dirs persist — a mixed-run graph")
@@ -763,10 +676,11 @@ object EventStreaming {
       // fail loudly before writing anything and name the remedy.
       // Bootstrap seeding (no prior state yet) is exempt — the first
       // fill IS a build, rebuild-scale by definition.
-      val hasPrior = subdirs(vPath, "c=").nonEmpty ||
-        subdirs(vPath, "b=").exists(_._1 < batchId)
+      val cs = StateDir.gens(spark, vPath, "c=")
+      val bs = StateDir.gens(spark, vPath, "b=")
       val occupancy = touchedSet.size.toDouble / (1 << lshBits)
-      if (hasPrior && occupancy > maxBucketFraction)
+      if ((cs.nonEmpty || bs.exists(_._1 < batchId)) &&
+          occupancy > maxBucketFraction)
         throw new IllegalStateException(
           f"knnMaintenanceLoop batch $batchId: the delta touches " +
             f"${touchedSet.size}/${1 << lshBits} LSH buckets " +
@@ -775,26 +689,26 @@ object EventStreaming {
             "rebuild per trigger; widen lshBits (llm_lsh_occupancy is " +
             "the offline signal) or raise maxBucketFraction to " +
             "deliberately accept rebuild-scale triggers")
-      delta.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$vPath/b=$batchId")
+      val own = s"$vPath/b=$batchId"
+      delta.write.mode("overwrite").partitionBy("bucket").parquet(own)
       // newest consolidation at or below this batch (a replayed batch
       // may find its OWN consolidation already published — the
       // anti-join below makes that safe), then the per-batch dirs
       // strictly between it and this batch
-      val cid = subdirs(vPath, "c=").map(_._1).filter(_ <= batchId)
-        .maxOption.getOrElse(-1L)
-      val priorTopDirs =
-        (if (cid >= 0) Seq(s"$vPath/c=$cid") else Seq.empty) ++
-          subdirs(vPath, "b=")
-            .collect { case (b, d) if b > cid && b < batchId => d }
-      // per top dir, only the touched buckets' partition subdirs;
-      // basePath = the top dir itself so `bucket` is the only inferred
-      // partition column regardless of b=/c= generation naming
-      val prior = priorTopDirs.flatMap { td =>
-        val bs = subdirs(td, "bucket=")
+      val cid = cs.map(_._1).filter(_ <= batchId).maxOption.getOrElse(-1L)
+      val consolidated = cs.collect { case (c, d) if c == cid => d }
+      val live = bs.collect { case (b, d) if b > cid && b < batchId => d }
+      // every read declares the written schema; basePath = the top dir
+      // itself so `bucket` is the only partition column regardless of
+      // b=/c= generation naming
+      def vectorsOf(top: String, dirs: Seq[String]): DataFrame =
+        spark.read.schema(delta.schema).option("basePath", top)
+          .parquet(dirs: _*)
+      // per top dir, only the touched buckets' partition subdirs
+      val prior = (consolidated ++ live).flatMap { td =>
+        val parts = StateDir.gens(spark, td, "bucket=")
           .collect { case (v, p) if touchedSet.contains(v.toInt) => p }
-        if (bs.isEmpty) None
-        else Some(spark.read.option("basePath", td).parquet(bs: _*))
+        if (parts.isEmpty) None else Some(vectorsOf(td, parts))
       }.reduceOption(_ unionByName _)
       val members = prior match {
         case None => delta
@@ -807,37 +721,22 @@ object EventStreaming {
         .localCheckpoint()
       recomputed.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(ePath)
+        .partitionBy("bucket").parquet(s"$statePath/edges")
       // fold b= dirs into a fresh consolidated generation once enough
       // accumulate: inputs = newest c= plus ALL b= in (cid, batchId]
       // (disjoint by the unique-id contract — b= dirs at or below cid
-      // are already inside it and are ignored, then swept). Publish by
-      // rename BEFORE deleting inputs; a crash in between leaves only
+      // are already inside it and are ignored, then swept). Publish
+      // BEFORE deleting inputs; a crash in between leaves only
       // redundant dirs that the next compaction's sweep removes.
-      val liveB = subdirs(vPath, "b=")
-        .filter { case (b, _) => b > cid && b <= batchId }
-      if (liveB.size >= compactEvery) {
-        // sweep temp dirs a crashed attempt may have left (any batch id
-        // — they were never published, so they are pure garbage)
-        val vDir = new org.apache.hadoop.fs.Path(vPath)
-        fs.listStatus(vDir).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("tmpc-"))
-          .foreach(fs.delete(_, true))
-        val inputs =
-          (if (cid >= 0) Seq(s"$vPath/c=$cid") else Seq.empty) ++
-            liveB.map(_._2)
-        val tmp = new org.apache.hadoop.fs.Path(s"$vPath/tmpc-$batchId")
-        inputs.map(td => spark.read.option("basePath", td).parquet(td))
-          .reduce(_ unionByName _)
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(tmp.toString)
-        fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$vPath/c=$batchId"))
-        subdirs(vPath, "b=").filter(_._1 <= batchId)
-          .foreach { case (_, d) =>
-            fs.delete(new org.apache.hadoop.fs.Path(d), true) }
-        subdirs(vPath, "c=").filter(_._1 < batchId)
-          .foreach { case (_, d) =>
-            fs.delete(new org.apache.hadoop.fs.Path(d), true) }
+      if (live.size + 1 >= compactEvery) {
+        StateDir.publish(spark, s"$vPath/c=$batchId") { tmp =>
+          (consolidated ++ live :+ own).map(td => vectorsOf(td, Seq(td)))
+            .reduce(_ unionByName _)
+            .write.partitionBy("bucket").parquet(tmp)
+        }
+        StateDir.delete(spark,
+          (bs.collect { case (b, d) if b < batchId => d } :+ own) ++
+            cs.collect { case (c, d) if c < batchId => d })
       }
       sink(recomputed.drop("bucket"), batchId)
     }
@@ -854,20 +753,15 @@ object EventStreaming {
     * refit — per-trigger work is O(delta); the per-batch overwrite
     * directory makes a foreachBatch replay idempotent (at-least-once
     * delivery rewrites the same dir instead of double-appending).
-    * Replay-by-overwrite requires monotonic batch ids, so resuming an
-    * existing log requires the original `checkpointDir`; the scheme
-    * marker pins the owning run's identity, and ANY other query —
-    * un-checkpointed or started with a fresh checkpoint — refuses at
-    * batch 0 over a non-empty log (its b=0 would clobber the prior
-    * run's first batch while stranding its later ones).
     * Readers consume `statePath/assign` (the `b` partition column
-    * records the trigger). The centroid table's fingerprint (cluster
-    * ids + exact float bits) is pinned at first trigger: restarting
-    * the loop against DIFFERENT centroids refuses loudly — the
-    * knnMaintenanceLoop scheme-marker discipline — instead of
-    * silently mixing two clusterings in one assignment log. Vector
-    * ids are assumed unique across the stream (same contract as
-    * knnMaintenanceLoop); the sink sees each trigger's assignment.
+    * records the trigger). State ([[StateDir]]): the marker pins the
+    * centroid table's fingerprint (cluster ids + exact float bits), so
+    * a restart against DIFFERENT centroids refuses instead of mixing
+    * two clusterings in one log, and replay-by-overwrite needs
+    * monotonic batch ids, so only the owning run (its original
+    * `checkpointDir`) may resume a non-empty log. Vector ids are
+    * assumed unique across the stream (the knnMaintenanceLoop
+    * contract); the sink sees each trigger's assignment.
     */
   def clusterAssignLoop(vectors: DataFrame, centroids: DataFrame,
       statePath: String, checkpointDir: Option[String] = None)
@@ -898,38 +792,24 @@ object EventStreaming {
       java.security.MessageDigest.getInstance("SHA-256")
         .digest(rows.getBytes("UTF-8")).map("%02x".format(_)).mkString
     }
-    // Run identity + marker via the shared [[StateScheme]] discipline:
-    // only the run that OWNS an assignment log (same checkpointDir, so
-    // batch ids resume monotonically) may keep appending to it. Any
-    // OTHER query — un-checkpointed, or started with a fresh
-    // checkpoint over the same statePath — restarts at batch 0, and
-    // its b=0 overwrite would clobber the prior run's first batch
-    // while stranding its later ones: a mixed log the centroid
-    // fingerprint cannot catch when the fit is unchanged (caught by
-    // the torn-scheme spec before the guard existed: 100 of 200
-    // assignments vanished).
-    val runId = StateScheme.runIdentity(checkpointDir)
+    val runId = StateDir.runIdentity(checkpointDir)
     deliver(vectors, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
-      val fs = StateScheme.fsFor(spark, statePath)
-      lazy val assignExists =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/assign"))
-      val pinnedRun = StateScheme.ensure(spark, fs, s"$statePath/scheme",
-        fp, runId, "clusterAssignLoop",
+      StateDir.guard(spark, "clusterAssignLoop", batchId, runId,
+        s"$statePath/scheme", fp,
+        StateDir.holds(spark, s"$statePath/assign"),
         "the fingerprint pins the centroid table (cluster ids + exact " +
           "float bits) — mixing two clusterings in one assignment log " +
           "would be a silent wrong answer",
-        assignExists)
-      StateScheme.refuseForeign("clusterAssignLoop", batchId, pinnedRun,
-        runId, assignExists,
         s"the assignment log at $statePath/assign",
         "its b=0 write would silently overwrite the prior run's first " +
           "batch while stranding its later ones")
       val asg = graft.api.GraftPipelines
         .assignToCentroids(batch.toDF, cent)
         .select(col("vec_id"), col("cluster"), col("ccos"))
-      asg.write.mode("overwrite").parquet(s"$statePath/assign/b=$batchId")
-      sink(spark.read.parquet(s"$statePath/assign/b=$batchId"), batchId)
+      val own = s"$statePath/assign/b=$batchId"
+      asg.write.mode("overwrite").parquet(own)
+      sink(StateDir.read(spark, own, asg.schema), batchId)
     }
   }
 
@@ -962,7 +842,7 @@ object EventStreaming {
     *
     * State under `statePath`:
     *
-    *  - `scheme/` — the [[StateScheme]] marker: hash scheme plus the
+    *  - `scheme/` — the [[StateDir]] marker: hash scheme plus the
     *    log layout (`store=flat`, so state written under the retired
     *    hash-bucketed layout refuses here instead of failing later on a
     *    mixed directory read) and the owning run; a non-owning query
@@ -984,20 +864,17 @@ object EventStreaming {
     *    deleted doc can never generate another candidate pair (nor
     *    have its text verified); the rows physically persist until
     *    [[graft.operators.DedupOps.vacuumChainState]] rewrites the
-    *    logs offline (the tombstone model every log-structured store
-    *    uses — deletion is a read-side filter plus eventual
-    *    compaction, never an in-place scrub; the vacuum is the
-    *    right-to-be-forgotten completion that takes the text off
-    *    disk).
+    *    logs offline and takes the text off disk (the tombstone model
+    *    of log-structured stores: a read-side filter plus eventual
+    *    compaction, never an in-place scrub).
     *  - `chain/g=<id>/{pairs,labels}` — one generation per trigger (id
     *    = batchId; an empty `g=-1` at bootstrap). A batch reads the
-    *    newest generation BELOW its id, publishes its own crash-safely
-    *    ([[publishGeneration]]: pid-private tmp dir + one rename, never
-    *    deleting a live generation), and folds older generations only
-    *    AFTER the sink returns. A replay landing on its OWN published
-    *    generation therefore skips the recompute — the published
-    *    content is final (the chain step is deterministic and
-    *    idempotent) — and re-delivers the delta from stable files
+    *    newest generation BELOW its id, publishes its own through
+    *    [[StateDir.publish]] (never deleting a live generation), and
+    *    folds older generations only AFTER the sink returns. A replay
+    *    landing on its OWN published generation therefore skips the
+    *    recompute — the chain step is deterministic, so the published
+    *    content is final — and re-delivers the delta from stable files
     *    while the pre-publish generation still exists, or an empty
     *    frame once the fold already committed (at-least-once
     *    delivery). No path ever deletes the newest generation, so a
@@ -1021,40 +898,43 @@ object EventStreaming {
       shingleN: Int = 3, seeds: Int = 8, bands: Int = 4,
       compactThreshold: Int = 64)
       (sink: (Dataset[Row], Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val runId = StateScheme.runIdentity(checkpointDir)
+    val runId = StateDir.runIdentity(checkpointDir)
     deliver(ops, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       import spark.implicits._
-      val fs = StateScheme.fsFor(spark, statePath)
       val chainRoot = s"$statePath/chain"
-      val chainPath = new org.apache.hadoop.fs.Path(chainRoot)
-      def gens(): Seq[Long] =
-        if (!fs.exists(chainPath)) Seq.empty
-        else fs.listStatus(chainPath).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("g=")).map(_.stripPrefix("g=").toLong)
-      def stateExists: Boolean = gens().nonEmpty ||
-        Seq("bands", "docs", "dels").exists(sub =>
-          fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$sub")))
+      val listed = StateDir.gens(spark, chainRoot, "g=").map(_._1)
       // store=flat: state written under the retired bucketed layout
       // (store=pb<N>) refuses here, before any append
-      val pinnedRun = labeled(spark, s"upsert[$batchId] scheme guard") {
-        StateScheme.ensure(spark, fs, s"$statePath/scheme",
+      labeled(spark, s"upsert[$batchId] scheme guard") {
+        StateDir.guard(spark, "upsertLoop", batchId, runId,
+          s"$statePath/scheme",
           s"j=$minJaccard,n=$shingleN,seeds=$seeds,bands=$bands," +
-            "store=flat", runId,
-          "upsertLoop",
-          "bands/pairs from two hash schemes must never mix", stateExists)
+            "store=flat",
+          listed.nonEmpty || Seq("bands", "docs", "dels")
+            .exists(sub => StateDir.holds(spark, s"$statePath/$sub")),
+          "bands/pairs from two hash schemes must never mix",
+          s"the maintained chain at $chainRoot",
+          "rewinding the chain would drop ingested docs and resurrect " +
+            "taken-down ones")
       }
-      StateScheme.refuseForeign("upsertLoop", batchId, pinnedRun, runId,
-        gens().exists(_ >= 0), s"the maintained chain at $chainRoot",
-        "rewinding the chain would drop ingested docs and resurrect " +
-          "taken-down ones")
-      refuseMidVacuum(fs, statePath)
-      if (gens().isEmpty)
-        labeled(spark, s"upsert[$batchId] bootstrap chain") {
-          publishGeneration(fs, chainRoot, -1L, Seq(
-            "pairs" -> Seq.empty[(Long, Long)].toDF("d1", "d2"),
-            "labels" -> Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")))
+      refuseMidVacuum(spark, statePath)
+      // every state read declares the schema the loop writes
+      def read(path: String, ddl: String): DataFrame =
+        StateDir.read(spark, path, StructType.fromDDL(ddl))
+      def labels(g: Long) =
+        read(s"$chainRoot/g=$g/labels", "doc_id long, cluster_id long")
+      def publishGen(id: Long, pairs: DataFrame, labels: DataFrame): Unit =
+        StateDir.publish(spark, s"$chainRoot/g=$id") { tmp =>
+          pairs.write.parquet(s"$tmp/pairs")
+          labels.write.parquet(s"$tmp/labels")
         }
+      if (listed.isEmpty)
+        labeled(spark, s"upsert[$batchId] bootstrap chain") {
+          publishGen(-1L, Seq.empty[(Long, Long)].toDF("d1", "d2"),
+            Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"))
+        }
+      val allGens = if (listed.isEmpty) Seq(-1L) else listed
       def deliverDelta(delta: => DataFrame): Unit =
         labeled(spark, s"upsert[$batchId] delta sink")(sink(delta, batchId))
       def emptyDelta() = Seq.empty[(Long, Long, String)]
@@ -1067,10 +947,8 @@ object EventStreaming {
               .select(col("doc_id"), col("cluster_id"),
                 lit("del").as("op")))
       // folds the generations below this batch's, once the sink saw it
-      def foldOlderGens(): Unit = gens().filter(_ < batchId).foreach { g =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$chainRoot/g=$g"), true)
-      }
-      val allGens = gens()
+      def foldOlderGens(): Unit = StateDir.delete(spark,
+        allGens.filter(_ < batchId).map(g => s"$chainRoot/g=$g"))
       val priorBelow = allGens.filter(_ < batchId).maxOption
       if (allGens.contains(batchId)) {
         // REPLAY onto own published generation (the first attempt
@@ -1079,9 +957,7 @@ object EventStreaming {
         // pre-publish generation survives, else the sink already saw it
         priorBelow match {
           case Some(p) =>
-            deliverDelta(labelDelta(
-              readChainState(spark, s"$chainRoot/g=$batchId/labels"),
-              readChainState(spark, s"$chainRoot/g=$p/labels")))
+            deliverDelta(labelDelta(labels(batchId), labels(p)))
             foldOlderGens()
           case None => deliverDelta(emptyDelta())
         }
@@ -1129,13 +1005,10 @@ object EventStreaming {
             s"${badOps.map(r => String.valueOf(r.getString(0))).distinct
               .mkString(", ")} — only 'add' and 'del' are defined")
       }
-      // same-batch add+del of one id is a contract violation, and it
-      // must fail HERE rather than rely on apply order: tombstones
-      // land before candidate generation (the delete would win on the
-      // corpus side) while the unfiltered batch-band probe side could
-      // still pair the doc — a tombstoned doc stuck in the label map.
-      // A counted batch under the cap is intersected on the driver
-      // from one collect of its ids; a larger one semi-joins.
+      // same-batch add+del of one id fails HERE (no apply order is
+      // consistent — see Contracts above). A counted batch under the
+      // cap is intersected on the driver from one collect of its ids; a
+      // larger one semi-joins.
       if (!addsEmpty && !delsEmpty) {
         val addDel = labeled(spark, s"upsert[$batchId] add+del guard") {
           if (counted("rows") <= BroadcastRowCap) {
@@ -1172,9 +1045,9 @@ object EventStreaming {
             // ignores a repeated id
             val delsLog = s"$statePath/dels"
             val tombs =
-              if (!fs.exists(new org.apache.hadoop.fs.Path(delsLog))) None
+              if (!StateDir.holds(spark, delsLog)) None
               else labeled(spark, s"upsert[$batchId] tombstone set") {
-                Some(ckptCounted(readChainState(spark, delsLog)))
+                Some(ckptCounted(read(delsLog, "del_id long")))
               }
             val (batchBands, bandRows) = labeled(spark,
                 s"upsert[$batchId] batch bands") {
@@ -1194,26 +1067,24 @@ object EventStreaming {
             // candidates' (tombstone-clean) ids
             labeled(spark, s"upsert[$batchId] verify") {
               graft.api.GraftPipelines.verifiedPairs(
-                readChainState(spark, s"$statePath/docs"),
-                probePairs(bandProbe(readChainState(spark,
-                  s"$statePath/bands"), batchBands, bandRows, tombs)),
+                read(s"$statePath/docs", "doc_id long, text string"),
+                probePairs(bandProbe(read(s"$statePath/bands",
+                  "doc_id long, b string"), batchBands, bandRows, tombs)),
                 minJaccard)
             }
           }
         val prior = priorBelow.get // bootstrap guaranteed g=-1
-        val pLabels = readChainState(spark, s"$chainRoot/g=$prior/labels")
+        val pLabels = labels(prior)
         val (nextPairs, nextLabels) =
           labeled(spark, s"upsert[$batchId] chain step (CC)") {
             graft.operators.DedupOps.chainStep(spark,
-              readChainState(spark, s"$chainRoot/g=$prior/pairs"), pLabels,
+              read(s"$chainRoot/g=$prior/pairs", "d1 long, d2 long"), pLabels,
               (dels, counted("dels")), newPairs)
           }
         labeled(spark, s"upsert[$batchId] publish") {
-          publishGeneration(fs, chainRoot, batchId,
-            Seq("pairs" -> nextPairs, "labels" -> nextLabels))
+          publishGen(batchId, nextPairs, nextLabels)
         }
-        deliverDelta(labelDelta(
-          readChainState(spark, s"$chainRoot/g=$batchId/labels"), pLabels))
+        deliverDelta(labelDelta(labels(batchId), pLabels))
         foldOlderGens()
       } else deliverDelta(emptyDelta())
       }
@@ -1247,30 +1118,20 @@ object EventStreaming {
   def snapshotUpsertLoop(updates: DataFrame, snapshotPath: String,
       key: String, seq: String, checkpointDir: Option[String] = None)
       (sink: (Dataset[Row], Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val runId = StateScheme.runIdentity(checkpointDir)
+    val runId = StateDir.runIdentity(checkpointDir)
     deliver(updates, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
-      // Scheme discipline ([[StateScheme]], hidden `_scheme` so plain
-      // readers of v= dirs and partition discovery never see it): the
-      // (key, seq) columns pin the merge semantics, and ownership
-      // gates batch 0 — a foreign run restarts its version numbering
-      // at v=0, so its first merge would read NO prior version
-      // (prev = greatest v < 0) and silently re-bootstrap the snapshot
-      // from empty: total state loss, the loudest possible case for
-      // the refusal.
-      val schemeFs = StateScheme.fsFor(spark, snapshotPath)
-      def versionsExist: Boolean = {
-        val p = new org.apache.hadoop.fs.Path(snapshotPath)
-        schemeFs.exists(p) && schemeFs.listStatus(p).toSeq
-          .exists(_.getPath.getName.startsWith("v="))
-      }
-      val pinnedRun = StateScheme.ensure(spark, schemeFs,
-        s"$snapshotPath/_scheme", s"key=$key,seq=$seq", runId,
-        "snapshotUpsertLoop",
+      // State ([[StateDir]], hidden `_scheme` so plain readers of v=
+      // dirs never see it): the (key, seq) columns pin the merge
+      // semantics, and a foreign run restarts its versions at v=0, so
+      // its first merge would read NO prior version and silently
+      // re-bootstrap the snapshot from empty — total state loss.
+      val versions = StateDir.gens(spark, snapshotPath, "v=").map(_._1)
+      StateDir.guard(spark, "snapshotUpsertLoop", batchId, runId,
+        s"$snapshotPath/_scheme", s"key=$key,seq=$seq", versions.nonEmpty,
         "merging under different (key, seq) columns would corrupt " +
-          "latest-wins semantics", versionsExist)
-      StateScheme.refuseForeign("snapshotUpsertLoop", batchId, pinnedRun,
-        runId, versionsExist, s"the snapshot at $snapshotPath",
+          "latest-wins semantics",
+        s"the snapshot at $snapshotPath",
         "its v=0 merge would read no prior version and silently " +
           "re-bootstrap the snapshot from empty")
       val cols = batch.toDF.columns.toSeq
@@ -1297,34 +1158,30 @@ object EventStreaming {
         // Non-null presence marker: the full-outer side test must not
         // ride on a data column (a null there would misread "absent").
         .withColumn("__upd", lit(true))
-      val hPath = new org.apache.hadoop.fs.Path(snapshotPath)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prev: Option[Long] =
-        if (fs.exists(hPath))
-          fs.listStatus(hPath).toSeq
-            .map(_.getPath.getName).filter(_.startsWith("v="))
-            .map(_.stripPrefix("v=").toLong).filter(_ < batchId)
-            .sorted.lastOption
-        else None
-      val current = prev match {
-        case Some(v) => spark.read.parquet(s"$snapshotPath/v=$v")
-        case None    => batch.toDF.limit(0)
+      val current = versions.filter(_ < batchId).maxOption match {
+        case Some(v) =>
+          StateDir.read(spark, s"$snapshotPath/v=$v", batch.toDF.schema)
+        case None => batch.toDF.limit(0)
       }
       val updatePresent = col("u.__upd").isNotNull
       val merged = current.as("t").join(latest.as("u"),
           col(s"t.$key") === col(s"u.$key"), "full_outer")
         .select(cols.map(c =>
           when(updatePresent, col(s"u.$c")).otherwise(col(s"t.$c")).as(c)): _*)
-      merged.write.mode("overwrite").parquet(s"$snapshotPath/v=$batchId")
-      sink(spark.read.parquet(s"$snapshotPath/v=$batchId"), batchId)
+      val own = s"$snapshotPath/v=$batchId"
+      merged.write.mode("overwrite").parquet(own)
+      sink(StateDir.read(spark, own, merged.schema), batchId)
     }
   }
 
-  /** The ONE scheme-marker discipline every stateful maintenance loop
-    * shares (knn graph, cluster-assign, ingest dedup, inverted index,
-    * curation, near-dup chain, snapshot upsert). A marker is a
-    * 1-row parquet table `(fp, run)` published next to the loop's
-    * state:
+  /** The ONE state discipline every stateful maintenance loop shares
+    * (ingest dedup, curation, inverted index, knn graph, cluster-assign,
+    * near-dup chain, snapshot upsert): an ownership guard, a generation
+    * listing, a crash-safe publish and a declared-schema read. Each loop
+    * keeps its own contract text; this object owns the mechanism.
+    *
+    * The guard pins a 1-row parquet marker `(fp, run)` next to the
+    * loop's state:
     *
     *  - `fp` — the parameter fingerprint the state was built under
     *    (hash seeds, band counts, centroid bits, key/seq columns …).
@@ -1338,25 +1195,18 @@ object EventStreaming {
     *    and what batch 0 does to maintained state is loop-specific but
     *    always bad: per-batch-id overwrites clobber the owner's first
     *    batch, generation chains rewind to the seed, snapshots
-    *    re-bootstrap from empty. [[refuseForeign]] makes each of those
-    *    a loud refusal at batch 0.
+    *    re-bootstrap from empty. [[guard]] makes each of those a loud
+    *    refusal at batch 0.
     *
-    * Publication is atomic (the GraftIO.buildOnce discipline in
-    * Hadoop-FS terms): build in a pid-private temp dir, publish with
-    * one rename — a crash mid-write leaves only a swept tmp dir, never
-    * a torn marker that wedges every restart with a schema-inference
-    * error. Losing a concurrent publish race is benign (the winner's
-    * marker stands), with one Hadoop-FS wrinkle: rename(src, dst) onto
-    * an EXISTING directory dst moves src INTO dst and returns true
-    * (HDFS and RawLocalFileSystem alike), so the loser's tmp can land
-    * nested under the winner's marker — where its parquet files would
-    * read back as extra marker rows and make the `.head()` below
-    * nondeterministic. The nested copy is detected and removed.
+    * Publication ([[publish]]) is atomic (the GraftIO.buildOnce
+    * discipline in Hadoop-FS terms): build in a pid-private temp dir,
+    * publish with one rename — a crash mid-write leaves only a swept
+    * tmp dir, never a torn marker, generation or consolidation.
     */
-  private[streaming] object StateScheme {
-    import org.apache.hadoop.fs.{FileSystem, Path}
+  private[streaming] object StateDir {
+    import org.apache.hadoop.fs.Path
 
-    def fsFor(spark: SparkSession, path: String): FileSystem =
+    def fs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
       new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     /** Run identity of the invoking query: the checkpointDir when
@@ -1368,153 +1218,182 @@ object EventStreaming {
       checkpointDir.getOrElse(
         s"uncheckpointed-${java.util.UUID.randomUUID()}")
 
-    /** Publish-if-absent, then verify: ensures the marker at
-      * `markerPath` exists (atomic tmp→rename publication, stale
-      * `<marker>.tmp-*` dirs from crashed publishers swept first),
-      * requires its parameter fingerprint equals `fp`, and returns the
-      * pinned run identity — null when the marker predates the run
-      * column (legacy: unknown ownership, which [[refuseForeign]]
-      * treats as foreign — loud, never silent). A legacy
-      * knnMaintenanceLoop marker (bare `k`/`lsh_bits` columns) is
-      * read back as the equivalent `k=…,lshBits=…` fingerprint.
-      *
-      * A marker is only MINTED over genuinely empty state: when
-      * `stateExists` (the same lazily-evaluated predicate the caller
-      * hands [[refuseForeign]]) reports state files but no marker —
-      * pre-marker-era state, or a state dir whose marker was lost —
-      * minting would pin the CURRENT run as owner and the batch-0
-      * foreign-run refusal could never fire, so ensure refuses
-      * instead unless `adoptExisting` names the continuation
-      * deliberately (the append-log loops thread their caller flag
-      * through; the generation/chain loops never adopt — markerless
-      * chain state forces an explicit rebuild or a fresh statePath).
+    private def entries(spark: SparkSession, dir: String): Seq[String] =
+      try fs(spark, dir).listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Nil }
+
+    /** The paths of the entries of `dir` named `<prefix>…`; none when
+      * `dir` is absent.
       */
+    def list(spark: SparkSession, dir: String, prefix: String): Seq[String] =
+      entries(spark, dir).filter(_.startsWith(prefix)).map(n => s"$dir/$n")
+
+    /** The generations `<prefix><id>` under `dir` (`g=`, `v=`, `b=`,
+      * `c=`, `bucket=`) as (id, path); none when `dir` is absent. Temp
+      * dirs ([[publish]]) never match: their names lead with `_` or
+      * carry no `=`.
+      */
+    def gens(spark: SparkSession, dir: String, prefix: String)
+        : Seq[(Long, String)] =
+      entries(spark, dir).filter(_.startsWith(prefix))
+        .map(n => n.stripPrefix(prefix).toLong -> s"$dir/$n")
+
+    /** Delete `paths`, files or whole directories. */
+    def delete(spark: SparkSession, paths: Seq[String]): Unit =
+      paths.foreach(p => fs(spark, p).delete(new Path(p), true))
+
+    /** Whether `dir` holds data a Spark reader sees: an entry not
+      * hidden by a leading `_` or `.` (markers, temp dirs, `_SUCCESS`
+      * and checksums are hidden). The state-exists predicate of the
+      * ownership checks.
+      */
+    def holds(spark: SparkSession, dir: String): Boolean =
+      entries(spark, dir).exists(n => !n.startsWith("_") && !n.startsWith("."))
+
+    /** The state at `path`, read with the schema it was written in (no
+      * inference job); an empty frame of that schema while `path`
+      * holds no data.
+      */
+    def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+      if (holds(spark, path)) spark.read.schema(schema).parquet(path)
+      else spark.createDataFrame(java.util.List.of[Row](), schema)
+
+    /** Publish-if-absent: `write` fills a pid-private temp dir, stale
+      * temp dirs of the same name from crashed attempts are swept
+      * first, and ONE rename publishes it at `dst`. A generation
+      * `<p>=<id>` stages in `_<p>.tmp-<pid>` (hidden from [[gens]] and
+      * from Spark readers of the parent), any other name in
+      * `<name>.tmp-<pid>`. Returns whether this call published; false
+      * when `dst` already existed (a replay: the recompute is
+      * deterministic, so the live content is the same) or a concurrent
+      * publisher won. Hadoop-FS wrinkle: rename(src, dst) onto an
+      * EXISTING directory moves src INTO dst and returns true (HDFS
+      * and RawLocalFileSystem alike), so a loser's temp can land nested
+      * under the winner — where its parquet files would read back as
+      * extra rows. The nested copy is removed. A rename that left
+      * nothing at `dst` throws, before the caller deletes any input
+      * the publish was to replace.
+      */
+    def publish(spark: SparkSession, dst: String)(write: String => Unit)
+        : Boolean = {
+      val fs = StateDir.fs(spark, dst)
+      val d = new Path(dst)
+      if (fs.exists(d)) return false
+      val stem =
+        if (d.getName.contains('=')) "_" + d.getName.takeWhile(_ != '=')
+        else d.getName
+      delete(spark, list(spark, d.getParent.toString, s"$stem.tmp-"))
+      val tmp = new Path(d.getParent,
+        s"$stem.tmp-${ProcessHandle.current().pid()}")
+      write(tmp.toString)
+      val nested = new Path(d, tmp.getName)
+      val published = fs.rename(tmp, d) && !fs.exists(nested)
+      if (!published) { fs.delete(nested, true); fs.delete(tmp, true) }
+      if (!published && !fs.exists(d))
+        throw new IllegalStateException(
+          s"publish: rename $tmp -> $dst failed — refusing to continue " +
+            "against unpublished state (its inputs are kept)")
+      published
+    }
+
     /** Per-JVM memo of SUCCESSFUL marker validations, keyed by the full
       * (markerPath, fp, runId) triple and holding the pinned run. A
-      * marker is write-once (publish-if-absent; the ownership gate
-      * admits one writer), so once THIS (run, params) triple validated
-      * against it, re-reading the 1-row parquet every micro-batch is
-      * pure trigger floor (2 jobs + a footer read — measured in the
-      * DevTrigProf r15 breakdown). A DIFFERENT run or fp never hits the
-      * memo (key mismatch → full validation → the refusal paths fire
-      * exactly as before). Each hit re-takes the marker's
-      * [[graft.sources.GraftIO.stamp]] (one FS listing, no job) and
-      * compares it with the stamp taken when the entry was validated:
-      * a cleared marker, or one wiped and re-minted under another
-      * scheme at the same path, falls back to full validation.
+      * marker is write-once, so re-reading it every micro-batch is pure
+      * trigger floor; a DIFFERENT run or fp misses the memo and meets
+      * the full validation. Each hit re-takes the marker's
+      * [[graft.sources.GraftIO.stamp]] (one FS listing, no job): a
+      * cleared marker, or one wiped and re-minted under another scheme
+      * at the same path, falls back to full validation.
       */
     private val validated = new java.util.concurrent.ConcurrentHashMap[
       String, (Option[String], GraftIO.Stamp)]()
 
-    def ensure(spark: SparkSession, fs: FileSystem, markerPath: String,
-        fp: String, runId: String, loop: String,
-        mismatchConsequence: String, stateExists: => Boolean = false,
-        adoptExisting: Boolean = false): String = {
+    /** Every marker column ever written: a legacy knnMaintenanceLoop
+      * marker carries bare `k`/`lsh_bits` instead of `fp`, and reads
+      * back as the equivalent `k=…,lshBits=…` fingerprint.
+      */
+    private val markerSchema =
+      StructType.fromDDL("fp string, run string, k int, lsh_bits int")
+
+    /** The ownership guard, one call per trigger. Publishes the marker
+      * at `markerPath` when absent (a bootstrap: the write is the one
+      * job — what this run just published needs no read-back), else
+      * requires its pinned fingerprint equals `fp` (`mismatch` names
+      * the consequence). Then the batch-0 gate: a query whose run
+      * identity differs from the pinned one, starting at batch 0 over
+      * existing state, refuses with `what` and `foreign` instead of
+      * silently corrupting the owner's state. Only batch 0 gates: the
+      * owning run's replays and resumes carry the pinned identity, and
+      * later batch ids only exist under the owning checkpoint. A
+      * marker predating the run column pins no owner, which counts as
+      * foreign — loud, never silent.
+      *
+      * A marker is only MINTED over genuinely empty state: when
+      * `stateExists` (evaluated lazily, an FS listing) reports state
+      * but no marker — pre-marker-era state, or a state dir whose
+      * marker was lost — minting would pin the CURRENT run as owner
+      * and the batch-0 refusal could never fire, so the guard refuses
+      * instead. `adoptExisting` (the append-log loops' caller flag)
+      * names the deliberate continuation and skips both refusals; the
+      * generation/chain loops never adopt — markerless chain state
+      * forces an explicit rebuild or a fresh statePath.
+      */
+    def guard(spark: SparkSession, loop: String, batchId: Long,
+        runId: String, markerPath: String, fp: String,
+        stateExists: => Boolean, mismatch: String, what: String,
+        foreign: String, adoptExisting: Boolean = false): Unit = {
       import spark.implicits._
-      val sPath = new Path(markerPath)
+      val fs = StateDir.fs(spark, markerPath)
+      val marker = new Path(markerPath)
       val memoKey = s"$markerPath|$fp|$runId"
       val memoHit = validated.get(memoKey)
-      if (memoHit != null && memoHit._2 == GraftIO.stamp(fs, sPath))
-        return memoHit._1.orNull
-      if (!fs.exists(sPath)) {
-        if (stateExists && !adoptExisting)
-          throw new IllegalStateException(
-            s"$loop: state files already exist under " +
-              s"${sPath.getParent} but no scheme marker does — minting " +
-              "one would make this run the owner and silence the " +
-              "foreign-run refusal over state it never built; pass " +
-              "adoptExisting = true (append-log loops) to continue " +
-              "deliberately, or use a fresh statePath")
-        val parent = sPath.getParent
-        if (fs.exists(parent))
-          fs.listStatus(parent).toSeq.map(_.getPath)
-            .filter(_.getName.startsWith(s"${sPath.getName}.tmp-"))
-            .foreach(fs.delete(_, true))
-        val tmp = new Path(
-          s"$markerPath.tmp-${ProcessHandle.current().pid()}")
-        Seq((fp, runId)).toDF("fp", "run")
-          .write.mode("overwrite").parquet(tmp.toString)
-        if (!fs.rename(tmp, sPath)) fs.delete(tmp, true) // lost the race
-        val nested = new Path(sPath, tmp.getName)
-        if (fs.exists(nested)) fs.delete(nested, true)
-      }
-      // stamp BEFORE the read: a re-mint racing it leaves a stale
-      // stamp, which the next call re-validates
-      val stamp = GraftIO.stamp(fs, sPath)
-      val scheme = spark.read.parquet(sPath.toString).head()
-      val names = scheme.schema.fieldNames
-      val pinnedFp =
-        if (names.contains("fp")) scheme.getAs[String]("fp")
-        else if (names.contains("k") && names.contains("lsh_bits"))
-          s"k=${scheme.getAs[Int]("k")},lshBits=${scheme.getAs[Int]("lsh_bits")}"
-        else sys.error(s"$loop: unrecognizable scheme marker at $markerPath")
-      require(pinnedFp == fp,
-        s"$loop state at $markerPath was built under a different scheme " +
-          s"(pinned $pinnedFp, got $fp) — $mismatchConsequence; rebuild " +
-          "the state or restore the original parameters")
       val pinnedRun =
-        if (names.contains("run")) scheme.getAs[String]("run") else null
-      validated.put(memoKey, (Option(pinnedRun), stamp))
-      pinnedRun
-    }
-
-    /** The batch-0 ownership gate: a query whose run identity differs
-      * from the marker's pin, starting at batch 0 over EXISTING state
-      * (`stateExists` — evaluated lazily, an FS listing), refuses
-      * loudly with the loop-specific consequence instead of silently
-      * corrupting the owner's state. Only batch 0 gates: the owning
-      * run's replays and resumes carry the pinned identity, and later
-      * batch ids only exist under the owning checkpoint.
-      */
-    def refuseForeign(loop: String, batchId: Long, pinnedRun: String,
-        runId: String, stateExists: => Boolean, what: String,
-        consequence: String): Unit =
-      if (batchId == 0 && pinnedRun != runId && stateExists)
+        if (memoHit != null && memoHit._2 == GraftIO.stamp(fs, marker))
+          memoHit._1.orNull
+        else {
+          val published = !fs.exists(marker) && {
+            if (stateExists && !adoptExisting)
+              throw new IllegalStateException(
+                s"$loop: state files already exist under " +
+                  s"${marker.getParent} but no scheme marker does — " +
+                  "minting one would make this run the owner and silence " +
+                  "the foreign-run refusal over state it never built; " +
+                  "pass adoptExisting = true (append-log loops) to " +
+                  "continue deliberately, or use a fresh statePath")
+            publish(spark, markerPath)(tmp =>
+              Seq((fp, runId)).toDF("fp", "run").write.parquet(tmp))
+          }
+          // stamp BEFORE the read: a re-mint racing it leaves a stale
+          // stamp, which the next call re-validates
+          val stamp = GraftIO.stamp(fs, marker)
+          val run =
+            if (published) runId
+            else {
+              val m = spark.read.schema(markerSchema).parquet(markerPath)
+                .head()
+              val pinnedFp =
+                if (!m.isNullAt(0)) m.getString(0)
+                else if (!m.isNullAt(2) && !m.isNullAt(3))
+                  s"k=${m.getInt(2)},lshBits=${m.getInt(3)}"
+                else sys.error(
+                  s"$loop: unrecognizable scheme marker at $markerPath")
+              require(pinnedFp == fp,
+                s"$loop state at $markerPath was built under a different " +
+                  s"scheme (pinned $pinnedFp, got $fp) — $mismatch; " +
+                  "rebuild the state or restore the original parameters")
+              m.getString(1)
+            }
+          validated.put(memoKey, (Option(run), stamp))
+          run
+        }
+      if (!adoptExisting && batchId == 0 && pinnedRun != runId &&
+          stateExists)
         throw new IllegalStateException(
           s"$loop: $what is owned by a different run " +
             s"(pinned ${Option(pinnedRun).getOrElse("<legacy marker>")}, " +
             s"got $runId) but this query starts at batch 0 — " +
-            s"$consequence; resume with the original checkpointDir or " +
-            "use a fresh statePath")
-  }
-
-  /** Crash-safe generation publish for the chain loop
-    * ([[upsertLoop]]): write every part under a pid-private `tmpg-`
-    * dir, then ONE rename to `g=<id>`. Never deletes an existing
-    * destination — the recompute that produced `parts` is
-    * deterministic from the prior generation plus the same batch, so a
-    * replay landing on its own published generation finds identical
-    * content already there and SKIPS (the delete-then-rename it
-    * replaces could crash between the two and wipe the only
-    * generation: every old↔old pair accumulated so far would be lost,
-    * and taken-down docs would resurrect on the re-seed — a
-    * right-to-be-forgotten violation).
-    * A failed rename throws (unlike the scheme marker there is no
-    * benign concurrent-publisher case — the ownership gate admits one
-    * writer), and stale `tmpg-` dirs from crashed attempts are swept
-    * before writing.
-    */
-  private def publishGeneration(fs: org.apache.hadoop.fs.FileSystem,
-      chainRoot: String, id: Long,
-      parts: Seq[(String, DataFrame)]): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(s"$chainRoot/g=$id")
-    if (fs.exists(dst)) return // replay: identical content already live
-    val rootPath = new org.apache.hadoop.fs.Path(chainRoot)
-    if (fs.exists(rootPath))
-      fs.listStatus(rootPath).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("tmpg-"))
-        .foreach(fs.delete(_, true))
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$chainRoot/tmpg-${ProcessHandle.current().pid()}-$id")
-    parts.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$tmp/$name")
-    }
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"publishGeneration: rename $tmp -> $dst failed — refusing to " +
-          "continue against an unpublished generation (a silent skip " +
-          "here surfaces later as a confusing missing-path read)")
+            s"$foreign; resume with the original checkpointDir or use a " +
+            "fresh statePath")
     }
   }
 

@@ -2314,4 +2314,97 @@ class StreamingSpec extends SparkSpec {
       assert(jobs.size <= 30, s"${jobs.size} jobs: $ledger")
     } finally q.stop()
   }
+
+  test("scheme guard bootstrap: a fresh ingestDedupLoop and upsertLoop " +
+      "publish their marker in at most one job, with no read-back") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft_guard_jobs")
+      .toString
+    val docs = MemoryStream[(Long, String)]
+    val ingest = EventStreaming.ingestDedupLoop(
+      docs.toDF().toDF("doc_id", "text"), s"$base/idx") { (_, _) => () }
+    val ops = MemoryStream[(String, Long, String)]
+    val upsert = EventStreaming.upsertLoop(
+      ops.toDF().toDF("op", "doc_id", "text"), s"$base/state")()
+    try {
+      val (jobs, _) = jobDescriptions {
+        docs.addData((1L, tA)); ingest.processAllAvailable()
+        ops.addData(adds((1L, tA)): _*); upsert.processAllAvailable()
+      }
+      for (loop <- Seq("ingest", "upsert")) {
+        val guard = jobs.count(_ == s"$loop[0] scheme guard")
+        assert(guard <= 1, s"$loop bootstrap guard ran $guard jobs: $jobs")
+      }
+      assert(new java.io.File(s"$base/idx/_scheme").isDirectory &&
+        new java.io.File(s"$base/state/scheme").isDirectory)
+    } finally { ingest.stop(); upsert.stop() }
+  }
+
+  test("knnMaintenanceLoop consolidation: a publish whose rename fails " +
+      "throws before any input is deleted") {
+    implicit val sqlCtx = spark.sqlContext
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val prev = keys.map(k => k -> Option(conf.get(k)))
+    val stateDir = java.nio.file.Files
+      .createTempDirectory("graft_knn_unpublished").toString + "/knn"
+    val emb = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+    conf.set("fs.file.impl", classOf[FailingConsolidationFs].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val q = EventStreaming.knnMaintenanceLoop(
+        mem.toDF().toDF("vec_id", "embedding"), stateDir,
+        compactEvery = 2)()
+      mem.addData(emb.take(100).toSeq: _*)
+      q.processAllAvailable()                     // b=0
+      mem.addData(emb.slice(100, 150).toSeq: _*)  // folds b=0, b=1 -> c=1
+      expectStreamFailure(q, "rename")
+    } finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    val dirs = new java.io.File(s"$stateDir/vectors").listFiles()
+      .map(_.getName).sorted.toSeq
+    assert(dirs == Seq("b=0", "b=1"),
+      s"an unpublished consolidation must leave its inputs in place: $dirs")
+    assert(Seq("b=0", "b=1").map(d =>
+      spark.read.parquet(s"$stateDir/vectors/$d").count()).sum == 150L)
+  }
+
+  test("EventStreaming state plumbing has one home: one rename, every " +
+      "ownership check a StateDir.guard call, and every state read " +
+      "declares its schema") {
+    val src = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      "src/main/scala/graft/streaming/EventStreaming.scala"))
+    // StateDir's body, from its opening brace to the matching close
+    val decl = src.indexOf("private[streaming] object StateDir")
+    assert(decl > 0, "StateDir not found")
+    val open = src.indexOf('{', decl)
+    val close = Iterator.from(open).scanLeft((0, 0)) { case ((depth, _), i) =>
+        (depth + (src(i) match { case '{' => 1; case '}' => -1; case _ => 0 }), i)
+      }.drop(1).find(_._1 == 0).get._2
+    val outside = src.take(open) + src.drop(close + 1)
+    assert("""\.rename\(""".r.findAllIn(src).size == 1,
+      "one crash-safe publish: StateDir.publish is the only rename")
+    assert("""\b(?:refuseForeign|ensure)\(""".r.findAllIn(outside).isEmpty)
+    assert("""StateDir\.guard\(""".r.findAllIn(outside).size == 7,
+      "each of the seven stateful loops guards its state once")
+    // a parquet read: `.read`, any `.schema(…)`/`.option(…)`, `.parquet(`
+    val reads = ("""\.read\b((?:\s*\.\s*(?:schema|option)\([^)]*\))*)""" +
+      """\s*\.\s*parquet\(([^)]*)\)""").r
+    val all = reads.findAllMatchIn(outside).toSeq
+    val undeclared = all.filterNot(m => m.group(1).contains(".schema(") ||
+      m.group(2).trim == "evalGramsPath").map(_.matched)
+    assert(all.size > undeclared.size && undeclared.isEmpty,
+      "state reads must declare the written schema:\n" +
+        undeclared.mkString("\n"))
+  }
+}
+
+/** A local file system on which a rename onto a knn consolidation
+  * (`c=<id>`) fails, as a full disk or a lost lease would make it. */
+class FailingConsolidationFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.startsWith("c=") && super.rename(src, dst)
 }
